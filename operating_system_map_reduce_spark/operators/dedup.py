@@ -148,62 +148,6 @@ _HEXVAL = " + ".join(
 )
 
 
-def ppjoin_prefix_postings(ex: DataFrame, threshold_num: int,
-                           threshold_den: int, id_col: str = "doc_id") -> DataFrame:
-    """Prefix-filtered postings for a Jaccard set-similarity join
-    (Chaudhuri et al. SSJoin / Xiao et al. PPJoin prefix principle).
-
-    Orders each doc's shingles by GLOBAL document frequency (rarest
-    first, shingle text as tie-break -- any consistent total order is
-    correct; frequency order maximizes pruning) and keeps only the
-    first ``n - ceil(t*n) + 1`` postings.  Two sets with Jaccard >= t
-    must overlap within these prefixes, so a candidate join on the
-    prefix postings misses no qualifying pair.
-
-    The threshold is a RATIONAL (num/den, e.g. 1/5 for 0.2) so the
-    prefix length uses exact integer arithmetic: ``ceil(t*n)`` via
-    float multiply under-/over-shoots on binary-inexact t (e.g.
-    15*0.2 -> 3.0000000000000004 -> ceil 4), silently shortening the
-    prefix and MISSING pairs.
-
-    Input schema: (id, n, s) like shingle_postings; output adds ``pos``
-    -- the posting's 1-based rank in the doc's GLOBAL frequency order
-    (computed before the prefix cut), which feeds PPJoin's POSITIONAL
-    filter: for the first common token of a qualifying pair at
-    positions (i, j), overlap <= 1 + min(n_a - i, n_b - j), because a
-    consistent total order puts every other common token after both.
-    The pruning is visible as a row-count drop (asserted in tests).
-    """
-    # ceil(n * num / den) == (n*num + den - 1) div den, exactly
-    prefix_len = (
-        F.col("n")
-        - ((F.col("n") * threshold_num + threshold_den - 1)
-           .cast("long") / threshold_den).cast("long")
-        + 1
-    )
-    return freq_ordered_postings(ex, id_col).filter(F.col("pos") <= prefix_len)
-
-
-def freq_ordered_postings(ex: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, n, s, pos): each doc's postings ranked by GLOBAL document
-    frequency (rarest first, shingle text as tie-break -- a consistent
-    total order across all docs).  The shared substrate of prefix
-    filtering: ``ppjoin_prefix_postings`` cuts it at the threshold's
-    prefix length, and asymmetric (containment) joins keep the probe
-    side FULL but use ``pos`` for PPJoin's positional bound.  One
-    corpus-wide frequency aggregate + one per-doc window (shuffles by
-    shingle then by doc -- both key-partitioned, no corpus hotspot)."""
-    from pyspark.sql.window import Window
-
-    freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("s"))
-    return (
-        ex.join(freq, "s")
-        .withColumn("pos", F.row_number().over(w))
-        .select(id_col, "n", "s", "pos")
-    )
-
-
 def hexval_sql(var: str) -> str:
     return _HEXVAL.format(var=var)
 

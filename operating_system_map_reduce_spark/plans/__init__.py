@@ -28,531 +28,23 @@ def collect_registry() -> tuple[dict[str, Callable[[SparkSession, str], DataFram
         queries.update(mod.QUERIES)
         oracles.update(mod.ORACLES)
 
-    # Rotation policy (codified round 7; made MECHANICAL round 10 after
-    # round 9 skipped its rotation and 43 entries blew past the
-    # ceiling).  The driver's correctness gate checks the FIRST 50
-    # entries in insertion order; the registry holds more.  The window
-    # is now COMPUTED by plans/window.py from the committed
-    # CORRECTNESS_r*.json ledger plus the REDEFINED rule-2 declaration
-    # there -- the clock ticks by itself when each round's correctness
-    # file lands.  Selection rules, priority order (unchanged since
-    # round 7): 1. never-driver-green entries lead; 2. entries whose
-    # plan/oracle changed since their newest green row re-enter
-    # (append the query to window.REDEFINED in the SAME commit as the
-    # plan change); 3. remaining seats refresh oldest-newest-row-first,
-    # alternating registry halves by round parity once N > 150 (the
-    # round-8 growth plan, now implemented).  Hard ceiling: no entry's
-    # newest green row more than TWO rounds behind HEAD at judge time;
-    # tests/test_plans.py::TestRegistryWindow pins both mechanism
-    # compliance and the ceiling, so a skipped rotation now fails
-    # pytest instead of failing the policy.  WINDOW ROTATION IS COMMIT
-    # #1 OF EVERY ROUND (round-9 verdict directive #7): verify the
-    # computed window (python -c "from operating_system_map_reduce_spark
-    # .plans.window import *; ..."), append any rule-2 entries, commit
-    # -- before hygiene, before features.  Entries outside the window
+    # The correctness gate checks the FIRST 50 entries in insertion
+    # order.  plans/window.py computes that window from the committed
+    # CORRECTNESS_r*.json ledger plus its REDEFINED rule-2 declaration:
+    # never-green entries lead, entries whose plan or oracle changed
+    # since their newest green row re-enter (set the query's round in
+    # window.REDEFINED in the SAME commit as the plan change), and the
+    # remaining seats refresh oldest-newest-row-first.  No entry's
+    # newest green row may sit more than two rounds behind HEAD at
+    # judge time, which pigeonhole allows only up to 150 registered
+    # queries -- build_window raises past that, so a new face must
+    # replace an old one.  tests/test_plans.py::TestRegistryWindow pins
+    # mechanism compliance and the ceiling.  Entries outside the window
     # stay covered by tests/test_oracle_parity.py (ALL entries vs the
-    # DuckDB oracle locally).
-    #
-    # Round 10 (registry 138 -- FROZEN this round, directive #3: the
-    # 88-entry due backlog spends every seat; zero new faces).  The
-    # computed window10: rule-2 re-entries changelog_asof (plan changed
-    # r9, missed re-entry) + stream_novelty_filter (staging re-planned
-    # r10), then the 43-entry r6-green mandatory cohort, then the 5
-    # name-first r7-green entries (basket_part_pairs,
-    # bucketed_segment_revenue, contamination_check,
-    # corpus_novelty_filter, dedup_clusters).  RECOVERY NOTE -- the 39
-    # r7-green entries deferred to round 11, where the mechanism seats
-    # them first (oldest cohort): dedup_containment,
-    # dedup_graph_triangles, dedup_jaccard_ppjoin,
-    # dedup_purge_canonical, dedup_semantic, domain_mix_sample,
-    # embedding_label_centroids, embedding_pq_codes, events_anomaly_mad,
-    # events_cube_summary, events_gap_fill, events_markov_transitions,
-    # fuzzy_match_symspell, fuzzy_part_match, kv_aes_at_rest,
-    # mr_odd_key_vals, order_value_deciles, orders_above_customer_avg,
-    # pagerank_neardup, pipeline_corpus_curation, q18_large_orders,
-    # sample_stratified, similarity_cosine_topk, similarity_ivf_knn,
-    # similarity_ivf_search, similarity_ivfpq_search,
-    # sketch_distinct_tokens, skew_salted_join, split_assign,
-    # stream_dedup_first_seen, stream_enrich_revenue, stream_mru_types,
-    # stream_quota_admission, stream_session_counts,
-    # stream_topk_trending, stream_windowed_counts, text_pii_scrub,
-    # text_tfidf_top_terms, tokens_pmi_bigrams -- after which the
-    # ceiling is restored and steady-state oldest-first holds it.
-    # New-face queue for round 11 (after the 39, rule 1 seats them):
-    # the trained-BPE tokenizer face (N unrolled merge rounds with a
-    # CTE oracle; reference anchor p5/server/my_storage.cc:269-415) and
-    # the multimodal-text joint face.
-    #
-    # Round 11 (registry 141): the two queue faces registered --
-    # token_bpe_trained (plans/mining.py) + multimodal_text_curation
-    # (plans/pipeline.py) -- plus the round's new face
-    # stream_novelty_index_compact (plans/streamqueries.py, the
-    # standing index's SAV), all seated by rule 1 as
-    # never-driver-green.  The computed window11: those 3, then any
-    # rule-2 re-entries, then the full 39-entry r7-green deferred
-    # cohort named above (the second half of the r9-debt payoff --
-    # deferred_due() is empty again once this round greens), then
-    # name-first r9-green entries up to the 50 seats.  At rotation
-    # time there were no rule-2 re-entries (STREAM_NOVELTY_SQL's
-    # builder was refactored to share its CTE prefix with the new
-    # face's oracle, but the emitted SQL is byte-identical -- md5
-    # 231db872d0e4f8e988775bdffb18dbf6 before and after); LATE in the
-    # round the sf10 decade run caught the planner broadcasting
-    # dedup_ngram_jaccard's corpus-growing join side off a lying
-    # estimate, and the SHUFFLE_HASH re-plan re-enters it via
-    # window.REDEFINED (same commit as the plan change), displacing
-    # the last r9-green seat (that entry is exactly AT the ceiling at
-    # r11 judge time -- legal -- and due first at r12).
-    # Round 12 (registry 144): the three r12 queue faces registered --
-    # token_bpe_encode (plans/mining.py), retrieval_rrf_fusion
-    # (plans/pipeline.py), sketch_heavy_hitters (plans/curation.py) --
-    # seated by rule 1 as never-driver-green.  The computed window12 at
-    # rotation time: those 3, then the full 44-entry r9-green cohort
-    # (every one AT the staleness ceiling this round -- they MUST
-    # seat), then the rule-2 re-entries and name-first r10-green
-    # refreshes; deferred_due() is empty.  Seat math: 47 of 50 seats
-    # are spoken for, so at most 3 rule-2 re-entries fit this round --
-    # plan changes on green faces are FROZEN beyond those.  Of the
-    # directed ones,
-    # dedup_minhash_lsh's bucketed verify join SHIPPED (REDEFINED
-    # bumped to 12 in the same commit); dedup_containment's prefix
-    # filter was implemented, measured at sf10, and REJECTED by the
-    # bake-off -- its registered plan stayed byte-identical to the
-    # r11 green shape, so it takes no re-entry (the rejected shape is
-    # kept unregistered as mining.dedup_containment_prefix).
-    # Round 13 (registry 144, unchanged -- headroom decision holds):
-    # the seat-exact at-rest swap EXECUTED.  The five re-entries
-    # registered exactly as planned below: dedup_ngram_jaccard now
-    # rides bucketed_postings with the r11 pin DROPPED;
-    # dedup_containment rides it UNPINNED -- the plan to keep its pin
-    # (1.7x hash-build-over-sort at sf10) was REVERSED by the round's
-    # own sf100 run, where the pinned SHJ's non-spillable per-bucket
-    # hash build OOMs (SCALING.md round-13; the same reasoning then
-    # removed candidate_pairs' r11 pin -- dedup_minhash_lsh re-enters
-    # at r14 via the round+1 key); dedup_jaccard_ppjoin
-    # adopted the staged at-rest body (b_post candidates + b_sig
-    # verify arrays); pagerank_neardup + dedup_graph_triangles
-    # (redefined in the same commit as their callee) now read the
-    # at-rest b_edge table (pipeline.bucketed_edges -- built from the
-    # same pair join, replacing the localCheckpoint whose
-    # ContextCleaner cadence swung graph timings ~2x).  The
-    # through-Python shapes live on unregistered as the *_shuffle
-    # witnesses, differential-pinned in tests/test_r13_queue.py.
-    # SEAT-MATH CORRECTION vs the plan below: the r10-green cohort is
-    # 46 entries, not 45 (both the r12 queue note and the r12 verdict
-    # wrote 45; the ledger histogram {r10: 46, r11: 48, r12: 50} was
-    # correct all along) -- so 46 + 5 = 51 due entries into 50 seats.
-    # The mechanism adjudicates: rule-2 re-entries seat first (their
-    # green rows vouch for obsolete plans -- re-checking them is the
-    # point of the swap round), the 45 oldest-by-name r10 entries fill
-    # the rest, and deferred_due() names top_customers_window (r10
-    # green, the one name-sorted-last r10 entry) as the single
-    # recovery-debt entry -- it reads 3 rounds stale at the r13 judge,
-    # sanctioned by the saturation rule (every seat spent on a due
-    # entry; test_staleness_ceiling_or_saturated_recovery models
-    # exactly this), and it MUST seat first at r14.
-    # ROUND-14 QUEUE: (1) top_customers_window seats first (recovery
-    # debt, above); (2) the rule-2 re-entries already keyed to 14
-    # (stream_novelty_index_compact -- the seed-index reuse landed in
-    # r13; dedup_minhash_lsh -- candidate_pairs' pin removal); (3) the
-    # r11-green cohort at the ceiling fills the rest (r13's forward
-    # simulation reads the r14 due set comfortably under 50 -- no
-    # saturation).  (4) PERF: re-express dedup_jaccard_ppjoin's verify
-    # as a candidate-restricted COUNT-JOIN over b_post (the r13 stage
-    # probe localized its fourth-decade term to the array verify --
-    # pairs x ~4KB array payload ~ 130 GB at sf100 crossing the spill
-    # threshold at any heap, while candidates measured exactly
-    # replica-linear; the containment count-join lesson applied to
-    # ppjoin -- SCALING.md round-13); stage under the two-round
-    # pattern or re-enter if a seat spares.  NO new faces (headroom
-    # decision, directive #8).
-    # Round 14 (registry 144, unchanged): EXECUTED as planned.  The
-    # staged count-join REGISTERED as dedup_jaccard_ppjoin (REDEFINED
-    # -> 14; the r13 prefix/positional + array-verify shape lives on
-    # unregistered as dedup_jaccard_ppjoin_arrayverify, the witness)
-    # -- 46 due entries into 50 seats, deferred_due() empty, the
-    # three debt entries (top_customers_window + the two r14-keyed
-    # re-entries) all seated.  sf10 (bakeoff protocol): count-join
-    # floors ~10.1 s vs the arrayverify face's 24.9-26.8 -- and the
-    # sf100 rows are in SCALING.md round-14 (the verify term's fix
-    # verified at the decade that exposed it).  Also this round, all
-    # under the two-round pattern or zero-seat: the incremental
-    # postings maintenance staging (postings_seed/append +
-    # append_bucketed/compact_bucketed + the ChangeLog delta feed,
-    # pinned in tests/test_r15_queue.py -- the r15 queue's
-    # registration candidate), the kv-mix re-shape (bench.py: one
-    # fused job, overhead split out), the graph tier's first sf100
-    # rows, and the five r13-advice closures (sweep start-time
-    # discriminator, seed-cache mtime key, RO-warehouse degrade, two
-    # doc fixes).
-    # ROUND-15 QUEUE: (1) any red r14 rows lead, per the standing
-    # rule.  (2) Rule-2 re-entry candidates: NONE pending from r14
-    # plan changes (the ppjoin swap's row lands at r14; verify before
-    # declaring).  (3) Registration candidate: an incremental-
-    # maintenance face exercising postings_seed/append/compact +
-    # changelog feed end-to-end as a driver-rowed query (oracle: the
-    # from-scratch rebuild, the changelog_incremental_agg pattern) --
-    # IF a seat spares beyond the due set and the headroom line
-    # (registry <= 150) holds: 144 + 1 = 145 keeps ceiling-2
-    # feasible.  (4) The r11-green cohort hits the ceiling at r15 and
-    # MUST seat (48 entries by the histogram) -- count seats before
-    # spending any on (3).  NO other new faces.  (5) PERF WATCH
-    # (named r14, SCALING.md round-14 closing): dedup_ngram_jaccard's
-    # matched-layout decade ratio reads 17-18x on 10x while its pair
-    # OUTPUT is exactly 10.0x (counted both decades) -- census the
-    # pre-combine co-occurrence rows per decade (the r13 ppjoin
-    # stage-localization method; prediction on record: >= 30x on
-    # 10x).  If confirmed, fix class = frequency-capped shingle
-    # blocking or the prefix lever at low threshold; if refuted, the
-    # term is shuffle/spill-shaped.  (The one-file-per-bucket layout
-    # change that exposed this needs NO re-entries: plan shapes and
-    # rows are bit-identical -- probed and gate-spot-checked 10/10 --
-    # only file counts changed.)
-    #   -> CENSUS RAN (r14 second leg, scripts/ngram_census.py):
-    #   prediction REFUTED -- postings, sum C(f,2), and the exact
-    #   filtered co-occurrence count are all EXACTLY 10.00x per
-    #   decade (the suffix-replica corpus is vocabulary-disjoint, so
-    #   frequencies cannot grow; top shingle freq is 25 at every
-    #   decade).  The term is shuffle/spill-shaped: suspects are the
-    #   per-task partial hash aggregate (parallelism == 32 buckets)
-    #   spilling at sf100 volumes, split by
-    #   scripts/ngram_decade_probe.py's heap (64g) and bucket (256)
-    #   probes -- see SCALING.md "co-occurrence census" for rows and
-    #   the fix decision.
-    #   -> PROBES RAN + FIX SHIPPED (r14 verification session): the
-    #   bucket probe collapsed the term at constant total work
-    #   (same-day cells: sf100/32-bucket median 306.9 s = 12.0x on
-    #   10x vs sf100/256-bucket 241.8 s = 9.45x -- data-proportional;
-    #   the heap probe became moot).  bucketed_postings now sizes the
-    #   bucket count to the corpus at write time
-    #   (pipeline._postings_bucket_count: pow2 from floor 32 at
-    #   ~4 MiB/bucket, cap 4096, env-overridable) -- every test/driver
-    #   SF and sf10 keep exactly 32, so plans, tables and bench
-    #   numbers at sf0.1 are bit-unchanged and NO re-entry is needed
-    #   (layout-only: bucket membership is murmur3(s) mod n; rows
-    #   identical by construction, suite + oracle parity green).
-    #   ppjoin sanity at 256: 86.9 s, parity with the 83.8 s
-    #   32-bucket row on a ~1.25x faster box; containment sanity at
-    #   256: 369.9 s vs the faster-box 305.6 s 32-bucket median --
-    #   parity under the measured ~1.2x box drift.  Residual for r15:
-    #   promote containment's single-run sanity to a median-of-3
-    #   two-session band (SCALING.md round-14 third leg).
-    # Round 15 (registry 145): EXECUTED as queued.  (1) No red r14
-    # rows.  (2) Rule-2 re-entries: stream_novelty_filter +
-    # stream_novelty_index_compact (the cascade's per-wave re-plan --
-    # wave bands from the at-rest b_sig table, wave id from the
-    # staged replay order, staging session-cached as fixture input;
-    # rows/oracles unchanged, REDEFINED -> 15 in the same commit).
-    # (3) dedup_ngram_incremental REGISTERED (145 <= 150 headroom
-    # holds; oracle = the from-scratch DEDUP_NGRAM_SQL, so the gate
-    # proves append==rebuild end-to-end).  (4) A third rule-2
-    # re-entry landed later in the round: fuzzy_match_symspell -- the
-    # core-scaling probe caught its deletion-neighborhood explode
-    # running in ONE scan task (part.parquet is a single sub-split
-    # file), serial at every core count; a cores-keyed pre-explode
-    # repartition fixed it (10x-part wall 22.5 -> 5.8 s; see
-    # OPTIMIZATION_r15.md SS8).  Seat math against the r14 ledger:
-    # 45 due (the r11-green cohort at ceiling) + 1 rule-1 never-green
-    # + 3 rule-2 = 49 into 50 seats, deferred_due() empty (computed
-    # via window.build_window before each commit).
-    # ROUND-13 QUEUE (written at r12 close): NO new faces queued -- by
-    # the headroom decision below, depth over breadth.  Window13 seat
-    # math (assuming a green r12 gate): the 45 remaining r10-green
-    # entries hit the ceiling and MUST seat, leaving ~5 seats for
-    # rule-2 re-entries.  The rule-2 queue, ranked: (1) DONE IN R12's
-    # second leg -- the at-rest bucketed signature table extended to
-    # corpus_novelty_filter (window12 had one discretionary seat
-    # left; REDEFINED->12, pin removed, plan-pinned); (2) STAGED IN
-    # R12's second leg -- the at-rest shingle-bucketed POSTINGS table
-    # is BUILT and measured (pipeline.bucketed_postings +
-    # dedup_ngram_jaccard_atrest, pinned in tests/test_r13_queue.py:
-    # exact parity, zero-exchange self-join, no Python stage; bake-off
-    # sf10 median 29.1 vs 61.5 registered, floors 25.7 vs 44.7 --
-    # scripts/postings_bakeoff.py; sf10 floor bands across second
-    # readings: ngram 37.4-44.7 -> 25.3-25.7, containment 53.3 ->
-    # 33.6-37.1, ppjoin 50.3-55.2 -> 24.9-26.8 (tight, unambiguous);
-    # the graph faces swing ~2x run-to-run in BOTH shapes so their
-    # case is structural + riding ngram's swap -- every postings
-    # consumer staged, adversarial-corpus parity pinned).  R13 REGISTRATION
-    # PLAN, seat-exact: the 45 r10-green entries MUST seat; the five
-    # re-entries are (a) dedup_ngram_jaccard -- point `ex` at
-    # bucketed_postings, drop the pin -- which redefines its two
-    # direct callers pagerank_neardup + dedup_graph_triangles in the
-    # same commit (3 seats), (b) dedup_containment -- same two-line
-    # swap (1 seat), (c) dedup_jaccard_ppjoin -- adopt the staged
-    # _atrest body (1 seat).  45 + 5 = 50 exactly: register all five
-    # ONLY if the r12 gate came back fully green (any rule-1/red
-    # entry displaces a seat -- then drop (c), the smallest win,
-    # first).  (3) the localCheckpoint-sweep queue item is SUPERSEDED
-    # for the dedup tier by the at-rest layout (ppjoin_atrest needs
-    # no materialization at all -- every reused subtree is a table
-    # scan); BPE vocab chain remains if the leak class ever shows up
-    # in practice.  (4) optional, zero-seat candidate: the novelty
-    # stream's SEED index build (streaming/novelty_stream._seed_index)
-    # recomputes the Python signature per session; deriving seed bands
-    # as lsh_bands(bucketed_signature(...).filter(corpus)) reuses the
-    # at-rest table -- identical seed rows (b_sig is per-doc, the
-    # corpus filter commutes), warmup-only win, and the streaming
-    # QUERY plan is untouched (the seed is an input artifact) -- but
-    # bundle it with a REDEFINED entry anyway if r13 has a seat to
-    # spare, per the conservative reading of rule 2.
-    # HEADROOM DECISION (round 12, directive #8): the registry sits at
-    # 144 of the HALVES_THRESHOLD=150 under which the 2-round
-    # staleness ceiling is pigeonhole-achievable.  Decision: STAY AT
-    # OR UNDER 150 -- rounds 13+ spend their effort on depth (decade
-    # evidence, plan-quality levers, guard hardening) rather than
-    # breadth, and any genuinely new face must either replace a
-    # retired one or arrive with the achievable-ceiling simulation
-    # (window.achievable_ceiling + the forward-simulation in
-    # test_halves_hold_achievable_ceiling, run over the REAL registry
-    # names) showing the ceiling-3 regime is acceptable for the whole
-    # registry before the 151st entry lands.  Rationale: every
-    # reference-§2 component and the LLM-pipeline tier are covered at
-    # 144; past 150 each extra face dilutes re-verification of every
-    # existing one (ceiling 2 -> 3 is a 50% staleness increase at
-    # judge time, paid by all 150+).
-    # ORDERING NOTE (round-11 advice): rule 2 is round-granular, so a
-    # plan-change commit must land BEFORE the round's gate run -- a
-    # green row recorded earlier in the same round would satisfy
-    # ledger[n] >= redefined[n] and silently vouch for the obsolete
-    # plan.  This repo's rounds end with the single driver gate run,
-    # so commits always precede it; anyone re-running the gate mid-
-    # round must re-run it after the last plan change, or key the
-    # REDEFINED entry to round+1.
+    # DuckDB oracle).
     window = _win.build_window(list(queries), _win.load_ledger())
     assert len(window) == min(len(queries), _win.WINDOW_SIZE)
     ordered = {n: queries[n] for n in window}
     ordered.update({n: queries[n] for n in queries if n not in ordered})
     return ordered, oracles
-
-
-def _window8_history() -> list[str]:
-    """Rounds 8-9 window, kept for the rotation-clock audit trail."""
-    # Round 8 (registry 138): the twenty-three never-green entries lead
-    # (changelog_authdiff -- new, the SET/AUTHDIFF replay face;
-    # similarity_ivfpq_trained -- registered r7 but rows-only until its
-    # unrolled deterministic-Lloyd oracle landed this round, so it has
-    # never had a green hash row; the six new TPC-H plan-quality faces
-    # q7/q8/q10/q14/q17/q22, the BM25 retrieval face, the
-    # TPC-H-completion batch q2/q9/q11/q12/q13/q15/q16/q20/q21 -- with
-    # these all 22 TPC-H queries are implemented, each adapted to the
-    # testdata schema with its plan-quality point preserved -- and the
-    # two training-order faces shuffle_epoch_shards +
-    # domain_temperature_weights, closing the curated-corpus ->
-    # training-mix last mile, and scd2_profile_versions -- the SCD
-    # Type 2 validity-interval history, the third changelog face after
-    # replay and asof, and the late-round pair
-    # changelog_incremental_agg -- incremental materialized-view
-    # maintenance, merge-vs-recompute proven by the from-scratch
-    # oracle -- and split_group_holdout -- the leakage-safe group
-    # split with its doc-level leakage census); then the
-    # six redefined-in-r8 entries under rule 2 (q19_disjunctive_revenue
-    # -- revenue now ROUND(.,6); stream_novelty_filter -- result
-    # re-planned lazy/storage-backed, wave-partitioned; events_funnel +
-    # events_retention_cohorts + q3_shipping_priority +
-    # q5_region_revenue -- SF-growing broadcast hints dropped, join
-    # strategy now AQE's); then ALL NINETEEN r5-newest-row queries
-    # (exactly at the ceiling -- the round-7 verdict's directive #1);
-    # then 4 of the 45 remaining r6-green entries, chosen
-    # reference-semantics-first (the KV/changelog/quota command faces
-    # predate two rounds of engine/changelog refactors; kv_get_point
-    # and auth_hash_users -- the two simplest plans of that family,
-    # untouched for rounds -- yield their seats to the training-order
-    # faces, kv_top_mru -- whose MRU semantics are independently
-    # r7-green via stream_mru_types -- to the SCD2 face, and
-    # kv_insert_guarded + kv_upsert_classify -- both with full-engine
-    # pytest paths in test_kv_engine.py -- to the late-round pair,
-    # all forced into the window by rule 1).  Deferred to
-    # round 9, where they MUST lead (their newest row r6 hits the
-    # ceiling there):
-    # orders_rollup, customer_order_coverage, events_sessionize,
-    # events_json_extract, inactive_customers_by_nation,
-    # brand_supplier_breadth, repeat_buyer_setops, skew_salted_distinct,
-    # supplier_brand_division, nation_rolling_revenue,
-    # orders_grouping_sets, dedup_exact, dedup_minhash_lsh,
-    # dedup_simhash, dedup_ngram_jaccard, text_quality, token_count,
-    # text_lang_id, doc_fingerprint, text_repetition,
-    # similarity_lsh_buckets, similarity_lsh_knn,
-    # dedup_embedding_cosine, multimodal_metadata,
-    # multimodal_frame_sample, multimodal_resize, multimodal_features,
-    # doc_chunk_windows, bpe_merge_pairs, plus the twelve displaced by
-    # the TPC-H completion batch and the round-8 additions:
-    # kv_all_keys, all_users_fold, fn_registry_doc_stats,
-    # q1_pricing_summary, q4_order_priority, top_customers_window,
-    # asof_click_attribution, range_join_prior_activity,
-    # stream_click_purchase_join, kv_get_point, auth_hash_users,
-    # kv_top_mru, kv_insert_guarded, kv_upsert_classify (43
-    # entries; all carry pinned local tests -- the multimodal family
-    # has injectable-codec pytest coverage, the LSH/dedup families
-    # property differentials, the KV/KMR faces full-engine pytest
-    # paths; 43 mandatory + up to 7 new fits the 50-slot r9 window).
-    window8 = [
-        # -- never green ----------------------------------------------
-        "changelog_authdiff",
-        "similarity_ivfpq_trained",
-        # -- new in round 8 (never driver-checked): the TPC-H plan-
-        # quality batch (decorrelated Q17, anti-join Q22, dual-nation
-        # Q7, conditional-share Q8/Q14, top-k Q10) + BM25 retrieval
-        "q7_nation_volume",
-        "q8_market_share",
-        "q10_returned_items",
-        "q14_promo_revenue",
-        "q17_small_quantity",
-        "q22_dormant_value",
-        "text_bm25_topk",
-        # -- new in round 8: TPC-H completion (22/22 implemented) ------
-        "q2_min_cost_supplier",
-        "q9_product_profit",
-        "q11_important_parts",
-        "q12_priority_shipping",
-        "q13_order_distribution",
-        "q15_top_supplier",
-        "q16_part_supplier_census",
-        "q20_dominant_suppliers",
-        "q21_blocking_suppliers",
-        # -- new in round 8: training-order faces ---------------------
-        "shuffle_epoch_shards",
-        "domain_temperature_weights",
-        # -- new in round 8: SCD Type 2 (third changelog face) --------
-        "scd2_profile_versions",
-        # -- new in round 8 (late): incremental MV + group holdout ----
-        "changelog_incremental_agg",
-        "split_group_holdout",
-        # -- redefined in round 8 (rule 2) ----------------------------
-        "q19_disjunctive_revenue",
-        "stream_novelty_filter",
-        "events_funnel",
-        "events_retention_cohorts",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        # -- r5-stale (ALL nineteen; directive #1) --------------------
-        "kv_mix_ops",
-        "zorder_cluster_stats",
-        "quality_filter_composite",
-        "dedup_span_exact",
-        "doc_length_quantiles",
-        "embedding_quantize",
-        "events_ohlc",
-        "events_type_pivot",
-        "events_type_unpivot",
-        "events_user_paths",
-        "interval_overlap_errors",
-        "lm_unigram_score",
-        "orders_customer_reconcile",
-        "orders_monthly_growth",
-        "pack_sequences",
-        "profile_orders",
-        "q6_forecast_revenue",
-        "sample_weighted",
-        "token_bpe_pretokenize",
-        # -- r6 refresh: reference-command faces first ----------------
-        "changelog_replay",
-        "quota_sliding_window",
-    ]
-    assert len(window8) == 50, len(window8)
-    return window8
-
-
-def _window7_history() -> list[str]:
-    """Round-7 window, kept for the rotation-clock audit trail."""
-    # Round 7 (registry 116): the eight new queries lead
-    # (fuzzy_match_symspell -- the linear SymSpell fuzzy path, now under
-    # the hard gate; similarity_ivfpq_trained -- rows-only, no SQL
-    # oracle by design; dedup_semantic -- the SemDeDup
-    # cluster-then-purge manifest; q19_disjunctive_revenue -- the
-    # OR-of-ANDs pushdown face; q18_large_orders -- semi-join against
-    # an aggregated subquery; stream_novelty_filter -- the continuous-
-    # crawl admission cascade with a wave-unrolled oracle;
-    # changelog_asof -- time travel over the append-only log;
-    # skew_salted_join -- the hot-key-proof join proven result-identical
-    # to its unsalted oracle); two r6-green queries re-enter under
-    # rule 2:
-    # orders_above_customer_avg (comparison changed to the epsilon
-    # margin), similarity_cosine_topk (exact path re-planned from
-    # the n^2 pair join to blocked per-group top-k) and
-    # text_tfidf_top_terms (df side re-planned: map-side per-doc term
-    # dedup, vocab broadcast hint dropped); then the eight
-    # r4-stale queries (exactly at the ceiling -- mr_odd_key_vals
-    # first, its last row predates two rounds of confinement/engine
-    # rewrites); then 31 of the 50 r5-green entries oldest-first,
-    # including events_gap_fill (plan changed: 168 h clamp) and the
-    # reference-semantics-bearing streaming faces
-    # stream_quota_admission / stream_mru_types.  Deferred to round 8,
-    # where they MUST lead (newest row r5 = two rounds old at r7 judge
-    # time), chosen for the strongest non-driver coverage:
-    # kv_mix_ops (benched microbench), dedup_span_exact (property
-    # tests), zorder_cluster_stats (envelope pins), pack_sequences,
-    # embedding_quantize, sample_weighted, token_bpe_pretokenize
-    # (bpe_merge_pairs r6-green covers the family), doc_length_quantiles
-    # (quantile differentials), profile_orders, events_type_unpivot
-    # (pivot face in-window), interval_overlap_errors (temporal-op
-    # differentials), events_ohlc (events family has seven other
-    # in-window faces), q6_forecast_revenue (pushdown/pruning asserted
-    # at the plan level in tests/test_plans.py), orders_monthly_growth
-    # (lag over a ~80-row aggregate; series shape stable since r5),
-    # lm_unigram_score (randomized differentials in
-    # test_textprep_property.py), events_user_paths (the events
-    # sequential family keeps funnel/markov/sessionize in-window),
-    # orders_customer_reconcile (changelog_asof keeps a full-outer
-    # drift census in-window), events_type_pivot (the unpivot twin is
-    # deferred with it; both lead round 8), quality_filter_composite
-    # (randomized rule-cascade differentials in
-    # test_textprep_property.py).
-    window = [
-        # -- new in round 7 (never driver-checked) --------------------
-        "fuzzy_match_symspell",
-        "similarity_ivfpq_trained",
-        "dedup_semantic",
-        "q19_disjunctive_revenue",
-        "q18_large_orders",
-        "stream_novelty_filter",
-        "changelog_asof",
-        "skew_salted_join",
-        # -- redefined in round 7 (epsilon; blocked knn; tfidf df plan) -
-        "orders_above_customer_avg",
-        "similarity_cosine_topk",
-        "text_tfidf_top_terms",
-        # -- r4-stale (newest driver row: round 4; at the ceiling) ----
-        "mr_odd_key_vals",
-        "contamination_check",
-        "kv_aes_at_rest",
-        "pipeline_corpus_curation",
-        "sample_stratified",
-        "similarity_ivf_knn",
-        "sketch_distinct_tokens",
-        "split_assign",
-        # -- r5-aged refresh, oldest-first (31 of 50) -----------------
-        "events_gap_fill",          # plan changed round 7: 168 h clamp
-        "stream_quota_admission",
-        "stream_mru_types",
-        "fuzzy_part_match",
-        "basket_part_pairs",
-        "bucketed_segment_revenue",
-        "corpus_novelty_filter",
-        "dedup_clusters",
-        "dedup_containment",
-        "dedup_graph_triangles",
-        "dedup_jaccard_ppjoin",
-        "dedup_purge_canonical",
-        "domain_mix_sample",
-        "embedding_label_centroids",
-        "embedding_pq_codes",
-        "events_anomaly_mad",
-        "events_cube_summary",
-        "events_funnel",
-        "events_markov_transitions",
-        "events_retention_cohorts",
-        "order_value_deciles",
-        "pagerank_neardup",
-        "similarity_ivf_search",
-        "similarity_ivfpq_search",
-        "stream_dedup_first_seen",
-        "stream_enrich_revenue",
-        "stream_session_counts",
-        "stream_topk_trending",
-        "stream_windowed_counts",
-        "text_pii_scrub",
-        "tokens_pmi_bigrams",
-    ]
-    return window
 

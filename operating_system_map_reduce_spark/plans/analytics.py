@@ -1460,7 +1460,6 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
         # consumers' green rows still vouch for their plans.
         write_bucketed(df, table, key, n_buckets=n_buckets,
                        one_file_per_bucket=True)
-        _TABLE_BUCKETS[table] = n_buckets
 
 
 # Warehouse dirs where a bucketed write has FAILED this process (e.g.
@@ -1470,16 +1469,6 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
 # the warehouse URI so one failed probe stops re-paying a doomed write
 # job per query.
 _RO_WAREHOUSES: set = set()
-
-# Bucket count each table was WRITTEN with this process (round-15
-# advice fix): the table name does not encode the count, so a policy
-# answer that changes mid-session for the same source mtime (e.g.
-# SPARK_GRAFT_POSTINGS_BUCKETS set/changed after a table was built)
-# would silently serve the old-count layout.  Rows stay correct either
-# way -- bucket count is pure layout -- but the override being
-# ignored deserves a signal; pid-scoped names mean any existing table
-# was written by THIS process, so a process-local registry is exact.
-_TABLE_BUCKETS: dict = {}
 
 
 def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
@@ -1510,14 +1499,6 @@ def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
     wh = spark.conf.get("spark.sql.warehouse.dir")
     if wh in _RO_WAREHOUSES:
         return build()
-    written = _TABLE_BUCKETS.get(table)
-    if written is not None and written != n_buckets:
-        import warnings
-        warnings.warn(
-            f"at_rest_table: {table!r} exists with {written} buckets "
-            f"but {n_buckets} were requested; serving the existing "
-            "layout (rows identical -- bucket count is layout only)",
-            RuntimeWarning, stacklevel=2)
     if not spark.catalog.tableExists(table):
         try:
             _ensure_bucketed(spark, table, build(), key, n_buckets)

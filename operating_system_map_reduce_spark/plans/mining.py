@@ -236,49 +236,28 @@ GROUP BY path ORDER BY n_paths DESC, path LIMIT 20
 # |A inter B| <= |B|, so C >= t forces |B| >= t*|A| -- pruned in the
 # join condition with exact integer arithmetic.
 #
-# ROUND-12 BAKE-OFF (the round-11 decade row's named lever, measured
-# and REJECTED -- the count-join below stays): a containment-adapted
-# asymmetric prefix filter was implemented
-# (dedup_containment_prefix below), and it does what the theory
-# promises -- candidate join rows drop 9.6x (1.73M -> 181k at sf0.1),
-# distinct candidates 8.8x, exactness differential-pinned.  But the
-# verify stage then pays candidates x array-payload through the
-# pair-key exchange: at sf10 that is 17.4M pairs x ~2 KB of shingle
-# strings ~ 35 GB (same-session measurements: string-array verify
-# 222 s, xxhash64-long arrays 151 s -- and the hashed form trades away
-# bit-exactness -- vs this count-join 204 s in the SAME degraded
-# session; its fresh-JVM stabilized record is 90-111 s, and it wins at
-# every smaller SF too: sf1 floor 6.9 vs 8.6, sf0.1 stabilized 2.26
-# vs ~16 cold).  The count-join's verify moves only narrow
-# (id_a, id_b, n_a) rows into a map-side-combining hash aggregate
-# (~5 GB at sf10), and candidate volume is provably replica-LINEAR
-# (174k -> 17.4M, exactly 100x on 100x replicas -- the r11 ~13x
-# floor-to-floor reading conflated a loaded box with plan behavior).
-# Neither shape is superlinear; the count-join has the smaller
-# constant on every measured decade, so it remains the registered
-# plan.  Full account: SCALING.md round-12 section.
+# Why the count-join and not a prefix filter: a containment-adapted
+# asymmetric prefix filter cuts candidate join rows 9.6x (1.73M ->
+# 181k at sf0.1), but its verify then pays candidates x array payload
+# through the pair-key exchange -- at sf10 ~35 GB of shingle strings
+# (string-array verify 222 s vs this count-join 204 s in the same
+# session; the count-join also wins at sf1 and sf0.1).  The
+# count-join's verify moves only narrow (id_a, id_b, n_a) rows into a
+# map-side-combining hash aggregate, and its candidate volume is
+# replica-linear.  Full account: SCALING.md round-12.
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-join over the at-rest shingle-bucketed postings table
-    -- REGISTERED round 13 (staged + measured round 12; see
-    plans/pipeline.dedup_ngram_jaccard for the at-rest account).
-    Postings from pipeline.bucketed_postings: the self-join is
-    co-bucketed on the shingle, zero-exchange, no Python stage.
+    (pipeline.bucketed_postings): the self-join is co-bucketed on the
+    shingle, zero-exchange, no Python stage.
 
-    The SHUFFLE_HASH pin the r12 bake-off planned to keep (its sf10
-    job: hash-build-over-sort, 37.1 s pinned vs 64.2 unpinned) was
-    REMOVED at the fourth decade's own measurement: at sf100 the
-    pinned shape dies with SparkOutOfMemoryError("not enough memory
-    to build hash map") in ShuffledHashJoinExec -- the per-task hash
-    relation holds one BUCKET of postings, bucket size grows linearly
-    with the corpus, and the SHJ build side cannot spill.  A 1.7x
-    sf10 win that becomes an OOM one decade later is exactly the
-    trade the 100x frame forbids; the unpinned plan is the
+    No join hint: a SHUFFLE_HASH pin ran 1.7x faster at sf10 (37.1 vs
+    64.2 s) but at sf100 dies with SparkOutOfMemoryError("not enough
+    memory to build hash map") -- the per-task hash relation holds one
+    BUCKET of postings, bucket size grows linearly with the corpus,
+    and the SHJ build side cannot spill.  The unpinned plan is the
     exchange-free SortMergeJoin of two bucketed scans, whose bucket
-    sorts spill gracefully and scale (measured sf10 61.8-64.2 s;
-    sf100 in SCALING.md round-13).  Exactness vs the through-Python
-    witness (dedup_containment_shuffle below) is differential-pinned
-    in tests/test_r13_queue.py."""
+    sorts spill gracefully and scale (SCALING.md round-13)."""
     from operating_system_map_reduce_spark.plans.pipeline import (
         bucketed_postings)
 
@@ -298,108 +277,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # filter the ROUNDED value so the predicate matches the oracle's
         # (which filters its own ROUND(..., 6) output) bit-for-bit at the
         # 0.8 boundary
-        .filter(F.col("containment") >= 0.8)
-        .select("id_a", "id_b", "containment")
-        .orderBy("id_a", "id_b")
-    )
-
-
-def dedup_containment_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The through-Python count-join registered through round 12 --
-    UNREGISTERED since the r13 at-rest swap, kept as the
-    no-writable-warehouse fallback and the differential witness.  The
-    SHUFFLE_HASH pin here guards the round-11 lying-estimate class:
-    both sides corpus-grown behind the mapInPandas shingling barrier
-    (see dedup_ngram_jaccard_shuffle's account)."""
-    docs = _t(spark, sf_dir, "documents")
-    ex = _dd.shingle_postings(docs)
-    a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-    b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                  F.col("s").alias("s_b")).hint("SHUFFLE_HASH")
-    inter = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") != F.col("id_b"))
-               & (F.col("n_b") * F.lit(5) >= F.col("n_a") * F.lit(4)))
-        .groupBy("id_a", "id_b", "n_a")
-        .agg(F.count(F.lit(1)).cast("double").alias("inter"))
-    )
-    return (
-        inter.withColumn(
-            "containment", F.round(F.col("inter") / F.col("n_a"), 6))
-        .filter(F.col("containment") >= 0.8)
-        .select("id_a", "id_b", "containment")
-        .orderBy("id_a", "id_b")
-    )
-
-
-def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The containment-adapted ASYMMETRIC prefix-filter shape --
-    implemented for the round-12 bake-off, NOT registered (see the
-    dedup_containment docstring for why the count-join won).  Kept as
-    the candidate-generation shape for workloads where verification is
-    cheap relative to the inverted-index join (higher thresholds,
-    pre-bucketed at-rest arrays, or a band where candidates are sparse
-    enough that pairs x arrays << postings-join rows).
-
-    The filter (Chaudhuri et al. SSJoin; Xiao et al. PPJoin, adapted
-    to the one-sided containment bound):
-      * the required overlap alpha = ceil(t*n_a) depends ONLY on the
-        contained side A, so A's postings cut to their first
-        n_a - alpha + 1 shingles in GLOBAL document-frequency order --
-        a pair with overlap >= alpha must share a token inside A's
-        prefix (missing all of them caps the overlap at alpha - 1);
-        at t = 0.8 the prefix keeps ~21% of the probe postings.
-      * B CANNOT be prefix-cut (alpha is partner-dependent: a tiny A
-        needs only a tiny overlap, which can hide anywhere in B); B
-        keeps full postings with its frequency-order position, buying
-        PPJoin's POSITIONAL bound -- a row matching at positions
-        (i, j) caps the overlap at 1 + min(n_a - i, n_b - j), and a
-        qualifying pair's FIRST common token (smallest position in
-        BOTH docs under the shared total order) always satisfies it,
-        so filtering candidate ROWS on the bound loses no pair.
-      * alpha guards the ROUNDED boundary: the result filters
-        round(inter/n_a, 6) >= 0.8, which admits inter/n_a down to
-        0.7999995, so alpha = ceil(n_a * 7999995 / 1e7) -- identical
-        to ceil(0.8*n_a) for every n_a < 400_000 but correct past it
-        (a 400k-distinct-shingle doc is a book, real at 100 TB).
-    Exactness vs the registered count-join is differential-pinned in
-    tests/test_pipeline_ops.py::TestContainmentPrefixFilter."""
-    docs = _t(spark, sf_dir, "documents")
-    # persist(), not localCheckpoint: checkpoint blocks have no public
-    # release handle (the round-11 finding that settled the CMS frame
-    # on persist), so a corpus-sized checkpoint per invocation would
-    # leak until nondeterministic py4j GC; persisted blocks at least
-    # release via catalog.clearCache() / session teardown.
-    arr = _dd.shingle_arrays(docs).persist()
-    ex = arr.select("doc_id", "n", F.explode("shingles").alias("s"))
-    pos = _dd.freq_ordered_postings(ex).persist()
-    # alpha = ceil(n_a * 7999995 / 1e7) in exact integer arithmetic
-    alpha_a = ((F.col("n_a") * F.lit(7999995) + F.lit(9999999))
-               .cast("long") / F.lit(10000000)).cast("long")
-    a = (pos.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"),
-                    "s", F.col("pos").alias("pos_a"))
-         .filter(F.col("pos_a") <= F.col("n_a") - alpha_a + 1)
-         .hint("SHUFFLE_HASH"))
-    b = pos.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                   F.col("s").alias("s_b"), F.col("pos").alias("pos_b"))
-    positional = (
-        F.lit(1) + F.least(F.col("n_a") - F.col("pos_a"),
-                           F.col("n_b") - F.col("pos_b")) >= alpha_a)
-    cand = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") != F.col("id_b"))
-               & (F.col("n_b") * F.lit(5) >= F.col("n_a") * F.lit(4))
-               & positional)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = arr.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"),
-                    F.col("shingles").alias("sh_a"))
-    sb = arr.select(F.col("doc_id").alias("id_b"),
-                    F.col("shingles").alias("sh_b"))
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("containment",
-                    F.round(F.size(F.array_intersect("sh_a", "sh_b"))
-                            .cast("double") / F.col("n_a"), 6))
         .filter(F.col("containment") >= 0.8)
         .select("id_a", "id_b", "containment")
         .orderBy("id_a", "id_b")
@@ -1141,14 +1018,14 @@ def deletion_neighborhood_pairs(p: DataFrame) -> DataFrame:
     without shuffling the keyed table (round-7 plan fix: the old
     .distinct() was a full wide exchange).
 
-    Parallelism (round 15): the explode is distributed across cores by
-    a p_partkey repartition of the INPUT rows first.  part.parquet is
+    Parallelism: the explode is distributed across cores by a
+    p_partkey repartition of the INPUT rows first.  part.parquet is
     one file well under a 128 MB split even at 10x rows, so both
-    explode map sides ran in ONE scan task -- a serial term the r15
-    core-scaling probe exposed (scripts/symspell_scale_probe.py: at
-    10x part rows the face ran 8.4x longer and 8-vs-32-core read 1.03
-    -- linear in data, flat in cores, the single-split signature of
-    guide SS2.5's 'one huge unsplittable input').  The repartition
+    explode map sides ran in ONE scan task -- a serial term a
+    core-scaling probe exposed (OPTIMIZATION_r15.md SS8: at 10x part
+    rows the face ran 8.4x longer and 8-vs-32-core read 1.03 -- linear
+    in data, flat in cores, the single-split signature of one huge
+    unsplittable input).  The repartition
     moves the NARROW pre-explode rows (1/(L+1) of the bytes the
     post-explode join exchange already shuffles), so it is cheap
     insurance at every scale and the whole neighborhood derivation

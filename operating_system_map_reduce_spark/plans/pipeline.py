@@ -534,16 +534,15 @@ ORDER BY simhash
 
 # Corpus bytes per postings bucket.  A bucketed join's parallelism IS
 # the bucket count, so a CONSTANT count means per-task aggregate
-# volume grows with the corpus: the round-14 ngram probes measured the
-# registered face exactly replica-linear in input, candidates and
-# output (scripts/ngram_census.py) yet 17-18x on 10x data between
-# sf10 and sf100 -- per-task hash-aggregate state at 32-bucket
-# parallelism crossing the spill threshold -- and the bucket probe
-# (scripts/ngram_decade_probe.py, 256 buckets at constant total work)
-# collapsed the term.  4 MiB of source corpus per bucket reproduces
-# the probed cells: every driver/test SF and the sf10 replica corpus
-# stay at the floor of 32 (bench-comparable, task-per-core on the
-# local[32] harness), the sf100 replica corpus (810 MB) gets 256.
+# volume grows with the corpus: the ngram face measured exactly
+# replica-linear in input, candidates and output yet 17-18x on 10x
+# data between sf10 and sf100 -- per-task hash-aggregate state at
+# 32-bucket parallelism crossing the spill threshold -- and 256
+# buckets at constant total work collapsed the term (SCALING.md
+# round-14).  4 MiB of source corpus per bucket reproduces the probed
+# cells: every benchmark/test SF and the sf10 replica corpus stay at the
+# floor of 32 (task-per-core on the local[32] harness), the sf100
+# replica corpus (810 MB) gets 256.
 _POSTINGS_BUCKET_BYTES = 4 * 1024 * 1024
 _POSTINGS_BUCKET_FLOOR = 32
 # Cap: one bucket is one file and one join task; 4096 buckets x
@@ -554,45 +553,21 @@ _POSTINGS_BUCKET_CAP = 4096
 
 
 def _postings_bucket_count(sf_dir: str) -> int:
-    """Bucket count for b_post, sized to the corpus at write time --
-    the production policy the constant pretended to be (its docstring
-    said "the way a production write would size it to its cluster";
-    now it does).  Power-of-two growth from the floor, keyed on the
-    source corpus' on-disk bytes (documents.parquet file, or summed
-    parquet parts for a directory corpus) -- a write-time stat, no
-    Spark job.  ``SPARK_GRAFT_POSTINGS_BUCKETS`` overrides for
-    deployments that size to the cluster instead."""
+    """Bucket count for the corpus-keyed at-rest tables (b_post and
+    b_edge), sized to the corpus at write time.  Power-of-two growth
+    from the floor, keyed on the source corpus' on-disk bytes
+    (documents.parquet file, or summed parquet parts for a directory
+    corpus) -- a write-time stat, no Spark job.  The table names key
+    on the source mtime, so the count cannot change under a live
+    table."""
     import os
 
-    env = os.environ.get("SPARK_GRAFT_POSTINGS_BUCKETS")
-    if env:
-        # validate loudly (round-15 advice fix): a typo'd override
-        # must fail at plan time with ITS name in the message, not as
-        # a bare int() traceback or a bucketBy(0) write-time error
-        try:
-            n = int(env)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_POSTINGS_BUCKETS must be a positive "
-                f"integer, got {env!r}") from None
-        if n <= 0:
-            raise ValueError(
-                f"SPARK_GRAFT_POSTINGS_BUCKETS must be positive, got {n}")
-        if n & (n - 1):
-            import warnings
-            warnings.warn(
-                f"SPARK_GRAFT_POSTINGS_BUCKETS={n} is not a power of "
-                "two; the policy's own counts are pow2 so decade "
-                "comparisons against them will be off-grid",
-                RuntimeWarning, stacklevel=2)
-        return n
     path = os.path.join(sf_dir, "documents.parquet")
     if os.path.isdir(path):
-        # recursive walk (round-15 advice fix): a partitioned/nested
-        # parquet dataset keeps its parts in subdirectories, which the
-        # old top-level scandir summed to 0 bytes -- silently landing
-        # on the 32-bucket floor at any corpus size, the exact
-        # per-task-volume regression the policy exists to prevent
+        # recursive walk: a partitioned/nested parquet dataset keeps
+        # its parts in subdirectories, which a top-level scan would
+        # sum to 0 bytes -- silently landing on the 32-bucket floor at
+        # any corpus size
         nbytes = sum(
             os.path.getsize(os.path.join(r, f))
             for r, _, fs in os.walk(path)
@@ -613,28 +588,26 @@ def _postings_bucket_count(sf_dir: str) -> int:
 
 def bucketed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shingle inverted index (doc_id, n, s) as an AT-REST parquet
-    table bucketed AND sorted on the shingle ``s`` -- the round-13
-    queue's item (2), built this round as unregistered machinery.
+    table bucketed AND sorted on the shingle ``s``.
 
-    Motivation mirrors bucketed_signature: the postings self-join that
-    powers dedup_ngram_jaccard (and through it pagerank_neardup /
-    dedup_graph_triangles) carries a SHUFFLE_HASH pin because both
-    sides are corpus-grown behind the mapInPandas shingling barrier,
-    where the planner's estimate collapses to the scan size (sf10 read
-    a 26M-row / 3-4 GB side as < 64 MB and broadcast it).  At rest the
-    pin becomes unnecessary AND the join becomes exchange-free: a
-    self-join of a table bucketed+sorted on the join key plans as a
-    zero-shuffle, zero-sort SortMergeJoin -- at 100 TB the dominant
-    stage (the corpus-sized postings exchange) is deleted outright,
-    and only candidate-bounded pair rows reach the count aggregate.
+    The postings self-join that powers dedup_ngram_jaccard,
+    dedup_jaccard_ppjoin and dedup_containment (and through ngram's
+    pairs pagerank_neardup / dedup_graph_triangles) joins two
+    corpus-grown sides.  Computed per query behind the mapInPandas
+    shingling barrier, the planner's estimate collapses to the scan
+    size (sf10 read a 26M-row / 3-4 GB side as < 64 MB and broadcast
+    it).  At rest the join is exchange-free: a self-join of a table
+    bucketed+sorted on the join key plans as a zero-shuffle
+    SortMergeJoin, so the corpus-sized postings exchange is deleted
+    outright and only candidate-bounded pair rows reach the count
+    aggregate.
 
-    Bucket count: corpus-scaled via _postings_bucket_count (round 14;
-    floor 32, not the default 16, because the bucketed self-join's
-    parallelism IS the bucket count and the local[32] harness wants a
-    task per core).  The count affects the table LAYOUT only -- bucket
-    membership of a row is pure murmur3(s) mod n -- so every consumer
-    computes identical rows at any count; what scales is per-task
-    join/aggregate volume (see the constants' comment)."""
+    Bucket count: corpus-scaled via _postings_bucket_count (floor 32,
+    not the default 16, because the bucketed self-join's parallelism
+    IS the bucket count).  The count affects the table LAYOUT only --
+    bucket membership of a row is pure murmur3(s) mod n -- so every
+    consumer computes identical rows at any count; what scales is
+    per-task join/aggregate volume (see the constants' comment)."""
     from operating_system_map_reduce_spark.plans.analytics import at_rest_table
 
     return at_rest_table(
@@ -798,67 +771,68 @@ def dedup_ngram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index set-similarity join over the AT-REST bucketed
-    postings table (registered round 13 -- the seat-exact swap the
-    round-12 queue staged and measured): explode distinct shingles,
-    equi-join on the shingle (shuffle key = shingle, never a cross
-    join), count shared shingles per pair, then Jaccard arithmetic.
-    Identical result to the all-pairs form -- any pair with Jaccard
-    >= 0.2 shares at least one shingle, so no qualifying pair is
-    missed -- but the candidate space is sum-over-shingles(freq^2)
-    instead of n^2 docs.
+    postings table: explode distinct shingles, equi-join on the
+    shingle (never a cross join), count shared shingles per pair, then
+    Jaccard arithmetic.  Identical result to the all-pairs form -- any
+    pair with Jaccard >= 0.2 shares at least one shingle, so no
+    qualifying pair is missed -- but the candidate space is
+    sum-over-shingles(freq^2) instead of n^2 docs.
 
-    The r13 at-rest swap: postings come from bucketed_postings, so
-    the self-join of the shingle-bucketed table is EXCHANGE-FREE --
-    the corpus-sized postings rows never move, no Python stage remains
-    in the query plan, and the planner sees real parquet statistics.
-    The round-11 SHUFFLE_HASH pin is therefore GONE: it guarded a
-    lying through-mapInPandas size estimate (a 3-4 GB side read as
-    < 64 MB and broadcast at sf10), and at rest nothing is left for a
-    lying estimate to break (pinned vs AQE's own choice measured
-    within noise: 30.7 vs 29.1 s sf10 medians).  sf10 floors
-    37.4-44.7 s (through-Python, kept below as
-    dedup_ngram_jaccard_shuffle) -> 25.3-25.7 s; the staged shape is
-    data-proportional through FOUR decades (sf100: 10.5x on 10x data,
-    SCALING.md round-12).  This is the Spark analog of the reference's
-    persistent bucketed store (p2/server/concurrenthashmap.h:90)
-    serving its full-scan tier (p5/server/map.h:80-81).
+    Postings come from bucketed_postings, so the self-join of the
+    shingle-bucketed table is EXCHANGE-FREE: the corpus-sized postings
+    rows never move, no Python stage remains in the query plan, and
+    the planner sees real parquet statistics (no join hint is needed;
+    through a mapInPandas barrier the planner once read a 3-4 GB side
+    as < 64 MB and broadcast it).  Data-proportional through four
+    decades (sf100: 10.5x on 10x data, SCALING.md round-12).  This is
+    the Spark analog of the reference's persistent bucketed store
+    (p2/server/concurrenthashmap.h:90) serving its full-scan tier
+    (p5/server/map.h:80-81).
 
-    Other levers (unchanged since round 5): length filter in the join
-    condition -- J >= t needs |A inter B| >= t*max(|A|,|B|), so
-    |A|,|B| within a factor 1/t of each other prunes postings pairs
-    before the group-count.  PPJoin prefix filtering WAS implemented
-    and measured here: at t=0.2 with 3-gram shingles the prefix keeps
-    80% of postings (candidates only drop 1.10M -> 0.77M) while
-    per-candidate array verification costs 5.2 s vs 1.6 s for this
-    count-based form -- the prefix lever pays at HIGH thresholds, so
-    it powers the t=0.7 `dedup_jaccard_ppjoin` query below (82%
-    candidate drop) instead of this one."""
+    The length filter sits in the join condition -- J >= t needs
+    |A inter B| >= t*max(|A|,|B|), so |A|,|B| within a factor 1/t of
+    each other prunes postings pairs before the group-count.  PPJoin
+    prefix filtering does not pay at t = 0.2 with 3-gram shingles:
+    the prefix keeps 80% of postings (candidates only drop 1.10M ->
+    0.77M) while per-candidate array verification costs 5.2 s vs
+    1.6 s for this count-based form."""
     return (_ngram_pair_rows(bucketed_postings(spark, sf_dir))
             .orderBy("id_a", "id_b"))
 
 
-def _ngram_pair_rows(ex: DataFrame) -> DataFrame:
-    """UNORDERED (id_a, id_b, jaccard) near-dup pairs from a postings
-    relation (doc_id, n, s) -- the shared core of dedup_ngram_jaccard
-    (which adds the report ORDER BY) and bucketed_edges (which must
-    NOT sort: the bucketed write repartitions on the bucket key, so a
-    pre-write global sort would be a pure-waste range exchange)."""
+def _pair_count_join(ex: DataFrame, length_ok: tuple, t: float) -> DataFrame:
+    """UNORDERED (id_a, id_b, jaccard) pairs with Jaccard >= t from a
+    postings relation (doc_id, n, s): one self-join on the shingle with
+    the ``length_ok`` filters in the join condition, |A inter B| as a
+    map-side-combining pair count, then exact Jaccard arithmetic."""
     a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
     b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
                   F.col("s").alias("s_b"))
+    cond = (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
+    for ok in length_ok:
+        cond = cond & ok
     inter = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-               & (F.col("n_a") * F.lit(5) >= F.col("n_b"))
-               & (F.col("n_b") * F.lit(5) >= F.col("n_a")))
+        a.join(b, cond)
         .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).cast("double").alias("inter"))
     )
     jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
         inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.2)
+        .filter(F.col("jaccard") >= t)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
+
+
+def _ngram_pair_rows(ex: DataFrame) -> DataFrame:
+    """UNORDERED Jaccard >= 0.2 near-dup pairs -- the shared core of
+    dedup_ngram_jaccard (which adds the report ORDER BY) and
+    bucketed_edges (which must NOT sort: the bucketed write
+    repartitions on the bucket key, so a pre-write global sort would
+    be a pure-waste range exchange)."""
+    return _pair_count_join(
+        ex, (F.col("n_a") * F.lit(5) >= F.col("n_b"),
+             F.col("n_b") * F.lit(5) >= F.col("n_a")), 0.2)
 
 
 def bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,14 +853,10 @@ def bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     many times, not a per-query recomputation."""
     from operating_system_map_reduce_spark.plans.analytics import at_rest_table
 
-    # Bucket count rides the same corpus-keyed policy as b_post
-    # (round-15 advice fix: the hard-coded 32 was the same
-    # constant-parallelism-vs-growing-corpus hazard class round 14
-    # fixed for the postings).  The edge count is replica-linear in
-    # the corpus (censused r14: candidates exactly 10.00x per decade),
-    # so corpus bytes are the right key here too; every driver/test SF
-    # stays at exactly 32 (policy floor below 128 MB of corpus), so
-    # plans and bench numbers at sf0.1 are bit-unchanged.
+    # Same corpus-keyed bucket count as b_post: the edge count is
+    # replica-linear in the corpus (exactly 10.00x per decade,
+    # SCALING.md round-14), so a constant count would repeat the
+    # per-task-volume hazard the postings policy fixes.
     return at_rest_table(
         spark, sf_dir, "b_edge", "id_a",
         lambda: _ngram_pair_rows(bucketed_postings(spark, sf_dir))
@@ -894,239 +864,27 @@ def bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=_postings_bucket_count(sf_dir))
 
 
-def dedup_ngram_jaccard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The through-Python shape dedup_ngram_jaccard registered through
-    round 12 -- UNREGISTERED since the r13 at-rest swap, kept as (a)
-    the fallback for environments without a writable warehouse (the
-    shingling runs in shingle_postings' Arrow stage and the postings
-    shuffle on the shingle key) and (b) the differential witness the
-    registered face is pinned against in tests/test_r13_queue.py.
-
-    Perf notes (round-2 profiling, still the reason the Arrow stage
-    exists): interpreted transform(slice+concat_ws) lambdas shingled
-    all docs of the one-split parquet on a single core (9.5 s of the
-    14.7 s round-1 time), and project pushdown hoists a bare
-    projection below any repartition, so only a mapInPandas barrier
-    actually distributes the work."""
-    docs = _t(spark, sf_dir, "documents")
-    ex = _dd.shingle_postings(docs)
-    a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-    # SHUFFLE_HASH pin (round 11): BOTH sides of this self-join grow
-    # with the corpus, but their size estimate flows through the
-    # mapInPandas shingling barrier, where the planner falls back to
-    # the parquet scan size -- at sf10 it read the 26M-row postings
-    # side as < 64 MB and BROADCAST it (a 3-4 GB hash relation on a
-    # lying estimate; fresh-JVM sf10: BHJ 327 s / SMJ 414 s / SHJ
-    # 239 s, and on a multi-executor cluster a corpus-sized broadcast
-    # is an OOM, not a slowdown).  The hint forces the partition-local
-    # hash build: no corpus-sized broadcast at ANY estimate, no
-    # 26M-row sort either side.
-    b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                  F.col("s").alias("s_b")).hint("SHUFFLE_HASH")
-    inter = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-               & (F.col("n_a") * F.lit(5) >= F.col("n_b"))
-               & (F.col("n_b") * F.lit(5) >= F.col("n_a")))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).cast("double").alias("inter"))
-    )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.2)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-def dedup_jaccard_ppjoin_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The through-Python PPJoin shape registered through round 12 --
-    UNREGISTERED since the r13 at-rest swap (dedup_jaccard_ppjoin
-    below now rides the two at-rest tables), kept as the
-    no-writable-warehouse fallback and the differential witness in
-    tests/test_r13_queue.py.  High-threshold near-dup pairs
-    (Jaccard >= 0.7) via PPJoin prefix filtering (Chaudhuri et al.
-    SSJoin / Xiao et al. PPJoin):
-
-      1. candidates: equi-join on the shingle restricted to each doc's
-         PREFIX postings -- shingles ordered by global document
-         frequency, first n - ceil(0.7*n) + 1 kept
-         (operators/dedup.ppjoin_prefix_postings).  The prefix
-         principle guarantees any pair with J >= t overlaps within the
-         prefixes, so nothing is missed, while hot shingles fall out of
-         most prefixes -- at t=0.7 this drops 82% of candidate pairs
-         vs the full inverted index (measured at sf0.1, asserted in
-         tests/test_pipeline_ops.py).
-      2. length filter: J >= 0.7 forces 10*|A| >= 7*|B| both ways.
-      2b. POSITIONAL filter (the rest of PPJoin): a row matching at
-         global-frequency-order positions (i, j) bounds the overlap by
-         1 + min(n_a - i, n_b - j); a qualifying pair needs overlap
-         alpha = ceil(7*(n_a+n_b)/17), and its FIRST common token's row
-         always satisfies the bound (every other common token sits
-         after it in both docs), so filtering rows on the bound loses
-         no pair while cutting candidates a further 68% (104.5k ->
-         33.4k at sf0.1, asserted differentially in tests).
-      3. verify: candidates join the per-doc distinct shingle sets and
-         compute the EXACT Jaccard JVM-side (array_intersect).  Arrays
-         are per-doc bounded and candidates prefix-bounded, so the
-         verify joins shuffle only candidate-proportional rows.
-
-    The shingling stage feeds four consumers (frequency table, prefix
-    window, both verification sides): the ARRAY form is checkpointed
-    once and postings explode from it narrowly, so verification joins
-    the arrays directly -- no collect_list shuffle rebuilding sets --
-    at 100 TB this is the standard persisted shingle table."""
-    docs = _t(spark, sf_dir, "documents")
-    arr = _dd.shingle_arrays(docs).localCheckpoint(eager=False)
-    ex = arr.select("doc_id", "n", F.explode("shingles").alias("s"))
-    pref = _dd.ppjoin_prefix_postings(ex, 7, 10)  # t = 7/10
-    a = pref.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s",
-                    F.col("pos").alias("pos_a"))
-    b = pref.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                    F.col("s").alias("s_b"), F.col("pos").alias("pos_b"))
-    positional = (
-        1 + F.least(F.col("n_a") - F.col("pos_a"), F.col("n_b") - F.col("pos_b"))
-        >= F.expr("((n_a + n_b) * 7 + 16) div 17")  # ceil(7(n_a+n_b)/17)
-    )
-    cand = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-               & (F.col("n_a") * F.lit(10) >= F.col("n_b") * F.lit(7))
-               & (F.col("n_b") * F.lit(10) >= F.col("n_a") * F.lit(7))
-               & positional)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = arr.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"),
-                    F.col("shingles").alias("sh_a"))
-    sb = arr.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                    F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("inter", inter)
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.7)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-def dedup_jaccard_ppjoin_arrayverify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The prefix/positional + ARRAY-verify shape dedup_jaccard_ppjoin
-    registered in round 13 -- UNREGISTERED since the r14 count-join
-    swap (the r13 fourth-decade probe localized the face's only
-    superlinear term to this shape's array verify: pairs x ~4 KB
-    shingle arrays ~ 130 GB at sf100 crossing the per-task spill
-    threshold at any heap, ~6 s at sf10 -> ~350 s at sf100, while
-    candidates measured exactly replica-linear).  Kept as the
-    differential witness the registered count form is pinned against
-    in tests/test_r14_queue.py, and as the living exercise of the
-    PPJoin prefix/positional machinery -- the right candidate
-    generator when verification is cheap (high thresholds, short
-    arrays, or a pre-verified pair sink).
-    Candidates: the PPJoin prefix/positional pipeline unchanged (see
-    dedup_jaccard_ppjoin_shuffle above for the full filter account),
-    but fed from bucketed_postings -- the corpus-wide frequency
-    aggregate and its postings join are co-bucketed on the shingle
-    (exchange-free); only the doc-keyed prefix window and the
-    prefix-SIZED candidate self-join shuffle.  Verify: the shingle
-    arrays come from bucketed_signature (n re-derived as size(shingles)
-    -- same py_shingles output, same empty-doc drop), so both verify
-    joins read the doc_id-bucketed table exchange-free on the array
-    side, the minhash verify shape exactly.  No Python stage remains
-    anywhere; no localCheckpoint/persist needed at all -- every reused
-    subtree is a table scan.  sf10 floors 50.3-55.2 s (through-Python)
-    -> 24.9-26.8 s, tight second readings (SCALING.md round-12).
-    Exactness vs the through-Python witness is differential-pinned in
-    tests/test_r13_queue.py."""
-    post = bucketed_postings(spark, sf_dir)
-    pref = _dd.ppjoin_prefix_postings(post, 7, 10)  # t = 7/10
-    a = pref.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s",
-                    F.col("pos").alias("pos_a"))
-    b = pref.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                    F.col("s").alias("s_b"), F.col("pos").alias("pos_b"))
-    positional = (
-        1 + F.least(F.col("n_a") - F.col("pos_a"), F.col("n_b") - F.col("pos_b"))
-        >= F.expr("((n_a + n_b) * 7 + 16) div 17")  # ceil(7(n_a+n_b)/17)
-    )
-    cand = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-               & (F.col("n_a") * F.lit(10) >= F.col("n_b") * F.lit(7))
-               & (F.col("n_b") * F.lit(10) >= F.col("n_a") * F.lit(7))
-               & positional)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sig = bucketed_signature(spark, sf_dir)
-    sa = sig.select(F.col("doc_id").alias("id_a"),
-                    F.size("shingles").cast("long").alias("n_a"),
-                    F.col("shingles").alias("sh_a"))
-    sb = sig.select(F.col("doc_id").alias("id_b"),
-                    F.size("shingles").cast("long").alias("n_b"),
-                    F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("inter", inter)
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.7)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
-
-
 def dedup_jaccard_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_jaccard_ppjoin as the pure COUNT-JOIN over the at-rest
-    postings -- REGISTERED round 14 (staged + differential-pinned
-    round 13 under the two-round pattern), the fix for the one
-    superlinear term the r13 fourth-decade probe named.
+    """High-threshold near-dup pairs (Jaccard >= 0.7) as a pure
+    COUNT-JOIN over the at-rest postings.
 
-    The probe (SCALING.md round-13): the r13 face's candidate
-    generation is replica-linear through sf100 (3.34M -> 33.4M pairs,
-    exactly 10x) but its ARRAY verify ships pairs x ~4 KB shingle
-    arrays (~130 GB at sf100) through the b_sig join, crossing the
-    per-task spill threshold at any heap -- ~6 s at sf10 becomes
-    ~350 s at sf100.  The r12 containment bake-off taught the general
-    lesson: when the verify payload dominates, the count-join that
-    moves only narrow grouped rows wins.  At t = 0.7 the prefix
-    machinery cannot rescue the count form either (restricting
-    co-occurrence rows to candidates still generates every
-    co-occurrence row first), so this shape drops PPJoin's prefix
-    entirely: one exchange-free self-join of the shingle-bucketed
-    table with BOTH PPJoin length filters in the join condition
-    (J >= 0.7 forces 10*|A| >= 7*|B| both ways -- tighter than
-    ngram's t = 0.2 filter, so strictly fewer join rows than the
-    measured data-proportional ngram face), then |A inter B| as a
-    map-side-combining pair count and exact Jaccard arithmetic.
-    Identical rows to the r13 array-verify shape (differential-pinned
-    in tests/test_r14_queue.py against dedup_jaccard_ppjoin_arrayverify
-    above and the through-Python witness; same jaccard >= 0.7
-    predicate BEFORE the report rounding).  Prefix filtering remains
-    the right candidate generator when verification is cheap; its
-    positional/prefix machinery stays exercised in the arrayverify
-    witness, dedup_jaccard_ppjoin_shuffle, and
-    dedup_containment_prefix.  Reference anchor: the full-scan tier
-    these faces implement is p5/server/map.h:80-81."""
-    ex = bucketed_postings(spark, sf_dir)
-    a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-    b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                  F.col("s").alias("s_b"))
-    inter = (
-        a.join(b, (F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-               & (F.col("n_a") * F.lit(10) >= F.col("n_b") * F.lit(7))
-               & (F.col("n_b") * F.lit(10) >= F.col("n_a") * F.lit(7)))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).cast("double").alias("inter"))
-    )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.7)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    One exchange-free self-join of the shingle-bucketed table with
+    both PPJoin length filters in the join condition (J >= 0.7 forces
+    10*|A| >= 7*|B| both ways -- tighter than ngram's t = 0.2 filter,
+    so strictly fewer join rows than the ngram face), then
+    |A inter B| as a map-side-combining pair count and exact Jaccard
+    arithmetic.  Only narrow grouped (id_a, id_b) rows move: the
+    prefix/positional candidate generator with an array verify ships
+    pairs x ~4 KB shingle arrays and crosses the per-task spill
+    threshold at sf100 (~6 s at sf10 -> ~350 s at sf100), while this
+    form stays data-proportional (SCALING.md rounds 13-14).  Reference
+    anchor: the full-scan tier these faces implement is
+    p5/server/map.h:80-81."""
+    return _pair_count_join(
+        bucketed_postings(spark, sf_dir),
+        (F.col("n_a") * F.lit(10) >= F.col("n_b") * F.lit(7),
+         F.col("n_b") * F.lit(10) >= F.col("n_a") * F.lit(7)),
+        0.7).orderBy("id_a", "id_b")
 
 
 DEDUP_PPJOIN_SQL = """

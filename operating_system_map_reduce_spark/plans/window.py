@@ -1,214 +1,94 @@
-"""Mechanical gate-window clock (round-9 verdict directive #1).
+"""Mechanical gate-window clock.
 
 The driver's correctness gate checks the FIRST ``WINDOW_SIZE`` entries
-of ``queries()`` in insertion order.  Through round 9 that window was a
-hand-written list rebuilt each round; round 9 forgot to rebuild it and
-43 entries blew past the codified 2-round staleness ceiling.  The
-window is now a pure FUNCTION of
+of ``queries()`` in insertion order.  The window is a pure FUNCTION of
 
   * the CORRECTNESS_r*.json ledger the driver commits at repo root
     (newest green row per query), and
   * the ``REDEFINED`` declaration below (rule-2 re-entries),
 
 so rotation cannot be skipped: when a round's correctness file lands,
-the next import computes the next window from it.  Window rotation is
-commit #1 of every round -- with this module, "rotating" means at most
-appending to ``REDEFINED`` for queries whose plan/oracle changed; the
-clock itself ticks on its own.
+the next import computes the next window from it.  A plan or oracle
+change only has to set its query's round in ``REDEFINED``; the clock
+itself ticks on its own.
 
-Selection rules (codified round 7, unchanged):
+Selection rules:
   1. queries that have NEVER had a green driver row lead the window;
   2. queries whose plan/oracle definition changed since their newest
      green row re-enter regardless of age (a green row for old
      semantics verifies nothing);
   3. remaining seats refresh oldest-newest-row-first (ties broken by
      name for determinism).
-Past ``HALVES_THRESHOLD`` registered queries the rule-3 pool alternates
-between the two name-sorted halves of the registry by round parity
-(the round-8 growth plan), with rules 1-2 AND at-ceiling entries
-jumping the alternation.
 
-Staleness ceiling -- the honest math (re-derived round 11 after the
-round-10 advice caught the original "ceiling 2 up to N = 200" claim):
-one round greens exactly the 50-seat window, so an N-entry registry
-can give every entry a row at most every ceil(N/50) rounds --
-pigeonhole makes a judge-time ceiling of 2 achievable ONLY for
-N <= 150 (ceil(N/50) <= 3).  For 150 < N <= 200 the best steady-state
-ceiling any schedule can reach is ceil(N/50) - 1 = 3, and the
-mechanism reaches it: ``achievable_ceiling`` relaxes the due clock to
-that bound, and entries at it jump the parity alternation (a half
-holding > 50 due entries would otherwise be served only every other
-round, stretching worst-case staleness to 4 -- the flaw in the
-original claim).  ``test_halves_hold_achievable_ceiling`` forward-
-simulates N = 160..200 to steady state and pins max staleness at the
-achievable bound.  Past N = 200 the registry freezes (round-8 plan).
+Staleness ceiling: one round greens exactly the 50-seat window, so an
+N-entry registry can give every entry a row at most every
+ceil(N/50) rounds.  Pigeonhole makes a judge-time ceiling of
+``STALENESS_CEILING`` = 2 achievable ONLY for N <= ``HALVES_THRESHOLD``
+= 150, so ``build_window`` refuses a larger registry: a new face past
+150 must replace an old one.
 
-When the due backlog exceeds the window (the round-9 skip left 88
-entries due for round 10), the window saturates with the OLDEST due
-entries and the remainder recovers next round -- ``deferred_due``
-names them so the recovery schedule is explicit.
+When the due backlog exceeds the window (a skipped rotation), the
+window saturates with the OLDEST due entries and the remainder
+recovers next round -- ``deferred_due`` names them so the recovery
+schedule is explicit.
 """
 
 from __future__ import annotations
 
 import glob
 import json
-import math
 import os
 import re
 
 WINDOW_SIZE = 50
-HALVES_THRESHOLD = 150
+HALVES_THRESHOLD = 150  # largest registry the 2-round ceiling admits
 STALENESS_CEILING = 2  # rounds behind HEAD at judge time
 
 # Rule-2 declarations: query name -> round in which its plan or oracle
-# definition last CHANGED.  An entry jumps the age queue while its
-# newest green row predates its redefinition round; once the driver
-# re-greens it the jump expires on its own.  Append-only ledger -- old
-# entries are kept as the audit trail.
+# definition last CHANGED (one key per query; a later change replaces
+# the round).  An entry jumps the age queue while its newest green row
+# predates its redefinition round; once the gate re-greens it the
+# jump expires on its own.
 #
-# ORDERING REQUIREMENT (round-granularity; round-11 advice, bound
-# tightened round 13): the check is the bounded
+# ORDERING REQUIREMENT: the check is the bounded
 # ``ledger[n] < redefined[n] <= current_round`` in both build_window
 # and due_entries, and all three are ROUND numbers.  A green row
 # recorded in round R BEFORE a late-round-R plan change would satisfy
-# the lower bound and silently vouch for the obsolete plan at R+1, so
-# plan-change commits must land before the round's gate run (this
-# repo's rounds end with the single driver gate, so commits always
-# precede it); a plan change made AFTER a round's gate already
-# produced its row is keyed to round+1 here, and the upper bound then
-# DEFERS it automatically -- a round+1 key is due NEXT round, not now,
-# and cannot displace the current round's computed seats early.
+# the lower bound and silently vouch for the obsolete plan, so
+# plan-change commits must land before the round's gate run.  A plan
+# change made AFTER a round's gate already produced its row -- or one
+# the round's saturated window cannot seat -- is keyed to round+1, and
+# the upper bound then DEFERS it: it is due next round and cannot
+# displace the current round's seats early.
 REDEFINED: dict[str, int] = {
-    # round 7 (see _window7_history in plans/__init__.py)
     "orders_above_customer_avg": 7,
     "similarity_cosine_topk": 7,
     "text_tfidf_top_terms": 7,
     "events_gap_fill": 7,
-    # round 8 (see _window8_history in plans/__init__.py)
     "q19_disjunctive_revenue": 8,
     "events_funnel": 8,
     "events_retention_cohorts": 8,
     "q3_shipping_priority": 8,
     "q5_region_revenue": 8,
-    # round 9: coalesce guard on the snapshot probe changed the plan,
-    # but round 9 failed to re-enter it (round-9 verdict, What's wrong
-    # #2) -- it re-enters here
+    # coalesce guard on the snapshot probe
     "changelog_asof": 9,
-    # round 10: staging re-planned from a persist + per-wave
-    # repartition(1) loop to ONE partitioned write job (round-9
-    # verdict directive #4)
-    "stream_novelty_filter": 10,
-    # round 11: the postings self-join gained a SHUFFLE_HASH pin after
-    # the sf10 decade run caught the planner broadcasting the
-    # corpus-growing build side off a lying through-mapInPandas size
-    # estimate (a 3-4 GB hash relation read as < 64 MB).  Its two
-    # consumers (pagerank_neardup, dedup_graph_triangles) sit in the
-    # committed window11 already; the detector itself re-entered at 11.
-    # round 13 (superseding the round-11 pin entry): the seat-exact
-    # at-rest swap the r12 queue staged and measured -- postings now
-    # come from the shingle-bucketed b_post table (self-join
-    # exchange-free, no Python stage, real scan statistics) and the
-    # pin is DROPPED (measured noise at rest: 30.7 vs 29.1 s sf10
-    # medians).  sf10 floors 37.4-44.7 -> 25.3-25.7 s.
+    # band index from the at-rest bucketed signature table
+    "corpus_novelty_filter": 12,
+    # postings from the shingle-bucketed b_post table, no join hint
     "dedup_ngram_jaccard": 13,
-    # round 13: dedup_ngram_jaccard's two direct callers redefined in
-    # the same commit -- their edge set now derives from the at-rest
-    # b_edge table (bucketed_edges, built from the same pair join),
-    # replacing the localCheckpoint whose ContextCleaner cadence swung
-    # graph timings ~2x run-to-run.
+    "dedup_containment": 13,
+    # edge set from the at-rest b_edge table (built from ngram's pairs)
     "pagerank_neardup": 13,
     "dedup_graph_triangles": 13,
-    # round 14 (superseding its round-13 at-rest-swap entry): the
-    # verify re-expressed as the pure count-join over b_post (narrow
-    # (id_a,id_b) grouped rows instead of pairs x ~4 KB array payload
-    # -- the r13 fourth-decade probe's one named superlinear term,
-    # staged + differential-pinned in r13 under the two-round
-    # pattern).  The r13 array-verify shape lives on unregistered as
-    # dedup_jaccard_ppjoin_arrayverify, the witness.
+    # verify re-expressed as the count-join over b_post
     "dedup_jaccard_ppjoin": 14,
-    # round 11: the mechanical sweep that followed
-    # (tests/test_plans.py PYSTAGE_BROADCAST_BOUNDED) found the same
-    # lying-estimate broadcast in three more faces; their
-    # corpus-growing sides gained the same SHUFFLE_HASH pin.
-    # dedup_containment is already seated at r11 (r7 deferred cohort),
-    # but the ledger is append-only and rule 2 is the mechanism, not
-    # the hand-reasoned cohort membership -- it is recorded like the
-    # others so a failed r11 green cannot silently leave its r7 row
-    # vouching for an obsolete plan:
-    # round 12 (superseding its round-11 verify-re-plan entry): the
-    # signature moved to an at-rest doc_id-bucketed table
-    # (bucketed_signature), removing the corpus-growing candidate-pair
-    # broadcast AND the Python stage from the query plan entirely.
-    # (dedup_minhash_lsh keyed 12 here then; superseded again by the
-    # round-13 pin removal -- single key below, history in comments.)
-    # round 12 (superseding its round-11 SHUFFLE_HASH-pin entry): the
-    # band index now derives from the same at-rest bucketed signature
-    # table -- no Python stage left in the plan, so the lying-estimate
-    # pin came off and AQE's real runtime sizes pick the strategy.
-    "corpus_novelty_filter": 12,
-    # (round-12 note on dedup_containment: the containment-adapted
-    # asymmetric prefix filter -- the r11 decade row's named lever --
-    # was implemented, measured at sf10, and REJECTED by the bake-off;
-    # the registered plan stayed byte-identical to the r11 shape its
-    # green row vouched for, so no r12 re-entry.  The rejected shape
-    # lives on unregistered as plans/mining.dedup_containment_prefix;
-    # full account in SCALING.md round-12.)
-    # round 13 (superseding its round-11 SHUFFLE_HASH-pin entry): the
-    # at-rest swap -- count-join over b_post, no Python stage.  The
-    # plan to keep the pin (hash-build-over-sort, 1.7x at sf10) was
-    # REVERSED by the round's own sf100 run: the SHJ per-bucket hash
-    # build cannot spill and OOMs at the fourth decade, so the
-    # registered plan is the unpinned exchange-free SortMergeJoin
-    # (sf10 61.8-64.2 s; the scalable shape).
-    "dedup_containment": 13,
-    # rounds 13/14: the novelty stream's SEED index now derives its
-    # bands from the at-rest bucketed signature table
-    # (lsh_bands(bucketed_signature(...) semi-joined to the corpus) --
-    # identical rows, b_sig is per-doc so the corpus filter commutes;
-    # pinned in tests/test_streaming.py) instead of recomputing the
-    # Python minhash signature per session.  The streaming QUERY plan
-    # is untouched (the seed is an input artifact); both consumers are
-    # declared anyway per the conservative reading of rule 2.
-    # stream_novelty_filter sits in the saturated window13 already
-    # (r10-green cohort) and the change lands before the r13 gate, so
-    # its key is 13 (superseding its round-10 entry) -- the r13 row
-    # vouches for the new seed path at zero extra seats.
-    "stream_novelty_filter": 13,
-    # stream_novelty_index_compact (r11-green) CANNOT seat at r13 --
-    # 51 due entries into 50 seats -- so it takes the round+1 key per
-    # the ORDERING REQUIREMENT and seats first at r14.
-    "stream_novelty_index_compact": 14,
-    # round 13 change, round-14 seat (same saturation): the LSH
-    # candidate join's round-11 SHUFFLE_HASH pin came off
-    # (operators/dedup.candidate_pairs) -- its only registered
-    # consumer has fed it from the at-rest b_sig table since round 12,
-    # so the lying-estimate rationale is gone, while the pinned
-    # non-spillable hash build is the exact shape that OOM'd
-    # containment's pinned plan at sf100.  The r12 green row vouches
-    # for the pinned plan, so the face re-enters at r14.
+    # candidate join's SHUFFLE_HASH hint removed
     "dedup_minhash_lsh": 14,
-    # round 15 (superseding their r13/r14 seed-reuse entries): the
-    # cascade's per-wave internals re-planned -- arriving-wave bands
-    # now derive from the at-rest b_sig table (identical rows, pinned
-    # in tests/test_streaming.py::test_batch_bands_match_direct_
-    # signature), the per-wave wave-id collect replaced by the staged
-    # replay order, and the wave staging session-cached as fixture
-    # input.  Results and oracles unchanged; both faces re-enter per
-    # the conservative reading of rule 2 (seat math incl. the symspell
-    # entry below: 45 due + 1 new face + 3 rule-2 = 49 into 50 seats,
-    # deferred_due empty -- verified against the r14 ledger).
+    # per-wave internals re-planned (wave bands from b_sig, wave id
+    # from the staged replay order); rows and oracles unchanged
     "stream_novelty_filter": 15,
     "stream_novelty_index_compact": 15,
-    # round 15: the deletion-neighborhood derivation gained a
-    # cores-keyed repartition before its explode -- the r15 probe
-    # (scripts/symspell_scale_probe.py) caught both explode map sides
-    # running in ONE scan task (part.parquet is a single sub-split
-    # file even at 10x rows): 10x data ran 8.4x longer with a 1.03
-    # low/high-core ratio, the single-split serial signature.  Rows
-    # unchanged (repartition is row-preserving); plan gains one narrow
-    # pre-explode exchange, so the face re-enters.  Seat math with
-    # this: 45 due + 1 new + 3 rule-2 = 49 into 50 seats.
+    # cores-keyed repartition before the deletion-neighborhood explode
     "fuzzy_match_symspell": 15,
 }
 
@@ -258,14 +138,12 @@ def load_ledger(root: str | None = None) -> dict[str, int]:
     return newest
 
 
-def achievable_ceiling(n_registry: int, size: int = WINDOW_SIZE) -> int:
-    """Best steady-state judge-time staleness any schedule can hold for
-    an ``n_registry``-entry registry with a ``size``-seat window: one
-    round greens exactly the window, so every entry is re-greened at
-    most every ceil(N/size) rounds -- ceiling ceil(N/size) - 1, floored
-    at the codified STALENESS_CEILING (which pigeonhole permits for
-    N <= 3 * size)."""
-    return max(STALENESS_CEILING, math.ceil(n_registry / size) - 1)
+def _check_capacity(registry: list[str]) -> None:
+    if len(registry) > HALVES_THRESHOLD:
+        raise ValueError(
+            f"registry holds {len(registry)} queries; the "
+            f"{STALENESS_CEILING}-round staleness ceiling admits at most "
+            f"{HALVES_THRESHOLD} -- retire a face before adding one")
 
 
 def build_window(registry: list[str], ledger: dict[str, int],
@@ -275,41 +153,22 @@ def build_window(registry: list[str], ledger: dict[str, int],
 
     Current round = 1 + the newest round in the ledger (the driver
     writes round N's file at N's end, so during round N the ledger
-    tops out at N-1)."""
+    tops out at N-1).  Raises ValueError past HALVES_THRESHOLD
+    registered queries."""
+    _check_capacity(registry)
     redefined = REDEFINED if redefined is None else redefined
     head = max(ledger.values(), default=0)
     current_round = head + 1
 
     never = sorted(n for n in registry if n not in ledger)
-    # rule 2 gates on current_round (round-13): an entry keyed to
-    # round+1 per the ORDERING REQUIREMENT above (a plan change landing
-    # after this round's gate row would exist, or a change this round's
-    # saturated window cannot seat) is due NEXT round, not now -- it
-    # must not displace this round's computed seats early.
+    # rule 2 gates on current_round: an entry keyed to round+1 per the
+    # ORDERING REQUIREMENT above is due NEXT round, not now
     rule2 = sorted(n for n in registry
                    if n in ledger and ledger[n] < redefined.get(n, -1)
                    <= current_round)
     seated = set(never) | set(rule2)
     rest = sorted((n for n in registry if n not in seated),
                   key=lambda n: (ledger[n], n))
-    if len(registry) > HALVES_THRESHOLD:
-        # alternating halves: even rounds prefer the first name-sorted
-        # half of the registry, odd rounds the second.  Rules 1-2 above
-        # already jumped the alternation, and so do entries AT the
-        # achievable staleness ceiling (rnd <= head - ceiling would
-        # violate at this round's judge if left unseated): a half
-        # holding > size due entries is otherwise served only every
-        # other round, stretching worst-case staleness past the bound.
-        ceiling = achievable_ceiling(len(registry), size)
-        urgent = [n for n in rest if ledger[n] <= head - ceiling]
-        laters = [n for n in rest if ledger[n] > head - ceiling]
-        halves = sorted(registry)
-        first = set(halves[:len(halves) // 2])
-        in_active = ((lambda n: n in first) if current_round % 2 == 0
-                     else (lambda n: n not in first))
-        rest = (urgent
-                + [n for n in laters if in_active(n)]
-                + [n for n in laters if not in_active(n)])
     return (never + rule2 + rest)[:size]
 
 
@@ -317,20 +176,18 @@ def due_entries(registry: list[str], ledger: dict[str, int],
                 redefined: dict[str, int] | None = None) -> list[str]:
     """Entries that MUST be (re-)checked this round: never green,
     redefined since their newest green row, or at/past the staleness
-    ceiling (newest green row <= head - ceiling, i.e. the row would be
-    > ceiling rounds behind at this round's judge).  The ceiling is
-    STALENESS_CEILING up to N = 3 * WINDOW_SIZE registered entries and
-    the pigeonhole-achievable ceil(N/WINDOW_SIZE) - 1 past that."""
+    ceiling (newest green row <= head - STALENESS_CEILING, i.e. the
+    row would be > ceiling rounds behind at this round's judge)."""
+    _check_capacity(registry)
     redefined = REDEFINED if redefined is None else redefined
     head = max(ledger.values(), default=0)
     current_round = head + 1
-    ceiling = achievable_ceiling(len(registry))
     out = []
     for n in registry:
         rnd = ledger.get(n)
         if (rnd is None
                 or rnd < redefined.get(n, -1) <= current_round
-                or rnd <= head - ceiling):
+                or rnd <= head - STALENESS_CEILING):
             out.append(n)
     return out
 

@@ -6,13 +6,12 @@ once -- the standing-table design point (both faces query the same
 materialized near-dup graph), so a per-face subprocess would bill the
 same multi-minute cold build twice for no extra information.
 
-Protocol otherwise matches scripts/postings_bakeoff.py (the
-established decade method): fresh JVM per session, one untimed cold
-per face (the FIRST face's cold carries the b_post + b_edge builds;
-the second face's cold is its own codegen/plan warm-up over the
-already-standing tables -- reported separately so both are visible),
-then median-of-3 with cache/GC hygiene between runs.  Run TWO
-sessions per the never-one-pair rule.
+Protocol (the decade method recorded in SCALING.md): fresh JVM per
+session, one untimed cold per face (the FIRST face's cold carries the
+b_post + b_edge builds; the second face's cold is its own codegen/plan
+warm-up over the already-standing tables -- reported separately so
+both are visible), then median-of-3 with cache/GC hygiene between
+runs.  Run TWO sessions per the never-one-pair rule.
 
 Usage:
     python scripts/graph_decade.py <sf_dir>            # one session

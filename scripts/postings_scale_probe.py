@@ -5,9 +5,8 @@ One fresh JVM: the untimed cold pays the standing b_post build at
 whatever bucket count the policy picks for the corpus, then each named
 face gets noop-sink timed runs with the stat-cache honesty rule
 (bench._clear_stat_caches) between runs -- the registered faces
-end-to-end, no monkeypatching (contrast scripts/ngram_decade_probe.py,
-whose bucket probe forces a count to SPLIT the hypothesis; this script
-measures the shipped policy).
+end-to-end at the bucket count the shipped policy picks, no
+monkeypatching.
 
 Usage:
     python scripts/postings_scale_probe.py SF_DIR MEM face:runs [face:runs ...]

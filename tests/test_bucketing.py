@@ -1,7 +1,8 @@
 """Bucketed-table co-location: the join-shuffle elimination that makes
 fact-fact joins viable at 100 TB.  Asserts the *plan*, not just the
 rows: co-bucketed join has no shuffle exchange; the identical join on
-unbucketed data does.
+unbucketed data does.  Also pins the at-rest table lifecycle and the
+corpus-scaled bucket count of the postings table.
 """
 
 from __future__ import annotations
@@ -9,6 +10,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from operating_system_map_reduce_spark.plans.pipeline import (
+    _POSTINGS_BUCKET_CAP,
+    _POSTINGS_BUCKET_FLOOR,
+    _postings_bucket_count,
+)
 from operating_system_map_reduce_spark.sources.bucketing import (
     bucketed_join, has_shuffle, write_bucketed)
 from operating_system_map_reduce_spark.sources.tables import load_table
@@ -267,3 +273,63 @@ class TestEnsureBucketedStaleSweep:
         proc = subprocess.Popen(["true"])
         proc.wait()
         assert _pid_started_after(proc.pid, time.time()) in (None, False)
+
+
+# --- corpus-scaled bucket count for the at-rest postings table -------------
+# A bucketed join's parallelism IS the bucket count, so b_post sizes its
+# count to the corpus at write time (pure filesystem, no Spark): the
+# three measured corpus classes land on the probed cells (test SFs ->
+# 32, the sf10 replica corpus -> 32, the sf100 replica corpus -> 256);
+# growth is power-of-two and capped; a directory corpus sums its
+# parquet parts.
+
+def _corpus(tmp_path, name: str, nbytes: int, as_dir: bool = False) -> str:
+    """An sf_dir whose documents.parquet has the given APPARENT size
+    (sparse truncate -- the policy reads sizes, never bytes)."""
+    sf_dir = tmp_path / name
+    sf_dir.mkdir()
+    target = sf_dir / "documents.parquet"
+    if as_dir:
+        target.mkdir()
+        half = nbytes // 2
+        for i, sz in enumerate((half, nbytes - half)):
+            part = target / f"part-{i:05d}.snappy.parquet"
+            with open(part, "wb") as fh:
+                fh.truncate(sz)
+        # non-parquet siblings (_SUCCESS, .crc) must not count
+        (target / "_SUCCESS").write_bytes(b"")
+    else:
+        with open(target, "wb") as fh:
+            fh.truncate(nbytes)
+    return str(sf_dir)
+
+
+class TestPostingsBucketCount:
+    def test_measured_corpus_classes(self, tmp_path):
+        # the probe matrix's three corpus classes (bytes as measured):
+        # sf0.1 = 0.59 MB, sf10 replicas = 77 MB, sf100 replicas = 810 MB
+        assert _postings_bucket_count(
+            _corpus(tmp_path, "sf01", 594_568)) == 32
+        assert _postings_bucket_count(
+            _corpus(tmp_path, "sf10", 77_349_197)) == 32
+        assert _postings_bucket_count(
+            _corpus(tmp_path, "sf100", 809_740_107)) == 256
+
+    def test_growth_is_pow2_monotone_and_capped(self, tmp_path):
+        sizes = [1, 10 << 20, 200 << 20, 810 << 20, 8 << 30, 1 << 40]
+        counts = [
+            _postings_bucket_count(_corpus(tmp_path, f"c{i}", sz))
+            for i, sz in enumerate(sizes)
+        ]
+        assert counts == sorted(counts), counts
+        assert all(c & (c - 1) == 0 for c in counts), counts  # pow2
+        assert counts[0] == _POSTINGS_BUCKET_FLOOR
+        assert counts[-1] == _POSTINGS_BUCKET_CAP
+        assert all(_POSTINGS_BUCKET_FLOOR <= c <= _POSTINGS_BUCKET_CAP
+                   for c in counts), counts
+
+    def test_directory_corpus_sums_parquet_parts_only(self, tmp_path):
+        one = _corpus(tmp_path, "filecorpus", 809_740_107)
+        parts = _corpus(tmp_path, "dircorpus", 809_740_107, as_dir=True)
+        assert (_postings_bucket_count(parts)
+                == _postings_bucket_count(one) == 256)

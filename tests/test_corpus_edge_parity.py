@@ -169,23 +169,6 @@ class TestCraftedCorpusSemantics:
         crafted = {p for p in pairs if p[0] >= 9000 or p[1] >= 9000}
         assert crafted, "the strict-containment pair must be found"
 
-    def test_containment_prefix_shape_matches_on_edge_corpus(
-            self, spark, corpus_edge_dir):
-        """The unregistered asymmetric-prefix shape (round-12 bake-off
-        loser, kept as machinery) must agree with the registered
-        count-join on the ADVERSARIAL corpus too -- exact dups,
-        strict near-subsets, shingle-free shorts, repeated-shingle
-        pathologies."""
-        from operating_system_map_reduce_spark.plans.mining import (
-            dedup_containment_prefix)
-        got = {(r["id_a"], r["id_b"]): r["containment"]
-               for r in dedup_containment_prefix(spark,
-                                                 corpus_edge_dir).collect()}
-        want = {(r["id_a"], r["id_b"]): r["containment"]
-                for r in _QUERIES["dedup_containment"](
-                    spark, corpus_edge_dir).collect()}
-        assert got == want
-
     def test_zero_vector_does_not_poison_topk(self, spark, corpus_edge_dir):
         import math
 

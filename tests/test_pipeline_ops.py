@@ -1,13 +1,20 @@
 """Operator-level tests for the LLM-pipeline extensions: multimodal
-decode plumbing, LSH recall vs brute force, dedup on crafted near-dups.
+decode plumbing, LSH recall vs brute force, dedup on crafted near-dups,
+and the plan shapes of the faces that ride the at-rest postings and
+edge tables.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from operating_system_map_reduce_spark.operators import dedup, multimodal, similarity
+
+_QUERIES = entrymod.queries()
 
 
 class TestMultimodal:
@@ -481,114 +488,47 @@ class TestSemanticDedup:
 
 
 class TestPPJoinPrefixFilter:
-    """ppjoin_prefix_postings: the prefix principle must prune postings
-    and candidate pairs WITHOUT losing any qualifying pair."""
+    """The registered count-join faces against the unfiltered
+    full-index count join: the length filters in their join
+    conditions must lose no qualifying pair."""
 
-    def _postings(self, spark, sf_dir):
+    def _full_index_pairs(self, spark, sf_dir, t):
+        """{(id_a, id_b): rounded Jaccard} over the unfiltered
+        full-index count join, Jaccard >= t."""
         from operating_system_map_reduce_spark.sources.tables import load_table
-        docs = load_table(spark, sf_dir, "documents")
-        return dedup.shingle_postings(docs)
-
-    def test_prefix_prunes_postings_and_candidates(self, spark, sf_dir):
-        ex = self._postings(spark, sf_dir).cache()
-        pref = dedup.ppjoin_prefix_postings(ex, 1, 5)
-        n_full, n_pref = ex.count(), pref.count()
-        assert n_pref < n_full, (n_pref, n_full)
-
-        def cands(p):
-            a = p.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-            b = p.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                         F.col("s").alias("s_b"))
-            return (a.join(b, (F.col("s") == F.col("s_b"))
-                           & (F.col("id_a") < F.col("id_b"))
-                           & (F.col("n_a") * 5 >= F.col("n_b"))
-                           & (F.col("n_b") * 5 >= F.col("n_a")))
-                    .select("id_a", "id_b").distinct().count())
-
-        assert cands(pref) < cands(ex)
-        ex.unpersist()
+        ex = dedup.shingle_postings(load_table(spark, sf_dir, "documents"))
+        a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
+        b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
+                      F.col("s").alias("s_b"))
+        full = (a.join(b, (F.col("s") == F.col("s_b"))
+                       & (F.col("id_a") < F.col("id_b")))
+                .groupBy("id_a", "id_b", "n_a", "n_b")
+                .agg(F.count(F.lit(1)).cast("double").alias("i")))
+        jac = F.col("i") / (F.col("n_a") + F.col("n_b") - F.col("i"))
+        return {(r["id_a"], r["id_b"]): r["j"] for r in
+                full.withColumn("j", F.round(jac, 6))
+                .filter(F.col("j") >= t).collect()}
 
     def test_prefix_join_loses_no_qualifying_pair(self, spark, sf_dir):
-        """Differential: prefix-filtered query == full-index count join."""
+        """Differential: dedup_ngram_jaccard (length-filtered count
+        join) == the full-index count join."""
         from operating_system_map_reduce_spark.plans.pipeline import (
             dedup_ngram_jaccard)
 
         got = {(r["id_a"], r["id_b"]): r["jaccard"]
                for r in dedup_ngram_jaccard(spark, sf_dir).collect()}
-
-        ex = self._postings(spark, sf_dir)
-        a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-        b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                      F.col("s").alias("s_b"))
-        full = (a.join(b, (F.col("s") == F.col("s_b"))
-                       & (F.col("id_a") < F.col("id_b")))
-                .groupBy("id_a", "id_b", "n_a", "n_b")
-                .agg(F.count(F.lit(1)).cast("double").alias("i")))
-        jac = F.col("i") / (F.col("n_a") + F.col("n_b") - F.col("i"))
-        want = {(r["id_a"], r["id_b"]): r["j"] for r in
-                full.withColumn("j", F.round(jac, 6))
-                .filter(F.col("j") >= 0.2).collect()}
-        assert got == want
+        assert got == self._full_index_pairs(spark, sf_dir, 0.2)
 
     def test_positional_filter_loses_no_qualifying_pair(self, spark, sf_dir):
-        """Differential: the PPJoin query (prefix + positional filter)
-        must emit exactly the pairs the full-index count join finds at
-        Jaccard >= 0.7."""
+        """Differential: dedup_jaccard_ppjoin (count-join with the
+        t = 0.7 length filters) must emit exactly the pairs the
+        full-index count join finds at Jaccard >= 0.7."""
         from operating_system_map_reduce_spark.plans.pipeline import (
             dedup_jaccard_ppjoin)
 
         got = {(r["id_a"], r["id_b"]): r["jaccard"]
                for r in dedup_jaccard_ppjoin(spark, sf_dir).collect()}
-
-        ex = self._postings(spark, sf_dir)
-        a = ex.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"), "s")
-        b = ex.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                      F.col("s").alias("s_b"))
-        full = (a.join(b, (F.col("s") == F.col("s_b"))
-                       & (F.col("id_a") < F.col("id_b")))
-                .groupBy("id_a", "id_b", "n_a", "n_b")
-                .agg(F.count(F.lit(1)).cast("double").alias("i")))
-        jac = F.col("i") / (F.col("n_a") + F.col("n_b") - F.col("i"))
-        want = {(r["id_a"], r["id_b"]): r["j"] for r in
-                full.withColumn("j", F.round(jac, 6))
-                .filter(F.col("j") >= 0.7).collect()}
-        assert got == want
-
-    def test_positional_filter_cuts_candidates(self, spark, sf_dir):
-        """The positional bound must strictly shrink the candidate set
-        the prefix join alone produces (it did 104.5k -> 33.4k at
-        sf0.1)."""
-        ex = self._postings(spark, sf_dir)
-        pref = dedup.ppjoin_prefix_postings(ex, 7, 10).cache()
-        a = pref.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"),
-                        "s", F.col("pos").alias("pos_a"))
-        b = pref.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                        F.col("s").alias("s_b"), F.col("pos").alias("pos_b"))
-        base = ((F.col("s") == F.col("s_b")) & (F.col("id_a") < F.col("id_b"))
-                & (F.col("n_a") * 10 >= F.col("n_b") * 7)
-                & (F.col("n_b") * 10 >= F.col("n_a") * 7))
-        positional = (
-            1 + F.least(F.col("n_a") - F.col("pos_a"),
-                        F.col("n_b") - F.col("pos_b"))
-            >= F.expr("((n_a + n_b) * 7 + 16) div 17"))
-        plain = a.join(b, base).select("id_a", "id_b").distinct().count()
-        cut = a.join(b, base & positional).select("id_a", "id_b").distinct().count()
-        pref.unpersist()
-        # at sf0.001 every surviving candidate is a real near-dup, so
-        # the bound may cut nothing; a meaningful candidate pool must
-        # strictly shrink (sf0.1: 104.5k -> 33.4k)
-        assert cut <= plain, (cut, plain)
-        if plain > 1000:
-            assert cut < plain, (cut, plain)
-
-    def test_prefix_length_integer_exact(self, spark):
-        """15 * 0.2 in float64 is 3.0000000000000004; float ceil would
-        shorten the prefix to 12 - 1 = wrong.  Integer arithmetic must
-        give n - ceil(n/5) + 1 = 15 - 3 + 1 = 13."""
-        rows = [("d", 15, f"s{i:02d}") for i in range(15)]
-        ex = spark.createDataFrame(rows, ["doc_id", "n", "s"])
-        pref = dedup.ppjoin_prefix_postings(ex, 1, 5)
-        assert pref.count() == 13
+        assert got == self._full_index_pairs(spark, sf_dir, 0.7)
 
 
 class TestCanonicalPurge:
@@ -709,78 +649,136 @@ class TestIvfSearch:
         assert top[1007]["cosine"] > 0.999
 
 
-class TestContainmentPrefixFilter:
-    """dedup_containment_prefix: PPJoin's prefix principle applied to
-    the ASYMMETRIC containment bound (alpha = ceil(t*n_a) depends only
-    on the contained side, so only A's postings are cut; B keeps full
-    postings plus its frequency-order position for the positional
-    bound).  Implemented round 12, REJECTED by the sf10 verify-payload
-    bake-off (see the dedup_containment docstring + SCALING.md) -- the
-    machinery stays correct and tested for workloads where it pays.
-    The differential pins exactness against the REGISTERED count-join;
-    the cut tests pin that the filter actually prunes."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    def test_prefix_loses_no_qualifying_pair(self, spark, sf_dir):
-        """Differential: the prefix+positional plan == the registered
-        inverted-index count join, pair for pair, value for value."""
-        from operating_system_map_reduce_spark.plans.mining import (
-            dedup_containment, dedup_containment_prefix)
 
-        got = {(r["id_a"], r["id_b"]): r["containment"]
-               for r in dedup_containment_prefix(spark, sf_dir).collect()}
-        want = {(r["id_a"], r["id_b"]): r["containment"]
-                for r in dedup_containment(spark, sf_dir).collect()}
+def _assert_no_python_stage(plan: str) -> None:
+    for node in ("MapInPandas", "ArrowEvalPython",
+                 "FlatMapGroupsInPandas", "BatchEvalPython"):
+        assert node not in plan, f"{node} in the at-rest plan:\n{plan}"
+
+
+def _assert_pair_keyed_exchanges(plan: str) -> None:
+    """Every hash exchange must key on pair columns (id_a/id_b -- the
+    candidate aggregate), never on the shingle join key: the
+    corpus-sized postings rows never move."""
+    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)", plan):
+        keys = m.group(1)
+        assert "id_a" in keys or "id_b" in keys, \
+            f"corpus-keyed exchange survived: {keys}\n{plan}"
+
+
+def _plan_with_conf(spark, key: str, value: str, df_fn) -> str:
+    spark.conf.set(key, value)
+    try:
+        return _plan(df_fn())
+    finally:
+        spark.conf.unset(key)
+
+
+_NO_BROADCAST = ("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+
+class TestAtRestPostings:
+    """The postings consumers ride the shingle-bucketed b_post table:
+    no Python stage in the query plan, the scan is the bucketed table,
+    and the self-join adds no corpus-keyed exchange.  Row exactness is
+    the DuckDB oracle's job (test_oracle_parity.py and
+    test_corpus_edge_parity.py)."""
+
+    def test_ngram_plan_has_no_python_stage(self, spark, sf_dir):
+        df = _QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
+        assert len(df.collect()) > 0, "fixture must produce near-dup pairs"
+        plan = _plan(df)
+        _assert_no_python_stage(plan)
+        assert "b_post_" in plan.lower()
+
+    def test_ngram_pin_is_gone(self, spark, sf_dir):
+        """No join hint: at rest the planner sees real parquet
+        statistics, so strategy choice is AQE's."""
+        logical = (_QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
+                   ._jdf.queryExecution().logical().toString())
+        assert "UnresolvedHint" not in logical, logical
+
+    def test_postings_self_join_is_exchange_free(self, spark, sf_dir):
+        """With broadcast disabled the join must be a zero-exchange
+        sort-merge (or hash) join of two bucketed scans."""
+        plan = _plan_with_conf(
+            spark, *_NO_BROADCAST,
+            lambda: _QUERIES["dedup_ngram_jaccard"](spark, sf_dir))
+        _assert_pair_keyed_exchanges(plan)
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+
+    def test_ppjoin_plan_shape(self, spark, sf_dir):
+        """No Python stage, no array payload anywhere (the count form
+        ships only narrow grouped rows), the b_post scan feeding an
+        exchange-free self-join."""
+        face = _QUERIES["dedup_jaccard_ppjoin"]
+        df = face(spark, sf_dir)
+        assert len(df.collect()) > 0, "fixture must produce high-threshold pairs"
+        plan = _plan(df)
+        _assert_no_python_stage(plan)
+        assert "b_post_" in plan.lower()
+        assert "array_intersect" not in plan, \
+            "the count form must not ship array payloads"
+        _assert_pair_keyed_exchanges(_plan_with_conf(
+            spark, *_NO_BROADCAST, lambda: face(spark, sf_dir)))
+
+    def test_containment_plan_shape(self, spark, sf_dir):
+        """No Python stage, no join hint (a SHUFFLE_HASH build cannot
+        spill and OOMs at sf100), no array verify; past any broadcast
+        threshold the plan is the exchange-free SortMergeJoin of two
+        bucketed scans."""
+        face = _QUERIES["dedup_containment"]
+        df = face(spark, sf_dir)
+        assert len(df.collect()) > 0
+        plan = _plan(df)
+        _assert_no_python_stage(plan)
+        assert "b_post_" in plan.lower()
+        assert "array_intersect" not in plan, \
+            "registered containment must stay the count-join"
+        logical = df._jdf.queryExecution().logical().toString()
+        assert "UnresolvedHint" not in logical, logical
+        nobc = _plan_with_conf(spark, *_NO_BROADCAST,
+                               lambda: face(spark, sf_dir))
+        assert "SortMergeJoin" in nobc, nobc
+        _assert_pair_keyed_exchanges(nobc)
+
+    def test_bucketed_postings_schema_and_point_prune(self, spark, sf_dir):
+        from operating_system_map_reduce_spark.plans.pipeline import (
+            bucketed_postings)
+        post = bucketed_postings(spark, sf_dir)
+        assert set(post.columns) == {"doc_id", "n", "s"}
+        # bucket pruning on the shingle key: the at-rest index also
+        # serves point probes (which docs contain shingle X?) reading
+        # 1/32 of the files -- the inverted-index lookup story
+        probe = post.select("s").first()[0]
+        plan = _plan_with_conf(
+            spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+            "false", lambda: post.filter(F.col("s") == probe))
+        assert "SelectedBucketsCount: 1 out of 32" in plan, plan
+
+
+class TestAtRestEdges:
+    def test_edges_match_registered_pairs(self, spark, sf_dir):
+        from operating_system_map_reduce_spark.plans.pipeline import (
+            bucketed_edges)
+        got = sorted(map(tuple, bucketed_edges(spark, sf_dir).collect()))
+        want = sorted(map(tuple, _QUERIES["dedup_ngram_jaccard"](
+            spark, sf_dir).select("id_a", "id_b").collect()))
         assert got == want
+        assert len(got) > 0
 
-    def test_prefix_and_positional_cut_candidates(self, spark, sf_dir):
-        """The asymmetric prefix must strictly shrink the probe-side
-        postings, and the candidate join's output rows must shrink vs
-        the unfiltered inverted-index join (sf0.1: join rows 1.73M ->
-        181k, distinct pairs 1.53M -> 174k)."""
-        from operating_system_map_reduce_spark.sources.tables import load_table
-        docs = load_table(spark, sf_dir, "documents")
-        arr = dedup.shingle_arrays(docs)
-        ex = arr.select("doc_id", "n", F.explode("shingles").alias("s")).cache()
-        pos = dedup.freq_ordered_postings(ex).cache()
-        alpha = ((F.col("n_a") * F.lit(7999995) + F.lit(9999999))
-                 .cast("long") / F.lit(10000000)).cast("long")
-        a = (pos.select(F.col("doc_id").alias("id_a"),
-                        F.col("n").alias("n_a"), "s",
-                        F.col("pos").alias("pos_a"))
-             .filter(F.col("pos_a") <= F.col("n_a") - alpha + 1))
-        b = pos.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"),
-                       F.col("s").alias("s_b"), F.col("pos").alias("pos_b"))
-        base = ((F.col("s") == F.col("s_b"))
-                & (F.col("id_a") != F.col("id_b"))
-                & (F.col("n_b") * F.lit(5) >= F.col("n_a") * F.lit(4)))
-        positional = (F.lit(1) + F.least(F.col("n_a") - F.col("pos_a"),
-                                         F.col("n_b") - F.col("pos_b"))
-                      >= alpha)
-        assert a.count() < ex.count()
-        full_a = pos.select(F.col("doc_id").alias("id_a"),
-                            F.col("n").alias("n_a"), "s",
-                            F.col("pos").alias("pos_a"))
-        plain = full_a.join(b, base).count()
-        cut = a.join(b, base & positional).count()
-        ex.unpersist(); pos.unpersist()
-        assert cut < plain, (cut, plain)
-
-    def test_alpha_guards_the_rounding_boundary(self):
-        """alpha = ceil(n_a * 7999995 / 1e7) must equal ceil(0.8 * n_a)
-        for every realistic n_a, and drop BELOW it exactly where a
-        sub-0.8 ratio can still round to 0.800000 (n_a >= 400_000 with
-        n_a % 5 != 0 -- a 400k-shingle doc is a book, real at 100 TB)."""
-        import math
-        for n in list(range(1, 2000)) + [399_999, 400_000, 400_001,
-                                         2_000_001]:
-            alpha = (n * 7999995 + 9999999) // 10000000
-            exact = math.ceil(n * 4 / 5)
-            # the smallest intersection whose ROUNDED ratio >= 0.8
-            min_round_up = min(i for i in range(max(1, exact - 2), n + 2)
-                               if round(i / n + 1e-15, 6) >= 0.8) \
-                if n < 10_000 else None
-            assert alpha <= exact
-            if n < 10_000:
-                assert alpha <= min_round_up, (n, alpha, min_round_up)
-            if n < 400_000:
-                assert alpha == exact, (n, alpha, exact)
+    @pytest.mark.parametrize("face", ["pagerank_neardup",
+                                      "dedup_graph_triangles"])
+    def test_graph_faces_ride_the_edge_table(self, spark, sf_dir, face):
+        """Edge references are bucketed table scans: no Python stage,
+        no checkpoint scan (Scan ExistingRDD), no persisted block
+        (InMemoryTableScan) -- nothing held in executor memory for the
+        ContextCleaner to churn."""
+        plan = _plan(_QUERIES[face](spark, sf_dir))
+        _assert_no_python_stage(plan)
+        assert "b_edge_" in plan.lower(), plan
+        assert "Scan ExistingRDD" not in plan, plan
+        assert "InMemoryTableScan" not in plan, plan
