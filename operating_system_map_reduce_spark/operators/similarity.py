@@ -76,13 +76,13 @@ def _stack(series) -> np.ndarray:
 
 
 def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Row-wise dot as a LEFT-TO-RIGHT fold: cumsum along the index
-    axis is sequential ((p1+p2)+p3...), bit-identical to the SQL
+    """Dot along the last axis as a LEFT-TO-RIGHT fold: cumsum along the
+    index axis is sequential ((p1+p2)+p3...), bit-identical to the SQL
     aggregate and DuckDB list_sum -- np.sum/np.dot pairwise-associate
     and may differ in ulps, so they must NOT be used here."""
     if A.shape[0] == 0:
         return np.empty(0, dtype=np.float64)
-    return np.cumsum(A * B, axis=1)[:, -1]
+    return np.cumsum(A * B, axis=-1)[..., -1]
 
 
 PLANES_MAT = np.array(HYPERPLANES, dtype=np.float64)  # (N_PLANES, DIM)
@@ -298,8 +298,6 @@ def cosine_knn(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
     ``ivf_knn``.  The guard costs one count() over the (pruned) id
     column -- negligible next to the n^2 compute it is guarding.
     """
-    from pyspark.sql.window import Window
-
     if not exact:
         n = emb.select(id_col).count()
         if n > EXACT_KNN_MAX_ROWS:
@@ -329,43 +327,10 @@ def cosine_knn(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
     scored = _grouped_topk(members, ["ga", "gb"], k)
     # same-block pairs are scored once per group that includes their
     # block; the per-pair fold is order-independent of group
-    # composition, so duplicates carry identical cosines -- max() is a
-    # dedup, not a choice.  Candidate volume is n*blocks*k slim rows.
-    cand = scored.groupBy("qid", "nid").agg(F.max("cosine").alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("rank"),
-            F.col("nid").alias("neighbor_id"),
-            F.round(F.col("cosine"), 6).alias("cosine"),
-        )
-    )
-
-
-def lsh_bucket_spark_sql(vec_col: str = "embedding") -> str:
-    """Spark-SQL expression assigning the hyperplane-LSH bucket id."""
-    bits = []
-    for p, plane in enumerate(HYPERPLANES):
-        arr = "array(" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + ")"
-        d = dot_sql(vec_col, arr)
-        bits.append(f"CASE WHEN {d} >= 0 THEN {2 ** p} ELSE 0 END")
-    return " + ".join(bits)
-
-
-def lsh_bucket_duckdb_sql(vec_col: str = "embedding") -> str:
-    """DuckDB twin: identical buckets from the same sign table."""
-    bits = []
-    for p, plane in enumerate(HYPERPLANES):
-        arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-        d = (
-            f"list_sum(list_transform(range(1, {DIM + 1}), i -> "
-            f"CAST({vec_col}[i] AS DOUBLE) * ({arr})[i]))"
-        )
-        bits.append(f"CASE WHEN {d} >= 0 THEN {2 ** p} ELSE 0 END")
-    return " + ".join(bits)
+    # composition, so duplicates carry identical cosines -- _ranked_topk's
+    # max() is a dedup, not a choice.  Candidate volume is n*blocks*k
+    # slim rows.
+    return _ranked_topk(scored, k)
 
 
 def _bucket_sql_for_planes(vec_col: str, plane_idxs: list[int], duckdb: bool) -> str:
@@ -389,6 +354,16 @@ def table_bucket_sql(vec_col: str, table: int, duckdb: bool = False) -> str:
     """Bucket id for LSH table ``table`` (TABLE_BITS planes per table)."""
     idxs = list(range(table * TABLE_BITS, (table + 1) * TABLE_BITS))
     return _bucket_sql_for_planes(vec_col, idxs, duckdb)
+
+
+def lsh_bucket_spark_sql(vec_col: str = "embedding") -> str:
+    """Spark-SQL expression assigning the hyperplane-LSH bucket id."""
+    return _bucket_sql_for_planes(vec_col, list(range(N_PLANES)), duckdb=False)
+
+
+def lsh_bucket_duckdb_sql(vec_col: str = "embedding") -> str:
+    """DuckDB twin: identical buckets from the same sign table."""
+    return _bucket_sql_for_planes(vec_col, list(range(N_PLANES)), duckdb=True)
 
 
 def cosine_near_dup(emb: DataFrame, threshold: float = 0.40,
@@ -439,89 +414,149 @@ def cosine_near_dup(emb: DataFrame, threshold: float = 0.40,
     )
 
 
-# IVF coarse quantization: NLIST deterministic centroids (the lowest
-# NLIST ids -- reproducible in any engine without a trained codebook),
-# every vector assigned to its nearest centroid, queries probe the
-# NPROBE nearest cells.  At scale the centroid table is broadcast
-# (NLIST rows), assignment is map-side, and the candidate join shuffles
-# on cell id only.  NLIST sizes the candidate set: cells average
-# n/NLIST vectors, so candidates/query ~ NPROBE * n/NLIST; production
-# would grow NLIST ~ sqrt(n) -- 64 keeps the re-rank ~1.5M pairs at
-# sf0.1 (16 made it 6M+ and 4x slower).
+# IVF coarse quantization: NLIST centroids, every vector assigned to its
+# nearest centroid, queries probe the NPROBE nearest cells.  At scale
+# the centroid table is broadcast (NLIST rows), assignment is map-side,
+# and the candidate join shuffles on cell id only.  NLIST sizes the
+# candidate set: cells average n/NLIST vectors, so candidates/query ~
+# NPROBE * n/NLIST; production would grow NLIST ~ sqrt(n) -- 64 keeps
+# the re-rank ~1.5M pairs at sf0.1 (16 made it 6M+ and 4x slower).
 IVF_NLIST = 64
 IVF_NPROBE = 4
 
+# --- product quantization (the IVF-PQ compression companion) ---------------
+# PQ splits the vector into PQ_M subspaces and snaps each subvector to
+# its nearest codebook entry -- the memory-compression half of the
+# canonical 100 TB ANN stack (IVF narrows the search, PQ shrinks the
+# residency: 64 floats -> PQ_M codes).  At scale: the codebook is a
+# constant broadcast, assignment is map-side Arrow, and the only shuffle
+# downstream is whatever aggregate consumes the codes.
+PQ_M = 8                 # subspaces
+PQ_SUB = DIM // PQ_M     # dims per subspace
+PQ_K = 16                # codes per subspace
 
-def ivf_members(emb: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                nprobe: int = IVF_NPROBE) -> DataFrame:
-    """(cell, indexed, __id, __vec, __nrm): nearest-centroid probe
-    assignment fused with norms in one map-side Arrow pass.
 
-    The centroid table (IVF_NLIST deterministic rows -- the lowest ids,
-    reproducible in any engine without a trained codebook) is collected
-    to the driver and closed over by the numpy stage: the mapInPandas
-    equivalent of a broadcast join.  Each vector ranks its own NLIST
-    sims in-batch and emits one row per probed cell, tagged with
-    whether the vector is INDEXED there (home cell = nearest).  No
-    repartition, no cells-to-stats join -- the only shuffle in the
-    ivf_knn plan is the groupBy on cell."""
+def _codebook(rows: DataFrame, n: int, id_col: str, vec_col: str,
+              trained: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """A codebook is an (ids, matrix) pair with one DIM-wide row per IVF
+    cell or PQ code, and it comes from one of two sources.
+
+    With ``trained`` None it is the ``n`` lowest-id ``rows`` in id order:
+    no training, so a SQL oracle regenerates it exactly.  Otherwise it
+    is the trained matrix labelled by row index; per-subspace PQ
+    codebooks, (PQ_M, n_codes, PQ_SUB), are laid side by side into one
+    row per code.  Empty ``rows`` give an empty codebook, which serves
+    no cells and therefore no rows."""
+    if trained is None:
+        got = (rows.orderBy(F.col(id_col).asc()).limit(n)
+               .select(id_col, vec_col).collect())
+        return (np.array([r[0] for r in got], dtype=np.int64),
+                _stack([r[1] for r in got]))
+    if trained.ndim == 3:
+        trained = np.hstack(trained)
+    return np.arange(len(trained), dtype=np.int64), trained
+
+
+def _probe(E: np.ndarray, nrm: np.ndarray, C: np.ndarray,
+           nprobe: int) -> np.ndarray:
+    """Row indices of each vector's ``nprobe`` most cosine-similar
+    centroids, nearest first.  The sims are sequential folds, and the
+    stable argsort keeps centroid row order on sim ties, matching ORDER
+    BY sim DESC, cell ASC in the oracles."""
+    cn = np.sqrt(_seq_dot(C, C))
+    sims = np.empty((E.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(C.shape[0]):
+        sims[:, j] = _seq_dot(E, np.broadcast_to(C[j], E.shape)) / (nrm * cn[j])
+    return np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+
+
+def _pq_assign(E: np.ndarray, CB: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(best, d2), each (PQ_M, n): per subspace, every vector's nearest
+    code row of ``CB`` and its squared L2 error.  Distances fold
+    left-to-right over the subspace dims, so the doubles match the
+    oracles' list_sum bit-for-bit; argmin keeps the first minimum, the
+    lowest code row (ORDER BY d2, cid)."""
+    best, err = [], []
+    for s in range(PQ_M):
+        lo, hi = s * PQ_SUB, (s + 1) * PQ_SUB
+        diff = E[:, None, lo:hi] - CB[None, :, lo:hi]
+        d2 = _seq_dot(diff, diff)
+        b = np.argmin(d2, axis=1)
+        best.append(b)
+        err.append(d2[np.arange(len(E)), b])
+    return np.stack(best), np.stack(err)
+
+
+def _probe_members(rows: DataFrame, id_col: str, vec_col: str,
+                   cells: tuple[np.ndarray, np.ndarray], nprobe: int,
+                   indexed: bool, pq: np.ndarray | None = None) -> DataFrame:
+    """(cell, indexed, __id, __vec, __nrm): one row per probed cell of
+    each vector's ``nprobe`` nearest ``cells``, fused with the norm in
+    one map-side Arrow pass.
+
+    The codebook is a driver constant closed over by the stage -- the
+    mapInPandas equivalent of a broadcast join -- so there is no
+    repartition and no cells-to-stats join: the consumer's groupBy on
+    cell is the plan's only shuffle.  With ``indexed`` the nearest
+    (home) cell's row is the vector's index entry; query batches pass
+    False.  With ``pq`` (a float32 PQ codebook) the row carries the PQ
+    RECONSTRUCTION and its norm instead of the vector, while the cell is
+    still chosen from the original vector, as an index build sees the
+    real data; vectors whose reconstruction is all zero are dropped."""
     import pandas as pd
 
-    emb = _drop_zero_vectors(emb, vec_col)
-    cent_rows = (
-        emb.orderBy(F.col(id_col).asc()).limit(IVF_NLIST)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    src = emb.select(F.col(id_col), F.col(vec_col))
-    id_field, vec_field = src.schema[id_col], src.schema[vec_col]
+    src = rows.select(F.col(id_col), F.col(vec_col))
+    cent_ids, C = cells
     # tiny tables: fewer centroids than probes -- probe what exists
-    # (argsort would otherwise yield < nprobe columns and the output
-    # arrays would disagree on length)
-    nprobe = min(nprobe, len(cent_rows))
-    if nprobe == 0:
-        return src.sparkSession.createDataFrame([], StructType([
-            StructField("cell", LongType()), StructField("indexed", BooleanType()),
-            StructField("__id", id_field.dataType),
-            StructField("__vec", vec_field.dataType),
-            StructField("__nrm", DoubleType()),
-        ]))
-    # rows sorted by cell id: stable argsort then breaks sim ties by
-    # ascending cell, matching ORDER BY sim DESC, cell ASC in the oracle.
-    cent_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-    C = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in cent_rows])
-    cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
+    nprobe = min(nprobe, len(cent_ids))
+    flags = (np.arange(nprobe) == 0) & indexed
+    pq64 = None if pq is None else pq.astype(np.float64)
 
-    def member_batches(batches):
-        for pdf in batches:
+    def batches(bs):
+        for pdf in bs:
             E = _stack(pdf[vec_col])
-            n = E.shape[0]
-            if n == 0:
+            if E.shape[0] == 0 or nprobe == 0:
                 continue
             nrm = np.sqrt(_seq_dot(E, E))
-            sims = np.empty((n, len(cent_ids)), dtype=np.float64)
-            for j in range(len(cent_ids)):
-                sims[:, j] = _seq_dot(E, np.broadcast_to(C[j], E.shape)) / (nrm * cn[j])
-            # stable argsort on -sim: ties keep column order = cell asc
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+            cell = cent_ids[_probe(E, nrm, C, nprobe)]
+            ids, vecs = pdf[id_col].to_numpy(), list(pdf[vec_col])
+            if pq is not None:
+                best, _ = _pq_assign(E, pq64)
+                R = np.hstack([pq[best[s], s * PQ_SUB:(s + 1) * PQ_SUB]
+                               for s in range(PQ_M)])
+                R64 = R.astype(np.float64)
+                nrm = np.sqrt(_seq_dot(R64, R64))
+                keep = nrm > 0
+                cell, ids, nrm = cell[keep], ids[keep], nrm[keep]
+                vecs = list(R[keep])
             yield pd.DataFrame({
-                "cell": cent_ids[order].ravel(),
-                "indexed": np.tile(
-                    np.arange(nprobe) == 0, n),
-                "__id": np.repeat(pdf[id_col].to_numpy(), nprobe),
-                "__vec": pd.Series(
-                    [v for v in pdf[vec_col] for _ in range(nprobe)]),
+                "cell": cell.ravel(),
+                "indexed": np.tile(flags, len(ids)),
+                "__id": np.repeat(ids, nprobe),
+                "__vec": pd.Series([v for v in vecs for _ in range(nprobe)]),
                 "__nrm": np.repeat(nrm, nprobe),
             })
 
     schema = StructType([
         StructField("cell", LongType()), StructField("indexed", BooleanType()),
-        StructField("__id", id_field.dataType),
-        StructField("__vec", vec_field.dataType),
+        StructField("__id", src.schema[id_col].dataType),
+        StructField("__vec", src.schema[vec_col].dataType),
         StructField("__nrm", DoubleType()),
     ])
-    return src.mapInPandas(member_batches, schema)
+    return src.mapInPandas(batches, schema)
+
+
+def ivf_members(emb: DataFrame, id_col: str = "vec_id",
+                vec_col: str = "embedding",
+                nprobe: int = IVF_NPROBE) -> DataFrame:
+    """(cell, indexed, __id, __vec, __nrm) over the lowest-id codebook of
+    IVF_NLIST cells: each vector probes its ``nprobe`` nearest cells and
+    is INDEXED in its home (nearest) one.  The only shuffle in the
+    ivf_knn plan is the groupBy on cell."""
+    emb = _drop_zero_vectors(emb, vec_col)
+    return _probe_members(emb, id_col, vec_col,
+                          _codebook(emb, IVF_NLIST, id_col, vec_col),
+                          nprobe, indexed=True)
 
 
 def ivf_knn(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
@@ -667,108 +702,42 @@ def lsh_knn(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
     return _ranked_topk(scored, k)
 
 
-def ivf_search(corpus: DataFrame, queries: DataFrame, k: int = 5,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Query-set vs corpus ANN -- the serving shape of IVF: the CORPUS
-    is indexed once (each vector in its home cell; centroids = the
-    NLIST lowest-id corpus vectors, codebook-free and reproducible in
-    any engine), and the QUERY batch probes its NPROBE nearest cells;
-    exact cosine runs only inside probed cells.  Unlike ivf_knn's
-    self-join, query vectors are never candidates -- neighbors come
-    exclusively from the corpus.
+def _ivf_search_core(corpus: DataFrame, queries: DataFrame, k: int,
+                     id_col: str, vec_col: str,
+                     cells: tuple[np.ndarray, np.ndarray],
+                     pq: np.ndarray | None = None) -> DataFrame:
+    """The one IVF serving plan, for any (ids, matrix) codebook: the
+    CORPUS is indexed once (each vector in its home cell, as its PQ
+    reconstruction when ``pq`` is given), the QUERY batch probes its
+    NPROBE nearest cells, and exact cosine runs only inside probed
+    cells.  Query vectors are never candidates.
 
     Plan shape: two fused map-side assignment passes (no shuffle), one
     shuffle on cell for in-group scoring, then _ranked_topk's JVM-side
     dedup + ranking.  At 100 TB the corpus assignment is a one-time
     index build (persisted in production); the per-batch cost is the
-    small query side plus the probed cells."""
-    corpus = _drop_zero_vectors(corpus, vec_col)
-    queries = _drop_zero_vectors(queries, vec_col)
-    cent_rows = (
-        corpus.orderBy(F.col(id_col).asc()).limit(IVF_NLIST)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    if not cent_rows:
-        cent_ids = np.empty(0, dtype=np.int64)
-        C = np.empty((0, 0), dtype=np.float64)
-    else:
-        cent_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-        C = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in cent_rows])
-    return _ivf_search_core(corpus, queries, k, id_col, vec_col, cent_ids, C)
-
-
-def _ivf_search_core(corpus: DataFrame, queries: DataFrame, k: int,
-                     id_col: str, vec_col: str,
-                     cent_ids: np.ndarray, C: np.ndarray) -> DataFrame:
-    """Shared IVF serving plan: centroids are an already-built (ids,
-    matrix) codebook -- deterministic lowest-id rows for the oracled
-    path, trained k-means for the quality path.  Inputs must already be
+    small query side plus the probed cells.  Inputs must already be
     zero-vector-free."""
     import pandas as pd
 
-    src_c = corpus.select(F.col(id_col), F.col(vec_col))
-    src_q = queries.select(F.col(id_col), F.col(vec_col))
-    id_field, vec_field = src_c.schema[id_col], src_c.schema[vec_col]
-    member_schema = StructType([
-        StructField("cell", LongType()), StructField("is_q", BooleanType()),
-        StructField("__id", id_field.dataType),
-        StructField("__vec", vec_field.dataType),
-        StructField("__nrm", DoubleType()),
-    ])
-    out_schema = StructType([
-        StructField("qid", id_field.dataType),
-        StructField("nid", id_field.dataType),
-        StructField("cosine", DoubleType()),
-    ])
-    if len(cent_ids) == 0:
-        empty = src_c.sparkSession.createDataFrame([], out_schema)
-        return _ranked_topk(empty, k)
-    cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
-
-    def assign_fn(nprobe: int, is_q: bool):
-        def batches(bs):
-            for pdf in bs:
-                E = _stack(pdf[vec_col])
-                n = E.shape[0]
-                if n == 0:
-                    continue
-                nrm = np.sqrt(_seq_dot(E, E))
-                sims = np.empty((n, len(cent_ids)), dtype=np.float64)
-                for j in range(len(cent_ids)):
-                    sims[:, j] = _seq_dot(
-                        E, np.broadcast_to(C[j], E.shape)) / (nrm * cn[j])
-                # stable argsort: sim ties keep cell-ascending order,
-                # matching ORDER BY sim DESC, cell ASC in the oracle
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-                yield pd.DataFrame({
-                    "cell": cent_ids[order].ravel(),
-                    "is_q": np.full(n * nprobe, is_q),
-                    "__id": np.repeat(pdf[id_col].to_numpy(), nprobe),
-                    "__vec": pd.Series(
-                        [v for v in pdf[vec_col] for _ in range(nprobe)]),
-                    "__nrm": np.repeat(nrm, nprobe),
-                })
-        return batches
-
-    nprobe_q = min(IVF_NPROBE, len(cent_ids))
     members = (
-        src_c.mapInPandas(assign_fn(1, False), member_schema)
-        .unionByName(src_q.mapInPandas(assign_fn(nprobe_q, True), member_schema))
+        _probe_members(corpus, id_col, vec_col, cells, 1, True, pq)
+        .unionByName(_probe_members(queries, id_col, vec_col, cells,
+                                    IVF_NPROBE, False))
     )
 
     def cell_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("__id").reset_index(drop=True)
-        qmask = pdf["is_q"].to_numpy()
-        nids = pdf["__id"].to_numpy()[~qmask]
-        qids = pdf["__id"].to_numpy()[qmask]
+        idx = pdf["indexed"].to_numpy()
+        ids = pdf["__id"].to_numpy()
+        nids, qids = ids[idx], ids[~idx]
         if len(nids) == 0 or len(qids) == 0:
             return pd.DataFrame({"qid": qids[:0], "nid": qids[:0],
                                  "cosine": np.empty(0, dtype=np.float64)})
         E = _stack(pdf["__vec"])
         nrm = pdf["__nrm"].to_numpy()
-        QE, qn = E[qmask], nrm[qmask]
-        NE, nn = E[~qmask], nrm[~qmask]
+        QE, qn = E[~idx], nrm[~idx]
+        NE, nn = E[idx], nrm[idx]
         kk = min(k, len(nids))
         q_out, n_out, c_out = [], [], []
         for s, cos in _chunked_cosines(QE, NE, qn, nn):
@@ -780,153 +749,75 @@ def _ivf_search_core(corpus: DataFrame, queries: DataFrame, k: int,
                              "nid": np.concatenate(n_out),
                              "cosine": np.concatenate(c_out)})
 
-    scored = members.groupBy("cell").applyInPandas(cell_fn, out_schema)
+    id_type = corpus.schema[id_col].dataType
+    schema = StructType([
+        StructField("qid", id_type), StructField("nid", id_type),
+        StructField("cosine", DoubleType()),
+    ])
+    scored = members.groupBy("cell").applyInPandas(cell_fn, schema)
     return _ranked_topk(scored, k)
 
 
-def kmeans_centroids(corpus: DataFrame, nlist: int = IVF_NLIST,
-                     iters: int = 5, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> np.ndarray:
-    """Deterministic distributed spherical k-means for IVF centroid
-    training -- the quality half the lowest-id codebook trades away.
-
-    Lloyd iterations with a fixed count (no data-dependent stopping), a
-    deterministic init (unit vectors of the ``nlist`` lowest-id rows),
-    and a content-sorted partial reduce, so repeated runs on the same
-    data AND the same input partitioning yield bit-identical codebooks
-    without any RNG.  (Across different partitionings the per-batch
-    partial sums themselves differ, so determinism is per-layout --
-    float summation order changes by ~1 ulp, never cluster quality.)
-    Assignment metric is cosine (matching the serving-side probe),
-    so training operates on UNIT vectors and the update step is the
-    normalized mean direction of each cell's members.
-
-    Scale shape per iteration: one map-side Arrow pass emits per-BATCH
-    partial (sum-vector, count) rows -- at most nlist rows per batch --
-    and only those partials are collected (bounded by nlist x
-    input-partitions rows of dim doubles, independent of corpus size;
-    the same constant-size-collect discipline as the 1-row convergence
-    probes elsewhere).  The full corpus is never collected and never
-    reshuffled; the codebook matrix (nlist x dim) is what a production
-    job would persist.
-
-    Not oracle-gated: a DuckDB re-implementation of iterative k-means
-    adds no verification value; quality is pinned instead by the
-    recall-vs-brute-force test in tests/test_mining_ops.py."""
-    import pandas as pd
-
-    corpus = _drop_zero_vectors(corpus, vec_col)
-    init_rows = (corpus.orderBy(F.col(id_col).asc()).limit(nlist)
-                 .select(vec_col).collect())
-    if not init_rows:
-        return np.empty((0, 0), dtype=np.float64)
-    C = np.stack([np.asarray(r[vec_col], dtype=np.float64)
-                  for r in init_rows])
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-    n_cells, dim = C.shape
-    src = corpus.select(vec_col)
-    partial_schema = StructType([
-        StructField("cell", LongType()),
-        StructField("psum", ArrayType(DoubleType())),
-        StructField("cnt", LongType()),
-    ])
-
-    for _ in range(iters):
-        Cb = C  # closed over by this iteration's Arrow stage
-
-        def partial_batches(bs, Cb=Cb):
-            for pdf in bs:
-                E = _stack(pdf[vec_col])
-                if E.shape[0] == 0:
-                    continue
-                U = E / np.sqrt(_seq_dot(E, E))[:, None]
-                sims = U @ Cb.T
-                assign = np.argmax(sims, axis=1)
-                sums = np.zeros((n_cells, dim), dtype=np.float64)
-                counts = np.zeros(n_cells, dtype=np.int64)
-                np.add.at(sums, assign, U)
-                np.add.at(counts, assign, 1)
-                live = np.nonzero(counts)[0]
-                yield pd.DataFrame({
-                    "cell": live.astype(np.int64),
-                    "psum": list(sums[live]),
-                    "cnt": counts[live],
-                })
-
-        partials = src.mapInPandas(partial_batches, partial_schema).collect()
-        # accumulate in a content-sorted order, not collect (= task
-        # completion) order: float addition is non-associative, so an
-        # order-free reduce would make the codebook bits depend on task
-        # scheduling even for identical data + layout.
-        partials.sort(key=lambda r: (r["cell"], r["cnt"], tuple(r["psum"])))
-        sums = np.zeros((n_cells, dim), dtype=np.float64)
-        counts = np.zeros(n_cells, dtype=np.int64)
-        for r in partials:
-            sums[r["cell"]] += np.asarray(r["psum"], dtype=np.float64)
-            counts[r["cell"]] += r["cnt"]
-        live = counts > 0
-        newC = C.copy()  # empty cells keep their previous direction
-        newC[live] = sums[live] / counts[live, None]
-        norms = np.linalg.norm(newC, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        C = newC / norms
-    return C
-
-
-def ivf_search_trained(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                       nlist: int = IVF_NLIST, iters: int = 5,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """``ivf_search`` served from a k-means-trained codebook instead of
-    the lowest-id rows: same plan shape (map-side probe assignment, one
-    shuffle on cell, JVM-side ranking), better-calibrated recall because
-    the cells follow the data's actual density.  Cell labels are the
-    codebook row indices 0..nlist-1."""
+def ivf_search(corpus: DataFrame, queries: DataFrame, k: int = 5,
+               id_col: str = "vec_id", vec_col: str = "embedding",
+               codebook: np.ndarray | None = None) -> DataFrame:
+    """Query-set vs corpus ANN -- the serving shape of IVF
+    (_ivf_search_core).  The centroids are the NLIST lowest-id corpus
+    vectors, codebook-free and reproducible in any engine, unless
+    ``codebook`` (e.g. ``kmeans_centroids`` output) is given; its cells
+    are then labelled by row index.  Zero vectors are dropped from both
+    sides."""
     corpus = _drop_zero_vectors(corpus, vec_col)
     queries = _drop_zero_vectors(queries, vec_col)
-    C = kmeans_centroids(corpus, nlist=nlist, iters=iters,
-                         id_col=id_col, vec_col=vec_col)
-    cent_ids = np.arange(C.shape[0], dtype=np.int64)
-    return _ivf_search_core(corpus, queries, k, id_col, vec_col, cent_ids, C)
+    cells = _codebook(corpus, IVF_NLIST, id_col, vec_col, codebook)
+    return _ivf_search_core(corpus, queries, k, id_col, vec_col, cells)
 
 
-# --- product quantization (the IVF-PQ compression companion) ---------------
-# PQ splits the vector into PQ_M subspaces and snaps each subvector to
-# its nearest codebook entry -- the memory-compression half of the
-# canonical 100 TB ANN stack (IVF narrows the search, PQ shrinks the
-# residency: 64 floats -> PQ_M codes).  The codebook is deterministic
-# (the PQ_K lowest-id vectors' subvectors, the same no-training rule as
-# IVF's centroid table) so a SQL oracle regenerates it exactly.  At
-# scale: the codebook is a constant broadcast, assignment is map-side
-# Arrow, and the only shuffle downstream is whatever aggregate consumes
-# the codes.
-PQ_M = 8                 # subspaces
-PQ_SUB = DIM // PQ_M     # dims per subspace
-PQ_K = 16                # codes per subspace
+def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 5,
+                 id_col: str = "vec_id", vec_col: str = "embedding",
+                 codebooks: tuple[np.ndarray, np.ndarray] | None = None,
+                 ) -> DataFrame:
+    """IVF-PQ serving search: ivf_search's candidate generation scored
+    against PQ-RECONSTRUCTED corpus vectors -- the full compressed-index
+    ANN stack, where the index stores PQ_M codes per vector instead of
+    DIM floats and queries rank by cosine to the reconstruction.  Both
+    codebooks are lowest-id (IVF_NLIST and PQ_K rows) unless
+    ``codebooks`` = (IVF centroids, PQ codebooks) from
+    ``trained_codebooks`` is given.  Zero vectors are dropped from both
+    sides.
+
+    Determinism contract: cell assignment uses the ORIGINAL corpus
+    vector; reconstruction snaps each subvector to the codebook entry
+    chosen by pq_codes' sequential-fold argmin; the scoring norm folds
+    the reconstructed 64 dims FLAT left-to-right, and the oracle
+    rebuilds the same array (flatten of ordered codebook slices) so
+    every double matches bit-for-bit."""
+    corpus = _drop_zero_vectors(corpus, vec_col)
+    queries = _drop_zero_vectors(queries, vec_col)
+    C, CBS = codebooks if codebooks is not None else (None, None)
+    cells = _codebook(corpus, IVF_NLIST, id_col, vec_col, C)
+    _, pq = _codebook(corpus, PQ_K, id_col, vec_col, CBS)
+    # PQ codebook in the STORAGE dtype (float32): reconstructions are
+    # exact codebook entries, cast to double only inside folds
+    return _ivf_search_core(corpus, queries, k, id_col, vec_col, cells,
+                            pq.astype(np.float32))
 
 
 def pq_codes(emb: DataFrame, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             vec_col: str = "embedding",
+             codebook: np.ndarray | None = None) -> DataFrame:
     """(id, subspace, code, sq_err): per-subspace nearest-codebook
-    assignment with its squared L2 error.
-
-    Distances fold LEFT-TO-RIGHT over the subspace dims (cumsum), so
-    the doubles match the oracle's list_sum fold bit-for-bit; argmin
-    ties break toward the lowest code id (numpy first-minimum over a
-    codebook ordered by id == ORDER BY dist, cid)."""
+    assignment with its squared L2 error (_pq_assign).  The codebook is
+    the PQ_K lowest-id vectors' subvectors -- the same no-training rule
+    as IVF's centroid table, so a SQL oracle regenerates it exactly --
+    unless ``codebook`` (``pq_codebooks_trained`` output) is given; codes
+    are then its row indices 0..PQ_K-1.  Zero vectors are coded too."""
     import pandas as pd
 
-    cb_rows = (
-        emb.orderBy(F.col(id_col).asc()).limit(PQ_K)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    cb_ids = np.array([r["cid"] for r in cb_rows], dtype=np.int64)
-    CB = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in cb_rows])
+    cb_ids, CB = _codebook(emb, PQ_K, id_col, vec_col, codebook)
     src = emb.select(F.col(id_col), F.col(vec_col))
-    id_type = src.schema[id_col].dataType
     schema = StructType([
-        StructField("vec_id", id_type),
+        StructField("vec_id", src.schema[id_col].dataType),
         StructField("subspace", IntegerType()),
         StructField("code", LongType()),
         StructField("sq_err", DoubleType()),
@@ -935,91 +826,57 @@ def pq_codes(emb: DataFrame, id_col: str = "vec_id",
     def code_batches(batches):
         for pdf in batches:
             E = _stack(pdf[vec_col])
-            n = E.shape[0]
-            if n == 0:
+            if E.shape[0] == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            out_id, out_s, out_c, out_e = [], [], [], []
-            for s in range(PQ_M):
-                lo, hi = s * PQ_SUB, (s + 1) * PQ_SUB
-                sub = E[:, lo:hi]
-                d2 = np.empty((n, PQ_K), dtype=np.float64)
-                for k in range(PQ_K):
-                    diff = sub - CB[k, lo:hi]
-                    # sequential fold (see _seq_dot): oracle-identical
-                    d2[:, k] = np.cumsum(diff * diff, axis=1)[:, -1]
-                best = np.argmin(d2, axis=1)  # first min == lowest cid
-                out_id.append(ids)
-                out_s.append(np.full(n, s, dtype=np.int32))
-                out_c.append(cb_ids[best])
-                out_e.append(d2[np.arange(n), best])
+            best, err = _pq_assign(E, CB)
             yield pd.DataFrame({
-                "vec_id": np.concatenate(out_id),
-                "subspace": np.concatenate(out_s),
-                "code": np.concatenate(out_c),
-                "sq_err": np.concatenate(out_e),
+                "vec_id": np.tile(pdf[id_col].to_numpy(), PQ_M),
+                "subspace": np.repeat(np.arange(PQ_M, dtype=np.int32), len(E)),
+                "code": cb_ids[best].ravel(),
+                "sq_err": err.ravel(),
             })
 
     return src.mapInPandas(code_batches, schema)
 
 
-def pq_codebooks_trained(corpus: DataFrame, iters: int = 5,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> np.ndarray:
-    """(PQ_M, PQ_K, PQ_SUB) per-subspace codebooks trained with
-    deterministic L2 Lloyd iterations -- the quality half of PQ that the
-    lowest-id codebook (kept for the SQL oracle) trades away.
+def _lloyd(rows: DataFrame, vec_col: str, M: np.ndarray, iters: int,
+           assign, finish=lambda M: M) -> np.ndarray:
+    """Deterministic distributed Lloyd iterations over a (slots, width)
+    codebook ``M``, with a fixed count (no data-dependent stopping) and
+    no RNG.  ``assign(E, M)`` maps a batch to (slot per point, points).
 
-    Same distributed-training shape as ``kmeans_centroids``: a fixed
-    iteration count, a deterministic init (the PQ_K lowest-id vectors'
-    subvectors, i.e. exactly the untrained codebook), a content-sorted
-    partial reduce (bit-identical per data + input layout), and one
-    map-side Arrow pass per iteration that emits per-batch partial
-    (sum, count) rows for all PQ_M x PQ_K cells at once; only those
-    partials (at most PQ_M*PQ_K rows per batch) reach the driver.  Assignment metric is
-    squared L2 per subspace, matching ``pq_codes``' quantizer.
+    Scale shape per iteration: one map-side Arrow pass emits per-BATCH
+    partial (sum, count) rows -- at most one per slot per batch -- and
+    only those partials are collected, bounded by slots x input
+    partitions and independent of corpus size.  The corpus is never
+    collected and never reshuffled.  The update is the per-slot mean;
+    empty slots keep their previous row; ``finish`` post-processes it.
 
-    Not oracle-gated; quality is pinned by the distortion-reduction test
-    (trained codebooks must cut mean squared quantization error vs the
-    untrained ones) in tests/test_mining_ops.py."""
+    Partials accumulate in a content-sorted order, not collect (= task
+    completion) order: float addition is non-associative, so an
+    order-free reduce would make the codebook bits depend on task
+    scheduling.  Repeated runs on the same data AND input partitioning
+    are therefore bit-identical; across partitionings the partial sums
+    themselves differ by ~1 ulp, never in cluster quality."""
     import pandas as pd
 
-    corpus = _drop_zero_vectors(corpus, vec_col)
-    init_rows = (corpus.orderBy(F.col(id_col).asc()).limit(PQ_K)
-                 .select(vec_col).collect())
-    if not init_rows:
-        return np.empty((PQ_M, 0, PQ_SUB), dtype=np.float64)
-    flat = np.stack([np.asarray(r[vec_col], dtype=np.float64)
-                     for r in init_rows])
-    n_codes = flat.shape[0]
-    CB = np.stack([flat[:, s * PQ_SUB:(s + 1) * PQ_SUB]
-                   for s in range(PQ_M)])          # (PQ_M, n_codes, PQ_SUB)
-    src = corpus.select(vec_col)
-    partial_schema = StructType([
-        StructField("slot", LongType()),           # s * n_codes + code
+    src = rows.select(vec_col)
+    schema = StructType([
+        StructField("slot", LongType()),
         StructField("psum", ArrayType(DoubleType())),
         StructField("cnt", LongType()),
     ])
-
     for _ in range(iters):
-        CBb = CB
-
-        def partial_batches(bs, CBb=CBb):
+        def partial_batches(bs, M=M):
             for pdf in bs:
                 E = _stack(pdf[vec_col])
                 if E.shape[0] == 0:
                     continue
-                sums = np.zeros((PQ_M * n_codes, PQ_SUB), dtype=np.float64)
-                counts = np.zeros(PQ_M * n_codes, dtype=np.int64)
-                for s in range(PQ_M):
-                    sub = E[:, s * PQ_SUB:(s + 1) * PQ_SUB]
-                    # ||x-c||^2 = ||x||^2 - 2xc + ||c||^2; argmin only
-                    # needs the last two terms
-                    d2 = (-2.0 * sub @ CBb[s].T
-                          + (CBb[s] * CBb[s]).sum(axis=1))
-                    best = np.argmin(d2, axis=1) + s * n_codes
-                    np.add.at(sums, best, sub)
-                    np.add.at(counts, best, 1)
+                slot, pts = assign(E, M)
+                sums = np.zeros_like(M)
+                counts = np.zeros(len(M), dtype=np.int64)
+                np.add.at(sums, slot, pts)
+                np.add.at(counts, slot, 1)
                 live = np.nonzero(counts)[0]
                 yield pd.DataFrame({
                     "slot": live.astype(np.int64),
@@ -1027,268 +884,94 @@ def pq_codebooks_trained(corpus: DataFrame, iters: int = 5,
                     "cnt": counts[live],
                 })
 
-        partials = src.mapInPandas(partial_batches, partial_schema).collect()
-        # content-sorted accumulation: see kmeans_centroids -- removes
-        # task-completion-order nondeterminism from the float reduce.
+        partials = src.mapInPandas(partial_batches, schema).collect()
         partials.sort(key=lambda r: (r["slot"], r["cnt"], tuple(r["psum"])))
-        sums = np.zeros((PQ_M * n_codes, PQ_SUB), dtype=np.float64)
-        counts = np.zeros(PQ_M * n_codes, dtype=np.int64)
+        sums = np.zeros_like(M)
+        counts = np.zeros(len(M), dtype=np.int64)
         for r in partials:
             sums[r["slot"]] += np.asarray(r["psum"], dtype=np.float64)
             counts[r["slot"]] += r["cnt"]
-        newCB = CB.copy()  # empty cells keep their previous entry
         live = counts > 0
-        flat_cb = newCB.reshape(PQ_M * n_codes, PQ_SUB)
-        flat_cb[live] = sums[live] / counts[live, None]
-        CB = flat_cb.reshape(PQ_M, n_codes, PQ_SUB)
-    return CB
+        M = M.copy()
+        M[live] = sums[live] / counts[live, None]
+        M = finish(M)
+    return M
 
 
-def pq_codes_trained(emb: DataFrame, iters: int = 5, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """``pq_codes`` quantizing against ``pq_codebooks_trained`` output:
-    same (vec_id, subspace, code, sq_err) schema, codes are codebook row
-    indices 0..PQ_K-1.  Same map-side Arrow plan; the trained codebook
-    is a driver constant closed over by the stage."""
-    import pandas as pd
+def kmeans_centroids(corpus: DataFrame, nlist: int = IVF_NLIST,
+                     iters: int = 5, id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> np.ndarray:
+    """(nlist, DIM) IVF centroids from distributed spherical k-means
+    (_lloyd) -- the quality half the lowest-id codebook trades away.
 
-    CB = pq_codebooks_trained(emb, iters=iters, id_col=id_col,
-                              vec_col=vec_col)
-    emb = _drop_zero_vectors(emb, vec_col)
-    src = emb.select(F.col(id_col), F.col(vec_col))
-    id_type = src.schema[id_col].dataType
-    n_codes = CB.shape[1]
-    schema = StructType([
-        StructField("vec_id", id_type),
-        StructField("subspace", IntegerType()),
-        StructField("code", LongType()),
-        StructField("sq_err", DoubleType()),
-    ])
+    Init: unit vectors of the ``nlist`` lowest-id rows.  Assignment
+    metric is cosine (matching the serving-side probe), so training
+    operates on UNIT vectors and the update is the normalized mean
+    direction of each cell's members.
 
-    def code_batches(batches):
-        for pdf in batches:
-            E = _stack(pdf[vec_col])
-            n = E.shape[0]
-            if n == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            out_id, out_s, out_c, out_e = [], [], [], []
-            for s in range(PQ_M):
-                sub = E[:, s * PQ_SUB:(s + 1) * PQ_SUB]
-                d2 = ((sub * sub).sum(axis=1)[:, None]
-                      - 2.0 * sub @ CB[s].T
-                      + (CB[s] * CB[s]).sum(axis=1))
-                best = np.argmin(d2, axis=1)
-                out_id.append(ids)
-                out_s.append(np.full(n, s, dtype=np.int32))
-                out_c.append(best.astype(np.int64))
-                out_e.append(np.maximum(d2[np.arange(n), best], 0.0))
-            yield pd.DataFrame({
-                "vec_id": np.concatenate(out_id),
-                "subspace": np.concatenate(out_s),
-                "code": np.concatenate(out_c),
-                "sq_err": np.concatenate(out_e),
-            })
-
-    return src.mapInPandas(code_batches, schema)
-
-
-def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF-PQ serving search: IVF candidate generation (home cells /
-    NPROBE probes, exactly ivf_search's) scored against PQ-RECONSTRUCTED
-    corpus vectors -- the full compressed-index ANN stack, where the
-    index stores PQ_M codes per vector instead of DIM floats and
-    queries rank by cosine to the reconstruction.
-
-    Determinism contract: cell assignment uses the ORIGINAL corpus
-    vector (the index build sees the real data); reconstruction snaps
-    each subvector to the codebook entry chosen by the same
-    sequential-fold argmin as pq_codes; the scoring norm folds the
-    reconstructed 64 dims FLAT left-to-right, and the oracle rebuilds
-    the same array (flatten of ordered codebook slices) so every double
-    matches bit-for-bit."""
+    Not oracle-gated on its own; quality is pinned by the
+    recall-vs-brute-force test in tests/test_mining_ops.py."""
     corpus = _drop_zero_vectors(corpus, vec_col)
-    queries = _drop_zero_vectors(queries, vec_col)
-    cent_rows = (
-        corpus.orderBy(F.col(id_col).asc()).limit(IVF_NLIST)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    cb_rows = (
-        corpus.orderBy(F.col(id_col).asc()).limit(PQ_K)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    if not cent_rows or not cb_rows:
-        cent_ids = np.empty(0, dtype=np.int64)
-        C = np.empty((0, 0), dtype=np.float64)
-        CBS32 = np.empty((PQ_M, 0, PQ_SUB), dtype=np.float32)
-    else:
-        cent_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-        C = np.stack([np.asarray(r["cv"], dtype=np.float64)
-                      for r in cent_rows])
-        # codebook kept in the STORAGE dtype (float32): reconstructions
-        # are exact codebook entries, cast to double only inside folds
-        CB32 = np.stack([np.asarray(r["cv"], dtype=np.float32)
-                         for r in cb_rows])
-        CBS32 = np.stack([CB32[:, s_ * PQ_SUB:(s_ + 1) * PQ_SUB]
-                          for s_ in range(PQ_M)])
-    return _ivfpq_search_core(corpus, queries, k, id_col, vec_col,
-                              cent_ids, C, CBS32)
+    C = _codebook(corpus, nlist, id_col, vec_col)[1]
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+
+    def assign(E, C):
+        U = E / np.sqrt(_seq_dot(E, E))[:, None]
+        return np.argmax(U @ C.T, axis=1), U
+
+    def unit(C):
+        norms = np.linalg.norm(C, axis=1, keepdims=True)
+        norms[norms == 0.0] = 1.0
+        return C / norms
+
+    return _lloyd(corpus, vec_col, C, iters, assign, unit)
+
+
+def pq_codebooks_trained(corpus: DataFrame, iters: int = 5,
+                         id_col: str = "vec_id",
+                         vec_col: str = "embedding") -> np.ndarray:
+    """(PQ_M, PQ_K, PQ_SUB) per-subspace codebooks trained with L2
+    Lloyd iterations (_lloyd) -- the quality half of PQ that the
+    lowest-id codebook (kept for the SQL oracle) trades away.
+
+    Init: the PQ_K lowest-id vectors' subvectors, i.e. exactly the
+    untrained codebook.  One pass trains all PQ_M x PQ_K cells at once
+    (slot = subspace * PQ_K + code).  Assignment is squared L2 per
+    subspace in the ``-2*x.c + c.c`` form, which the trained face's
+    oracle mirrors exactly.
+
+    Not oracle-gated on its own; quality is pinned by the
+    distortion-reduction test in tests/test_mining_ops.py."""
+    corpus = _drop_zero_vectors(corpus, vec_col)
+    flat = _codebook(corpus, PQ_K, id_col, vec_col)[1]
+    n_codes = len(flat)
+
+    def assign(E, M):
+        CB = M.reshape(PQ_M, n_codes, PQ_SUB)
+        slot, pts = [], []
+        for s in range(PQ_M):
+            sub = E[:, s * PQ_SUB:(s + 1) * PQ_SUB]
+            # ||x-c||^2 = ||x||^2 - 2xc + ||c||^2; argmin only needs the
+            # last two terms
+            d2 = -2.0 * sub @ CB[s].T + (CB[s] * CB[s]).sum(axis=1)
+            slot.append(np.argmin(d2, axis=1) + s * n_codes)
+            pts.append(sub)
+        return np.concatenate(slot), np.concatenate(pts)
+
+    M = np.stack(np.hsplit(flat, PQ_M)).reshape(PQ_M * n_codes, PQ_SUB)
+    return _lloyd(corpus, vec_col, M, iters, assign).reshape(
+        PQ_M, n_codes, PQ_SUB)
 
 
 def trained_codebooks(corpus: DataFrame, iters: int = 5,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
     """Train both halves of the compressed index once: (IVF centroids,
-    PQ codebooks).  A production job trains per corpus snapshot and
-    persists the two small matrices; callers that serve many query
-    batches pass the result to ``ivfpq_search_trained`` so training cost
-    is paid once per corpus, not per search."""
-    corpus = _drop_zero_vectors(corpus, vec_col)
-    C = kmeans_centroids(corpus, iters=iters, id_col=id_col, vec_col=vec_col)
-    CBS = pq_codebooks_trained(corpus, iters=iters, id_col=id_col,
-                               vec_col=vec_col)
-    return C, CBS
-
-
-def ivfpq_search_trained(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                         iters: int = 5, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         codebooks: tuple[np.ndarray, np.ndarray] | None = None,
-                         ) -> DataFrame:
-    """``ivfpq_search`` served entirely from TRAINED codebooks: spherical
-    k-means IVF centroids (``kmeans_centroids``) and per-subspace
-    L2-Lloyd PQ codebooks (``pq_codebooks_trained``) -- the full
-    production compressed-index stack with both quantizers calibrated to
-    the data.  Same plan shape as the oracled path; quality pinned by
-    the recall test in tests/test_mining_ops.py.  Pass ``codebooks``
-    (from ``trained_codebooks``) to serve from an already-trained
-    index."""
-    corpus = _drop_zero_vectors(corpus, vec_col)
-    queries = _drop_zero_vectors(queries, vec_col)
-    if codebooks is None:
-        codebooks = trained_codebooks(corpus, iters=iters, id_col=id_col,
-                                      vec_col=vec_col)
-    C, CBS = codebooks
-    cent_ids = np.arange(C.shape[0], dtype=np.int64)
-    return _ivfpq_search_core(corpus, queries, k, id_col, vec_col,
-                              cent_ids, C, CBS.astype(np.float32))
-
-
-def _ivfpq_search_core(corpus: DataFrame, queries: DataFrame, k: int,
-                       id_col: str, vec_col: str, cent_ids: np.ndarray,
-                       C: np.ndarray, CBS32: np.ndarray) -> DataFrame:
-    """Shared IVF-PQ serving plan over an already-built coarse codebook
-    (cent_ids, C) and per-subspace PQ codebook CBS32 of shape
-    (PQ_M, n_codes, PQ_SUB)."""
-    import pandas as pd
-
-    src_c = corpus.select(F.col(id_col), F.col(vec_col))
-    src_q = queries.select(F.col(id_col), F.col(vec_col))
-    id_field, vec_field = src_c.schema[id_col], src_c.schema[vec_col]
-    member_schema = StructType([
-        StructField("cell", LongType()), StructField("is_q", BooleanType()),
-        StructField("__id", id_field.dataType),
-        StructField("__vec", vec_field.dataType),
-        StructField("__nrm", DoubleType()),
-    ])
-    out_schema = StructType([
-        StructField("qid", id_field.dataType),
-        StructField("nid", id_field.dataType),
-        StructField("cosine", DoubleType()),
-    ])
-    if len(cent_ids) == 0 or CBS32.shape[1] == 0:
-        empty = src_c.sparkSession.createDataFrame([], out_schema)
-        return _ranked_topk(empty, k)
-    cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
-    CBS64 = CBS32.astype(np.float64)
-    n_codes = CBS32.shape[1]
-
-    def corpus_batches(bs):
-        for pdf in bs:
-            E = _stack(pdf[vec_col])
-            n = E.shape[0]
-            if n == 0:
-                continue
-            nrm = np.sqrt(_seq_dot(E, E))
-            sims = np.empty((n, len(cent_ids)), dtype=np.float64)
-            for j in range(len(cent_ids)):
-                sims[:, j] = _seq_dot(
-                    E, np.broadcast_to(C[j], E.shape)) / (nrm * cn[j])
-            home = cent_ids[np.argsort(-sims, axis=1, kind="stable")[:, 0]]
-            recon = np.empty((n, DIM), dtype=np.float32)
-            for s in range(PQ_M):
-                lo, hi = s * PQ_SUB, (s + 1) * PQ_SUB
-                sub = E[:, lo:hi]
-                d2 = np.empty((n, n_codes), dtype=np.float64)
-                for kk in range(n_codes):
-                    diff = sub - CBS64[s, kk]
-                    d2[:, kk] = np.cumsum(diff * diff, axis=1)[:, -1]
-                best = np.argmin(d2, axis=1)  # first min == lowest cid
-                recon[:, lo:hi] = CBS32[s][best]
-            R64 = recon.astype(np.float64)
-            rnrm = np.sqrt(np.cumsum(R64 * R64, axis=1)[:, -1])
-            keep = rnrm > 0
-            yield pd.DataFrame({
-                "cell": home[keep],
-                "is_q": np.zeros(int(keep.sum()), dtype=bool),
-                "__id": pdf[id_col].to_numpy()[keep],
-                "__vec": pd.Series(list(recon[keep])),
-                "__nrm": rnrm[keep],
-            })
-
-    nprobe_q = min(IVF_NPROBE, len(cent_ids))
-
-    def query_batches(bs):
-        for pdf in bs:
-            E = _stack(pdf[vec_col])
-            n = E.shape[0]
-            if n == 0:
-                continue
-            nrm = np.sqrt(_seq_dot(E, E))
-            sims = np.empty((n, len(cent_ids)), dtype=np.float64)
-            for j in range(len(cent_ids)):
-                sims[:, j] = _seq_dot(
-                    E, np.broadcast_to(C[j], E.shape)) / (nrm * cn[j])
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe_q]
-            yield pd.DataFrame({
-                "cell": cent_ids[order].ravel(),
-                "is_q": np.ones(n * nprobe_q, dtype=bool),
-                "__id": np.repeat(pdf[id_col].to_numpy(), nprobe_q),
-                "__vec": pd.Series(
-                    [v for v in pdf[vec_col] for _ in range(nprobe_q)]),
-                "__nrm": np.repeat(nrm, nprobe_q),
-            })
-
-    members = (
-        src_c.mapInPandas(corpus_batches, member_schema)
-        .unionByName(src_q.mapInPandas(query_batches, member_schema))
-    )
-
-    def cell_fn(pdf):
-        pdf = pdf.sort_values("__id").reset_index(drop=True)
-        qmask = pdf["is_q"].to_numpy()
-        nids = pdf["__id"].to_numpy()[~qmask]
-        qids = pdf["__id"].to_numpy()[qmask]
-        if len(nids) == 0 or len(qids) == 0:
-            return pd.DataFrame({"qid": qids[:0], "nid": qids[:0],
-                                 "cosine": np.empty(0, dtype=np.float64)})
-        E = _stack(pdf["__vec"])
-        nrm = pdf["__nrm"].to_numpy()
-        QE, qn = E[qmask], nrm[qmask]
-        NE, nn = E[~qmask], nrm[~qmask]
-        kk = min(k, len(nids))
-        q_out, n_out, c_out = [], [], []
-        for s, cos in _chunked_cosines(QE, NE, qn, nn):
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-            q_out.append(np.repeat(qids[s:s + cos.shape[0]], kk))
-            n_out.append(nids[order].ravel())
-            c_out.append(np.take_along_axis(cos, order, axis=1).ravel())
-        return pd.DataFrame({"qid": np.concatenate(q_out),
-                             "nid": np.concatenate(n_out),
-                             "cosine": np.concatenate(c_out)})
-
-    scored = members.groupBy("cell").applyInPandas(cell_fn, out_schema)
-    return _ranked_topk(scored, k)
+    PQ codebooks), the ``codebooks`` input of ``ivfpq_search``.  A
+    production job trains per corpus snapshot and persists the two
+    small matrices, so training cost is paid once per corpus, not per
+    search."""
+    return (kmeans_centroids(corpus, iters=iters, id_col=id_col,
+                             vec_col=vec_col),
+            pq_codebooks_trained(corpus, iters=iters, id_col=id_col,
+                                 vec_col=vec_col))

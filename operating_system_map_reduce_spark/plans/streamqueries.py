@@ -346,10 +346,10 @@ STREAM_NOVELTY_SQL = _novelty_cascade_sql()
 
 def stream_novelty_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operating_system_map_reduce_spark.streaming.novelty_stream import (
-        _default_log_root, compact_novelty_index, run_novelty_stream,
+        _scratch_root, compact_novelty_index, run_novelty_stream,
     )
 
-    idx = os.path.join(_default_log_root(), f"index-{uuid.uuid4().hex[:12]}")
+    idx = os.path.join(_scratch_root(), f"index-{uuid.uuid4().hex[:12]}")
     run_novelty_stream(spark, sf_dir, index_out_dir=idx)
     compact_novelty_index(spark, idx, files_per_kind=2)
     return (spark.read.parquet(idx)

@@ -38,7 +38,7 @@ _DEFAULTS = {
     # Timestamps in testdata are TIMESTAMP_NTZ-ish; keep parquet rebase off.
     "spark.sql.session.timeZone": "UTC",
     # Loose shuffle-partition floor; AQE coalesces down as needed.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # Shuffle-width HEADROOM, not width: AQE coalesces oversized
     # partition counts down to target size but can never split a
     # non-skew shuffle up, so the INITIAL count must exceed what the
@@ -47,8 +47,7 @@ _DEFAULTS = {
     # on the bare 32-partition floor swung 7-43 s (sort spill + GC
     # pressure at ~10x rows per partition) vs a stable ~9 s with 256
     # initial partitions -- and at 100 TB a fixed small count is fatal.
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
-        os.environ.get("SPARK_GRAFT_INIT_PARTS", "256"),
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
     # local[N] runs all N task slots inside the driver JVM, so the
     # driver heap IS the executor heap: Spark's 1g default leaves
     # ~30 MB of working memory per slot at N=32 and OOMed the sf1
@@ -57,7 +56,7 @@ _DEFAULTS = {
     # irrelevant (executors are sized by spark-submit).  Only effective
     # when this factory launches the JVM -- getOrCreate on a live
     # session cannot resize the heap.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.memory": "8g",
 }
 
 
@@ -67,7 +66,8 @@ def get_spark(app_name: str = "osmr-spark", master: str | None = None,
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     for the test harness; on a cluster, pass None with a configured
-    spark-submit and the submitted master wins.
+    spark-submit and the submitted master wins.  ``extra_conf`` entries
+    override ``_DEFAULTS`` (e.g. ``{"spark.driver.memory": "2g"}``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -78,23 +78,3 @@ def get_spark(app_name: str = "osmr-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load every testdata parquet table and register temp views.
-
-    Returns dict name -> DataFrame.  Filters/projections applied later are
-    pushed down into these scans by Catalyst (verify via .explain()).
-    """
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

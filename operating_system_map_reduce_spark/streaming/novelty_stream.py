@@ -71,21 +71,22 @@ _SEED_CACHE: dict = {}
 # (ascending mtimes; FileStreamSource picks oldest-first).
 _STAGE_CACHE: dict = {}
 
-# Default admission-log root: ONE process-lived directory, removed at
-# interpreter exit.  Each run still gets a unique log-<uuid> subdir
-# (earlier results stay readable for the life of the process), but
-# repeated invocations (bench steady state) no longer accumulate
-# never-cleaned mkdtemp roots in /tmp (round-8 ADVICE).  Callers who
-# need the log to OUTLIVE the process pass out_dir explicitly.
-_DEFAULT_LOG_ROOT: list = []
+# ONE process-lived scratch root, removed at interpreter exit: the
+# session-cached seed index and staged waves, each run's workdir and the
+# default admission logs all live under it, so repeated invocations
+# (bench steady state) never accumulate directories in /tmp.  Each run
+# still gets a unique log-<uuid> subdir (earlier results stay readable
+# for the life of the process); callers who need the log to OUTLIVE the
+# process pass out_dir explicitly.
+_SCRATCH_ROOT: list = []
 
 
-def _default_log_root() -> str:
-    if not _DEFAULT_LOG_ROOT:
-        root = tempfile.mkdtemp(prefix="novelty-admissions-")
+def _scratch_root() -> str:
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="novelty-")
         atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _DEFAULT_LOG_ROOT.append(root)
-    return _DEFAULT_LOG_ROOT[0]
+        _SCRATCH_ROOT.append(root)
+    return _SCRATCH_ROOT[0]
 
 
 def _as_index_rows(bands: DataFrame | None = None,
@@ -127,7 +128,7 @@ def _seed_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
     slot = _SEED_CACHE.get("seed")
     if slot is not None and slot[0] == key:
         return slot[1]
-    seed_root = tempfile.mkdtemp(prefix="novelty-seed-")
+    seed_root = tempfile.mkdtemp(prefix="seed-", dir=_scratch_root())
     index_dir = os.path.join(seed_root, "index")
     # Seed bands derive from the at-rest bucketed signature table
     # (round 13, the r12 queue's zero-seat item 4): b_sig is per-doc,
@@ -184,8 +185,7 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
     slot = _STAGE_CACHE.get("waves")
     if slot is not None and slot[0] == key:
         return slot[1], slot[2]
-    root = tempfile.mkdtemp(prefix="novelty-waves-")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix="waves-", dir=_scratch_root())
     src_dir = os.path.join(root, "src")
     os.makedirs(src_dir)
     stage = os.path.join(root, "stage")
@@ -287,14 +287,14 @@ def run_novelty_stream(spark: SparkSession, sf_dir: str,
     is_batch = F.col("doc_id") % 10 == 7
     corpus = docs.filter(~is_batch)
 
-    work = tempfile.mkdtemp(prefix="novelty-stream-")
+    work = tempfile.mkdtemp(prefix="stream-", dir=_scratch_root())
     # index_out_dir (caller-owned, must not yet exist) keeps the
     # post-cascade standing index alive after the run -- the handle
     # compact_novelty_index operates on; by default the index is
     # run-scratch and dies with the workdir
     index_dir = index_out_dir or os.path.join(work, "index")
     # the admission log is the RESULT: it must outlive the workdir
-    log_root = out_dir or _default_log_root()
+    log_root = out_dir or _scratch_root()
     log_dir = os.path.join(log_root, f"log-{uuid.uuid4().hex[:12]}")
     ckpt_dir = os.path.join(work, "checkpoint")
 

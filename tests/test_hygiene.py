@@ -7,6 +7,8 @@
   package, its scripts and its tests, including imports deferred into
   function bodies -- resolves, so deleting a function cannot leave a
   kept caller broken until it happens to run.
+* The package reads exactly the environment variables it documents;
+  every other setting goes through ``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -87,3 +89,23 @@ def test_package_imports_resolve():
             except ImportError:
                 broken.append(f"{where}: {module}.{name}")
     assert not broken, broken
+
+
+ENV_READS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_STREAM_PARTS"}
+
+
+def test_package_reads_only_the_documented_env_vars():
+    names = set()
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and ast.unparse(node.func) in ("os.environ.get", "os.getenv")):
+                key = node.args[0]
+            elif (isinstance(node, ast.Subscript)
+                  and ast.unparse(node.value) == "os.environ"):
+                key = node.slice
+            else:
+                continue
+            names.add(key.value if isinstance(key, ast.Constant)
+                      else f"{path.relative_to(REPO)}:{node.lineno}: {ast.unparse(key)}")
+    assert names == ENV_READS

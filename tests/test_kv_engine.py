@@ -165,6 +165,35 @@ class TestDurability:
         monkeypatch.undo()
         assert eng.kv_get("alice", "alice_is_awesome", "k")[2] == b"v2"
 
+    def test_sav_keeps_appends_made_during_the_snapshot(self, spark, tmp_path,
+                                                        monkeypatch):
+        """compact() truncates only the log files its snapshot read: a
+        batch appended while the snapshot is written, and the .tmp file
+        of an append still in flight, survive it."""
+        import os
+
+        from pyspark.sql import DataFrameWriter
+
+        from operating_system_map_reduce_spark.engine import KV_SCHEMA
+        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+
+        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
+        log.append([{"seq": 1, "op": "insert", "key": "a", "value": b"1"}])
+        in_flight = os.path.join(log.log_dir, "batch-in-flight.parquet.tmp")
+        orig = DataFrameWriter.parquet
+
+        def write_then_append(self, path, *a, **k):
+            orig(self, path, *a, **k)
+            log.append([{"seq": 2, "op": "insert", "key": "b", "value": b"2"}])
+            open(in_flight, "wb").close()
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", write_then_append)
+        log.compact()
+        monkeypatch.undo()
+        assert sorted((r["key"], bytes(r["value"])) for r in
+                      log.replay().collect()) == [("a", b"1"), ("b", b"2")]
+        assert os.path.exists(in_flight)
+
 
 class TestAesAtRest:
     """At-rest crypto parity (p1/common/crypto.h:26-49): the engine-tier

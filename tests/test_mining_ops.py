@@ -459,7 +459,8 @@ class TestTrainedIvf:
                     / len(qids))
 
         plain = top1_recall(sim.ivf_search(corpus, queries, k=5))
-        trained = top1_recall(sim.ivf_search_trained(corpus, queries, k=5))
+        trained = top1_recall(sim.ivf_search(
+            corpus, queries, k=5, codebook=sim.kmeans_centroids(corpus)))
         assert trained >= plain, (trained, plain)
         assert trained >= 0.45, trained
 
@@ -478,7 +479,7 @@ class TestTrainedPq:
         emb = load_table(spark, sf_dir, "embeddings")
         mse_plain = (sim.pq_codes(emb)
                      .agg(F.avg("sq_err").alias("m")).collect()[0]["m"])
-        mse_trained = (sim.pq_codes_trained(emb)
+        mse_trained = (sim.pq_codes(emb, codebook=sim.pq_codebooks_trained(emb))
                        .agg(F.avg("sq_err").alias("m")).collect()[0]["m"])
         assert mse_trained < mse_plain, (mse_trained, mse_plain)
         # Lloyd on a 16-entry random-init codebook should cut MSE
@@ -598,9 +599,40 @@ class TestTrainedIvfPq:
                     / len(qids))
 
         plain = top1_recall(sim.ivfpq_search(corpus, queries, k=5))
-        trained = top1_recall(sim.ivfpq_search_trained(corpus, queries, k=5))
+        trained = top1_recall(sim.ivfpq_search(
+            corpus, queries, k=5, codebooks=sim.trained_codebooks(corpus)))
         assert trained >= plain, (trained, plain)
         assert trained >= 0.3, trained
+
+    def test_codebook_cache_retrains_after_source_changes(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        """similarity_ivfpq_trained trains once per corpus snapshot: a
+        newer embeddings.parquet mtime (an in-place regeneration) must
+        retrain instead of serving the old codebooks."""
+        import os
+        import shutil
+
+        from operating_system_map_reduce_spark.operators import similarity as sim
+        from operating_system_map_reduce_spark.plans import pipeline
+
+        path = str(tmp_path / "embeddings.parquet")
+        shutil.copyfile(os.path.join(sf_dir, "embeddings.parquet"), path)
+        calls = []
+        train = sim.trained_codebooks
+
+        def counting(*a, **k):
+            calls.append(1)
+            return train(*a, **k)
+
+        monkeypatch.setattr(sim, "trained_codebooks", counting)
+        monkeypatch.setattr(pipeline, "_TRAINED_CB_CACHE", {})
+        pipeline.similarity_ivfpq_trained(spark, str(tmp_path))
+        pipeline.similarity_ivfpq_trained(spark, str(tmp_path))
+        assert len(calls) == 1  # same snapshot: served from the cache
+        st = os.stat(path)
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        pipeline.similarity_ivfpq_trained(spark, str(tmp_path))
+        assert len(calls) == 2
 
 
 class TestRound6QueryDifferentials:

@@ -464,6 +464,43 @@ class TestNoveltyStream:
         assert new == old
         assert len(new) > 0
 
+    def test_run_leaves_no_directory_outside_an_exit_removed_root(
+            self, spark, sf_dir, monkeypatch):
+        """Every directory a run creates is either removed by the run or
+        sits under a root registered for removal at interpreter exit --
+        the session-cached seed index and staged waves included."""
+        import atexit
+        import os
+        import shutil
+        import tempfile
+
+        from operating_system_map_reduce_spark.streaming import (
+            novelty_stream as ns)
+
+        made, roots = [], []
+        mkdtemp, register = tempfile.mkdtemp, atexit.register
+
+        def recording_mkdtemp(*a, **k):
+            made.append(mkdtemp(*a, **k))
+            return made[-1]
+
+        def recording_register(fn, *a, **k):
+            if fn is shutil.rmtree:
+                roots.append(a[0])
+            return register(fn, *a, **k)
+
+        monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+        monkeypatch.setattr(atexit, "register", recording_register)
+        # cold caches and no root yet: the run creates every directory
+        monkeypatch.setattr(ns, "_SEED_CACHE", {})
+        monkeypatch.setattr(ns, "_STAGE_CACHE", {})
+        monkeypatch.setattr(ns, "_SCRATCH_ROOT", [], raising=False)
+        assert ns.run_novelty_stream(spark, sf_dir).count() > 0
+        assert made
+        leaked = [d for d in made if os.path.exists(d) and not any(
+            os.path.commonpath([d, r]) == r for r in roots)]
+        assert not leaked, (leaked, roots)
+
     def test_cascade_rejects_dup_of_earlier_admission(self, spark,
                                                       novelty_dir):
         tmp_path = novelty_dir
