@@ -9,6 +9,13 @@ State:
  - auth + kv tables: Spark-queried changelog-parquet tables
    (sources/changelog.py) -- replay view is the current state, SAV
    compacts, restart replays; durability parity with p3.
+ - credentials: the login check reads a driver-side map
+   username -> (salt, pass_hash), the reference's in-memory auth map
+   (p3/server/my_storage.cc:232-250).  It is rebuilt from the auth
+   replay only when the auth log's on-disk layout changes, so a warm
+   command runs no Spark job for its login; profiles stay Spark reads.
+ - SAV runs alone: every command holds a shared gate, SAV holds it
+   exclusive, so no reader opens a log file that compaction removes.
  - quotas + MRU: bounded in-memory per-user metadata, exactly like the
    reference's deques (they are not persisted there either).
  - map/reduce: FuncTable registry + Spark-executed map with global or
@@ -25,6 +32,8 @@ the op then fails.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import hashlib
 import os
 import secrets
@@ -60,6 +69,51 @@ KV_SCHEMA = StructType([
 ])
 
 
+class SavGate:
+    """Commands share the engine; SAV takes it alone, ahead of commands
+    that arrive while it waits.  Not reentrant: a command must not call
+    another command."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self._active = 0
+        self._saving = False
+
+    @contextlib.contextmanager
+    def shared(self):
+        with self._cond:
+            self._cond.wait_for(lambda: not self._saving)
+            self._active += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._active -= 1
+                self._cond.notify_all()
+
+    @contextlib.contextmanager
+    def exclusive(self):
+        with self._cond:
+            self._cond.wait_for(lambda: not self._saving)
+            self._saving = True
+            self._cond.wait_for(lambda: self._active == 0)
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._saving = False
+                self._cond.notify_all()
+
+
+def _command(method):
+    """One client command: holds the SAV gate shared for its whole run."""
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        with self._gate.shared():
+            return method(self, *args, **kwargs)
+    return run
+
+
 class KVEngine:
     def __init__(self, spark: SparkSession, data_dir: str, admin: str = "",
                  up_quota: int = 1048576, down_quota: int = 1048576,
@@ -81,6 +135,11 @@ class KVEngine:
         # is what makes its check-then-insert/upsert/remove atomic under
         # 1,024 concurrent clients (p2/scripts/grading_p2_races.py).
         self._stripes = [threading.Lock() for _ in range(64)]
+        self._gate = SavGate()
+        # (auth layout key, {username: (salt, pass_hash)}); replaced
+        # whole under _cred_lock, never mutated, so readers take no lock
+        self._cred_lock = threading.Lock()
+        self._creds: tuple = (None, {})
         self.quota_table: dict[str, Quotas] = {}
         self.mru = MRUManager(top_size)
         self.funcs = FuncTable()
@@ -108,18 +167,33 @@ class KVEngine:
     def kv_df(self) -> DataFrame:
         return self.kv_log.replay_cached()
 
+    def _credentials(self) -> dict[str, tuple[bytes, bytes]]:
+        """username -> (salt, pass_hash) as of the auth log's current
+        on-disk layout.  Rebuilt by one collect when the layout changed
+        since the last build (an append by any engine on this directory,
+        or SAV); otherwise two listdirs and no Spark job.  The key is taken before the read, so a
+        map never claims a layout older than its rows."""
+        key, creds = self.auth_log.layout_key(), self._creds
+        if creds[0] == key:
+            return creds[1]
+        with self._cred_lock:
+            key = self.auth_log.layout_key()
+            if self._creds[0] != key:
+                rows = self.auth_df().select("username", "salt", "pass_hash").collect()
+                self._creds = (key, {r["username"]: (bytes(r["salt"]), bytes(r["pass_hash"]))
+                                     for r in rows})
+            return self._creds[1]
+
     def _auth(self, user: str, password: str):
-        """Salted-hash check (p3/server/my_storage.cc:232-250)."""
-        row = (
-            self.auth_df().filter(F.col("username") == user)
-            .select("salt", "pass_hash", "content").collect()
-        )
-        if not row:
+        """Salted-hash check (p3/server/my_storage.cc:232-250); returns
+        the user's (salt, pass_hash), or None when the login fails."""
+        cred = self._credentials().get(user)
+        if cred is None:
             return None
-        salt, pass_hash = bytes(row[0]["salt"]), bytes(row[0]["pass_hash"])
+        salt, pass_hash = cred
         if hashlib.sha256(password.encode() + salt).digest() != pass_hash:
             return None
-        return row[0]
+        return cred
 
     def _quotas(self, user: str) -> Quotas:
         q = self.quota_table.get(user)
@@ -147,13 +221,15 @@ class KVEngine:
 
     # ---------------------------------------------------------- auth table
 
+    @_command
     def add_user(self, user: str, password: str):
         """REG (protocol.h:95-109): insert-if-absent with fresh salt."""
         if not user or len(user) > codes.LEN_UNAME or len(password) > codes.LEN_PASSWORD:
             return False, codes.RES_ERR_REQ_FMT, None
         with self._key_lock(user):
-            exists = self.auth_df().filter(F.col("username") == user).count() > 0
-            if exists:
+            # a REG that held this stripe before us appended, which
+            # changed the layout, so the map is rebuilt and holds it
+            if user in self._credentials():
                 return False, codes.RES_ERR_USER_EXISTS, None
             salt = secrets.token_bytes(16)
             self.auth_log.append([{
@@ -164,20 +240,23 @@ class KVEngine:
             }])
         return True, codes.RES_OK, None
 
+    @_command
     def set_user_data(self, user: str, password: str, content: bytes):
         """SET (protocol.h:152-168): replace caller's profile bytes."""
         if len(content) > codes.LEN_PROFILE_FILE:
             return False, codes.RES_ERR_REQ_FMT, None
-        row = self._auth(user, password)
-        if row is None:
+        cred = self._auth(user, password)
+        if cred is None:
             return False, codes.RES_ERR_LOGIN, None
+        salt, pass_hash = cred
         self.auth_log.append([{
             "seq": self._next_seq(), "op": "update", "username": user,
-            "salt": bytes(row["salt"]), "pass_hash": bytes(row["pass_hash"]),
+            "salt": salt, "pass_hash": pass_hash,
             "content": bytes(content),
         }])
         return True, codes.RES_OK, None
 
+    @_command
     def get_user_data(self, user: str, password: str, who: str):
         """GET (protocol.h:170-188): fetch another user's profile."""
         if self._auth(user, password) is None:
@@ -190,6 +269,7 @@ class KVEngine:
             return False, codes.RES_ERR_NO_DATA, None
         return True, codes.RES_OK, content
 
+    @_command
     def get_all_users(self, user: str, password: str):
         """ALL (protocol.h:190-206): newline-joined usernames."""
         if self._auth(user, password) is None:
@@ -199,6 +279,7 @@ class KVEngine:
 
     # ------------------------------------------------------------ kv store
 
+    @_command
     def kv_insert(self, user: str, password: str, key: str, value: bytes):
         """KVI (protocol.h:263-285): insert-if-absent; request then upload
         quota (p4/server/my_storage.cc:180-233); MRU update + log append."""
@@ -220,6 +301,7 @@ class KVEngine:
         self.mru.insert(key)
         return True, codes.RES_OK, None
 
+    @_command
     def kv_get(self, user: str, password: str, key: str):
         """KVG (protocol.h:287-306): point read; download quota is sized by
         the value and charged after the read -- a blocked download is NOT
@@ -242,6 +324,7 @@ class KVEngine:
         self.mru.insert(key)
         return True, codes.RES_OK, value
 
+    @_command
     def kv_delete(self, user: str, password: str, key: str):
         """KVD (protocol.h:308-325): tombstone append; request quota only."""
         if self._auth(user, password) is None:
@@ -257,6 +340,7 @@ class KVEngine:
         self.mru.remove(key)
         return True, codes.RES_OK, None
 
+    @_command
     def kv_upsert(self, user: str, password: str, key: str, value: bytes):
         """KVU (protocol.h:327-347): distinct OK_INSERT / OK_UPDATE codes
         via existence probe (the MERGE-metrics pattern, SURVEY 2.1 #11)."""
@@ -277,6 +361,7 @@ class KVEngine:
         self.mru.insert(key)
         return True, codes.RES_OKUPD if exists else codes.RES_OKINS, None
 
+    @_command
     def kv_all(self, user: str, password: str):
         """KVA (protocol.h:349-367): all keys, newline-joined; download
         quota sized by the result.  ERR_NO_DATA is returned BEFORE any
@@ -295,6 +380,7 @@ class KVEngine:
             return False, codes.RES_ERR_QUOTA_DOWN, None
         return True, codes.RES_OK, payload
 
+    @_command
     def kv_top(self, user: str, password: str):
         """KVT (protocol.h:393-411): MRU keys, most-recent-first (order is
         asserted by p4/scripts/p4.py:127-128).  Quota charges (download
@@ -315,6 +401,7 @@ class KVEngine:
 
     # -----------------------------------------------------------mapreduce
 
+    @_command
     def register_mr(self, user: str, password: str, mrname: str, source: bytes,
                     associative: bool = False):
         """KVF (protocol.h:471-494): admin-only registration of a named
@@ -326,6 +413,7 @@ class KVEngine:
         code = self.funcs.register_source(mrname, source, associative)
         return (code == codes.RES_OK), code, None
 
+    @_command
     def invoke_mr(self, user: str, password: str, mrname: str,
                   confined: bool = True):
         """KMR (protocol.h:447-469): run the named map over every kv pair
@@ -354,12 +442,14 @@ class KVEngine:
     def save_file(self, user: str, password: str):
         """SAV (protocol.h:131-150): compact both changelogs -- the
         write-tmp-then-rename snapshot (p3/server/my_storage.cc:505-565)."""
-        if self._auth(user, password) is None:
-            return False, codes.RES_ERR_LOGIN, None
-        self.auth_log.compact()
-        self.kv_log.compact()
-        return True, codes.RES_OK, None
+        with self._gate.exclusive():
+            if self._auth(user, password) is None:
+                return False, codes.RES_ERR_LOGIN, None
+            self.auth_log.compact()
+            self.kv_log.compact()
+            return True, codes.RES_OK, None
 
+    @_command
     def import_reference_file(self, user: str, password: str, path: str):
         """Reverse migration: replay a reference-format persistence file
         (p3/server/format.h grammar, ALL five tags) into the engine's
@@ -375,7 +465,7 @@ class KVEngine:
         tracked driver-side across the scan (keys and credential bytes
         only, never values -- the format is one sequential file by
         design, so the scan itself is inherently driver-side), seeded
-        from the live replay because import appends into an existing
+        from the live state because import appends into an existing
         log rather than the reference's clear-then-load.  Entries that
         survive dispatch become ordered changelog appends, so
         latest-seq-wins replay reproduces the sequential apply.  A
@@ -389,10 +479,7 @@ class KVEngine:
             return False, codes.RES_ERR_LOGIN, None
         if not os.path.exists(path):
             return True, codes.RES_OK, 0
-        auth_state: dict[str, tuple[bytes, bytes]] = {
-            r["username"]: (bytes(r["salt"]), bytes(r["pass_hash"]))
-            for r in (self.auth_log.replay_cached()
-                      .select("username", "salt", "pass_hash").collect())}
+        auth_state = dict(self._credentials())
         kv_present: set[str] = {
             r["key"]
             for r in self.kv_log.replay_cached().select("key").collect()}
@@ -446,6 +533,7 @@ class KVEngine:
             self.kv_log.append(kv_rows)
         return True, codes.RES_OK, n
 
+    @_command
     def export_reference_file(self, user: str, password: str, path: str):
         """SAV-to-reference-format export: serialize the live state as
         AUTHAUTH + KVKVKVKV entries (p3/server/format.h grammar, byte-

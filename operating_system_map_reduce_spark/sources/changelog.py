@@ -154,7 +154,7 @@ class ChangeLog:
     def _read_files(self, files: list[str]) -> DataFrame:
         return self.spark.read.schema(self.schema).parquet(*files)
 
-    def _layout_key(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    def layout_key(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
         """Cheap (listdir-only, no Spark job) fingerprint of the
         on-disk layout: (base files, log files)."""
         base = tuple(sorted(os.listdir(self.base_dir)))
@@ -165,13 +165,15 @@ class ChangeLog:
     def replay_cached(self) -> DataFrame:
         """replay() with an incremental state cache.
 
-        Point ops (GET/ALL/auth checks) previously re-ran the full
-        windowed replay over base + every log file per call.  Here the
-        replayed state is cached (localCheckpoint) keyed by the on-disk
-        layout; pure appends extend it incrementally — the new state is
-        dedup(cached state ∪ tail files only), so a point op after N
-        writes scans the in-memory state plus the few new batch files
-        instead of the whole log.  Every 8 increments (or on any
+        Point ops (KVG/GET/ALL, and the rebuild of KVEngine's
+        layout-keyed credential map, from which every login check is
+        served) previously re-ran the full windowed replay over base +
+        every log file per call.  Here the replayed state is cached
+        (localCheckpoint) keyed by the on-disk layout; pure appends
+        extend it incrementally — the new state is dedup(cached state ∪
+        tail files only), so a point op after N writes scans the
+        in-memory state plus the few new batch files instead of the
+        whole log.  Every 8 increments (or on any
         non-append layout change, e.g. compaction) the state is rebuilt
         from files, bounding both lineage depth and cached-copy count.
 
@@ -181,7 +183,7 @@ class ChangeLog:
         a tail tombstone outranks any cached row; cached rows carry
         their seq so latest-wins merges stay correct."""
         with self._cache_lock:
-            key = self._layout_key()
+            key = self.layout_key()
             if self._state_cache is not None and self._state_cache[0] == key:
                 return self._state_cache[1]
             incremental = (
@@ -201,7 +203,14 @@ class ChangeLog:
             else:
                 state = self.replay()
                 self._cache_depth = 0
-            state = state.localCheckpoint(eager=False)
+            # eager: the state is fully checkpointed before any other
+            # thread can query it.  A lazy one is checkpointed when its
+            # first job ends; if another thread's job (e.g. the next
+            # incremental rebuild's shuffle) is being planned over the
+            # same RDD at that moment, Spark's checkpoint lock and the
+            # RDD's lock are taken in opposite orders and the driver
+            # deadlocks (seen under concurrent KVI)
+            state = state.localCheckpoint(eager=True)
             self._state_cache = (key, state)
             return state
 
@@ -220,9 +229,9 @@ class ChangeLog:
 
         Truncation removes exactly the log files the snapshot read: a
         batch appended while the snapshot is written (or still in
-        flight as a .tmp file) stays in the log.  Not covered: a reader
-        that listed the log before the swap may still open a file
-        removed here; that needs exclusion above this class."""
+        flight as a .tmp file) stays in the log.  A reader that listed
+        the log before the swap could still open a file removed here;
+        KVEngine excludes that by running SAV alone (its SavGate)."""
         tmp = os.path.join(self.root, f"base.tmp-{uuid.uuid4().hex[:8]}")
         log_files = self._list(self.log_dir)
         # Distributed snapshot write: executors stream the replay view

@@ -28,10 +28,12 @@ verdicts are hash-checked end-to-end through the driver gate.
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -159,6 +161,23 @@ def _wave_col():
     return F.expr(f"(doc_id div 10) % {NOVELTY_WAVES}")
 
 
+def _batch_files(ckpt_dir: str, batch_id: int) -> list[str]:
+    """The files a file-source micro-batch reads, from the source log
+    the stream commits to its checkpoint before the batch runs (a
+    driver-side read; ``DataFrame.inputFiles()`` lists nothing for a
+    foreachBatch frame).  The log is one JSON entry per file after a
+    version line; every 10th batch file is a ``.compact`` that holds
+    all earlier entries too, so entries are picked by ``batchId``."""
+    d = os.path.join(ckpt_dir, "sources", "0")
+    name = str(batch_id)
+    if not os.path.exists(os.path.join(d, name)):
+        name += ".compact"
+    with open(os.path.join(d, name)) as f:
+        entries = [json.loads(line) for line in f.read().splitlines()[1:]]
+    return [unquote(urlparse(e["path"]).path) for e in entries
+            if e["batchId"] == batch_id]
+
+
 def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
                   is_batch) -> tuple:
     """Stage the arriving stream's wave files (one parquet per
@@ -205,8 +224,8 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
         os.utime(dst, (1_000_000 + w, 1_000_000 + w))
         wave_order.append(w)
     shutil.rmtree(stage)
-    if slot is not None:
-        shutil.rmtree(os.path.dirname(slot[1]), ignore_errors=True)
+    # a replaced staging root is not deleted here: a stream may still
+    # be replaying it; it goes with _scratch_root() at exit
     _STAGE_CACHE["waves"] = (key, src_dir, tuple(wave_order))
     return src_dir, tuple(wave_order)
 
@@ -334,9 +353,14 @@ def run_novelty_stream(spark: SparkSession, sf_dir: str,
         def probe_wave(batch: DataFrame, batch_id: int) -> None:
             s = batch.sparkSession
             # batch k holds exactly wave_order[k]: one file per
-            # trigger, replayed oldest-mtime-first == ascending wave
-            assert batch_id < len(wave_order), (batch_id, wave_order)
-            wave_val = wave_order[batch_id]
+            # trigger, replayed oldest-mtime-first == ascending wave.
+            # Checked, because probing a batch against another wave's
+            # bands would admit duplicates silently
+            wave_val = wave_order[batch_id] if batch_id < len(wave_order) else None
+            files = _batch_files(ckpt_dir, batch_id)
+            if files != [os.path.join(src_dir, f"wave-{wave_val}.parquet")]:
+                raise RuntimeError(f"micro-batch {batch_id} read {files}, "
+                                   f"expected wave {wave_val} of {wave_order}")
             bands = (all_bands.filter(F.col("wave") == wave_val)
                      .select("doc_id", "band_idx", "band_hash"))
             hashes = batch.select(

@@ -268,6 +268,17 @@ class TestReplayCache:
         eng.kv_insert("alice", "alice_is_awesome", "k", b"v2")
         assert eng.kv_get("alice", "alice_is_awesome", "k")[2] == b"v2"
 
+    def test_state_is_checkpointed_before_it_is_returned(self, spark, tmp_path):
+        """No thread can query a replay state whose checkpoint is still
+        pending: a lazy checkpoint that completes while another job is
+        planned over the same RDD deadlocks the driver."""
+        eng = self._eng(spark, tmp_path)
+        seed(eng)
+        for key in ["k1", "k2"]:  # a full rebuild, then an incremental one
+            eng.kv_insert("alice", "alice_is_awesome", key, b"v")
+            state = eng.kv_log.replay_cached()
+            assert state._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+
     def test_compaction_invalidates_and_rebuilds(self, spark, tmp_path):
         eng = self._eng(spark, tmp_path)
         seed(eng)
@@ -278,3 +289,180 @@ class TestReplayCache:
         assert eng.kv_get("alice", "alice_is_awesome", "k")[2] == b"v2"
         eng.kv_insert("alice", "alice_is_awesome", "k9", b"x")
         assert eng.kv_get("alice", "alice_is_awesome", "k9")[2] == b"x"
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs on this thread.  They are tagged with a
+    job group and counted once the status store has seen a later
+    sentinel job: the listener bus delivers events in order."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(group + "-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+class TestCredentialMap:
+    """Logins are served from a driver-side username -> (salt, pass_hash)
+    map, rebuilt only when the auth log's on-disk layout changes."""
+
+    def test_warm_kv_get_runs_one_job_and_warm_auth_none(self, spark, engine):
+        seed(engine)
+        engine.kv_insert("alice", "alice_is_awesome", "k", b"v")
+        for _ in range(2):  # warm the replay cache and the map
+            assert engine.kv_get("alice", "alice_is_awesome", "k")[2] == b"v"
+        assert spark_jobs(spark, lambda: engine.kv_get(
+            "alice", "alice_is_awesome", "k")) == 1
+        assert spark_jobs(spark, lambda: engine._auth(
+            "alice", "alice_is_awesome")) == 0
+
+    def test_user_registered_by_another_engine_logs_in(self, spark, tmp_path):
+        d = str(tmp_path / "data")
+        first = KVEngine(spark, d, req_quota=4096)
+        second = KVEngine(spark, d, req_quota=4096)
+        assert first.add_user("alice", "alice_is_awesome")[1] == codes.RES_OK
+        assert first.kv_top("alice", "alice_is_awesome")[1] == codes.RES_ERR_NO_DATA
+        assert first.kv_top("bob", "bob_is_the_best")[1] == codes.RES_ERR_LOGIN
+        assert second.add_user("bob", "bob_is_the_best")[1] == codes.RES_OK
+        assert first.kv_top("bob", "bob_is_the_best")[1] == codes.RES_ERR_NO_DATA
+        assert first.add_user("bob", "other")[1] == codes.RES_ERR_USER_EXISTS
+
+    def test_set_keeps_login_working(self, spark, engine):
+        seed(engine)
+        for i in range(2):
+            assert engine.set_user_data("bob", "bob_is_the_best",
+                                        f"p{i}".encode())[1] == codes.RES_OK
+            assert engine.get_user_data("bob", "bob_is_the_best",
+                                        "bob")[2] == f"p{i}".encode()
+        assert engine.set_user_data("bob", "wrong", b"x")[1] == codes.RES_ERR_LOGIN
+        assert engine.get_user_data("bob", "wrong", "bob")[1] == codes.RES_ERR_LOGIN
+
+    def test_sav_rebuilds_the_map_and_every_login_holds(self, spark, engine):
+        users = {f"u{i}": f"pw{i}" for i in range(4)}
+        for u, pw in users.items():
+            assert engine.add_user(u, pw)[1] == codes.RES_OK
+        assert engine.set_user_data("u1", "pw1", b"profile")[1] == codes.RES_OK
+        assert engine.save_file("u0", "pw0")[1] == codes.RES_OK
+        # the first login after SAV rebuilds the map; the next is free
+        assert spark_jobs(spark, lambda: engine._auth("u2", "pw2")) > 0
+        assert spark_jobs(spark, lambda: engine._auth("u3", "pw3")) == 0
+        for u, pw in users.items():
+            assert engine.kv_top(u, pw)[1] == codes.RES_ERR_NO_DATA
+            assert engine.kv_top(u, pw + "x")[1] == codes.RES_ERR_LOGIN
+        assert engine.get_user_data("u0", "pw0", "u1")[2] == b"profile"
+
+    def test_imported_ghost_with_empty_credentials_cannot_log_in(self, spark, engine,
+                                                                 tmp_path):
+        from operating_system_map_reduce_spark.sources import binlog as B
+
+        seed(engine)
+        path = str(tmp_path / "ghost.dir")
+        B.write_entries(path, [(B.AUTHDIFF, b"ghost", b"spooky profile")])
+        assert engine.import_reference_file("alice", "alice_is_awesome",
+                                            path)[1] == codes.RES_OK
+        for pw in ["", "x"]:
+            assert engine.kv_top("ghost", pw)[1] == codes.RES_ERR_LOGIN
+        assert engine.get_user_data("alice", "alice_is_awesome",
+                                    "ghost")[2] == b"spooky profile"
+
+    def test_racing_reg_on_one_name_admits_exactly_one(self, engine):
+        import sys
+        import threading
+
+        n = 8
+        barrier = threading.Barrier(n)
+        replies: dict[int, str] = {}
+
+        def reg(i: int) -> None:
+            barrier.wait()
+            replies[i] = engine.add_user("carol", f"pw{i}")[1]
+
+        threads = [threading.Thread(target=reg, args=(i,)) for i in range(n)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        winners = [i for i, code in replies.items() if code == codes.RES_OK]
+        assert len(winners) == 1, replies
+        assert sorted(replies.values()) == sorted(
+            [codes.RES_OK] + [codes.RES_ERR_USER_EXISTS] * (n - 1))
+        for i in range(n):
+            want = codes.RES_ERR_NO_DATA if i == winners[0] else codes.RES_ERR_LOGIN
+            assert engine.kv_top("carol", f"pw{i}")[1] == want
+
+
+class TestSavGate:
+    def test_sav_waits_for_a_reader_inside_its_spark_action(self, spark, engine,
+                                                            monkeypatch):
+        """A reader that has listed the log runs to the end before SAV
+        compacts, so SAV cannot remove a file the reader then opens."""
+        import threading
+
+        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+
+        seed(engine)
+        engine.kv_insert("alice", "alice_is_awesome", "k", b"v")
+        assert engine.kv_get("alice", "alice_is_awesome", "k")[2] == b"v"
+        # a new log batch: the next read lists it and reads it lazily
+        engine.kv_upsert("alice", "alice_is_awesome", "k", b"w")
+
+        paused, release, compacting = (threading.Event(), threading.Event(),
+                                       threading.Event())
+        read_files, compact = ChangeLog._read_files, ChangeLog.compact
+
+        def pausing_read(self, files):
+            df = read_files(self, files)
+            if threading.current_thread().name == "reader":
+                paused.set()
+                assert release.wait(120)
+            return df
+
+        def noting_compact(self):
+            compacting.set()
+            return compact(self)
+
+        monkeypatch.setattr(ChangeLog, "_read_files", pausing_read)
+        monkeypatch.setattr(ChangeLog, "compact", noting_compact)
+        replies: dict[str, object] = {}
+
+        def run(name, fn):
+            try:
+                replies[name] = fn()
+            except Exception as e:  # reported by the asserts below
+                replies[name] = e
+
+        reader = threading.Thread(name="reader", target=run, args=(
+            "kvg", lambda: engine.kv_get("alice", "alice_is_awesome", "k")))
+        sav = threading.Thread(target=run, args=(
+            "sav", lambda: engine.save_file("alice", "alice_is_awesome")))
+        reader.start()
+        assert paused.wait(120)
+        sav.start()
+        sav_ran_early = compacting.wait(3.0)
+        release.set()
+        reader.join(120)
+        sav.join(120)
+        assert not reader.is_alive() and not sav.is_alive()
+        assert not sav_ran_early, "SAV compacted while a reader was inside its read"
+        assert replies["kvg"] == (True, codes.RES_OK, b"w")
+        assert replies["sav"] == (True, codes.RES_OK, None)
+        assert engine.kv_get("alice", "alice_is_awesome", "k")[2] == b"w"

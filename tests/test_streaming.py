@@ -501,6 +501,53 @@ class TestNoveltyStream:
             os.path.commonpath([d, r]) == r for r in roots)]
         assert not leaked, (leaked, roots)
 
+    def test_restaging_keeps_the_previous_wave_files(self, spark, sf_dir,
+                                                     tmp_path, monkeypatch):
+        """A new staging key (here: documents.parquet rewritten) stages
+        afresh but leaves the previous files in place: a stream may still
+        be replaying them.  They go with the exit-removed root."""
+        import os
+        import shutil
+
+        from operating_system_map_reduce_spark.sources.tables import load_table
+        from operating_system_map_reduce_spark.streaming import (
+            novelty_stream as ns)
+
+        copy = str(tmp_path / "sf")
+        shutil.copytree(sf_dir, copy)
+        monkeypatch.setattr(ns, "_STAGE_CACHE", {})
+
+        def stage():
+            docs = load_table(spark, copy, "documents").select("doc_id", "text")
+            return ns._staged_waves(spark, copy, docs, F.col("doc_id") % 10 == 7)
+
+        first, waves = stage()
+        docs_path = os.path.join(copy, "documents.parquet")
+        st = os.stat(docs_path)
+        os.utime(docs_path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        second, _ = stage()
+        assert second != first
+        assert sorted(os.listdir(first)) == [f"wave-{w}.parquet" for w in waves]
+
+    def test_micro_batch_reading_two_wave_files_raises(self, spark, sf_dir,
+                                                       monkeypatch):
+        """Each micro-batch must read exactly its own wave file; one
+        that picks up two would be probed against one wave's bands and
+        admit the other wave's documents unchecked."""
+        from pyspark.sql.streaming import DataStreamReader
+
+        from operating_system_map_reduce_spark.streaming import (
+            novelty_stream as ns)
+
+        option = DataStreamReader.option
+
+        def two_files_per_trigger(self, key, value):
+            return option(self, key, 2 if key == "maxFilesPerTrigger" else value)
+
+        monkeypatch.setattr(DataStreamReader, "option", two_files_per_trigger)
+        with pytest.raises(Exception, match="micro-batch 0 read"):
+            ns.run_novelty_stream(spark, sf_dir)
+
     def test_cascade_rejects_dup_of_earlier_admission(self, spark,
                                                       novelty_dir):
         tmp_path = novelty_dir
