@@ -6,14 +6,20 @@ every method returns ``(ok: bool, code: str, payload)`` with the exact
 protocol.h response-code strings (codes.py).
 
 State:
- - auth + kv tables: Spark-queried changelog-parquet tables
-   (sources/changelog.py) -- replay view is the current state, SAV
-   compacts, restart replays; durability parity with p3.
+ - auth + kv tables: changelog-parquet tables (sources/changelog.py) --
+   replay view is the current state, SAV compacts, restart replays;
+   durability parity with p3.  Point reads (KVG, GET, the KVI/KVU/KVD
+   existence probes) come from each log's driver-side snapshot: the
+   tail overlay, then a per-state memo, then one Spark point read, so
+   a read of a key written or read before runs no Spark job.  Scans
+   (KVA, ALL, KMR, export) read the snapshot's state and tail files.
  - credentials: the login check reads a driver-side map
    username -> (salt, pass_hash), the reference's in-memory auth map
-   (p3/server/my_storage.cc:232-250).  It is rebuilt from the auth
-   replay only when the auth log's on-disk layout changes, so a warm
-   command runs no Spark job for its login; profiles stay Spark reads.
+   (p3/server/my_storage.cc:232-250): the auth state's credentials,
+   collected once per state, under the auth overlay.  A login after a
+   REG or SET runs no Spark job.
+ - seq: minted above every seq either log's snapshot has seen, so a
+   write after another engine's writes on the same directory wins.
  - SAV runs alone: every command holds a shared gate, SAV holds it
    exclusive, so no reader opens a log file that compaction removes.
  - quotas + MRU: bounded in-memory per-user metadata, exactly like the
@@ -41,7 +47,6 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType)
 
@@ -136,9 +141,11 @@ class KVEngine:
         # 1,024 concurrent clients (p2/scripts/grading_p2_races.py).
         self._stripes = [threading.Lock() for _ in range(64)]
         self._gate = SavGate()
-        # (auth layout key, {username: (salt, pass_hash)}); replaced
-        # whole under _cred_lock, never mutated, so readers take no lock
+        # (auth state, its credentials) and (auth snapshot, credentials
+        # under its overlay); replaced whole under _cred_lock, never
+        # mutated, so readers take no lock
         self._cred_lock = threading.Lock()
+        self._state_creds: tuple = (None, {})
         self._creds: tuple = (None, {})
         self.quota_table: dict[str, Quotas] = {}
         self.mru = MRUManager(top_size)
@@ -148,17 +155,22 @@ class KVEngine:
 
     def _key_lock(self, key: str) -> threading.Lock:
         """Writer lock for one hash stripe (per-bucket serialization,
-        p2/server/concurrenthashmap.h:40-43).  Readers stay lock-free:
-        the replay view is a consistent snapshot of fsync'd batches."""
+        p2/server/concurrenthashmap.h:40-43): it makes a write's
+        existence probe and its append atomic.  Readers take no stripe:
+        each read is served by one published snapshot of fsync'd
+        batches, which a fold replaces whole."""
         return self._stripes[hash(key) & 63]
 
     def _next_seq(self) -> int:
-        """Unique, monotone changelog sequence.  Locked: concurrent
-        clients minting the same seq would corrupt replay's
-        latest-wins order (the reference serializes writes per bucket,
-        p2/server/concurrenthashmap.h:40-43)."""
+        """Unique, monotone changelog sequence, above every seq either
+        log's snapshot has seen: another engine on the same directory
+        mints from its own counter, and a write below its records would
+        lose to them in replay.  Locked: concurrent clients minting the
+        same seq would corrupt replay's latest-wins order (the reference
+        serializes writes per bucket, p2/server/concurrenthashmap.h:40-43)."""
         with self._seq_lock:
-            self._seq += 1
+            self._seq = max(self._seq, self.auth_log.seen_seq(),
+                            self.kv_log.seen_seq()) + 1
             return self._seq
 
     def auth_df(self) -> DataFrame:
@@ -169,20 +181,31 @@ class KVEngine:
 
     def _credentials(self) -> dict[str, tuple[bytes, bytes]]:
         """username -> (salt, pass_hash) as of the auth log's current
-        on-disk layout.  Rebuilt by one collect when the layout changed
-        since the last build (an append by any engine on this directory,
-        or SAV); otherwise two listdirs and no Spark job.  The key is taken before the read, so a
-        map never claims a layout older than its rows."""
-        key, creds = self.auth_log.layout_key(), self._creds
-        if creds[0] == key:
+        snapshot: the state's credentials, collected by one Spark job
+        when a fold or a rebuild replaced the state, under the overlay's
+        records (appends by any engine on this directory).  A login after
+        a REG or SET runs no Spark job."""
+        snap, creds = self.auth_log.snapshot(), self._creds
+        if creds[0] is snap:
             return creds[1]
         with self._cred_lock:
-            key = self.auth_log.layout_key()
-            if self._creds[0] != key:
-                rows = self.auth_df().select("username", "salt", "pass_hash").collect()
-                self._creds = (key, {r["username"]: (bytes(r["salt"]), bytes(r["pass_hash"]))
-                                     for r in rows})
-            return self._creds[1]
+            creds = self._creds
+            if creds[0] is not snap:
+                state, known = self._state_creds
+                if state is not snap.state:
+                    rows = [] if snap.empty else (
+                        snap.state.select("username", "salt", "pass_hash").collect())
+                    known = {r["username"]: (bytes(r["salt"]), bytes(r["pass_hash"]))
+                             for r in rows}
+                    self._state_creds = (snap.state, known)
+                merged = dict(known)
+                for user, row in snap.overlay.items():
+                    if row["op"] == "delete":
+                        merged.pop(user, None)
+                    else:
+                        merged[user] = (row["salt"], row["pass_hash"])
+                creds = self._creds = (snap, merged)
+        return creds[1]
 
     def _auth(self, user: str, password: str):
         """Salted-hash check (p3/server/my_storage.cc:232-250); returns
@@ -261,10 +284,10 @@ class KVEngine:
         """GET (protocol.h:170-188): fetch another user's profile."""
         if self._auth(user, password) is None:
             return False, codes.RES_ERR_LOGIN, None
-        rows = self.auth_df().filter(F.col("username") == who).select("content").collect()
-        if not rows:
+        row = self.auth_log.lookup(who)
+        if row is None:
             return False, codes.RES_ERR_NO_USER, None
-        content = bytes(rows[0]["content"]) if rows[0]["content"] is not None else b""
+        content = row["content"] or b""
         if not content:
             return False, codes.RES_ERR_NO_DATA, None
         return True, codes.RES_OK, content
@@ -293,7 +316,7 @@ class KVEngine:
         if not up_ok:
             return False, codes.RES_ERR_QUOTA_UP, None
         with self._key_lock(key):
-            exists = self.kv_df().filter(F.col("key") == key).count() > 0
+            exists = self.kv_log.lookup(key) is not None
             if exists:
                 return False, codes.RES_ERR_KEY, None
             self.kv_log.append([{"seq": self._next_seq(), "op": "insert",
@@ -310,16 +333,14 @@ class KVEngine:
         precedence over ERR_KEY (my_storage.cc:243-283)."""
         if self._auth(user, password) is None:
             return False, codes.RES_ERR_LOGIN, None
-        rows = self.kv_df().filter(F.col("key") == key).select("value").collect()
-        value = b""
-        if rows and rows[0]["value"] is not None:
-            value = bytes(rows[0]["value"])
+        row = self.kv_log.lookup(key)
+        value = (row["value"] or b"") if row is not None else b""
         req_ok, down_ok = self._charge_pair(user, "downloads", len(value))
         if not req_ok:
             return False, codes.RES_ERR_QUOTA_REQ, None
         if not down_ok:
             return False, codes.RES_ERR_QUOTA_DOWN, None
-        if not rows:
+        if row is None:
             return False, codes.RES_ERR_KEY, None
         self.mru.insert(key)
         return True, codes.RES_OK, value
@@ -332,7 +353,7 @@ class KVEngine:
         if not self._charge_request(user):
             return False, codes.RES_ERR_QUOTA_REQ, None
         with self._key_lock(key):
-            exists = self.kv_df().filter(F.col("key") == key).count() > 0
+            exists = self.kv_log.lookup(key) is not None
             if not exists:
                 return False, codes.RES_ERR_KEY, None
             self.kv_log.append([{"seq": self._next_seq(), "op": "delete",
@@ -354,7 +375,7 @@ class KVEngine:
         if not up_ok:
             return False, codes.RES_ERR_QUOTA_UP, None
         with self._key_lock(key):
-            exists = self.kv_df().filter(F.col("key") == key).count() > 0
+            exists = self.kv_log.lookup(key) is not None
             self.kv_log.append([{"seq": self._next_seq(),
                                  "op": "update" if exists else "insert",
                                  "key": key, "value": bytes(value)}])

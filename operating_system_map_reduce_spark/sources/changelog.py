@@ -1,4 +1,5 @@
-"""Append-only changelog with replay + compaction.
+"""Append-only changelog with replay + compaction, served from a
+driver-side snapshot.
 
 Spark-first re-expression of the reference's durability design
 (p3/server/format.h, p3/server/my_storage.cc:505-702): every mutation is
@@ -11,26 +12,59 @@ Physical layout per table:
     <root>/log/    -- one small parquet file per append batch
 
 Appends are driver-side pyarrow writes (a log append is a server-side
-action, ~ms, no Spark job); *reads* are Spark scans so replay and
-queries distribute.  The 100 TB ingestion path is
+action, ~ms, no Spark job).  The 100 TB ingestion path is
 streaming.changelog_cdc.ChangelogStreamSink: a Structured Streaming
 sink writing this same layout distributed, interleavable with driver
-appends.  The replay view is one shuffle on key (window dedup)
-regardless of log file count and needs no ordering assumption across
-files.
+appends.  ``replay()`` is one shuffle on key (window dedup) regardless
+of log file count and needs no ordering assumption across files.
+
+Serving reads: the reference answers point ops from an in-memory Map and
+replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
+``ChangeLog`` keeps one ``Snapshot`` per log, replaced whole:
+
+ - ``state``: the replay of the base and the log files folded so far,
+   eagerly checkpointed;
+ - ``overlay``: driver-side ``key -> latest record`` of the tail (the
+   log files appended since), read with pyarrow.  It follows
+   ``layout_key()``, so appends by another engine or by the stream sink
+   show up too;
+ - ``memo``: a bounded ``key -> row | None`` of point reads on
+   ``state``, exact for as long as that state serves.
+
+``lookup`` answers from the overlay, then the memo, then one Spark point
+read on the state.  Scans (``replay_cached``) read the state, or
+``dedup(state ∪ tail files)`` when there is a tail.  The tail is folded
+into a new state only past a file-count or byte budget (sized with
+``os.stat`` before anything is read), and the state is rebuilt from the
+files only when the base changes under it or a tail record does not
+sort after it.  ``compact`` writes the base from the folded state, so
+the engine's own SAV keeps the state and its memo.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
+import threading
 import uuid
+from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# the tail the overlay holds before it is folded into the state
+FOLD_FILES = 64
+FOLD_BYTES = 8 << 20
+# point reads remembered per state; a larger row is read again each
+# time, so the memo stays within MEMO_KEYS * MEMO_ROW_BYTES
+MEMO_KEYS = 4096
+MEMO_ROW_BYTES = 16 << 10
+
+_MISS = object()
 
 
 def fsync_dir(path: str) -> None:
@@ -43,6 +77,35 @@ def fsync_dir(path: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+@dataclass(eq=False)
+class Snapshot:
+    """One consistent view of a log as of ``layout``.  Published whole
+    and never changed, except that ``memo`` fills with point reads on
+    ``state`` (shared by every snapshot over that state) and ``scan`` is
+    built on first use."""
+
+    layout: tuple                     # (base files, log files) covered
+    state: DataFrame | None = None    # None: to be rebuilt from the files
+    empty: bool = False               # state read from no file: nothing in it
+    state_seq: int = 0                # highest seq folded into state
+    tail: tuple = ()                  # log files not in state, all above state_seq
+    tail_bytes: int = 0
+    overlay: dict | None = None       # key -> latest tail record; None: not loaded
+    seq: int = 0                      # highest seq in state and tail
+    memo: dict = field(default_factory=dict)
+    scan: DataFrame | None = None
+
+    @property
+    def answers(self) -> bool:
+        return self.state is not None and self.overlay is not None
+
+    @property
+    def due(self) -> bool:
+        """The tail should be folded before the next read, and must be
+        unless the snapshot still ``answers``."""
+        return not self.answers or len(self.tail) > FOLD_FILES
 
 
 class ChangeLog:
@@ -59,11 +122,10 @@ class ChangeLog:
         )
         os.makedirs(self.base_dir, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
-        # incremental replay-state cache (see replay_cached)
-        import threading
-        self._cache_lock = threading.Lock()
-        self._state_cache: tuple | None = None
-        self._cache_depth = 0
+        self._snap: Snapshot | None = None
+        self._lock = threading.Lock()        # publishes snapshots
+        self._build_lock = threading.Lock()  # one fold, rebuild or compaction
+        self._memo_lock = threading.Lock()
 
     @property
     def base_dir(self) -> str:
@@ -99,6 +161,9 @@ class ChangeLog:
     def _list(d: str) -> list[str]:
         return [os.path.join(d, f) for f in os.listdir(d)
                 if f.endswith(".parquet")]
+
+    def _log_paths(self, names) -> list[str]:
+        return [os.path.join(self.log_dir, f) for f in names]
 
     def raw(self, log_files: list[str] | None = None) -> DataFrame:
         """base ∪ log, no dedup; ``log_files`` pins which log files are
@@ -154,6 +219,29 @@ class ChangeLog:
     def _read_files(self, files: list[str]) -> DataFrame:
         return self.spark.read.schema(self.schema).parquet(*files)
 
+    def _read_tail(self, paths: list[str]) -> list[dict]:
+        """The records of log files ``paths``, read on the driver."""
+        return [row for p in paths
+                for row in pq.read_table(p, schema=self._arrow_schema).to_pylist()]
+
+    def _seq_range(self, paths: list[str]) -> tuple[float, int]:
+        """(lowest, highest) seq in the parquet files ``paths`` from their
+        footer statistics; (inf, 0) when they hold no record."""
+        lo, hi = float("inf"), 0
+        for p in paths:
+            meta = pq.read_metadata(p)
+            col = meta.schema.names.index(self.seq_col)
+            stats = [meta.row_group(i).column(col).statistics
+                     for i in range(meta.num_row_groups)]
+            if all(s is not None and s.has_min_max for s in stats):
+                pairs = [(s.min, s.max) for s in stats]
+            else:
+                seqs = pq.read_table(p, columns=[self.seq_col]).column(0).to_pylist()
+                pairs = [(min(seqs), max(seqs))] if seqs else []
+            for a, b in pairs:
+                lo, hi = min(lo, a), max(hi, b)
+        return lo, hi
+
     def layout_key(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
         """Cheap (listdir-only, no Spark job) fingerprint of the
         on-disk layout: (base files, log files)."""
@@ -162,89 +250,208 @@ class ChangeLog:
                            if f.endswith(".parquet")))
         return base, log
 
-    def replay_cached(self) -> DataFrame:
-        """replay() with an incremental state cache.
-
-        Point ops (KVG/GET/ALL, and the rebuild of KVEngine's
-        layout-keyed credential map, from which every login check is
-        served) previously re-ran the full windowed replay over base +
-        every log file per call.  Here the replayed state is cached
-        (localCheckpoint) keyed by the on-disk layout; pure appends
-        extend it incrementally — the new state is dedup(cached state ∪
-        tail files only), so a point op after N writes scans the
-        in-memory state plus the few new batch files instead of the
-        whole log.  Every 8 increments (or on any
-        non-append layout change, e.g. compaction) the state is rebuilt
-        from files, bounding both lineage depth and cached-copy count.
-
-        Reference analog: the in-memory Map the reference serves reads
-        from, with the changelog only replayed at load (p3/server/
-        my_storage.cc:573-702).  Semantically identical to replay():
-        a tail tombstone outranks any cached row; cached rows carry
-        their seq so latest-wins merges stay correct."""
-        with self._cache_lock:
-            key = self.layout_key()
-            if self._state_cache is not None and self._state_cache[0] == key:
-                return self._state_cache[1]
-            incremental = (
-                self._state_cache is not None
-                and self._state_cache[0][0] == key[0]
-                and set(self._state_cache[0][1]) <= set(key[1])
-                and self._cache_depth < 8
-            )
-            if incremental:
-                old = set(self._state_cache[0][1])
-                tail = [os.path.join(self.log_dir, f)
-                        for f in key[1] if f not in old]
-                state = self._dedup(
-                    self._state_cache[1].unionByName(self._read_files(tail))
-                )
-                self._cache_depth += 1
-            else:
-                state = self.replay()
-                self._cache_depth = 0
-            # eager: the state is fully checkpointed before any other
-            # thread can query it.  A lazy one is checkpointed when its
-            # first job ends; if another thread's job (e.g. the next
-            # incremental rebuild's shuffle) is being planned over the
-            # same RDD at that moment, Spark's checkpoint lock and the
-            # RDD's lock are taken in opposite orders and the driver
-            # deadlocks (seen under concurrent KVI)
-            state = state.localCheckpoint(eager=True)
-            self._state_cache = (key, state)
-            return state
-
     def max_seq(self) -> int:
-        row = self.raw().agg(F.max(self.seq_col).alias("m")).collect()[0]
-        return int(row["m"]) if row["m"] is not None else 0
+        """Highest seq on disk, from parquet footer statistics."""
+        return self._seq_range(self._list(self.base_dir) + self._list(self.log_dir))[1]
+
+    def seen_seq(self) -> int:
+        """Highest seq of any record the current snapshot covers."""
+        snap = self._snap
+        return snap.seq if snap is not None else 0
+
+    # -- snapshot ----------------------------------------------------------
+
+    def snapshot(self) -> Snapshot:
+        """The snapshot of the current on-disk layout.  A snapshot that is
+        due for a fold but still answers is returned at once while
+        another thread folds; otherwise this thread folds first."""
+        while True:
+            snap = self._refresh()
+            if not snap.due:
+                return snap
+            if not self._build_lock.acquire(blocking=not snap.answers):
+                return snap
+            try:
+                snap = self._refresh()
+                if snap.due:
+                    self._publish(self._fold(snap) if snap.state is not None
+                                  else self._rebuild(snap.layout))
+            finally:
+                self._build_lock.release()
+
+    def _refresh(self) -> Snapshot:
+        snap = self._snap
+        if snap is not None and snap.layout == self.layout_key():
+            return snap
+        with self._lock:
+            # listed under the lock: never older than the published layout
+            layout = self.layout_key()
+            if self._snap is None or self._snap.layout != layout:
+                self._snap = self._advance(self._snap, layout)
+            return self._snap
+
+    def _publish(self, snap: Snapshot) -> None:
+        with self._lock:
+            self._snap = self._advance(snap, self.layout_key())
+
+    def _advance(self, snap: Snapshot | None, layout) -> Snapshot:
+        """``snap`` brought to ``layout`` without a Spark job: the log
+        files appended since are read into the overlay while the tail
+        stays within the byte budget (sized before anything is read).
+        A new base, a removed file or a record that does not sort after
+        the state leaves the state to be rebuilt."""
+        if snap is not None and snap.layout == layout:
+            return snap
+        seq = snap.seq if snap is not None else 0
+        if (snap is None or snap.state is None or snap.layout[0] != layout[0]
+                or not set(snap.layout[1]) <= set(layout[1])):
+            return Snapshot(layout, seq=seq)
+        known = set(snap.layout[1])
+        new = [f for f in layout[1] if f not in known]
+        paths = self._log_paths(new)
+        try:
+            lo, hi = self._seq_range(paths)
+            seq = max(seq, hi)
+            if lo <= snap.state_seq:
+                return Snapshot(layout, seq=seq)
+            tail_bytes = snap.tail_bytes + sum(os.path.getsize(p) for p in paths)
+            overlay = None
+            if snap.overlay is not None and tail_bytes <= FOLD_BYTES:
+                overlay = dict(snap.overlay)
+                for row in self._read_tail(paths):
+                    cur = overlay.get(row[self.key_col])
+                    if cur is None or row[self.seq_col] > cur[self.seq_col]:
+                        overlay[row[self.key_col]] = row
+        except FileNotFoundError:  # removed by a compaction elsewhere
+            return Snapshot(layout, seq=seq)
+        return Snapshot(layout, snap.state, snap.empty, snap.state_seq,
+                        snap.tail + tuple(new), tail_bytes, overlay, seq, snap.memo)
+
+    def _fold(self, snap: Snapshot) -> Snapshot:
+        """``snap`` with its tail folded into a new state.  The memo moves
+        over with the overlay's records, which the new state holds."""
+        if not snap.tail:
+            return snap
+        tail = self._log_paths(snap.tail)
+        memo = {}
+        if snap.overlay is not None:
+            memo = dict(snap.memo)
+            _remember(memo, ((k, self._live(r)) for k, r in snap.overlay.items()))
+        state = _checkpoint(self._dedup(snap.state.unionByName(self._read_files(tail))))
+        hi = self._seq_range(tail)[1]
+        return Snapshot(snap.layout, state, False, max(snap.state_seq, hi),
+                        overlay={}, seq=max(snap.seq, hi), memo=memo)
+
+    def _rebuild(self, layout, fold_all: bool = False) -> Snapshot:
+        """A state replayed from the files of ``layout``: the base alone
+        when the log fits the overlay budget and sorts after the base
+        (the log is then served from the overlay), else base and log."""
+        base = [os.path.join(self.base_dir, f) for f in layout[0]
+                if f.endswith(".parquet")]
+        log = self._log_paths(layout[1])
+        files, folded = base, ()
+        if (fold_all or len(log) > FOLD_FILES
+                or sum(os.path.getsize(p) for p in log) > FOLD_BYTES
+                or self._seq_range(log)[0] <= self._seq_range(base)[1]):
+            files, folded = base + log, layout[1]
+        hi = self._seq_range(files)[1]
+        state = (_checkpoint(self._dedup(self._read_files(files))) if files
+                 else self.spark.createDataFrame([], self.schema))
+        return Snapshot((layout[0], folded), state, not files, hi,
+                        overlay={}, seq=hi)
+
+    def _live(self, row: dict | None) -> dict | None:
+        return None if row is None or row[self.op_col] == "delete" else row
+
+    def lookup(self, key: str) -> dict | None:
+        """The live record of ``key``, or None when it is absent or
+        deleted: from the overlay, else the memo, else one Spark point
+        read on the state, which the memo then keeps.  A hit, a value or
+        a tombstone, runs no Spark job."""
+        snap = self.snapshot()
+        row = snap.overlay.get(key, _MISS)
+        if row is not _MISS:
+            return self._live(row)
+        row = snap.memo.get(key, _MISS)
+        if row is _MISS:
+            rows = [] if snap.empty else (
+                snap.state.filter(F.col(self.key_col) == key).collect())
+            row = ({k: bytes(v) if isinstance(v, bytearray) else v
+                    for k, v in rows[0].asDict().items()} if rows else None)
+            with self._memo_lock:
+                _remember(snap.memo, [(key, row)])
+        return row
+
+    def replay_cached(self) -> DataFrame:
+        """replay() served from the snapshot, for scans: the state itself
+        when there is no tail, else dedup(state ∪ tail files) over the
+        tail files the snapshot pinned, uncached.  One snapshot returns
+        one DataFrame.  Semantically identical to replay()."""
+        snap = self.snapshot()
+        if snap.scan is None:
+            scan = snap.state
+            if snap.tail:
+                scan = self._dedup(snap.state.unionByName(
+                    self._read_files(self._log_paths(snap.tail))))
+            snap.scan = scan
+        return snap.scan
 
     # -- compaction (SAV) --------------------------------------------------
 
     def compact(self) -> None:
-        """SAV parity (p3/server/my_storage.cc:505-565): write the full
-        snapshot to a tmp dir, atomically swap it in as base, truncate
-        the log.  Readers between swap and truncate see duplicates of
-        *identical latest records*, which replay dedups -- same safety
-        the reference gets from write-tmp-then-rename.
+        """SAV parity (p3/server/my_storage.cc:505-565): fold the tail into
+        the state, write the state to a tmp dir, atomically swap it in
+        as base, truncate the log.  Readers between swap and truncate see
+        duplicates of *identical latest records*, which replay dedups --
+        same safety the reference gets from write-tmp-then-rename.  The
+        folded state and its memo keep serving over the new base.
 
-        Truncation removes exactly the log files the snapshot read: a
+        Truncation removes exactly the log files the snapshot covers: a
         batch appended while the snapshot is written (or still in
         flight as a .tmp file) stays in the log.  A reader that listed
         the log before the swap could still open a file removed here;
         KVEngine excludes that by running SAV alone (its SavGate)."""
-        tmp = os.path.join(self.root, f"base.tmp-{uuid.uuid4().hex[:8]}")
-        log_files = self._list(self.log_dir)
-        # Distributed snapshot write: executors stream the replay view
-        # straight to parquet part-files -- the driver never materializes
-        # the snapshot (at 100 TB a .collect() here would OOM the driver).
-        self._dedup(self.raw(log_files)).write.parquet(tmp)
-        old = self.base_dir
-        swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
-        os.rename(old, swap_out)
-        os.rename(tmp, old)
-        shutil.rmtree(swap_out)
-        for f in log_files:
-            os.remove(f)
+        with self._build_lock:
+            snap = self._refresh()
+            snap = (self._fold(snap) if snap.state is not None
+                    else self._rebuild(snap.layout, fold_all=True))
+            tmp = os.path.join(self.root, f"base.tmp-{uuid.uuid4().hex[:8]}")
+            # Distributed snapshot write: executors stream the state
+            # straight to parquet part-files -- the driver never
+            # materializes it (at 100 TB a .collect() would OOM the driver).
+            snap.state.write.parquet(tmp)
+            old = self.base_dir
+            swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
+            os.rename(old, swap_out)
+            os.rename(tmp, old)
+            shutil.rmtree(swap_out)
+            for f in self._log_paths(snap.layout[1]):
+                os.remove(f)
+            base = tuple(sorted(os.listdir(self.base_dir)))
+            self._publish(Snapshot((base, ()), snap.state, snap.empty, snap.state_seq,
+                                   overlay={}, seq=snap.seq, memo=snap.memo))
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    # eager: the state is fully checkpointed before any other thread can
+    # query it.  A lazy one is checkpointed when its first job ends; if
+    # another thread's job is being planned over the same RDD at that
+    # moment, Spark's checkpoint lock and the RDD's lock are taken in
+    # opposite orders and the driver deadlocks (seen under concurrent KVI)
+    return df.localCheckpoint(eager=True)
+
+
+def _remember(memo: dict, rows) -> None:
+    """Put ``(key, row)`` pairs in ``memo``, dropping the entry of a row
+    over MEMO_ROW_BYTES, then the oldest entries past MEMO_KEYS."""
+    for key, row in rows:
+        if row is None or sum(len(v) for v in row.values()
+                              if isinstance(v, (bytes, str))) <= MEMO_ROW_BYTES:
+            memo[key] = row
+        else:
+            memo.pop(key, None)
+    for key in list(itertools.islice(memo, max(0, len(memo) - MEMO_KEYS))):
+        del memo[key]
 
 
 def _arrow_type(simple: str) -> pa.DataType:

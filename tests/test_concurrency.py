@@ -182,3 +182,56 @@ class TestRaces:
                    for c in results)
         assert engine.kv_df().count() == len(keys)
         _assert_unique_seqs(engine)
+
+
+class TestSnapshotRaces:
+    def test_readers_see_written_values_while_folds_run(self, engine, monkeypatch):
+        """One writer cycles KVU/KVD on a key while three readers KVG it;
+        with a two-file fold budget the tail folds mid-race.  Every reply
+        is a value the writer wrote, or ERR_KEY, and never an error."""
+        from operating_system_map_reduce_spark.sources import changelog
+
+        monkeypatch.setattr(changelog, "FOLD_FILES", 2)
+        folds = []
+        fold = changelog.ChangeLog._fold
+
+        def counted(self, snap):
+            folds.append(len(snap.tail))
+            return fold(self, snap)
+
+        monkeypatch.setattr(changelog.ChangeLog, "_fold", counted)
+        values = [f"v{i}".encode() for i in range(18)]
+        done = threading.Event()
+        writer_codes: list[str] = []
+        replies: list[tuple] = []
+
+        def writer():
+            try:
+                for i, v in enumerate(values):
+                    writer_codes.append(engine.kv_upsert(*ALICE, "hot", v)[1])
+                    if i % 3 == 2:
+                        writer_codes.append(engine.kv_delete(*ALICE, "hot")[1])
+            finally:
+                done.set()
+
+        def reader(_):
+            out = []
+            while not done.is_set():
+                try:
+                    out.append(tuple(engine.kv_get(*ALICE, "hot")))
+                except Exception as exc:  # reported by the assert below
+                    out.append(("raised", repr(exc)))
+            return out
+
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            readers = [pool.submit(reader, i) for i in range(3)]
+            pool.submit(writer).result(timeout=600)
+            for r in readers:
+                replies.extend(r.result(timeout=600))
+        assert set(writer_codes) <= {codes.RES_OKINS, codes.RES_OKUPD, codes.RES_OK}
+        assert folds, "no fold ran during the race"
+        assert replies
+        bad = [r for r in replies
+               if r != (False, codes.RES_ERR_KEY, None)
+               and not (r[:2] == (True, codes.RES_OK) and r[2] in values)]
+        assert not bad, bad[:5]

@@ -9,6 +9,9 @@
   kept caller broken until it happens to run.
 * The package reads exactly the environment variables it documents;
   every other setting goes through ``get_spark(extra_conf=...)``.
+* The benchmark's tracer (perfbench/tracing.py) wraps engine, changelog,
+  mapreduce and quota calls by name; they keep those names and the
+  arguments the tracer and the workload pass.
 """
 
 from __future__ import annotations
@@ -109,3 +112,34 @@ def test_package_reads_only_the_documented_env_vars():
             names.add(key.value if isinstance(key, ast.Constant)
                       else f"{path.relative_to(REPO)}:{node.lineno}: {ast.unparse(key)}")
     assert names == ENV_READS
+
+
+def _required(fn) -> list[str]:
+    import inspect
+
+    return [p.name for p in inspect.signature(fn).parameters.values()
+            if p.default is p.empty
+            and p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
+
+
+def test_traced_names_keep_their_signatures():
+    from operating_system_map_reduce_spark import engine
+    from operating_system_map_reduce_spark.operators.quota import QuotaTracker
+    from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+
+    login = ["self", "user", "password"]
+    kv = engine.KVEngine
+    assert _required(kv.kv_get) == login + ["key"]
+    assert _required(kv.kv_delete) == login + ["key"]
+    assert _required(kv.kv_insert) == login + ["key", "value"]
+    assert _required(kv.kv_upsert) == login + ["key", "value"]
+    assert _required(kv.kv_top) == login
+    assert _required(kv.kv_all) == login
+    assert _required(kv.invoke_mr) == login + ["mrname"]
+    assert _required(kv.save_file) == login
+    assert _required(ChangeLog.append) == ["self", "rows"]
+    assert _required(ChangeLog.compact) == ["self"]
+    assert _required(ChangeLog.replay_cached) == ["self"]
+    assert isinstance(ChangeLog.log_dir, property)
+    assert callable(engine.run_map_reduce)
+    assert _required(QuotaTracker.check_add) == ["self", "add", "when"]

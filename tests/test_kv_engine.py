@@ -222,7 +222,7 @@ class TestAesAtRest:
 
 
 class TestReplayCache:
-    """replay_cached: point ops must not re-scan the whole log per call."""
+    """The log snapshot: point ops must not re-scan the whole log per call."""
 
     def _eng(self, spark, tmp_path):
         d = str(tmp_path / "data")
@@ -236,27 +236,36 @@ class TestReplayCache:
         assert eng.kv_log.replay_cached() is first, "cache hit must be free"
 
     def test_append_extends_state_incrementally(self, spark, tmp_path, monkeypatch):
-        """After the cache is warm, a write must only re-read the new
-        batch files, never the full log."""
+        """After the snapshot is warm, a write must only re-read the new
+        batch file, on the driver into the overlay: never the full log,
+        and no Spark read of any log file."""
         eng = self._eng(spark, tmp_path)
         seed(eng)
         eng.kv_insert("alice", "alice_is_awesome", "k1", b"v1")
-        eng.kv_get("alice", "alice_is_awesome", "k1")  # warm the cache
+        eng.kv_get("alice", "alice_is_awesome", "k1")  # warm the snapshot
 
-        read_calls: list[list[str]] = []
-        orig = type(eng.kv_log)._read_files
+        spark_reads: list[list[str]] = []
+        tail_reads: list[list[str]] = []
+        cls = type(eng.kv_log)
+        read_files, read_tail = cls._read_files, cls._read_tail
 
-        def spy(self, files):
-            read_calls.append(list(files))
-            return orig(self, files)
+        def spy_files(self, files):
+            spark_reads.append(list(files))
+            return read_files(self, files)
 
-        monkeypatch.setattr(type(eng.kv_log), "_read_files", spy)
+        def spy_tail(self, paths):
+            tail_reads.append(list(paths))
+            return read_tail(self, paths)
+
+        monkeypatch.setattr(cls, "_read_files", spy_files)
+        monkeypatch.setattr(cls, "_read_tail", spy_tail)
         eng.kv_insert("alice", "alice_is_awesome", "k2", b"v2")
         assert eng.kv_get("alice", "alice_is_awesome", "k2")[2] == b"v2"
-        kv_reads = [fs for fs in read_calls if any("/kv/" in f for f in fs)]
+        kv_reads = [fs for fs in tail_reads if any("/kv/" in f for f in fs)]
         assert kv_reads, "expected an incremental tail read"
         for fs in kv_reads:
-            assert len(fs) <= 2, f"full-log rescan detected: {fs}"
+            assert len(fs) == 1, f"full-log rescan detected: {fs}"
+        assert not [fs for fs in spark_reads if any("/kv/" in f for f in fs)]
 
     def test_tombstone_outranks_cached_row(self, spark, tmp_path):
         eng = self._eng(spark, tmp_path)
@@ -268,15 +277,28 @@ class TestReplayCache:
         eng.kv_insert("alice", "alice_is_awesome", "k", b"v2")
         assert eng.kv_get("alice", "alice_is_awesome", "k")[2] == b"v2"
 
-    def test_state_is_checkpointed_before_it_is_returned(self, spark, tmp_path):
+    def test_state_is_checkpointed_before_it_is_returned(self, spark, tmp_path,
+                                                         monkeypatch):
         """No thread can query a replay state whose checkpoint is still
         pending: a lazy checkpoint that completes while another job is
-        planned over the same RDD deadlocks the driver."""
+        planned over the same RDD deadlocks the driver.  Both a rebuild
+        and a fold publish a checkpointed state."""
+        from operating_system_map_reduce_spark.sources import changelog
+
         eng = self._eng(spark, tmp_path)
         seed(eng)
-        for key in ["k1", "k2"]:  # a full rebuild, then an incremental one
-            eng.kv_insert("alice", "alice_is_awesome", key, b"v")
-            state = eng.kv_log.replay_cached()
+        eng.kv_insert("alice", "alice_is_awesome", "k1", b"v")
+        assert eng.save_file("alice", "alice_is_awesome")[1] == codes.RES_OK
+        fresh = self._eng(spark, tmp_path)  # rebuilds its state from the base
+        assert fresh.kv_get("alice", "alice_is_awesome", "k1")[2] == b"v"
+        states = [fresh.kv_log.snapshot().state]
+        monkeypatch.setattr(changelog, "FOLD_FILES", 0)
+        fresh.kv_insert("alice", "alice_is_awesome", "k2", b"v")
+        assert fresh.kv_get("alice", "alice_is_awesome", "k2")[2] == b"v"
+        states.append(fresh.kv_log.snapshot().state)  # the tail folded
+        assert states[0] is not states[1]
+        assert fresh.kv_log.snapshot().tail == ()
+        for state in states:
             assert state._jdf.queryExecution().analyzed().rdd().isCheckpointed()
 
     def test_compaction_invalidates_and_rebuilds(self, spark, tmp_path):
@@ -319,15 +341,29 @@ class TestCredentialMap:
     """Logins are served from a driver-side username -> (salt, pass_hash)
     map, rebuilt only when the auth log's on-disk layout changes."""
 
-    def test_warm_kv_get_runs_one_job_and_warm_auth_none(self, spark, engine):
+    def test_warm_kv_get_and_warm_auth_run_no_job(self, spark, engine):
         seed(engine)
         engine.kv_insert("alice", "alice_is_awesome", "k", b"v")
-        for _ in range(2):  # warm the replay cache and the map
+        for _ in range(2):  # warm the snapshot and the map
             assert engine.kv_get("alice", "alice_is_awesome", "k")[2] == b"v"
         assert spark_jobs(spark, lambda: engine.kv_get(
-            "alice", "alice_is_awesome", "k")) == 1
+            "alice", "alice_is_awesome", "k")) == 0
         assert spark_jobs(spark, lambda: engine._auth(
             "alice", "alice_is_awesome")) == 0
+
+    def test_login_and_profile_read_after_reg_or_set_run_no_job(self, spark, engine):
+        seed(engine)
+        assert engine.kv_top("alice", "alice_is_awesome")[1] == codes.RES_ERR_NO_DATA
+        assert engine.save_file("alice", "alice_is_awesome")[1] == codes.RES_OK
+        assert engine.kv_top("bob", "bob_is_the_best")[1] == codes.RES_ERR_NO_DATA
+        assert engine.add_user("carol", "pw")[1] == codes.RES_OK
+        assert spark_jobs(spark, lambda: engine._auth("carol", "pw")) == 0
+        assert engine.set_user_data("bob", "bob_is_the_best", b"p")[1] == codes.RES_OK
+        assert spark_jobs(spark, lambda: engine._auth("bob", "bob_is_the_best")) == 0
+        replies = []
+        assert spark_jobs(spark, lambda: replies.append(engine.get_user_data(
+            "carol", "pw", "bob"))) == 0
+        assert replies == [(True, codes.RES_OK, b"p")]
 
     def test_user_registered_by_another_engine_logs_in(self, spark, tmp_path):
         d = str(tmp_path / "data")
@@ -410,6 +446,57 @@ class TestCredentialMap:
             assert engine.kv_top("carol", f"pw{i}")[1] == want
 
 
+class TestSnapshotJobs:
+    """Point reads come from the kv log's snapshot: the tail overlay,
+    then the per-state memo, then one Spark point read."""
+
+    def _saved(self, engine):
+        seed(engine)
+        for k in ["k1", "k2", "k3"]:
+            engine.kv_insert("alice", "alice_is_awesome", k, k.encode())
+        assert engine.save_file("alice", "alice_is_awesome")[1] == codes.RES_OK
+        assert engine.kv_get("alice", "alice_is_awesome", "k1")[2] == b"k1"
+
+    def test_kvg_after_a_write_runs_at_most_one_job(self, spark, engine):
+        self._saved(engine)
+        replies = []
+
+        def get(key):
+            return lambda: replies.append(engine.kv_get("alice", "alice_is_awesome", key))
+
+        assert engine.kv_upsert("alice", "alice_is_awesome", "k2", b"w")[1] == codes.RES_OKUPD
+        assert spark_jobs(spark, get("k3")) <= 1
+        assert engine.kv_delete("alice", "alice_is_awesome", "k1")[1] == codes.RES_OK
+        assert spark_jobs(spark, get("k2")) == 0  # the overlay holds it
+        assert spark_jobs(spark, get("k1")) == 0  # and the tombstone
+        assert [r[1:] for r in replies] == [
+            (codes.RES_OK, b"k3"), (codes.RES_OK, b"w"), (codes.RES_ERR_KEY, None)]
+
+    def test_repeated_kvg_of_an_unchanged_key_runs_no_job(self, spark, engine):
+        self._saved(engine)
+        for key in ["k2", "absent"]:
+            engine.kv_get("alice", "alice_is_awesome", key)
+            assert spark_jobs(spark, lambda: engine.kv_get(
+                "alice", "alice_is_awesome", key)) == 0
+        assert engine.kv_get("alice", "alice_is_awesome", "k2")[2] == b"k2"
+        assert engine.kv_get("alice", "alice_is_awesome", "absent")[1] == codes.RES_ERR_KEY
+
+    def test_write_after_another_engines_writes_wins(self, spark, tmp_path):
+        """Two engines on one directory mint seqs from separate counters;
+        a write must still sort after every record its engine has seen."""
+        d = str(tmp_path / "data")
+        first = KVEngine(spark, d, req_quota=4096)
+        second = KVEngine(spark, d, req_quota=4096)
+        assert first.add_user("alice", "pw")[1] == codes.RES_OK
+        for i in range(5):
+            second.kv_upsert("alice", "pw", "k", f"second-{i}".encode())
+        assert first.kv_insert("alice", "pw", "k", b"x")[1] == codes.RES_ERR_KEY
+        assert first.kv_upsert("alice", "pw", "k", b"first")[1] == codes.RES_OKUPD
+        for eng in (first, second):
+            assert eng.kv_get("alice", "pw", "k")[2] == b"first"
+        assert [bytes(r["value"]) for r in first.kv_log.replay().collect()] == [b"first"]
+
+
 class TestSavGate:
     def test_sav_waits_for_a_reader_inside_its_spark_action(self, spark, engine,
                                                             monkeypatch):
@@ -422,25 +509,25 @@ class TestSavGate:
         seed(engine)
         engine.kv_insert("alice", "alice_is_awesome", "k", b"v")
         assert engine.kv_get("alice", "alice_is_awesome", "k")[2] == b"v"
-        # a new log batch: the next read lists it and reads it lazily
+        # a new log batch: the next read lists it and reads it
         engine.kv_upsert("alice", "alice_is_awesome", "k", b"w")
 
         paused, release, compacting = (threading.Event(), threading.Event(),
                                        threading.Event())
-        read_files, compact = ChangeLog._read_files, ChangeLog.compact
+        read_tail, compact = ChangeLog._read_tail, ChangeLog.compact
 
-        def pausing_read(self, files):
-            df = read_files(self, files)
+        def pausing_read(self, paths):
+            rows = read_tail(self, paths)
             if threading.current_thread().name == "reader":
                 paused.set()
                 assert release.wait(120)
-            return df
+            return rows
 
         def noting_compact(self):
             compacting.set()
             return compact(self)
 
-        monkeypatch.setattr(ChangeLog, "_read_files", pausing_read)
+        monkeypatch.setattr(ChangeLog, "_read_tail", pausing_read)
         monkeypatch.setattr(ChangeLog, "compact", noting_compact)
         replies: dict[str, object] = {}
 
