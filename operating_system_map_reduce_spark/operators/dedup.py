@@ -248,19 +248,19 @@ def candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing any band bucket -- the LSH
     candidate join (equi-join on (band_idx, band_hash), never O(n^2)).
 
-    The round-11 SHUFFLE_HASH pin came OFF in round 13.  It guarded a
-    lying size estimate: both sides were the corpus's band postings
-    behind the mapInPandas signature stage, where the planner fell
-    back to the scan size and broadcast a multi-GB side.  Since round
-    12 the only registered consumer (dedup_minhash_lsh) feeds this
-    join from the at-rest bucketed signature TABLE, so estimates are
+    No SHUFFLE_HASH pin.  One once guarded a lying size estimate: both
+    sides were the corpus's band postings behind the mapInPandas
+    signature stage, where the planner fell back to the scan size and
+    broadcast a multi-GB side.  The only registered consumer
+    (dedup_minhash_lsh) now feeds this join from the at-rest bucketed
+    signature TABLE, so estimates are
     real parquet statistics and the lying-estimate class cannot recur
     -- while the pin itself became the hazard: a pinned shuffled-hash
     build holds one partition of corpus-growing band postings in a
     non-spillable hash map, the exact shape that OOM'd
-    dedup_containment's pinned plan at sf100 (SCALING.md round-13).
-    Strategy choice belongs to AQE's real runtime sizes again, the
-    corpus_novelty_filter precedent (round 12) applied to this face."""
+    dedup_containment's pinned plan at sf100 (SCALING.md).  Strategy
+    choice belongs to AQE's real runtime sizes, the
+    corpus_novelty_filter precedent applied to this face."""
     a = bands.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
     b = bands.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
     return (

@@ -1,6 +1,6 @@
-"""Self-enforcing broadcast bounds (round-12 verdict directive #4).
+"""Self-enforcing broadcast bounds.
 
-The round-11 sweep (tests/test_plans.py PYSTAGE_BROADCAST_BOUNDED)
+The plan sweep (tests/test_plans.py PYSTAGE_BROADCAST_BOUNDED)
 forbids broadcasting any side the planner cannot size -- a Python
 stage in the subtree makes every size estimate a lie -- unless the
 side is provably bounded.  Until this module, "provably bounded" was
@@ -53,7 +53,7 @@ def bounded_broadcast(df: DataFrame, max_rows: int, what: str,
     per invocation; omit it for sides whose input can change between
     calls.
 
-    MEMO CONTRACT (round-13, closing the r12 verdict's residue note):
+    MEMO CONTRACT:
     the memo skips re-verification for as long as the key matches --
     it does NOT watch the input.  A caller whose "immutable" input can
     be replaced IN PLACE mid-session (e.g. regenerated parquet at the

@@ -269,11 +269,6 @@ def resolve_codec(fake: bool, codec=None):
     return PngCodec()
 
 
-def decode_stub(payload: bytes, fake: bool = False) -> dict:
-    """Back-compat codec seam; prefer resolve_codec()/FakeCodec."""
-    return resolve_codec(fake).decode(payload)
-
-
 def attach_binary(df: DataFrame, text_col: str = "text",
                   out_col: str = "payload") -> DataFrame:
     """Synthesize an opaque binary column (UTF-8 bytes of text) -- the

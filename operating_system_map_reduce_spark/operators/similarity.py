@@ -148,7 +148,7 @@ def _grouped_topk(members: DataFrame, group_cols: list[str], k: int) -> DataFram
     work happens inside an Arrow batch (numpy), and only k rows per
     member leave the group -- versus materializing every candidate
     pair through two vector-carrying shuffled joins + a distinct,
-    which round-1 profiling showed dominates wall-clock (~1M wide
+    which profiling showed dominates wall-clock (~1M wide
     rows for 2k vectors at sf0.1).  Global top-k over the union of
     per-group top-k is exact: any pair dropped here had >= k better
     pairs in the SAME group, which also beat it globally (tie-break
@@ -194,7 +194,7 @@ def lsh_members(emb: DataFrame, id_col: str = "vec_id",
     Fuses norm + bucket computation + the xN_TABLES fanout into the scan stage: no
     repartition shuffle, no separate explode projection -- stage-count
     is what dominates bucketed-ANN wall clock once the folds are numpy
-    (round-2 profile: each extra stage ~0.15-0.6 s at sf0.1).  At
+    (profiled: each extra stage ~0.15-0.6 s at sf0.1).  At
     100 TB parquet supplies the map-side parallelism (many splits);
     the only shuffle left in the plan is the groupBy on (tbl, bucket)."""
     import pandas as pd
@@ -278,7 +278,7 @@ def cosine_knn(emb: DataFrame, k: int = 5, id_col: str = "vec_id",
                blocks: int = 8) -> DataFrame:
     """Exact top-k cosine neighbors for every vector.
 
-    Plan shape (round-7 blocked all-pairs): vectors land in ``blocks``
+    Plan shape (blocked all-pairs): vectors land in ``blocks``
     row-blocks by id hash; every unordered block pair (a <= b) forms one
     applyInPandas group whose members' pairwise cosines are scored
     in-numpy (chunked outer-product fold, left-to-right -- bit-identical

@@ -27,7 +27,7 @@ Design notes for scale:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_BITS = 16
@@ -61,14 +61,3 @@ def interleave_sql(a: str, b: str, bits: int = DEFAULT_BITS) -> str:
         terms.append(f"(({a} & {1 << i}) * {1 << (i + 1)})")
         terms.append(f"(({b} & {1 << i}) * {1 << i})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_layout(df: DataFrame, zcol: Column, n_files: int) -> DataFrame:
-    """Cluster rows into ``n_files`` z-contiguous partitions, sorted
-    within each -- write this out and every partition/file carries a
-    tight multi-dimensional min/max envelope."""
-    return (
-        df.withColumn("_z", zcol)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-    )

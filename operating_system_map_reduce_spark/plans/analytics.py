@@ -1298,10 +1298,9 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-# Sweep disambiguation (round-13 age bounds, re-derived round 14 after
-# the advice caught the 24 h rule deleting a LIVE long-lived writer's
-# table: reads never bump dir mtime, so "idle a day" does not imply
-# "writer dead").  PID liveness alone misjudges two cases:
+# Sweep disambiguation (age bounds, re-derived after a 24 h idle rule
+# was found deleting a LIVE long-lived writer's table: reads never bump
+# dir mtime, so "idle a day" does not imply "writer dead").  PID liveness alone misjudges two cases:
 # (a) A pre-PID-scheme writer's un-pid'd directory might belong to a
 #     STILL-RUNNING old-version sibling during a mixed-version overlap
 #     -- grant it a grace window instead of sweeping on sight (age is
@@ -1352,7 +1351,7 @@ def _pid_started_after(pid: int, ts: float) -> bool | None:
         return None
 
 
-# Intra-process write serialization (round-13 advice item): two
+# Intra-process write serialization: two
 # threads or two same-process sessions sharing the catalog could both
 # pass tableExists, both rmtree the leftover, and run overwrite
 # saveAsTable on the same directory concurrently -- the PID in the
@@ -1401,7 +1400,7 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
     testdata regeneration / process exit (the sf10 signature table is
     ~4 GB).  A LIVE sibling process's directory is never touched (its
     session may be streaming those files right now) -- with the
-    round-13 age bounds: un-pid'd legacy names get a grace window (a
+    age bounds: un-pid'd legacy names get a grace window (a
     mixed-version overlap's still-running writer), and an apparently
     live pid whose directory is > 24 h idle is treated as recycled
     (the dead writer's orphan would otherwise be unsweepable
@@ -1446,13 +1445,13 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
                     # pid -- it cannot be the writer).  A process older
                     # than the write, or one whose start time is
                     # unreadable, is presumed the live writer (maybe
-                    # multi-day) and never touched -- round-14 advice
-                    # fix replacing the 24 h idle heuristic that could
-                    # delete a long-lived sibling's in-use table.
+                    # multi-day) and never touched -- a 24 h idle
+                    # heuristic here once deleted a long-lived
+                    # sibling's in-use table.
                     if _pid_started_after(writer, mtime) is not True:
                         continue
                 shutil.rmtree(d, ignore_errors=True)
-        # one_file_per_bucket (round 14): measured a strict win for
+        # one_file_per_bucket: measured a strict win for
         # the at-rest builds — ~2x faster write (one file commit per
         # bucket) and ~9% faster downstream reads; the query plans are
         # bit-identical in shape (sorts/exchanges unchanged — Spark
@@ -1465,7 +1464,7 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
 # Warehouse dirs where a bucketed write has FAILED this process (e.g.
 # read-only filesystem): at_rest_table degrades to serving the build()
 # plan per query instead of failing every registered face that assumed
-# a writable spark.sql.warehouse.dir (round-14 advice fix).  Keyed on
+# a writable spark.sql.warehouse.dir.  Keyed on
 # the warehouse URI so one failed probe stops re-paying a doomed write
 # job per query.
 _RO_WAREHOUSES: set = set()
@@ -1475,18 +1474,17 @@ def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
                   build, n_buckets: int = 16,
                   source: str = "documents.parquet") -> DataFrame:
     """Write-once bucketed table with the invalidation policy in ONE
-    place (round-12 code review: the mtime/tableExists/_ensure block
-    had been copy-pasted per table and the copies were already
-    diverging): the name carries (sf tag, source mtime, writer pid),
+    place (a copy-pasted mtime/tableExists/_ensure block per table had
+    already begun to diverge): the name carries (sf tag, source mtime, writer pid),
     so in-place testdata regeneration AND concurrent sibling processes
     each get their own table, and ``build()`` -- called only when the
     table is absent -- streams straight into the write job with
-    nothing persisted.  The tag is st_mtime_ns (round-13 advice fix):
+    nothing persisted.  The tag is st_mtime_ns:
     whole-second truncation let an in-place regeneration WITHIN one
     second reuse the stale table against a fresh-parquet oracle --
     the exact hazard the tag exists to prevent.
 
-    Degrade path (round-14 advice fix): a warehouse the process cannot
+    Degrade path: a warehouse the process cannot
     write (read-only volume, quota) must not turn every at-rest face
     into a write error -- on a failed table write the build() plan is
     returned directly (identical rows; the bucketed layout is a pure
@@ -1558,10 +1556,10 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 
 # --- z-order clustering: multi-dimensional data-skipping layout ----------
 # Storage-layout operator (operators/zorder.py): bucketize (o_custkey,
-# o_totalprice) onto 2^16 grids, interleave to a Morton code, and -- for
-# the writer path, exercised in tests/test_zorder.py -- repartitionByRange
-# + sortWithinPartitions on it, giving every output file a tight min/max
-# envelope in BOTH dimensions.  THIS query grades the layout itself:
+# o_totalprice) onto 2^16 grids and interleave to a Morton code; a writer
+# that repartitionByRange + sortWithinPartitions on it gives every output
+# file a tight min/max envelope in BOTH dimensions.  THIS query grades the
+# layout itself:
 # per z-block (top 7 Morton bits = 128 blocks) it reports the row count
 # and both dimensions' envelopes; the oracle replays the identical
 # integer interleave, so the driver hash-checks bit-for-bit.  Grid
@@ -1840,7 +1838,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         # RAW ratio, not ROUND(.,6): a ratio of float sums carries
         # ~1e-9 relative summation noise, and rounding flips discretely
         # at a half-boundary while the compare's relative tolerance
-        # absorbs raw noise (round-8 ADVICE; same rule as raw sums).
+        # absorbs raw noise (same rule as raw sums).
         .agg((F.sum(F.when(F.col("is_target"), vol).otherwise(F.lit(0.0)))
               / F.sum(vol)).alias("mkt_share"),
              F.count(F.lit(1)).alias("n_items"))
@@ -1927,8 +1925,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         # RAW ratio, not ROUND(.,6) -- see q8_market_share's note
-        # (round-8 ADVICE: rounding a float-sum ratio can flip a
-        # half-boundary; the raw value rides the compare tolerance).
+        # (rounding a float-sum ratio can flip a half-boundary; the raw
+        # value rides the compare tolerance).
         .agg((F.lit(100.0)
               * F.sum(F.when(F.col("is_promo"), vol).otherwise(F.lit(0.0)))
               / F.sum(vol)).alias("promo_pct"),

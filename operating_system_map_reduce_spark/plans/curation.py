@@ -207,7 +207,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s").alias("s_b"),
         )
     )
-    # Self-enforcing bound (round 12): the allowlist's claim is "an
+    # Self-enforcing bound: the allowlist's claim is "an
     # eval suite is a fixed, bounded corpus"; 5M postings (~250 MB
     # relation) is an order of magnitude past any real eval suite
     # while still broadcast-safe.  Counting bench shingles only the
@@ -422,18 +422,16 @@ def cms_heavy_hitters(tc: DataFrame) -> DataFrame:
     Materialization is the CALLER's concern: sketch_heavy_hitters
     persists its corpus-derived frame through a single-slot cache
     (below); without a caller-provided persist the two consumers
-    (sketch build, top-K probe) recompute ``tc``.  The round-11 shape
+    (sketch build, top-K probe) recompute ``tc``.  An earlier shape
     localCheckpoint'ed here, which has no public release handle and so
-    leaked one vocabulary-sized copy per invocation (round-11 advice;
-    the same finding settled cached_signature on persist() that
-    round)."""
+    leaked one vocabulary-sized copy per invocation."""
     tc = tc.withColumn("hv", F.expr(_dd.hexval_spark_sql("md5(tok)"))
                        % _dd.MINHASH_P)
     # one scan each for the sketch build and the probes: the depth
     # dimension rides an explode(sequence) row multiplier with the
     # affine constants as indexed array literals -- the first form
     # (D unionByName'd re-scans) re-ran the vocabulary-wide sort-limit
-    # D times (round-11 code-review finding)
+    # D times
     a_arr = F.array(*[F.lit(a) for a in CMS_A])
     b_arr = F.array(*[F.lit(b) for b in CMS_B])
     d_seq = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("d")
@@ -464,15 +462,15 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeat invocations reuse it (bench evicts it between timed runs
     # -- a per-query derived aggregate is not a standing table); the
     # slot evicts deterministically on a key change, so per-SF sweeps
-    # don't accumulate vocabulary-sized copies.  Key discipline
-    # (round-12 code review): the source MTIME is in the key -- an
+    # don't accumulate vocabulary-sized copies.  Key discipline: the
+    # source MTIME is in the key -- an
     # in-place testdata regeneration mid-session must invalidate the
     # slot or this registered face serves stale counts against a
     # fresh-parquet oracle -- and the session component is the
     # applicationId string, not id(spark), which CPython recycles
     # after a session is garbage-collected (a recycled id would hand
     # back a DataFrame bound to a stopped SparkContext).
-    # st_mtime_ns, not int(getmtime) (round-13 advice fix): a
+    # st_mtime_ns, not int(getmtime): a
     # regeneration within the same wall-clock second must still
     # invalidate
     key = (spark.sparkContext.applicationId, sf_dir,
@@ -531,8 +529,6 @@ FROM est ORDER BY exact_count DESC, tok
 
 
 SKETCH_CMS_SQL = _cms_sql()
-# Queued round 11 under the two-round pattern, REGISTERED round 12 in
-# QUERIES/ORACLES below (window rule 1 seats it as never-driver-green).
 
 
 # --- per-language length quantiles ---------------------------------------
@@ -568,37 +564,6 @@ SELECT lang, COUNT(*) AS n_docs,
        ROUND(quantile_cont(n_chars, 0.99), 6) AS p99
 FROM documents GROUP BY lang ORDER BY lang
 """
-
-
-def doc_length_quantiles_approx(spark: SparkSession, sf_dir: str,
-                                accuracy: int = 10_000) -> DataFrame:
-    """The SKETCH path for the same census: ``percentile_approx``
-    (Greenwald-Khanna, bounded memory ~ accuracy) instead of exact
-    ``percentile`` (memory ~ distinct values per group).  This is the
-    swap every "exact percentile" scale-note in this repo points at:
-    at 100 TB a group can hold billions of distinct values and the
-    exact aggregate's state explodes, while the sketch stays at
-    O(accuracy) per group with rank error <= 1/accuracy.
-
-    Not oracle-gated (DuckDB has no GK sketch and approximation is
-    engine-specific by nature); pinned in tests/test_curation.py
-    against the exact quantiles with the sketch's own rank-error
-    bound."""
-    docs = _t(spark, sf_dir, "documents")
-    q = F.expr(
-        f"percentile_approx(n_chars, array(0.5D, 0.9D, 0.99D), {accuracy})")
-    agg = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"), q.alias("q")
-    )
-    return (
-        agg.select(
-            "lang", "n_docs",
-            F.col("q")[0].alias("p50"),
-            F.col("q")[1].alias("p90"),
-            F.col("q")[2].alias("p99"),
-        )
-        .orderBy("lang")
-    )
 
 
 # --- sample_weighted: deterministic weighted sampling (A-ES) ---------------

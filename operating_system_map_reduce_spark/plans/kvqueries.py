@@ -244,7 +244,7 @@ ORDER BY key
 # SET appends an AUTHDIFF record (username, profile bytes) and replay
 # upserts it last-write-wins (p3/server/my_storage.cc:150-169 writes
 # the record; load_file:573-702 applies it).  Two dispatch-parity rules
-# the round-7 degenerate-file work pinned (engine.py:363-447) are the
+# the degenerate-file tests pin (engine.py:363-447) are the
 # interesting semantics: duplicate REG inserts are FIRST-value-wins,
 # and an AUTHDIFF for a user with no REG record still creates the
 # entry (empty-credential upsert), so the user exists with an

@@ -1,4 +1,4 @@
-"""Sequence/series mining and corpus-statistics query plans (round 5).
+"""Sequence/series mining and corpus-statistics query plans.
 
 Beyond-reference tier (SURVEY.md section 2.5 taxonomy): the analytics a
 training-data/observability pipeline runs on top of the engine's event
@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from operating_system_map_reduce_spark.operators import dedup as _dd
 from operating_system_map_reduce_spark.sources.tables import load_table
 
 
@@ -46,7 +45,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # the filled VALUES are hash-checked through the sum while the result
 # stays |users|-sized.
 #
-# Grid bound (round-6): the per-user grid is span/step rows, and an
+# Grid bound: the per-user grid is span/step rows, and an
 # unbounded span is a latent blowup at 100 TB (one user with a 10-year
 # [first, last] extent explodes to 87k rows).  ``max_span_hours`` caps
 # the grid to the most recent N hours per user (retention-window
@@ -244,7 +243,7 @@ GROUP BY path ORDER BY n_paths DESC, path LIMIT 20
 # session; the count-join also wins at sf1 and sf0.1).  The
 # count-join's verify moves only narrow (id_a, id_b, n_a) rows into a
 # map-side-combining hash aggregate, and its candidate volume is
-# replica-linear.  Full account: SCALING.md round-12.
+# replica-linear.  Full account: SCALING.md.
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-join over the at-rest shingle-bucketed postings table
@@ -257,7 +256,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUCKET of postings, bucket size grows linearly with the corpus,
     and the SHJ build side cannot spill.  The unpinned plan is the
     exchange-free SortMergeJoin of two bucketed scans, whose bucket
-    sorts spill gracefully and scale (SCALING.md round-13)."""
+    sorts spill gracefully and scale (SCALING.md)."""
     from operating_system_map_reduce_spark.plans.pipeline import (
         bucketed_postings)
 
@@ -404,9 +403,9 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the census reads the edge set six ways (degrees twice, both join
     # sides, the semi-join target, the count); every reference is a
-    # scan of the at-rest b_edge table (round 13 -- replaced the
-    # localCheckpoint whose ContextCleaner cadence swung graph timings
-    # ~2x run-to-run; see bucketed_edges' account)
+    # scan of the at-rest b_edge table (it replaced the localCheckpoint
+    # whose ContextCleaner cadence swung graph timings ~2x run-to-run;
+    # see bucketed_edges' account)
     edges = bucketed_edges(spark, sf_dir)
     deg = (edges.select(F.col("id_a").alias("v"))
            .unionAll(edges.select(F.col("id_b").alias("v")))
@@ -737,11 +736,6 @@ def _bpe_trained_sql() -> str:
 
 BPE_TRAINED_SQL = _bpe_trained_sql()
 
-# Registered round 11 (was the round-10 PENDING_R11 queue while the
-# registry sat frozen at 138 for the recovery round): the entry lives
-# in QUERIES/ORACLES below; the mechanical window seats it via rule 1
-# (never driver-green) until its first CORRECTNESS row lands.
-
 
 # --- token_bpe_encode: APPLY the trained tokenizer to the corpus -----------
 # token_bpe_trained learns the merge table; this face runs the step a
@@ -756,8 +750,8 @@ BPE_TRAINED_SQL = _bpe_trained_sql()
 # corpus-wide: per-word BPE lengths are computed ONCE on the distinct
 # vocabulary, and the corpus pass is explode(words) -> one word-keyed
 # equi-join -> per-doc hash agg.  The vocab side GROWS with the corpus,
-# so it carries no broadcast hint -- AQE picks the join strategy (the
-# round-7 lesson).  Oracle: the shared unrolled CTE chain extended to
+# so it carries no broadcast hint -- AQE picks the join strategy.
+# Oracle: the shared unrolled CTE chain extended to
 # v{N}, then the identical join+agg in DuckDB.
 
 def _bpe_final_vocab(spark: SparkSession, sf_dir: str,
@@ -811,9 +805,6 @@ GROUP BY doc_id ORDER BY doc_id
 
 
 BPE_ENCODE_SQL = _bpe_encode_sql()
-# Queued round 11 under the two-round pattern (implement + locally
-# oracle-gate while the window is spoken for), REGISTERED round 12 in
-# QUERIES/ORACLES below -- window rule 1 seats it as never-driver-green.
 
 
 # --- profile_orders: one-pass data-profiling operator ----------------------
@@ -960,7 +951,7 @@ GROUP BY p.label ORDER BY p.label
 # distance <= 1 (exact dup or one edit), BLOCKED on (brand, trailing
 # noun, LENGTH BAND).  Distance <= 1 forces |len_a - len_b| <= 1, so
 # the band is lossless for the match columns; it exists to kill the
-# in-block quadratic (round-5 SCALING finding: (brand, noun)-only
+# in-block quadratic (SCALING.md: (brand, noun)-only
 # blocking ran 5.1x on 10x data because a hot block compares
 # block_size^2 pairs; with the band a hot block only pairs names of
 # near-equal length).  The band is part of the EQUI join key: the left
@@ -1015,14 +1006,14 @@ def deletion_neighborhood_pairs(p: DataFrame) -> DataFrame:
     density, never block_size^2.  Duplicate variants ('aab' emits 'ab'
     twice) dedup MAP-SIDE via array_distinct before the explode -- ids
     are unique, so per-name key dedup equals the row-level distinct
-    without shuffling the keyed table (round-7 plan fix: the old
-    .distinct() was a full wide exchange).
+    without shuffling the keyed table (a plain .distinct() would be a
+    full wide exchange).
 
     Parallelism: the explode is distributed across cores by a
     p_partkey repartition of the INPUT rows first.  part.parquet is
     one file well under a 128 MB split even at 10x rows, so both
     explode map sides ran in ONE scan task -- a serial term a
-    core-scaling probe exposed (OPTIMIZATION_r15.md SS8: at 10x part
+    core-scaling probe exposed (at 10x part
     rows the face ran 8.4x longer and 8-vs-32-core read 1.03 -- linear
     in data, flat in cores, the single-split signature of one huge
     unsplittable input).  The repartition
@@ -1095,7 +1086,7 @@ ORDER BY p_brand, noun
 
 # --- fuzzy_match_symspell: the LINEAR fuzzy path, gate-verified -------------
 # The SymSpell deletion-neighborhood matcher as a first-class oracled
-# query (round-7): this is the plan you actually run at 100 TB when a
+# query: this is the plan you actually run at 100 TB when a
 # (brand, noun) block is hot with same-length names -- candidates come
 # from an equi-join on shared single-deletion keys (L+1 keys per name,
 # every stage linear in input + true-match density), never from pairing
@@ -1430,7 +1421,7 @@ _PR_ITERS = 3
 def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operating_system_map_reduce_spark.plans.pipeline import bucketed_edges
 
-    # at-rest edge table (round 13): the three unrolled iterations
+    # at-rest edge table: the three unrolled iterations
     # re-reference the edge set per step -- each reference is a
     # bucketed scan, not a checkpoint block (see bucketed_edges)
     e = bucketed_edges(spark, sf_dir)

@@ -296,11 +296,11 @@ from operating_system_map_reduce_spark.operators import multimodal as _mm
 def bucketed_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The signature as an AT-REST doc_id-bucketed parquet table.
 
-    Round-12 re-plan of the minhash verify path: the round-11 shape
-    broadcast the candidate-pair ID list ("bounded by LSH banding"),
-    but candidate counts grow ~linearly with the corpus -- at 10^9+
-    docs the pair list is tens of GB, the same lying-estimate OOM
-    class the round-11 sweep exists to forbid, deferred rather than
+    Why the minhash verify path reads it: broadcasting the
+    candidate-pair ID list ("bounded by LSH banding") does not hold,
+    because candidate counts grow ~linearly with the corpus -- at
+    10^9+ docs the pair list is tens of GB, the same lying-estimate
+    OOM class the plan sweep exists to forbid, deferred rather than
     eliminated.  Writing the signature doc_id-bucketed (16 buckets
     here; at 100 TB, sized so a bucket fits an executor) removes the
     need for ANY broadcast: a join on doc_id reads the buckets with
@@ -318,9 +318,9 @@ def bucketed_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old session-slot persist (cached_signature) existed to share
     the Python stage between query consumers, but since this table
     replaced the through-Python frame in every query plan, the write
-    job IS the only consumer -- the round-12 code review caught both
-    the dead multi-GB persist it left behind and the stale-data
-    hazard of building a fresh-mtime table from a mtime-less slot."""
+    job IS the only consumer; keeping the slot would leave a dead
+    multi-GB persist and the stale-data hazard of building a
+    fresh-mtime table from a mtime-less slot."""
     from operating_system_map_reduce_spark.plans.analytics import at_rest_table
 
     return at_rest_table(
@@ -332,12 +332,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = bucketed_signature(spark, sf_dir)
     pairs = _dd.candidate_pairs(_dd.lsh_bands(sig))
     sh = sig.select(F.col("doc_id"), F.col("shingles"))
-    # Verify-join shape (round 12, third re-plan -- see
+    # Verify-join shape (third re-plan -- see
     # bucketed_signature): the corpus's shingle arrays must neither
     # ride a broadcast (the lying-estimate OOM class -- the planner's
     # original pick) nor a shuffle (the first re-plan SHUFFLE_HASH-
     # pinned the array sides and sf10 went 18.9 -> 99 s moving 500k
-    # docs' arrays through two exchanges).  The round-11 answer
+    # docs' arrays through two exchanges).  The second answer
     # broadcast the candidate-pair ID list -- corpus-growing, merely
     # deferred the OOM.  With the signature bucketed on doc_id both
     # verify joins are exchange-free on the array side with NO
@@ -441,9 +441,9 @@ ORDER BY id_a, id_b
 def corpus_novelty_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % 10 == 7
-    # Round 12 (the minhash re-plan's second consumer): the bands
-    # derive from the AT-REST bucketed signature table, not the
-    # through-mapInPandas frame.  The round-11 SHUFFLE_HASH pin on the
+    # The bands derive from the AT-REST bucketed signature table (the
+    # minhash re-plan's second consumer), not the through-mapInPandas
+    # frame.  An earlier SHUFFLE_HASH pin on the
     # batch side existed because the standing index was corpus-grown
     # behind a Python barrier and read as scan-sized (< 64 MB), so the
     # planner kept electing to broadcast it.  With the signature on
@@ -539,8 +539,8 @@ ORDER BY simhash
 # replica-linear in input, candidates and output yet 17-18x on 10x
 # data between sf10 and sf100 -- per-task hash-aggregate state at
 # 32-bucket parallelism crossing the spill threshold -- and 256
-# buckets at constant total work collapsed the term (SCALING.md
-# round-14).  4 MiB of source corpus per bucket reproduces the probed
+# buckets at constant total work collapsed the term (SCALING.md).
+# 4 MiB of source corpus per bucket reproduces the probed
 # cells: every benchmark/test SF and the sf10 replica corpus stay at the
 # floor of 32 (task-per-core on the local[32] harness), the sf100
 # replica corpus (810 MB) gets 256.
@@ -618,34 +618,18 @@ def bucketed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental maintenance of the at-rest postings tier -----------------
-# Round-14 staging (r13 verdict's "What's missing #4"): the at-rest
-# tables invalidate by source mtime and pay a FULL rebuild on any
-# change -- fine for a static benchmark corpus, wrong for the 100 TB
-# production shape, an APPENDING corpus (continuous crawl/ingest)
-# where the daily delta is a fraction of a percent of the standing
-# index.  Postings are per-doc derivations (doc_id, n, s) with no
-# cross-doc state, so maintenance is exact delta-append: new docs'
-# postings land in their correct bucket files (joins stay
-# exchange-free across appends) and a periodic compaction restores
-# the one-file-per-bucket sort guarantee -- the changelog + SAV
-# lifecycle (reference: p4/server/my_storage.cc append + SAV
-# compaction) applied to the analytic tier.  Equivalence to the full
-# rebuild is pinned in tests/test_r15_queue.py the same way
-# changelog_incremental_agg pinned delta-merge == recompute; the
-# delta feed comes from the same ChangeLog machinery the KV tier
-# replays (sources/changelog.py).
-
-def postings_seed(spark: SparkSession, docs: DataFrame, table: str,
-                  n_buckets: int = 32) -> str:
-    """Full build of a standalone incremental postings table from the
-    base corpus (the one-time cost the append path amortizes)."""
-    from operating_system_map_reduce_spark.sources.bucketing import (
-        write_bucketed)
-
-    write_bucketed(_dd.shingle_postings(docs), table, "s",
-                   n_buckets=n_buckets, one_file_per_bucket=True)
-    return table
-
+# The at-rest tables invalidate by source mtime and pay a FULL rebuild
+# on any change -- fine for a static benchmark corpus, wrong for an
+# APPENDING corpus (continuous crawl/ingest) where the daily delta is a
+# fraction of a percent of the standing index.  Postings are per-doc
+# derivations (doc_id, n, s) with no cross-doc state, so maintenance is
+# exact delta-append: new docs' postings land in their correct bucket
+# files (joins stay exchange-free across appends) and a periodic
+# compaction restores the one-file-per-bucket sort guarantee -- the
+# changelog + SAV lifecycle (reference: p4/server/my_storage.cc append +
+# SAV compaction) applied to the analytic tier.  Equivalence to the
+# full rebuild is pinned in tests/test_pipeline_ops.py
+# (TestIncrementalPostings).
 
 def postings_append(spark: SparkSession, delta_docs: DataFrame, table: str,
                     n_buckets: int = 32) -> None:
@@ -658,45 +642,6 @@ def postings_append(spark: SparkSession, delta_docs: DataFrame, table: str,
         append_bucketed)
 
     append_bucketed(_dd.shingle_postings(delta_docs), table, "s",
-                    n_buckets=n_buckets)
-
-
-def postings_delta_from_changelog(log, since_seq: int) -> DataFrame:
-    """The CDC feed: documents that entered the corpus changelog AFTER
-    ``since_seq`` (insert-only tail; latest-seq-per-doc dedup guards
-    against a doc appearing twice in one tail).  This is the same
-    replay machinery the KV tier uses (sources/changelog.ChangeLog),
-    pointed at a documents-schema log -- at 100 TB the ingest pipeline
-    appends here and the postings/signature maintenance ticks consume
-    the tail instead of re-deriving the corpus."""
-    return log._dedup(
-        log.raw().filter(F.col(log.seq_col) > F.lit(int(since_seq))))
-
-
-def signature_seed(spark: SparkSession, docs: DataFrame, table: str,
-                   n_buckets: int = 16) -> str:
-    """Full build of a standalone incremental SIGNATURE table (the
-    b_sig shape: per-doc minhash + shingles, doc_id-bucketed) -- the
-    same per-doc-derivation argument as postings_seed: signatures
-    carry no cross-doc state, so the appending-corpus maintenance is
-    exact delta-append here too.  One seed/append pair per at-rest
-    table keeps each table's key/bucket policy in one place."""
-    from operating_system_map_reduce_spark.sources.bucketing import (
-        write_bucketed)
-
-    write_bucketed(_dd.minhash_signature(docs), table, "doc_id",
-                   n_buckets=n_buckets, one_file_per_bucket=True)
-    return table
-
-
-def signature_append(spark: SparkSession, delta_docs: DataFrame, table: str,
-                     n_buckets: int = 16) -> None:
-    """Append NEW documents' signatures into an existing signature
-    table -- delta-proportional; see postings_append."""
-    from operating_system_map_reduce_spark.sources.bucketing import (
-        append_bucketed)
-
-    append_bucketed(_dd.minhash_signature(delta_docs), table, "doc_id",
                     n_buckets=n_buckets)
 
 
@@ -717,7 +662,7 @@ def incremental_postings_demo_table(spark: SparkSession, sf_dir: str) -> str:
     st_mtime_ns, writer pid; swept by the same _ensure_bucketed pass
     that writes the seed), so the lifecycle runs once per session and
     every later reference is a bucketed table scan.  By the
-    equivalence tests/test_r15_queue.py pins, the result is
+    equivalence tests/test_pipeline_ops.py pins, the result is
     row-identical to a from-scratch build over ALL documents -- which
     is exactly what lets dedup_ngram_incremental below share the
     from-scratch DuckDB oracle."""
@@ -756,10 +701,7 @@ def incremental_postings_demo_table(spark: SparkSession, sf_dir: str) -> str:
 
 def dedup_ngram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs served from the INCREMENTALLY-MAINTAINED
-    postings table (seed 99% -> append 1% tick -> compact) --
-    REGISTERED round 15 (the two-round pattern's second leg: staged +
-    pinned five ways in r14, seated by rule 1 as never-driver-green;
-    seat math in plans/__init__.py ROUND-15 notes).  The plan is
+    postings table (seed 99% -> append 1% tick -> compact).  The plan is
     dedup_ngram_jaccard's exactly -- same exchange-free bucketed
     self-join, same pair aggregate -- only the scan is the maintained
     table, so the driver gate proves maintenance == rebuild
@@ -785,7 +727,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planner sees real parquet statistics (no join hint is needed;
     through a mapInPandas barrier the planner once read a 3-4 GB side
     as < 64 MB and broadcast it).  Data-proportional through four
-    decades (sf100: 10.5x on 10x data, SCALING.md round-12).  This is
+    decades (sf100: 10.5x on 10x data, SCALING.md).  This is
     the Spark analog of the reference's persistent bucketed store
     (p2/server/concurrenthashmap.h:90) serving its full-scan tier
     (p5/server/map.h:80-81).
@@ -839,8 +781,7 @@ def _ngram_pair_rows(ex: DataFrame) -> DataFrame:
 def bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Jaccard >= 0.2 near-dup pair graph (id_a, id_b) as an
     AT-REST parquet table bucketed on id_a -- the graph tier's
-    standing artifact (round 13, closing the r12 verdict's graph-noise
-    item): pagerank_neardup and dedup_graph_triangles reference the
+    standing artifact: pagerank_neardup and dedup_graph_triangles reference the
     edge set up to six ways (degrees twice, both join sides, the
     semi-join target, counts / unrolled PageRank iterations), and the
     localCheckpoint they shared swung their timings ~2x run-to-run on
@@ -856,7 +797,7 @@ def bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Same corpus-keyed bucket count as b_post: the edge count is
     # replica-linear in the corpus (exactly 10.00x per decade,
-    # SCALING.md round-14), so a constant count would repeat the
+    # SCALING.md), so a constant count would repeat the
     # per-task-volume hazard the postings policy fixes.
     return at_rest_table(
         spark, sf_dir, "b_edge", "id_a",
@@ -1024,13 +965,13 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast the QUERY side: it is bounded by |Q| = 3 docs'
     # postings regardless of corpus size, so the corpus side streams
     # with NO shuffle at all.  Left to its own estimates the planner
-    # picked the reverse build (the lying-estimate class of the
-    # round-11 sweep: both sides sit behind the mapInPandas shingling
+    # picked the reverse build (the lying-estimate class of the plan
+    # sweep: both sides sit behind the mapInPandas shingling
     # barrier and read as scan-sized) -- broadcasting the corpus.
     # The ID filter sits BELOW the shingling stage (a filter above a
     # mapInPandas barrier cannot be pushed through it, so the original
     # shape shingled the whole corpus to keep 3 docs), which makes the
-    # round-12 self-enforcing bound's count job |Q|-doc-sized too.
+    # self-enforcing bound's count job |Q|-doc-sized too.
     # memo key carries st_mtime_ns: an in-place testdata regeneration
     # must force a fresh bound count (the guard's memo contract)
     import os as _os
@@ -1158,8 +1099,6 @@ ORDER BY query_id, fused_rank
 
 
 RRF_FUSION_SQL = _rrf_fusion_sql()
-# Queued round 11 under the two-round pattern, REGISTERED round 12
-# (window rule 1 seats it as never-driver-green).
 QUERIES["retrieval_rrf_fusion"] = retrieval_rrf_fusion
 ORACLES["retrieval_rrf_fusion"] = RRF_FUSION_SQL
 
@@ -1221,7 +1160,7 @@ ORACLES.update({
     "dedup_simhash": DEDUP_SIMHASH_SQL,
     "dedup_ngram_jaccard": DEDUP_NGRAM_SQL,
     # the incremental face computes the SAME rows as the full rebuild
-    # (append == rebuild, pinned five ways in tests/test_r15_queue.py)
+    # (append == rebuild, pinned in tests/test_pipeline_ops.py)
     # -- sharing the from-scratch oracle is the point: the driver gate
     # proves the maintenance lifecycle equals the rebuild end-to-end
     "dedup_ngram_incremental": DEDUP_NGRAM_SQL,
@@ -1592,10 +1531,6 @@ ORACLES["multimodal_features"] = MULTIMODAL_FEATURES_SQL
 # a mid-length text.  At 100 TB: decode is Arrow-batched per partition,
 # both joins are doc_id-keyed (the embedding side is the smaller table
 # at every SF -- AQE picks broadcast or shuffle), nothing collects.
-#
-# Registered round 11 (was the round-10 PENDING_R11 queue while the
-# registry sat frozen at 138 for the recovery round); the mechanical
-# window seats the face via rule 1 until its first driver row lands.
 
 def multimodal_text_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -1604,11 +1539,11 @@ def multimodal_text_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws_toks = F.size(F.filter(F.split(F.col("text"), "\\s+"),
                               lambda t: t != ""))
     text_side = docs.select("doc_id", "lang", ws_toks.alias("ws_tokens"))
-    # emb_norm stays RAW (the float-sum discipline, round 10): the
+    # emb_norm stays RAW (the float-sum discipline): the
     # Spark fold and DuckDB's list_sum are sequentially-associated and
     # bit-identical today, and the tolerance compare absorbs any future
     # sub-ulp divergence -- ROUND(...,6) is what would turn such a
-    # divergence into a half-boundary flip (the r9 q8/q14 lesson)
+    # divergence into a half-boundary flip (as in q8/q14)
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
         F.expr(_sim.norm_sql("embedding")).alias("emb_norm"))
@@ -2223,7 +2158,7 @@ ORACLES["similarity_ivfpq_search"] = SIMILARITY_IVFPQ_SQL
 # and the embeddings.parquet st_mtime_ns, so an in-place regeneration
 # retrains): a production job trains once per snapshot and persists the two
 # small matrices, so serving cost -- not training cost -- is the steady
-# state this query times.  SQL-oracled since round 8 by UNROLLING the
+# state this query times.  SQL-oracled by UNROLLING the
 # fixed-count Lloyd iterations as a chained CTE (the same
 # finite-deterministic-iteration precedent as pagerank_neardup's
 # unrolled CTE and the novelty cascade's wave unroll): deterministic
@@ -2256,7 +2191,7 @@ def similarity_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_trained_oracle_sql(iters: int = 5, k: int = 5) -> str:
     """Unrolled deterministic-Lloyd oracle for the trained IVF-PQ stack.
 
-    Training half (new in round 8): ``iters`` chained CTE stages per
+    Training half: ``iters`` chained CTE stages per
     quantizer.  IVF is spherical k-means over unit vectors -- assignment
     ranks dot(u, centroid) DESC with cell ASC tie-break (numpy argmax =
     first max), update is the normalized per-cell mean with empty cells

@@ -331,8 +331,7 @@ STREAM_NOVELTY_SQL = _novelty_cascade_sql()
 
 
 # --- stream_novelty_index_compact: the standing index's SAV -------------
-# Registered round 11 (the round-10 verdict's directive #4 made
-# first-class): run the full admission cascade, then compact the
+# Run the full admission cascade, then compact the
 # standing index table (streaming/novelty_stream.compact_novelty_index
 # -- distinct-snapshot rewrite + atomic swap, the SAV shape of
 # p3/server/my_storage.cc:505-565) and return the compacted index
@@ -345,11 +344,12 @@ STREAM_NOVELTY_SQL = _novelty_cascade_sql()
 # LAST, so a nullable sort key would hash-diverge on row order.
 
 def stream_novelty_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from operating_system_map_reduce_spark.streaming import scratch_root
     from operating_system_map_reduce_spark.streaming.novelty_stream import (
-        _scratch_root, compact_novelty_index, run_novelty_stream,
+        compact_novelty_index, run_novelty_stream,
     )
 
-    idx = os.path.join(_scratch_root(), f"index-{uuid.uuid4().hex[:12]}")
+    idx = os.path.join(scratch_root(), f"index-{uuid.uuid4().hex[:12]}")
     run_novelty_stream(spark, sf_dir, index_out_dir=idx)
     compact_novelty_index(spark, idx, files_per_kind=2)
     return (spark.read.parquet(idx)

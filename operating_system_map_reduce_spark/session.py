@@ -25,7 +25,7 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # A silently-crashed Python worker otherwise deadlocks its JVM task
     # on the dead socket with no traceback (observed once at sf100 --
-    # SCALING.md round-14 incident note); the faulthandler costs
+    # SCALING.md incident note); the faulthandler costs
     # nothing in steady state and turns that hang into a diagnosable
     # task failure.
     "spark.python.worker.faulthandler.enabled": "true",
@@ -51,7 +51,7 @@ _DEFAULTS = {
     # local[N] runs all N task slots inside the driver JVM, so the
     # driver heap IS the executor heap: Spark's 1g default leaves
     # ~30 MB of working memory per slot at N=32 and OOMed the sf1
-    # scaling spot-run (round 10).  8g keeps per-slot memory at the
+    # scaling spot-run.  8g keeps per-slot memory at the
     # level a real executor would get; on a cluster this setting is
     # irrelevant (executors are sized by spark-submit).  Only effective
     # when this factory launches the JVM -- getOrCreate on a live

@@ -115,26 +115,3 @@ def read_entries(path: str) -> Iterator[tuple[bytes, ...]]:
         consumed = 8 + 8 * arity + sum(lens)
         pos += _pad(consumed)
         yield (tag, *fields)
-
-
-def export_kv_state(df, path: str, key_col: str = "key",
-                    value_col: str = "value") -> int:
-    """Serialize a (key, value) DataFrame as KVKVKVKV entries.
-
-    Streams partition-by-partition through the driver
-    (toLocalIterator): bounded memory, but inherently sequential --
-    this is the reference's single-file format, used for migration and
-    p3-test parity, not for bulk durability (that is the parquet
-    changelog)."""
-    def enc(v) -> bytes:
-        if isinstance(v, (bytes, bytearray)):
-            return bytes(v)
-        return str(v).encode()
-
-    total = 0
-    with open(path, "wb"):
-        pass  # truncate
-    it = df.select(key_col, value_col).toLocalIterator()
-    total = write_entries(
-        path, ((KVENTRY, enc(r[0]), enc(r[1])) for r in it))
-    return total

@@ -10,9 +10,8 @@ key needs NO Exchange -- the single biggest shuffle eliminated at
 stage.  ``sortBy`` additionally pre-sorts within buckets so the
 SortMergeJoin skips its sort.
 
-tests/test_bucketing.py asserts the physical plan: joining two
-co-bucketed tables contains no ShuffleExchange, while the same join on
-plain parquet does.
+tests/test_plans.py asserts the physical plan of the registered
+bucketed join (bucketed_segment_revenue): no exchange feeds the join.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 16,
     ``one_file_per_bucket`` repartitions on the bucket key first
     (murmur3 HashPartitioning — the same hash the bucket id uses, so
     each task holds exactly one bucket) and was measured a strict win
-    for the at-rest builds (round 14, sf10 b_post): build 13.8 →
+    for the at-rest builds (sf10 b_post): build 13.8 →
     7.4 s (32 writers each committing ONE sorted file instead of 32
     tasks × 32 buckets = 1024 tiny files) and downstream reads ~9%
     faster (no per-bucket multi-file merge).  Trade-offs: the
@@ -107,7 +106,7 @@ def compact_bucketed(spark: SparkSession, table: str, key: str,
     # compaction is a per-bucket local rewrite, which is also the
     # 100 TB plan (an explicit repartition would be both a corpus
     # shuffle AND is silently elided by the planner against a
-    # bucketed source -- probed round 14, leaving one file per
+    # bucketed source -- probed, leaving one file per
     # arbitrary task).  autoBucketedScan would otherwise drop the
     # bucket layout here because the write expresses no distribution
     # requirement.  (saveAsTable reads the old files and writes new
@@ -124,19 +123,3 @@ def compact_bucketed(spark: SparkSession, table: str, key: str,
             spark.conf.set(auto, prev)
     spark.sql(f"DROP TABLE {table}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key: str) -> DataFrame:
-    """Join two co-bucketed tables on their bucket key.  With matching
-    bucket counts Catalyst plans a shuffle-free SortMergeJoin; AQE
-    cannot improve on it because there is no exchange to re-plan."""
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, key)
-
-
-def has_shuffle(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle exchange."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan

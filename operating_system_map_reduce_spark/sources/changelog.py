@@ -13,10 +13,10 @@ Physical layout per table:
 
 Appends are driver-side pyarrow writes (a log append is a server-side
 action, ~ms, no Spark job).  The 100 TB ingestion path is
-streaming.changelog_cdc.ChangelogStreamSink: a Structured Streaming
-sink writing this same layout distributed, interleavable with driver
-appends.  ``replay()`` is one shuffle on key (window dedup) regardless
-of log file count and needs no ordering assumption across files.
+``ChangelogStreamSink`` below: a Structured Streaming sink writing this
+same layout distributed, interleavable with driver appends.
+``replay()`` is one shuffle on key (window dedup) regardless of log
+file count and needs no ordering assumption across files.
 
 Serving reads: the reference answers point ops from an in-memory Map and
 replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
@@ -165,13 +165,11 @@ class ChangeLog:
     def _log_paths(self, names) -> list[str]:
         return [os.path.join(self.log_dir, f) for f in names]
 
-    def raw(self, log_files: list[str] | None = None) -> DataFrame:
-        """base ∪ log, no dedup; ``log_files`` pins which log files are
-        read (default: every one listed now)."""
-        if log_files is None:
-            log_files = self._list(self.log_dir)
+    def raw(self) -> DataFrame:
+        """base ∪ log, no dedup."""
         parts = [self._read_files(files)
-                 for files in (self._list(self.base_dir), log_files) if files]
+                 for files in (self._list(self.base_dir), self._list(self.log_dir))
+                 if files]
         if not parts:
             return self.spark.createDataFrame([], self.schema)
         df = parts[0]
@@ -430,6 +428,76 @@ class ChangeLog:
             base = tuple(sorted(os.listdir(self.base_dir)))
             self._publish(Snapshot((base, ()), snap.state, snap.empty, snap.state_seq,
                                    overlay={}, seq=snap.seq, memo=snap.memo))
+
+
+class ChangelogStreamSink:
+    """Structured Streaming WRITE path into the ChangeLog layout -- the
+    100 TB ingestion shape the batch ``ChangeLog.append`` (driver-side
+    pyarrow, a per-request ~ms action) deliberately is not.
+
+    A mutation stream (any readStream source carrying the log schema:
+    seq, op, key, payload columns) lands in ``<root>/log/`` as the same
+    one-parquet-file-per-batch layout the driver writes, so every
+    reader -- ``replay()``, the snapshot's overlay and fold,
+    compaction -- works unchanged on streamed appends, and the two
+    write paths can interleave in one log.
+
+    Mechanics: ``foreachBatch`` writes each micro-batch DISTRIBUTED to a
+    tmp dir (executors stream part-files; the driver never materializes
+    the batch), fsyncs, then renames the completed part-files into the
+    log dir -- readers can never observe a half-written file.  The
+    rename loop is driver-side metadata-only (O(files), not O(bytes)).
+    Checkpointed: a restart re-processes only unread source batches.
+    Exactly-once is not required: replay's latest-seq-per-key dedup
+    makes a replayed duplicate record a no-op, the same idempotence the
+    reference gets from replaying a record already in the map
+    (p3/server/my_storage.cc:573-702 upserts on AUTHDIFF/KVUPDATE)."""
+
+    def __init__(self, log: ChangeLog):
+        self.log = log
+        self.checkpoint_dir = os.path.join(log.root, "ingest-checkpoint")
+
+    def _sink_batch(self, batch: DataFrame, batch_id: int) -> None:
+        cols = [f.name for f in self.log.schema.fields]
+        tmp = os.path.join(self.log.root, f"ingest.tmp-{uuid.uuid4().hex[:8]}")
+        batch.select(*cols).write.mode("overwrite").parquet(tmp)
+        renamed = False
+        for i, name in enumerate(sorted(os.listdir(tmp))):
+            if not name.endswith(".parquet"):
+                continue
+            src = os.path.join(tmp, name)
+            # Spark's parquet writer does NOT fsync data files, so the
+            # sink fsyncs each completed part file itself (a read-only
+            # fd flushes that file's dirty pages on Linux) BEFORE the
+            # rename publishes it -- the same contents-then-metadata
+            # ordering ChangeLog.append uses.
+            with open(src, "rb") as f:
+                os.fsync(f.fileno())
+            dst = os.path.join(
+                self.log.log_dir,
+                f"batch-stream-{batch_id:012d}-{i:04d}-{uuid.uuid4().hex[:8]}.parquet")
+            os.rename(src, dst)
+            renamed = True
+        if renamed:
+            # make the renames themselves durable: without a directory
+            # fsync a crash here can lose the new directory entries even
+            # though the part-file bytes were fsync'd above.
+            fsync_dir(self.log.log_dir)
+        shutil.rmtree(tmp)
+
+    def ingest_available(self, stream: DataFrame) -> None:
+        """Drain everything currently available from the mutation stream
+        into the log (Trigger.AvailableNow), blocking until done."""
+        q = (stream.writeStream.foreachBatch(self._sink_batch)
+             .option("checkpointLocation", self.checkpoint_dir)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+
+    def start(self, stream: DataFrame):
+        """Continuous ingestion; returns the StreamingQuery handle."""
+        return (stream.writeStream.foreachBatch(self._sink_batch)
+                .option("checkpointLocation", self.checkpoint_dir)
+                .start())
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:

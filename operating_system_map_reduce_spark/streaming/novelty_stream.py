@@ -27,7 +27,6 @@ verdicts are hash-checked end-to-end through the driver gate.
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
 import shutil
@@ -41,6 +40,7 @@ from pyspark.sql.types import (LongType, StringType, StructField, StructType)
 
 from operating_system_map_reduce_spark.operators import dedup as _dd
 from operating_system_map_reduce_spark.sources.tables import load_table
+from operating_system_map_reduce_spark.streaming import scratch_root
 
 NOVELTY_WAVES = 3
 
@@ -59,12 +59,12 @@ _DOC_SCHEMA = StructType([
 _SEED_CACHE: dict = {}
 
 # The staged wave FILES are likewise cached per (session, sf_dir,
-# source mtime) -- round 15.  Staging is fixture manufacturing of the
-# synthetic stream source (a production crawler's waves arrive as
-# directories and need no staging at all; see the staging comment in
+# source mtime).  Staging is fixture manufacturing of the synthetic
+# stream source (a production crawler's waves arrive as directories and
+# need no staging at all; see the staging comment in
 # run_novelty_stream), the same class as windows._stream_dir's
-# .scratch symlinks for the events stream, which have been staged
-# once and re-read across runs since round 5.  The staged files are
+# symlinks for the events stream, which are staged once per process
+# and re-read across runs.  The staged files are
 # INPUT (a pure deterministic re-partitioning of documents.parquet),
 # never mutated by a run -- each run replays them against its own
 # fresh checkpoint -- so sharing them caches no verdict, admission or
@@ -72,24 +72,6 @@ _SEED_CACHE: dict = {}
 # wave_order lists the non-empty wave ids ascending == replay order
 # (ascending mtimes; FileStreamSource picks oldest-first).
 _STAGE_CACHE: dict = {}
-
-# ONE process-lived scratch root, removed at interpreter exit: the
-# session-cached seed index and staged waves, each run's workdir and the
-# default admission logs all live under it, so repeated invocations
-# (bench steady state) never accumulate directories in /tmp.  Each run
-# still gets a unique log-<uuid> subdir (earlier results stay readable
-# for the life of the process); callers who need the log to OUTLIVE the
-# process pass out_dir explicitly.
-_SCRATCH_ROOT: list = []
-
-
-def _scratch_root() -> str:
-    if not _SCRATCH_ROOT:
-        root = tempfile.mkdtemp(prefix="novelty-")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _SCRATCH_ROOT.append(root)
-    return _SCRATCH_ROOT[0]
-
 
 def _as_index_rows(bands: DataFrame | None = None,
                    hashes: DataFrame | None = None) -> DataFrame:
@@ -120,8 +102,8 @@ def _as_index_rows(bands: DataFrame | None = None,
 def _seed_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
     # applicationId, not id(spark): CPython reuses object ids after GC,
     # so a new session could silently hit a dead session's cache slot.
-    # documents.parquet st_mtime_ns rides the key too (round-14 advice
-    # fix, matching curation._CMS_TC_CACHE and the at_rest_table tags):
+    # documents.parquet st_mtime_ns rides the key too (matching
+    # curation._CMS_TC_CACHE and the at_rest_table tags):
     # an in-place testdata regeneration mid-session must invalidate the
     # seed index or the stream admits against stale bands while the
     # oracle reads fresh parquet.
@@ -130,10 +112,10 @@ def _seed_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
     slot = _SEED_CACHE.get("seed")
     if slot is not None and slot[0] == key:
         return slot[1]
-    seed_root = tempfile.mkdtemp(prefix="seed-", dir=_scratch_root())
+    seed_root = tempfile.mkdtemp(prefix="seed-", dir=scratch_root())
     index_dir = os.path.join(seed_root, "index")
-    # Seed bands derive from the at-rest bucketed signature table
-    # (round 13, the r12 queue's zero-seat item 4): b_sig is per-doc,
+    # Seed bands derive from the at-rest bucketed signature table:
+    # b_sig is per-doc,
     # so filtering it to the corpus commutes with the signature and
     # yields IDENTICAL seed rows (pinned in tests/test_streaming.py)
     # -- while the per-session Python minhash recompute this replaces
@@ -184,7 +166,7 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
     non-empty wave, mtimes ascending = arrival order) -- session-cached
     per (application, sf_dir, source mtime), see _STAGE_CACHE.
 
-    ONE Spark write job (round-9 verdict directive #4):
+    ONE Spark write job:
     repartition(WAVES, "__wp") puts every wave's rows in exactly one
     task -- hash collisions only mean one task owns two waves -- so
     partitionBy("__wp") lands exactly one file per non-empty wave
@@ -198,13 +180,13 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
     micro-batch k -- the replay is oldest-mtime-first, so batch order
     IS ascending wave order over the non-empty waves.  probe_wave
     reads its wave id from this list instead of collecting a row per
-    batch (round 15: one fewer driver round-trip per wave)."""
+    batch (one fewer driver round-trip per wave)."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
            os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns)
     slot = _STAGE_CACHE.get("waves")
     if slot is not None and slot[0] == key:
         return slot[1], slot[2]
-    root = tempfile.mkdtemp(prefix="waves-", dir=_scratch_root())
+    root = tempfile.mkdtemp(prefix="waves-", dir=scratch_root())
     src_dir = os.path.join(root, "src")
     os.makedirs(src_dir)
     stage = os.path.join(root, "stage")
@@ -225,7 +207,7 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
         wave_order.append(w)
     shutil.rmtree(stage)
     # a replaced staging root is not deleted here: a stream may still
-    # be replaying it; it goes with _scratch_root() at exit
+    # be replaying it; it goes with scratch_root() at exit
     _STAGE_CACHE["waves"] = (key, src_dir, tuple(wave_order))
     return src_dir, tuple(wave_order)
 
@@ -306,20 +288,22 @@ def run_novelty_stream(spark: SparkSession, sf_dir: str,
     is_batch = F.col("doc_id") % 10 == 7
     corpus = docs.filter(~is_batch)
 
-    work = tempfile.mkdtemp(prefix="stream-", dir=_scratch_root())
+    work = tempfile.mkdtemp(prefix="stream-", dir=scratch_root())
     # index_out_dir (caller-owned, must not yet exist) keeps the
     # post-cascade standing index alive after the run -- the handle
     # compact_novelty_index operates on; by default the index is
     # run-scratch and dies with the workdir
     index_dir = index_out_dir or os.path.join(work, "index")
-    # the admission log is the RESULT: it must outlive the workdir
-    log_root = out_dir or _scratch_root()
+    # the admission log is the RESULT: it must outlive the workdir.
+    # Each run gets its own log-<uuid> (earlier results stay readable
+    # for the life of the process); out_dir outlives the process.
+    log_root = out_dir or scratch_root()
     log_dir = os.path.join(log_root, f"log-{uuid.uuid4().hex[:12]}")
     ckpt_dir = os.path.join(work, "checkpoint")
 
     # Arriving-wave BANDS, derived once per run from the at-rest
-    # bucketed signature table (round 15, extending the r13 seed-index
-    # re-plan to the waves): b_sig is per-doc -- a signature carries no
+    # bucketed signature table (the seed-index re-plan extended to the
+    # waves): b_sig is per-doc -- a signature carries no
     # cross-doc state -- so filtering it to the batch docs commutes
     # with the signature and yields rows IDENTICAL to the per-wave
     # Python minhash recompute this replaces (pinned in

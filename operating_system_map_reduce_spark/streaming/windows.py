@@ -20,18 +20,20 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from operating_system_map_reduce_spark.streaming import scratch_root
+
 WINDOW = "1 hour"
 WATERMARK = "30 minutes"
 
 # State-store partition count for the bounded replays.  Each stateful
 # operator materializes one state store per shuffle partition, and at
 # replay scale (one micro-batch) the per-store setup dominates: 32
-# stores cost ~2x the wall time of 8, and 8 cost ~1.3x of 4 (measured
-# round 5: windowed+dedup+session replay 5.1 s @ 8 -> 4.0 s @ 4; 2
-# loses parallelism on the session window and regresses).  A live
-# 100 TB deployment sizes this up (state must spread across executors)
-# via the env knob; the checkpoint pins it per query after first run.
-STREAM_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "4"))
+# stores cost ~2x the wall time of 8, and 8 cost ~1.3x of 4 (measured:
+# windowed+dedup+session replay 5.1 s @ 8 -> 4.0 s @ 4; 2 loses
+# parallelism on the session window and regresses).  A live 100 TB
+# deployment sizes this up (state must spread across executors); the
+# checkpoint pins it per query after first run.
+STREAM_STATE_PARTITIONS = 4
 
 
 @contextlib.contextmanager
@@ -49,12 +51,11 @@ def _stream_shuffle(spark: SparkSession):
 
 def _stream_dir(sf_dir: str) -> str:
     """The file stream source wants a DIRECTORY of files; the testdata
-    keeps one parquet per table.  Stage a per-sf scratch directory (repo
-    local, gitignored) holding a symlink to the file -- the read-only
-    source tree is never written."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    keeps one parquet per table.  Stage a per-sf directory under the
+    exit-removed streaming scratch root holding a symlink to the file --
+    the read-only source tree is never written."""
     tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(repo_root, ".scratch", "events_stream", tag)
+    d = os.path.join(scratch_root(), "events_stream", tag)
     os.makedirs(d, exist_ok=True)
     target = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     if os.path.isdir(target):

@@ -123,19 +123,6 @@ class TestEngineExport:
                      + B.entry_size(B.KVENTRY, 7, 10))
 
 
-class TestSparkExport:
-    def test_export_kv_state_round_trips(self, spark, tmp_path):
-        path = str(tmp_path / "kv.dir")
-        df = spark.createDataFrame(
-            [(f"key{i}", f"value-{i}") for i in range(20)], ["key", "value"])
-        n = B.export_kv_state(df, path)
-        assert os.stat(path).st_size == n
-        got = {e[1]: e[2] for e in B.read_entries(path)}
-        assert got == {f"key{i}".encode(): f"value-{i}".encode() for i in range(20)}
-        assert n == sum(B.entry_size(B.KVENTRY, len(f"key{i}"), len(f"value-{i}"))
-                        for i in range(20))
-
-
 def test_truncated_file_raises_with_offset(tmp_path):
     from operating_system_map_reduce_spark.sources import binlog as B
 

@@ -1,8 +1,8 @@
 """Bucketed-table co-location: the join-shuffle elimination that makes
-fact-fact joins viable at 100 TB.  Asserts the *plan*, not just the
-rows: co-bucketed join has no shuffle exchange; the identical join on
-unbucketed data does.  Also pins the at-rest table lifecycle and the
-corpus-scaled bucket count of the postings table.
+fact-fact joins viable at 100 TB.  Pins bucket pruning on a point
+lookup, the at-rest table lifecycle and the corpus-scaled bucket count
+of the postings table (the registered co-bucketed join's plan is pinned
+in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -15,8 +15,7 @@ from operating_system_map_reduce_spark.plans.pipeline import (
     _POSTINGS_BUCKET_FLOOR,
     _postings_bucket_count,
 )
-from operating_system_map_reduce_spark.sources.bucketing import (
-    bucketed_join, has_shuffle, write_bucketed)
+from operating_system_map_reduce_spark.sources.bucketing import write_bucketed
 from operating_system_map_reduce_spark.sources.tables import load_table
 
 
@@ -34,36 +33,6 @@ def bucketed_tables(spark, sf_dir):
 
 
 class TestBucketedJoin:
-    def test_cobucketed_join_has_no_shuffle(self, spark, bucketed_tables):
-        lt, rt = bucketed_tables
-        # disable broadcast so the planner must choose SMJ: the point is
-        # proving the SHUFFLE is gone, not that a small dim broadcasts
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = bucketed_join(spark, lt, rt, "custkey")
-            assert not has_shuffle(joined), \
-                joined._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-    def test_unbucketed_join_does_shuffle(self, spark, sf_dir):
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            orders = load_table(spark, sf_dir, "orders")
-            cust = load_table(spark, sf_dir, "customer")
-            joined = orders.join(cust, orders.o_custkey == cust.c_custkey)
-            assert has_shuffle(joined)
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-    def test_join_rows_match_plain_join(self, spark, sf_dir, bucketed_tables):
-        lt, rt = bucketed_tables
-        got = bucketed_join(spark, lt, rt, "custkey").count()
-        orders = load_table(spark, sf_dir, "orders")
-        cust = load_table(spark, sf_dir, "customer")
-        want = orders.join(cust, orders.o_custkey == cust.c_custkey).count()
-        assert got == want > 0
-
     def test_bucket_pruning_on_point_lookup(self, spark, bucketed_tables):
         """A point filter on the bucket key scans ~1/N of the files
         (bucket pruning) -- the KVG point-read story at rest."""

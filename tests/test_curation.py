@@ -155,6 +155,19 @@ class TestCurationPlans:
                 rel = abs(r["est_distinct"] - exact[lang]) / exact[lang]
                 assert rel < 0.51, (lang, r["est_distinct"], exact[lang])
 
+    def test_cms_overestimate_is_one_sided(self, spark, oracle_sf_dir):
+        """The Count-Min guarantee: est(t) >= true(t) for every probed
+        token -- min over D independent overcounting rows can never
+        undercount.  Also pins the report shape (exactly TOPK rows,
+        descending exact counts)."""
+        rows = curation.sketch_heavy_hitters(spark, oracle_sf_dir).collect()
+        assert len(rows) == curation.CMS_TOPK
+        counts = [r["exact_count"] for r in rows]
+        assert counts == sorted(counts, reverse=True)
+        for r in rows:
+            assert r["est_count"] >= r["exact_count"] >= 1
+            assert r["overestimate"] == r["est_count"] - r["exact_count"]
+
     def test_quantiles_ordered_and_bounded(self, spark, sf_dir):
         rows = curation.doc_length_quantiles(spark, sf_dir).collect()
         assert rows
@@ -169,37 +182,6 @@ class TestCurationPlans:
         for lang, ranks in per_lang.items():
             assert len(ranks) <= curation.SAMPLE_K
             assert sorted(ranks) == list(range(1, len(ranks) + 1)), lang
-
-
-class TestApproxQuantilesSketch:
-    def test_sketch_within_rank_error_of_exact(self, spark, sf_dir):
-        """percentile_approx (GK sketch, the bounded-memory 100 TB
-        path) must land within its rank-error bound of the exact
-        percentiles: with accuracy A, the returned value's rank is
-        within n/A of the target rank, so the value must lie between
-        the exact quantiles at p -/+ 1/A (evaluated on the actual
-        per-group data)."""
-        import os
-
-        import pandas as pd
-
-        from operating_system_map_reduce_spark.plans.curation import (
-            doc_length_quantiles_approx,
-        )
-
-        acc = 10_000
-        got = {r["lang"]: r for r in
-               doc_length_quantiles_approx(spark, sf_dir, acc).collect()}
-        docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
-        for lang, g in docs.groupby("lang"):
-            vals = g["n_chars"].sort_values().to_numpy()
-            row = got[lang]
-            assert row["n_docs"] == len(vals)
-            for p, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-                lo = vals[max(0, int((p - 1.0 / acc) * (len(vals) - 1)))]
-                hi = vals[min(len(vals) - 1,
-                              int((p + 1.0 / acc) * (len(vals) - 1)) + 1)]
-                assert lo <= row[col] <= hi, (lang, col, row[col], lo, hi)
 
 
 class TestSplitGroupHoldout:

@@ -12,6 +12,10 @@
 * The benchmark's tracer (perfbench/tracing.py) wraps engine, changelog,
   mapreduce and quota calls by name; they keep those names and the
   arguments the tracer and the workload pass.
+* Every top-level def and class of the package is reached from the
+  package, bench.py, __spark_entry__.py or perfbench/ (docstrings do
+  not count), or is listed in KEPT with its reason: library code that
+  only tests call is deleted with those tests.
 """
 
 from __future__ import annotations
@@ -94,7 +98,7 @@ def test_package_imports_resolve():
     assert not broken, broken
 
 
-ENV_READS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_STREAM_PARTS"}
+ENV_READS = {"SPARK_GRAFT_CPUS"}
 
 
 def test_package_reads_only_the_documented_env_vars():
@@ -143,3 +147,65 @@ def test_traced_names_keep_their_signatures():
     assert isinstance(ChangeLog.log_dir, property)
     assert callable(engine.run_map_reduce)
     assert _required(QuotaTracker.check_add) == ["self", "add", "when"]
+
+
+# top-level package names no query, engine command or benchmark reaches,
+# each kept for a reason a test states
+KEPT = {
+    "entry_size": "binlog size arithmetic the reference's verify_filesize "
+                  "expectations are built from (test_binlog)",
+    "shingles_expr": "reference form the served shingle postings are "
+                     "checked against (test_pipeline_ops)",
+    "simhash_spark_sql": "reference form the served simhash is checked "
+                         "against (test_pipeline_ops)",
+    "ChangelogStreamSink": "the distributed streaming ingest path into the "
+                           "changelog layout (test_snapshot, test_streaming)",
+    "deferred_due": "the window invariant test_plans pins: no due entry "
+                    "loses its seat to a non-due one",
+    "quantize": "the int8 codes the quantization tests check; the registered "
+                "face serves only their report",
+}
+
+
+def _reached_sources():
+    yield from sorted((REPO / PKG).rglob("*.py"))
+    yield REPO / "bench.py"
+    yield REPO / "__spark_entry__.py"
+    for path in sorted((REPO / "perfbench").rglob("*.py")):
+        if "tests" not in path.relative_to(REPO / "perfbench").parts:
+            yield path
+
+
+def _references(tree) -> set[str]:
+    """Names, attributes, import aliases and identifier-like string
+    constants (getattr / registry keys) in ``tree``; docstrings and
+    other bare string statements are not references."""
+    bare = {id(node.value) for node in ast.walk(tree)
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)}
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier() and id(node) not in bare):
+            names.add(node.value)
+    return names
+
+
+def test_every_package_def_is_reached():
+    reached = set()
+    for path in _reached_sources():
+        reached |= _references(ast.parse(path.read_text()))
+    unreached = {node.name: f"{path.relative_to(REPO)}:{node.lineno}"
+                 for path in sorted((REPO / PKG).rglob("*.py"))
+                 for node in ast.parse(path.read_text()).body
+                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                 and node.name not in reached}
+    # both ways: a KEPT name that is reached (or gone) is a stale entry
+    assert set(unreached) == set(KEPT), {
+        name: unreached.get(name, "reached or deleted")
+        for name in set(unreached) ^ set(KEPT)}

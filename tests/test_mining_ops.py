@@ -9,11 +9,13 @@ row-hash cannot express.
 
 from __future__ import annotations
 
-import math
 import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+
+from operating_system_map_reduce_spark.plans import mining
 
 
 def _events_pdf(sf_dir: str) -> pd.DataFrame:
@@ -734,3 +736,62 @@ class TestRollingRevenueDifferential:
             assert r["ma3"] == pytest.approx(w[1], rel=1e-9)
             assert r["cum_revenue"] == pytest.approx(w[2], rel=1e-9)
             assert r["month_share"] == pytest.approx(w[3], rel=1e-9)
+
+
+class TestBpeTrainedSemantics:
+    def test_fold_is_left_to_right_non_overlapping(self, spark):
+        """The aaaa/(a,a) case: exactly [aa, aa], never aaa-chaining."""
+        vocab = spark.createDataFrame(
+            [("aaaa", 1, "a a a a"), ("abb", 1, "a b b")], "w string, f long, s string")
+        best = spark.createDataFrame([("a", "a")], "a string, b string")
+        got = {r["w"]: r["s"]
+               for r in mining._bpe_apply_merge(vocab, best).collect()}
+        assert got == {"aaaa": "aa aa", "abb": "a b b"}
+        best2 = spark.createDataFrame([("a", "b")], "a string, b string")
+        got2 = {r["w"]: r["s"]
+                for r in mining._bpe_apply_merge(vocab, best2).collect()}
+        assert got2["abb"] == "ab b"
+
+    def test_merges_are_distinct_and_ranked(self, spark, oracle_sf_dir):
+        rows = mining.token_bpe_trained(spark, oracle_sf_dir).collect()
+        assert [r["merge_rank"] for r in rows] == list(
+            range(1, mining.N_BPE_MERGES + 1))
+        pairs = {(r["a"], r["b"]) for r in rows}
+        assert len(pairs) == mining.N_BPE_MERGES  # a pair merges once
+        assert all(r["merged"] == r["a"] + r["b"] for r in rows)
+
+    def test_encode_counts_are_consistent(self, spark, oracle_sf_dir):
+        """Per doc: 1 <= n_words and n_bpe_tokens >= n_words (a word is
+        >= 1 token; merges only shrink token counts toward the word
+        floor, never past it)."""
+        rows = mining.token_bpe_encode(spark, oracle_sf_dir).collect()
+        assert rows
+        for r in rows:
+            assert r["n_bpe_tokens"] >= r["n_words"] >= 1
+
+
+class TestBpePlans:
+    def test_bpe_census_aggregates_partially_mapside(self, spark, sf_dir):
+        """Pin the per-round stage (the outer trained plan only shows
+        checkpointed 1-row RDDs): the word-count and pair census both
+        combine map-side, and the argmax rides TakeOrderedAndProject --
+        no global sort of the census ever ships."""
+        vocab = mining._bpe_word_counts(spark, sf_dir).select(
+            "w", "f",
+            F.expr("array_join(filter(split(w, ''), c -> c <> ''), ' ')")
+            .alias("s"))
+        stage = (mining._bpe_pair_census(vocab)
+                 .orderBy(F.desc("n_merge"), "a", "b").limit(1))
+        plan = stage._jdf.queryExecution().executedPlan().toString()
+        assert "partial_sum" in plan, plan
+        assert "TakeOrderedAndProject" in plan, plan
+        assert "Exchange SinglePartition" not in plan, plan
+
+    def test_bpe_encode_join_is_word_keyed_unhinted(self, spark, sf_dir):
+        """The corpus pass is explode -> word-keyed equi-join -> hash
+        agg; the vocab side grows with the corpus so it must carry NO
+        broadcast hint (AQE may still pick broadcast at test SFs --
+        the pin is on the hint, i.e. the logical plan)."""
+        plan = (mining.token_bpe_encode(spark, sf_dir)
+                ._jdf.queryExecution().logical().toString())
+        assert "UnresolvedHint" not in plan, plan

@@ -7,31 +7,22 @@ edge tables.
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from operating_system_map_reduce_spark.operators import dedup, multimodal, similarity
+from operating_system_map_reduce_spark.plans.pipeline import (
+    _ngram_pair_rows, postings_append)
+from operating_system_map_reduce_spark.sources.bucketing import (
+    compact_bucketed, write_bucketed)
 
 _QUERIES = entrymod.queries()
 
 
 class TestMultimodal:
-    def test_decode_stub_real_branch_rejects_junk(self):
-        """fake=False resolves a REAL codec (PIL or the stdlib PNG
-        codec), which must reject a non-media payload instead of
-        fabricating metadata like the fake does."""
-        with pytest.raises((ValueError, OSError)):
-            multimodal.decode_stub(b"payload")
-
-    def test_decode_stub_deterministic(self):
-        a = multimodal.decode_stub(b"same bytes", fake=True)
-        b = multimodal.decode_stub(b"same bytes", fake=True)
-        assert a == b
-        assert a["format"] in ("jpeg", "png", "wav", "mp4")
-        assert 16 <= a["width"] < 256 and 16 <= a["height"] < 256
-
     def test_decode_media_plumbing(self, spark):
         docs = spark.createDataFrame(
             [(1, "hello world"), (2, "another doc"), (3, None)],
@@ -166,6 +157,44 @@ class TestMultimodal:
             per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
         for doc_id, n in meta.items():
             assert sorted(per_doc[doc_id]) == list(range(0, n, 4))
+
+
+class TestRrfFusion:
+    def test_rrf_semantic_broadcast_is_query_sized(self, spark, sf_dir):
+        """Every broadcast in the fusion plan carries a |Q|-bounded
+        side: the 3 query vectors (semantic) or the 3 query docs'
+        postings (lexical, explicitly hinted -- left to its estimates
+        the planner broadcast the CORPUS postings, the lying-estimate
+        class).  A Python-stage broadcast subtree without the query-id
+        filter is the corpus side -- forbidden.  Same three-pattern
+        Python-stage check as TestAntiPatterns."""
+        from tests.test_plans import _broadcast_subtrees
+        plan = _plan(_QUERIES["retrieval_rrf_fusion"](spark, sf_dir))
+        for sub in _broadcast_subtrees(plan):
+            if re.search(r"MapInPandas|ArrowEvalPython"
+                         r"|FlatMapGroupsInPandas", sub):
+                assert re.search(r"IN \(3,13,23\)", sub), \
+                    f"corpus-sized broadcast side:\n{sub}"
+        assert "CartesianProduct" not in plan, plan
+
+    def test_rrf_rewards_agreement(self, spark, oracle_sf_dir):
+        """A doc ranked by BOTH modalities must outscore a doc holding
+        the same single-ranker rank alone: score(r, r) > score(r, -)
+        for every pooled rank r -- the fusion property itself."""
+        from operating_system_map_reduce_spark.plans.pipeline import RRF_C
+        rows = _QUERIES["retrieval_rrf_fusion"](spark, oracle_sf_dir).collect()
+        assert rows, "fusion returned no rows"
+        for r in rows:
+            assert r["in_lexical"] or r["in_semantic"]
+            both = r["in_lexical"] and r["in_semantic"]
+            single_max = 1.0 / (RRF_C + 1)
+            if r["rrf_score"] > single_max + 1e-9:
+                assert both  # only agreement can beat the best single rank
+        ranks = {}
+        for r in rows:
+            ranks.setdefault(r["query_id"], []).append(r["fused_rank"])
+        for q, rs in ranks.items():
+            assert rs == list(range(1, len(rs) + 1)), (q, rs)
 
 
 class TestHexval:
@@ -782,3 +811,145 @@ class TestAtRestEdges:
         assert "b_edge_" in plan.lower(), plan
         assert "Scan ExistingRDD" not in plan, plan
         assert "InMemoryTableScan" not in plan, plan
+
+
+N_BUCKETS = 8  # small fixture; the production default is 32
+
+
+def _docs(spark, sf_dir):
+    from operating_system_map_reduce_spark.sources.tables import load_table
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.fixture()
+def postings_table(spark):
+    table = f"b_posti_test_{uuid.uuid4().hex[:8]}"
+    yield table
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}_compacting")
+
+
+class TestIncrementalPostings:
+    """Incremental maintenance of the at-rest postings tier
+    (pipeline.postings_append, bucketing.compact_bucketed): a seed
+    build of the bucketed postings table, then appends that land NEW
+    docs' postings in their correct bucket files, then a compaction
+    back to one file per bucket -- the reference's append + SAV
+    lifecycle (p4/server/my_storage.cc) applied to the analytic tier.
+    The oracle is the from-scratch FULL REBUILD over base ∪ delta;
+    row identity proves append == rebuild."""
+
+    @staticmethod
+    def _seed(docs, table):
+        write_bucketed(dedup.shingle_postings(docs), table, "s",
+                       n_buckets=N_BUCKETS, one_file_per_bucket=True)
+
+    def test_append_equals_full_rebuild(self, spark, sf_dir,
+                                        postings_table):
+        docs = _docs(spark, sf_dir)
+        self._seed(docs.filter(F.col("doc_id") % 10 != 7), postings_table)
+        postings_append(spark, docs.filter(F.col("doc_id") % 10 == 7),
+                        postings_table, N_BUCKETS)
+        got = _rows(spark.table(postings_table))
+        want = _rows(dedup.shingle_postings(docs))
+        assert got == want
+        assert len(got) > 0
+
+    def test_multiple_appends_and_consumer_parity(self, spark, sf_dir,
+                                                  postings_table):
+        """Three ingest ticks, then the CONSUMER-level check: the
+        near-dup pair derivation over the incrementally-maintained
+        table matches the pairs over a from-scratch build."""
+        docs = _docs(spark, sf_dir)
+        self._seed(docs.filter(F.col("doc_id") % 4 == 0), postings_table)
+        for k in (1, 2, 3):
+            postings_append(spark, docs.filter(F.col("doc_id") % 4 == k),
+                            postings_table, N_BUCKETS)
+        got = _rows(_ngram_pair_rows(spark.table(postings_table)))
+        want = _rows(_ngram_pair_rows(dedup.shingle_postings(docs)))
+        assert got == want
+        assert len(got) > 0, "fixture must produce near-dup pairs"
+
+    def test_join_stays_exchange_free_after_append(self, spark, sf_dir,
+                                                   postings_table):
+        """The scale contract: appends must not cost the bucketed
+        layout -- the postings self-join stays free of corpus-keyed
+        exchanges (only pair-keyed aggregates shuffle), exactly the
+        registered faces' plan-shape pin."""
+        docs = _docs(spark, sf_dir)
+        self._seed(docs.filter(F.col("doc_id") % 2 == 0), postings_table)
+        postings_append(spark, docs.filter(F.col("doc_id") % 2 == 1),
+                        postings_table, N_BUCKETS)
+        plan = _plan_with_conf(
+            spark, *_NO_BROADCAST,
+            lambda: _ngram_pair_rows(spark.table(postings_table)))
+        _assert_pair_keyed_exchanges(plan)
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+
+    def test_randomized_splits_append_equals_rebuild(self, spark, sf_dir,
+                                                     postings_table):
+        """Seeded randomized differential (the repo's property-test
+        convention for Spark-heavy paths): arbitrary seed/append
+        partitions of the corpus -- including an empty tick and a
+        single-doc tick -- must all replay to the full rebuild."""
+        import random
+
+        rng = random.Random(0x5EED)
+        docs = _docs(spark, sf_dir)
+        ids = [r[0] for r in docs.select("doc_id").collect()]
+        want = _rows(dedup.shingle_postings(docs))
+        for trial in range(2):
+            spark.sql(f"DROP TABLE IF EXISTS {postings_table}")
+            rng.shuffle(ids)
+            n_ticks = rng.randint(2, 4)
+            cuts = sorted(rng.sample(range(1, len(ids)), n_ticks))
+            parts = [ids[a:b] for a, b in
+                     zip([0] + cuts, cuts + [len(ids)])]
+            parts.append([])             # an empty ingest tick
+            parts.append([parts[0].pop()])  # and a single-doc tick
+            self._seed(docs.filter(F.col("doc_id").isin(parts[0])),
+                       postings_table)
+            for chunk in parts[1:]:
+                postings_append(
+                    spark, docs.filter(F.col("doc_id").isin(chunk)),
+                    postings_table, N_BUCKETS)
+            got = _rows(spark.table(postings_table))
+            assert got == want, f"trial {trial} diverged"
+
+    def test_staged_face_matches_registered_ngram(self, spark, sf_dir):
+        """dedup_ngram_incremental (pairs served from the
+        seed->append->compact lifecycle table) must be row-identical to
+        the registered dedup_ngram_jaccard over the full corpus -- the
+        same from-scratch-oracle equivalence the driver gate enforces."""
+        got = _rows(_QUERIES["dedup_ngram_incremental"](spark, sf_dir))
+        want = _rows(_QUERIES["dedup_ngram_jaccard"](spark, sf_dir))
+        assert got == want
+        assert len(got) > 0
+
+    def test_compact_restores_single_file_per_bucket(self, spark, sf_dir,
+                                                     postings_table):
+        """After the SAV-analog compaction: identical rows, and the
+        fragmentation is gone -- at most one data file per bucket, so
+        the at-rest sort guarantee is back."""
+        import os
+        from urllib.parse import urlparse
+
+        docs = _docs(spark, sf_dir)
+        self._seed(docs.filter(F.col("doc_id") % 3 == 0), postings_table)
+        for k in (1, 2):
+            postings_append(spark, docs.filter(F.col("doc_id") % 3 == k),
+                            postings_table, N_BUCKETS)
+        before = _rows(spark.table(postings_table))
+        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+        loc = os.path.join(wh, postings_table.lower())
+        n_frag = len([f for f in os.listdir(loc) if f.endswith(".parquet")])
+        assert n_frag > N_BUCKETS, "appends must have fragmented buckets"
+        compact_bucketed(spark, postings_table, "s", N_BUCKETS)
+        assert _rows(spark.table(postings_table)) == before
+        n_files = len([f for f in os.listdir(loc) if f.endswith(".parquet")])
+        assert n_files <= N_BUCKETS, \
+            f"compaction left {n_files} files for {N_BUCKETS} buckets"

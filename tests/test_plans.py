@@ -392,6 +392,11 @@ class TestRegistryWindow:
         assert set(entrymod.oracle_sql()) == set(_QUERIES)
         assert len(_QUERIES) <= _win.HALVES_THRESHOLD
 
+    def test_registry_stays_under_the_halves_threshold(self):
+        """The registry stays within the window clock's capacity (the
+        2-round staleness ceiling's pigeonhole bound)."""
+        assert len(entrymod.queries()) <= _win.HALVES_THRESHOLD
+
 
 class TestRound12PlanShapes:
     def test_minhash_query_plan_has_no_python_stage(self, spark, sf_dir):
@@ -818,3 +823,17 @@ class TestSinglePartitionCensus:
             return
         assert "Exchange SinglePartition" not in plan, (
             f"{name}: unjustified SinglePartition exchange")
+
+
+class TestTrainedFaces:
+    """The trained-tokenizer and multimodal-curation faces at the
+    oracle scale factor (test_oracle_parity runs the small one)."""
+
+    @pytest.mark.parametrize("name", ["multimodal_text_curation",
+                                      "token_bpe_trained"])
+    def test_oracle_parity_sf001(self, spark, oracle_sf_dir, name):
+        from tests.oracle_utils import compare, run_oracle
+
+        problems = compare(_QUERIES[name](spark, oracle_sf_dir),
+                           run_oracle(entrymod.oracle_sql()[name], oracle_sf_dir))
+        assert not problems, problems

@@ -13,7 +13,7 @@ import random
 from operating_system_map_reduce_spark import codes
 from operating_system_map_reduce_spark.engine import KV_SCHEMA, KVEngine
 from operating_system_map_reduce_spark.sources import changelog
-from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+from operating_system_map_reduce_spark.sources.changelog import ChangeLog, ChangelogStreamSink
 
 PW = ("alice", "pw")
 
@@ -91,10 +91,6 @@ class TestDifferential:
         Spark and never read onto the driver."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import (
-            ChangelogStreamSink,
-        )
 
         log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
         log.append([{"seq": 1, "op": "insert", "key": "small", "value": b"s"}])

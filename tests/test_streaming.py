@@ -61,6 +61,36 @@ class TestWindowedCounts:
             assert abs(got[k][1] - s) < 1e-6
 
 
+class TestEventsStreamStaging:
+    def test_source_is_staged_under_the_exit_removed_root(
+            self, spark, sf_dir, monkeypatch):
+        """events_stream reads its symlinked source directory from under
+        the streaming scratch root, which is removed at interpreter
+        exit; nothing is written into the checkout."""
+        import os
+        import pathlib
+
+        from pyspark.sql.streaming import DataStreamReader
+
+        from operating_system_map_reduce_spark.streaming import scratch_root
+
+        read, parquet = [], DataStreamReader.parquet
+
+        def spy(self, path, **options):
+            read.append(path)
+            return parquet(self, path, **options)
+
+        monkeypatch.setattr(DataStreamReader, "parquet", spy)
+        checkout = pathlib.Path(__file__).resolve().parents[1] / ".scratch"
+        before = set(checkout.rglob("*"))
+        windows.events_stream(spark, sf_dir)
+        root = scratch_root()
+        assert len(read) == 1
+        assert os.path.commonpath([read[0], root]) == root, (read, root)
+        assert os.listdir(read[0])
+        assert set(checkout.rglob("*")) == before
+
+
 class TestSessionWindows:
     def test_gap_boundary_semantics(self, spark):
         """An event at exactly prev + gap still MERGES (the merge test
@@ -94,38 +124,6 @@ class TestSessionWindows:
             ("u2", 0, 2 * gap_us),
             ("u2", 2 * gap_us + 1, 3 * gap_us + 1),
         ]
-
-
-class TestChangelogCDC:
-    def test_incremental_state_matches_batch_replay(self, spark, tmp_path):
-        from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import ChangelogCDC
-
-        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
-        cdc = ChangelogCDC(log)
-
-        def rec(seq, op, key, value=b""):
-            return {"seq": seq, "op": op, "key": key, "value": value}
-
-        def snap(df):
-            return sorted((r["key"], bytes(r["value"])) for r in
-                          df.select("key", "value").collect())
-
-        log.append([rec(i, "insert", f"k{i}", str(i).encode()) for i in range(1, 6)])
-        log.append([rec(6, "update", "k2", b"two"), rec(7, "delete", "k3")])
-        got = cdc.catch_up()
-        assert snap(got) == snap(log.replay())
-        assert ("k3", b"3") not in snap(got)
-        assert ("k2", b"two") in snap(got)
-
-        # second wave: checkpointed resume processes only the new files
-        log.append([rec(8, "delete", "k5"), rec(9, "insert", "k6", b"six"),
-                    rec(10, "update", "k1", b"one")])
-        got2 = cdc.catch_up()
-        assert snap(got2) == snap(log.replay())
-        assert ("k6", b"six") in snap(got2)
-        assert all(k != "k5" for k, _ in snap(got2))
 
 
 class TestQuotaStream:
@@ -220,9 +218,8 @@ class TestChangelogStreamSink:
         import pyarrow.parquet as pq
 
         from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import (
-            ChangelogStreamSink,
+        from operating_system_map_reduce_spark.sources.changelog import (
+            ChangeLog, ChangelogStreamSink,
         )
 
         def rec(seq, op, key, value=b""):
@@ -324,9 +321,8 @@ class TestSinkCrashRecovery:
         import pyarrow.parquet as pq
 
         from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import (
-            ChangelogStreamSink,
+        from operating_system_map_reduce_spark.sources.changelog import (
+            ChangeLog, ChangelogStreamSink,
         )
 
         def rec(seq, op, key, value=b""):
@@ -474,6 +470,7 @@ class TestNoveltyStream:
         import shutil
         import tempfile
 
+        from operating_system_map_reduce_spark import streaming
         from operating_system_map_reduce_spark.streaming import (
             novelty_stream as ns)
 
@@ -494,7 +491,7 @@ class TestNoveltyStream:
         # cold caches and no root yet: the run creates every directory
         monkeypatch.setattr(ns, "_SEED_CACHE", {})
         monkeypatch.setattr(ns, "_STAGE_CACHE", {})
-        monkeypatch.setattr(ns, "_SCRATCH_ROOT", [], raising=False)
+        monkeypatch.setattr(streaming, "_SCRATCH_ROOT", [])
         assert ns.run_novelty_stream(spark, sf_dir).count() > 0
         assert made
         leaked = [d for d in made if os.path.exists(d) and not any(
@@ -510,6 +507,7 @@ class TestNoveltyStream:
         import shutil
 
         from operating_system_map_reduce_spark.sources.tables import load_table
+        from operating_system_map_reduce_spark import streaming
         from operating_system_map_reduce_spark.streaming import (
             novelty_stream as ns)
 
@@ -536,6 +534,7 @@ class TestNoveltyStream:
         admit the other wave's documents unchecked."""
         from pyspark.sql.streaming import DataStreamReader
 
+        from operating_system_map_reduce_spark import streaming
         from operating_system_map_reduce_spark.streaming import (
             novelty_stream as ns)
 
@@ -656,58 +655,6 @@ class TestNoveltyStream:
         assert stats2["files_after"] <= 2
 
 
-class TestSinkToCdcPipeline:
-    def test_streamed_ingest_feeds_incremental_cdc(self, spark, tmp_path):
-        """The full streaming loop: mutations stream IN through
-        ChangelogStreamSink and OUT through ChangelogCDC's incremental
-        tailer; the CDC state must equal batch replay after each wave,
-        with the second catch-up processing only the new files."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import (
-            ChangelogCDC, ChangelogStreamSink,
-        )
-
-        def emit(dirpath, name, rows):
-            pq.write_table(pa.table(
-                {k: [r[k] for r in rows] for k in ("seq", "op", "key", "value")},
-                schema=pa.schema([pa.field("seq", pa.int64()),
-                                  pa.field("op", pa.string()),
-                                  pa.field("key", pa.string()),
-                                  pa.field("value", pa.binary())])),
-                str(dirpath / name))
-
-        def rec(seq, op, key, value=b""):
-            return {"seq": seq, "op": op, "key": key, "value": value}
-
-        def snap(df):
-            return sorted((r["key"], bytes(r["value"])) for r in
-                          df.select("key", "value").collect())
-
-        src = tmp_path / "mutations"
-        src.mkdir()
-        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
-        sink = ChangelogStreamSink(log)
-        cdc = ChangelogCDC(log)
-
-        emit(src, "w1.parquet",
-             [rec(i, "insert", f"k{i}", str(i).encode()) for i in range(1, 4)])
-        sink.ingest_available(
-            spark.readStream.schema(KV_SCHEMA).parquet(str(src)))
-        assert snap(cdc.catch_up()) == snap(log.replay())
-
-        emit(src, "w2.parquet",
-             [rec(4, "update", "k1", b"ONE"), rec(5, "delete", "k2")])
-        sink.ingest_available(
-            spark.readStream.schema(KV_SCHEMA).parquet(str(src)))
-        got = snap(cdc.catch_up())
-        assert got == snap(log.replay())
-        assert ("k1", b"ONE") in got and all(k != "k2" for k, _ in got)
-
-
 class TestSinkContinuousMode:
     def test_start_ingests_and_stops_cleanly(self, spark, tmp_path):
         """The continuous (non-AvailableNow) sink face: start() returns
@@ -719,9 +666,8 @@ class TestSinkContinuousMode:
         import pyarrow.parquet as pq
 
         from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-        from operating_system_map_reduce_spark.streaming.changelog_cdc import (
-            ChangelogStreamSink,
+        from operating_system_map_reduce_spark.sources.changelog import (
+            ChangeLog, ChangelogStreamSink,
         )
 
         src = tmp_path / "mutations"
