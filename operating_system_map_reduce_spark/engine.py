@@ -10,8 +10,9 @@ State:
    replay view is the current state, SAV compacts, restart replays;
    durability parity with p3.  Point reads (KVG, GET, the KVI/KVU/KVD
    existence probes) come from each log's driver-side snapshot: the
-   tail overlay, then a per-state memo, then one Spark point read, so
-   a read of a key written or read before runs no Spark job.  Scans
+   log overlay, then a memo, then a driver-side read of the one row
+   group of the key-sorted base that can hold the key, so a point read
+   runs no Spark job while the log since SAV fits the overlay.  Scans
    (KVA, ALL, KMR, export) read the snapshot's state and tail files.
  - credentials: the login check reads a driver-side map
    username -> (salt, pass_hash), the reference's in-memory auth map

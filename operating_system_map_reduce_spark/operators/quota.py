@@ -28,20 +28,26 @@ class QuotaTracker:
     amount: int          # max units per window
     duration: float      # window seconds
     events: deque = field(default_factory=deque)  # (when, amount), oldest first
+    # sum of the amounts in events, kept as events enter and leave: a
+    # check costs O(evicted), not O(events in the window)
+    live: int = field(init=False, repr=False, compare=False)
     # the engine serves concurrent clients (the reference guards quota
     # state with the owning table-entry lock); check-then-record must be
     # atomic or two admits can both read the same "live" sum
     _lock: threading.Lock = field(default_factory=threading.Lock,
                                   repr=False, compare=False)
 
+    def __post_init__(self) -> None:
+        self.live = sum(a for _, a in self.events)
+
     def check_add(self, add: int, when: float) -> bool:
         with self._lock:
             while self.events and self.events[0][0] <= when - self.duration:
-                self.events.popleft()
-            live = sum(a for _, a in self.events)
-            if live + add > self.amount:
+                self.live -= self.events.popleft()[1]
+            if self.live + add > self.amount:
                 return False
             self.events.append((when, add))
+            self.live += add
             return True
 
 

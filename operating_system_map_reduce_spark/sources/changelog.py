@@ -8,8 +8,13 @@ tombstones drop the key); SAV = compaction (rewrite base from the
 current snapshot, truncate the log).
 
 Physical layout per table:
-    <root>/base/   -- compacted snapshot parquet (written by compact())
-    <root>/log/    -- one small parquet file per append batch
+    <root>/base/       -- compacted snapshot parquet (written by compact(),
+                          range-partitioned and sorted by key)
+    <root>/log/        -- one small parquet file per append batch
+    <root>/generation  -- one byte appended per layout change (append,
+                          stream-sink batch, compaction), after it is on
+                          disk; its size tells a reader whether to list
+                          base/ and log/ again
 
 Appends are driver-side pyarrow writes (a log append is a server-side
 action, ~ms, no Spark job).  The 100 TB ingestion path is
@@ -23,22 +28,29 @@ replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
 ``ChangeLog`` keeps one ``Snapshot`` per log, replaced whole:
 
  - ``state``: the replay of the base and the log files folded so far,
-   eagerly checkpointed;
- - ``overlay``: driver-side ``key -> latest record`` of the tail (the
-   log files appended since), read with pyarrow.  It follows
-   ``layout_key()``, so appends by another engine or by the stream sink
-   show up too;
- - ``memo``: a bounded ``key -> row | None`` of point reads on
-   ``state``, exact for as long as that state serves.
+   eagerly checkpointed; scans read it;
+ - ``overlay``: driver-side ``key -> latest record`` of the whole log
+   since the base, read with pyarrow.  It follows the on-disk layout,
+   listed again whenever the generation moved, so appends by another
+   engine or by the stream sink show up too;
+ - ``groups``: the base's footer index, ``(min key, max key, file, row
+   group)`` from the parquet footers, built once per base;
+ - ``memo``: a bounded ``key -> row | None`` of point reads, exact for
+   as long as that state serves.
 
-``lookup`` answers from the overlay, then the memo, then one Spark point
-read on the state.  Scans (``replay_cached``) read the state, or
-``dedup(state ∪ tail files)`` when there is a tail.  The tail is folded
-into a new state only past a file-count or byte budget (sized with
-``os.stat`` before anything is read), and the state is rebuilt from the
-files only when the base changes under it or a tail record does not
-sort after it.  ``compact`` writes the base from the folded state, so
-the engine's own SAV keeps the state and its memo.
+``lookup`` answers from the overlay, then the memo, then a pyarrow read
+of the base row groups whose key range holds the key (one, on a base
+``compact`` wrote; none for a key outside every range), with no Spark
+job.  Only when the log since the base is past the byte budget, or holds
+a record that does not sort after the base, does the overlay shrink to
+the tail past the state and a memo miss run one Spark point read on the
+state.  Scans (``replay_cached``) read the state, or ``dedup(state ∪
+tail files)`` when there is a tail.  The tail is folded into a new state
+past a file-count budget, from the overlay's records when it holds them,
+which changes only what scans read; the state is rebuilt from the files
+only when the base changes under it or a tail record does not sort after
+it.  ``compact`` writes the base from the folded state, so the engine's
+own SAV keeps the state and its memo.
 """
 
 from __future__ import annotations
@@ -51,14 +63,18 @@ import uuid
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# the tail the overlay holds before it is folded into the state
+# log files scans read past the state before they are folded into it
 FOLD_FILES = 64
+# the log the overlay holds; past it, point reads go to Spark until SAV
 FOLD_BYTES = 8 << 20
+# parquet row-group target of the base: a point read decodes one group
+ROW_GROUP_BYTES = 256 << 10
 # point reads remembered per state; a larger row is read again each
 # time, so the memo stays within MEMO_KEYS * MEMO_ROW_BYTES
 MEMO_KEYS = 4096
@@ -82,17 +98,22 @@ def fsync_dir(path: str) -> None:
 @dataclass(eq=False)
 class Snapshot:
     """One consistent view of a log as of ``layout``.  Published whole
-    and never changed, except that ``memo`` fills with point reads on
-    ``state`` (shared by every snapshot over that state) and ``scan`` is
-    built on first use."""
+    and never changed, except that ``memo`` fills with point reads
+    (shared by every snapshot over that state) and ``scan`` is built on
+    first use.
+
+    With ``groups`` set, the overlay holds every log file since the base
+    and a memo miss reads the base's row groups; without, it holds the
+    tail and a memo miss reads the state with Spark."""
 
     layout: tuple                     # (base files, log files) covered
     state: DataFrame | None = None    # None: to be rebuilt from the files
     empty: bool = False               # state read from no file: nothing in it
     state_seq: int = 0                # highest seq folded into state
     tail: tuple = ()                  # log files not in state, all above state_seq
-    tail_bytes: int = 0
-    overlay: dict | None = None       # key -> latest tail record; None: not loaded
+    overlay: dict | None = None       # key -> latest record; None: not loaded
+    overlay_bytes: int = 0            # size of the log files the overlay holds
+    groups: tuple | None = None       # base footer index: (lo, hi, file, footer, group)
     seq: int = 0                      # highest seq in state and tail
     memo: dict = field(default_factory=dict)
     scan: DataFrame | None = None
@@ -122,7 +143,9 @@ class ChangeLog:
         )
         os.makedirs(self.base_dir, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
-        self._snap: Snapshot | None = None
+        # (generation when listed, the snapshot published for that listing)
+        self._seen: tuple[int, Snapshot | None] = (-1, None)
+        os.close(os.open(self.generation_path, os.O_WRONLY | os.O_CREAT, 0o644))
         self._lock = threading.Lock()        # publishes snapshots
         self._build_lock = threading.Lock()  # one fold, rebuild or compaction
         self._memo_lock = threading.Lock()
@@ -134,6 +157,25 @@ class ChangeLog:
     @property
     def log_dir(self) -> str:
         return os.path.join(self.root, "log")
+
+    @property
+    def generation_path(self) -> str:
+        return os.path.join(self.root, "generation")
+
+    def _generation(self) -> int:
+        """How many layout changes were announced: the size of the
+        generation file, one ``stat``."""
+        return os.stat(self.generation_path).st_size
+
+    def _announce(self) -> None:
+        """Announce a layout change that is complete on disk: one byte
+        appended (atomically, O_APPEND) to the generation file.  Readers
+        list the directories again only after its size moved."""
+        fd = os.open(self.generation_path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
+        try:
+            os.write(fd, b".")
+        finally:
+            os.close(fd)
 
     # -- write path --------------------------------------------------------
 
@@ -153,6 +195,7 @@ class ChangeLog:
         with open(tmp, "rb") as f:
             os.fsync(f.fileno())
         os.rename(tmp, path)
+        self._announce()
         fsync_dir(self.log_dir)
 
     # -- read path ---------------------------------------------------------
@@ -240,6 +283,29 @@ class ChangeLog:
                 lo, hi = min(lo, a), max(hi, b)
         return lo, hi
 
+    def _footer_index(self, paths: list[str]) -> tuple:
+        """``(min key, max key, file, footer, row group)`` for every
+        non-empty row group of the parquet files ``paths``, from their
+        footers; a group without key statistics gets ``None`` bounds and
+        is read for every key."""
+        groups = []
+        for p in paths:
+            meta = pq.read_metadata(p)
+            col = meta.schema.names.index(self.key_col)
+            for i in range(meta.num_row_groups):
+                if meta.row_group(i).num_rows == 0:
+                    continue
+                s = meta.row_group(i).column(col).statistics
+                lo, hi = (s.min, s.max) if s is not None and s.has_min_max else (None, None)
+                groups.append((lo, hi, p, meta, i))
+        return tuple(groups)
+
+    def _read_group(self, path: str, meta, i: int, key: str) -> list[dict]:
+        """The records of ``key`` in row group ``i`` of base file ``path``."""
+        with pq.ParquetFile(path, metadata=meta) as f:
+            group = f.read_row_group(i, use_threads=False)
+        return group.filter(pc.equal(group[self.key_col], key)).to_pylist()
+
     def layout_key(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
         """Cheap (listdir-only, no Spark job) fingerprint of the
         on-disk layout: (base files, log files)."""
@@ -254,7 +320,7 @@ class ChangeLog:
 
     def seen_seq(self) -> int:
         """Highest seq of any record the current snapshot covers."""
-        snap = self._snap
+        snap = self._seen[1]
         return snap.seq if snap is not None else 0
 
     # -- snapshot ----------------------------------------------------------
@@ -278,26 +344,33 @@ class ChangeLog:
                 self._build_lock.release()
 
     def _refresh(self) -> Snapshot:
-        snap = self._snap
-        if snap is not None and snap.layout == self.layout_key():
+        """The published snapshot, brought to the on-disk layout.  The
+        directories are listed again only when the generation moved
+        since the listing the snapshot was published for: a writer
+        announces a change once it is on disk."""
+        gen, snap = self._seen
+        if snap is not None and gen == self._generation():
             return snap
         with self._lock:
-            # listed under the lock: never older than the published layout
-            layout = self.layout_key()
-            if self._snap is None or self._snap.layout != layout:
-                self._snap = self._advance(self._snap, layout)
-            return self._snap
+            self._advance_to_disk(self._seen[1])
+            return self._seen[1]
 
     def _publish(self, snap: Snapshot) -> None:
         with self._lock:
-            self._snap = self._advance(snap, self.layout_key())
+            self._advance_to_disk(snap)
+
+    def _advance_to_disk(self, snap: Snapshot | None) -> None:
+        # under _lock: the generation is read before the listing, and
+        # listings never go back past the published layout
+        gen = self._generation()
+        self._seen = (gen, self._advance(snap, self.layout_key()))
 
     def _advance(self, snap: Snapshot | None, layout) -> Snapshot:
         """``snap`` brought to ``layout`` without a Spark job: the log
-        files appended since are read into the overlay while the tail
-        stays within the byte budget (sized before anything is read).
-        A new base, a removed file or a record that does not sort after
-        the state leaves the state to be rebuilt."""
+        files appended since are read into the overlay while the files
+        it holds stay within the byte budget (sized before anything is
+        read).  A new base, a removed file or a record that does not sort
+        after the state leaves the state to be rebuilt."""
         if snap is not None and snap.layout == layout:
             return snap
         seq = snap.seq if snap is not None else 0
@@ -312,10 +385,10 @@ class ChangeLog:
             seq = max(seq, hi)
             if lo <= snap.state_seq:
                 return Snapshot(layout, seq=seq)
-            tail_bytes = snap.tail_bytes + sum(os.path.getsize(p) for p in paths)
-            overlay = None
-            if snap.overlay is not None and tail_bytes <= FOLD_BYTES:
-                overlay = dict(snap.overlay)
+            size = snap.overlay_bytes + sum(os.path.getsize(p) for p in paths)
+            overlay = groups = None
+            if snap.overlay is not None and size <= FOLD_BYTES:
+                overlay, groups = dict(snap.overlay), snap.groups
                 for row in self._read_tail(paths):
                     cur = overlay.get(row[self.key_col])
                     if cur is None or row[self.seq_col] > cur[self.seq_col]:
@@ -323,62 +396,93 @@ class ChangeLog:
         except FileNotFoundError:  # removed by a compaction elsewhere
             return Snapshot(layout, seq=seq)
         return Snapshot(layout, snap.state, snap.empty, snap.state_seq,
-                        snap.tail + tuple(new), tail_bytes, overlay, seq, snap.memo)
+                        snap.tail + tuple(new), overlay, size, groups, seq, snap.memo)
 
     def _fold(self, snap: Snapshot) -> Snapshot:
-        """``snap`` with its tail folded into a new state.  The memo moves
-        over with the overlay's records, which the new state holds."""
+        """``snap`` with its tail folded into a new state.  When the
+        overlay holds the tail, its latest record per key is shipped from
+        the driver (as Arrow) instead of reading the tail's files, and
+        the memo moves over with those records, which the new state
+        holds.  An overlay over the base keeps serving point reads: the
+        fold only changes what scans read."""
         if not snap.tail:
             return snap
-        tail = self._log_paths(snap.tail)
         memo = {}
         if snap.overlay is not None:
+            rows = [r for r in snap.overlay.values() if r[self.seq_col] > snap.state_seq]
             memo = dict(snap.memo)
-            _remember(memo, ((k, self._live(r)) for k, r in snap.overlay.items()))
-        state = _checkpoint(self._dedup(snap.state.unionByName(self._read_files(tail))))
-        hi = self._seq_range(tail)[1]
+            _remember(memo, ((r[self.key_col], self._live(r)) for r in rows))
+            tail = self.spark.createDataFrame(
+                pa.Table.from_pylist(rows, schema=self._arrow_schema))
+            hi = max((r[self.seq_col] for r in rows), default=0)
+        else:
+            paths = self._log_paths(snap.tail)
+            tail = self._read_files(paths)
+            hi = self._seq_range(paths)[1]
+        state = _checkpoint(self._dedup(snap.state.unionByName(tail)))
+        keep = snap.groups is not None
         return Snapshot(snap.layout, state, False, max(snap.state_seq, hi),
-                        overlay={}, seq=max(snap.seq, hi), memo=memo)
+                        overlay=snap.overlay if keep else {},
+                        overlay_bytes=snap.overlay_bytes if keep else 0,
+                        groups=snap.groups, seq=max(snap.seq, hi), memo=memo)
 
     def _rebuild(self, layout, fold_all: bool = False) -> Snapshot:
         """A state replayed from the files of ``layout``: the base alone
         when the log fits the overlay budget and sorts after the base
-        (the log is then served from the overlay), else base and log."""
+        (the log is then served from the overlay and the base from its
+        footer index), else base and log."""
         base = [os.path.join(self.base_dir, f) for f in layout[0]
                 if f.endswith(".parquet")]
         log = self._log_paths(layout[1])
-        files, folded = base, ()
-        if (fold_all or len(log) > FOLD_FILES
-                or sum(os.path.getsize(p) for p in log) > FOLD_BYTES
+        files, folded, groups = base, (), None
+        if (fold_all or sum(os.path.getsize(p) for p in log) > FOLD_BYTES
                 or self._seq_range(log)[0] <= self._seq_range(base)[1]):
             files, folded = base + log, layout[1]
+        else:
+            groups = self._footer_index(base)
         hi = self._seq_range(files)[1]
         state = (_checkpoint(self._dedup(self._read_files(files))) if files
                  else self.spark.createDataFrame([], self.schema))
         return Snapshot((layout[0], folded), state, not files, hi,
-                        overlay={}, seq=hi)
+                        overlay={}, groups=groups, seq=hi)
 
     def _live(self, row: dict | None) -> dict | None:
         return None if row is None or row[self.op_col] == "delete" else row
 
     def lookup(self, key: str) -> dict | None:
         """The live record of ``key``, or None when it is absent or
-        deleted: from the overlay, else the memo, else one Spark point
-        read on the state, which the memo then keeps.  A hit, a value or
-        a tombstone, runs no Spark job."""
+        deleted: from the overlay, else the memo, else a point read of
+        the base or the state, which the memo then keeps."""
         snap = self.snapshot()
         row = snap.overlay.get(key, _MISS)
         if row is not _MISS:
             return self._live(row)
         row = snap.memo.get(key, _MISS)
         if row is _MISS:
-            rows = [] if snap.empty else (
-                snap.state.filter(F.col(self.key_col) == key).collect())
-            row = ({k: bytes(v) if isinstance(v, bytearray) else v
-                    for k, v in rows[0].asDict().items()} if rows else None)
+            row = self._point_read(snap, key)
             with self._memo_lock:
                 _remember(snap.memo, [(key, row)])
         return row
+
+    def _point_read(self, snap: Snapshot, key: str) -> dict | None:
+        """The live record of ``key`` in the snapshot's state, for a key
+        the overlay does not hold.  With a footer index: the base row
+        groups whose key range holds ``key``, read on the driver with no
+        Spark job.  Otherwise, or when a compaction elsewhere removed the
+        base files, one Spark point read on the (checkpointed) state."""
+        if snap.groups is not None:
+            try:
+                rows = [row for lo, hi, path, meta, i in snap.groups
+                        if lo is None or lo <= key <= hi
+                        for row in self._read_group(path, meta, i, key)]
+                return self._live(max(rows, key=lambda r: r[self.seq_col])
+                                  if rows else None)
+            except FileNotFoundError:
+                pass
+        rows = [] if snap.empty else (
+            snap.state.filter(F.col(self.key_col) == key).collect())
+        return ({k: bytes(v) if isinstance(v, bytearray) else v
+                 for k, v in rows[0].asDict().items()} if rows else None)
 
     def replay_cached(self) -> DataFrame:
         """replay() served from the snapshot, for scans: the state itself
@@ -398,11 +502,14 @@ class ChangeLog:
 
     def compact(self) -> None:
         """SAV parity (p3/server/my_storage.cc:505-565): fold the tail into
-        the state, write the state to a tmp dir, atomically swap it in
-        as base, truncate the log.  Readers between swap and truncate see
-        duplicates of *identical latest records*, which replay dedups --
-        same safety the reference gets from write-tmp-then-rename.  The
-        folded state and its memo keep serving over the new base.
+        the state, write the state to a tmp dir range-partitioned and
+        sorted by key in row groups of ROW_GROUP_BYTES, atomically swap
+        it in as base, truncate the log, announce the new layout.  A
+        reader that lists between swap and truncate sees duplicates of
+        *identical latest records*, which replay dedups -- same safety
+        the reference gets from write-tmp-then-rename.  The folded state
+        and its memo keep serving over the new base, whose footer index
+        is built here.
 
         Truncation removes exactly the log files the snapshot covers: a
         batch appended while the snapshot is written (or still in
@@ -417,7 +524,9 @@ class ChangeLog:
             # Distributed snapshot write: executors stream the state
             # straight to parquet part-files -- the driver never
             # materializes it (at 100 TB a .collect() would OOM the driver).
-            snap.state.write.parquet(tmp)
+            key = self.key_col
+            (snap.state.repartitionByRange(key).sortWithinPartitions(key)
+             .write.option("parquet.block.size", ROW_GROUP_BYTES).parquet(tmp))
             old = self.base_dir
             swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
             os.rename(old, swap_out)
@@ -425,9 +534,13 @@ class ChangeLog:
             shutil.rmtree(swap_out)
             for f in self._log_paths(snap.layout[1]):
                 os.remove(f)
+            self._announce()
             base = tuple(sorted(os.listdir(self.base_dir)))
+            groups = self._footer_index([os.path.join(self.base_dir, f) for f in base
+                                         if f.endswith(".parquet")])
             self._publish(Snapshot((base, ()), snap.state, snap.empty, snap.state_seq,
-                                   overlay={}, seq=snap.seq, memo=snap.memo))
+                                   overlay={}, groups=groups, seq=snap.seq,
+                                   memo=snap.memo))
 
 
 class ChangelogStreamSink:
@@ -479,6 +592,7 @@ class ChangelogStreamSink:
             os.rename(src, dst)
             renamed = True
         if renamed:
+            self.log._announce()
             # make the renames themselves durable: without a directory
             # fsync a crash here can lose the new directory entries even
             # though the part-file bytes were fsync'd above.

@@ -185,6 +185,49 @@ class TestRaces:
 
 
 class TestSnapshotRaces:
+    def test_an_append_is_seen_at_once_through_another_changelog(self, spark, tmp_path):
+        """Six writer threads (more than the cores) append through one
+        ChangeLog and read their own key back through another on the same
+        directory, with a short switch interval: a read that starts after
+        an append returned must see it, whatever folds or rebuilds the
+        reading side runs meanwhile."""
+        import itertools
+        import sys
+
+        from operating_system_map_reduce_spark.engine import KV_SCHEMA
+        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+
+        root = str(tmp_path / "kv")
+        writer, reader = (ChangeLog(spark, root, KV_SCHEMA, key_col="key")
+                          for _ in range(2))
+        writer.append([{"seq": 1, "op": "insert", "key": "t0", "value": b"base"}])
+        writer.compact()
+        assert reader.lookup("t0")["value"] == b"base"
+        seqs, seq_lock = itertools.count(2), threading.Lock()
+
+        def work(t):
+            stale = []
+            for i in range(25):
+                with seq_lock:
+                    seq = next(seqs)
+                value = f"{t}-{i}".encode()
+                writer.append([{"seq": seq, "op": "update", "key": f"t{t}",
+                                "value": value}])
+                row = reader.lookup(f"t{t}")
+                if row is None or row["value"] != value:
+                    stale.append((i, row and row["value"]))
+            return stale
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=6) as pool:
+                stale = [f.result(timeout=600) for f in
+                         [pool.submit(work, t) for t in range(6)]]
+        finally:
+            sys.setswitchinterval(interval)
+        assert stale == [[]] * 6, stale
+
     def test_readers_see_written_values_while_folds_run(self, engine, monkeypatch):
         """One writer cycles KVU/KVD on a key while three readers KVG it;
         with a two-file fold budget the tail folds mid-race.  Every reply

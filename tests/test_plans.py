@@ -392,11 +392,6 @@ class TestRegistryWindow:
         assert set(entrymod.oracle_sql()) == set(_QUERIES)
         assert len(_QUERIES) <= _win.HALVES_THRESHOLD
 
-    def test_registry_stays_under_the_halves_threshold(self):
-        """The registry stays within the window clock's capacity (the
-        2-round staleness ceiling's pigeonhole bound)."""
-        assert len(entrymod.queries()) <= _win.HALVES_THRESHOLD
-
 
 class TestRound12PlanShapes:
     def test_minhash_query_plan_has_no_python_stage(self, spark, sf_dir):

@@ -1,19 +1,27 @@
 """The changelog snapshot (sources/changelog.py) against replay().
 
-Point reads are served from a driver-side overlay of the log tail, a
-per-state memo and a checkpointed state; every answer must equal what a
-fresh ``ChangeLog.replay()`` over the files says, whatever folds,
-rebuilds, compactions and other engines' appends came before.
+Point reads are served from a driver-side overlay of the log since the
+base, then a memo, then a pyarrow read of the one row group of the
+key-sorted base whose footer range holds the key; past the overlay's
+byte budget a memo miss falls back to a Spark point read on the
+checkpointed state.  Every answer must equal what a fresh
+``ChangeLog.replay()`` over the files says, whatever folds, rebuilds,
+compactions and other engines' appends came before.
 """
 
 from __future__ import annotations
 
+import os
 import random
+
+import pyarrow.parquet as pq
 
 from operating_system_map_reduce_spark import codes
 from operating_system_map_reduce_spark.engine import KV_SCHEMA, KVEngine
 from operating_system_map_reduce_spark.sources import changelog
 from operating_system_map_reduce_spark.sources.changelog import ChangeLog, ChangelogStreamSink
+
+from tests.test_kv_engine import spark_jobs
 
 PW = ("alice", "pw")
 
@@ -132,3 +140,142 @@ class TestDifferential:
         assert log.lookup("small")["value"] == b"t"
         assert [p for p in loaded if "batch-stream" in p]
         assert log.snapshot().overlay.keys() == {"big1", "small"}
+
+
+def _compacted(spark, root: str, n: int = 800) -> ChangeLog:
+    """A base of ``n`` keys (k00000, k00002, ...; k00010 deleted before
+    SAV) compacted by one ChangeLog, served by a fresh one whose memo is
+    empty."""
+    log = ChangeLog(spark, root, KV_SCHEMA, key_col="key")
+    rng = random.Random(n)
+    log.append([{"seq": i + 1, "op": "insert", "key": f"k{2 * i:05d}",
+                 "value": rng.randbytes(512)} for i in range(n)])
+    log.append([{"seq": n + 1, "op": "delete", "key": "k00010", "value": None}])
+    log.compact()
+    fresh = ChangeLog(spark, root, KV_SCHEMA, key_col="key")
+    fresh.snapshot()
+    return fresh
+
+
+def _footer_ranges(base_dir: str) -> list[tuple[str, str]]:
+    ranges = []
+    for f in sorted(os.listdir(base_dir)):
+        if f.endswith(".parquet"):
+            meta = pq.read_metadata(os.path.join(base_dir, f))
+            col = meta.schema.names.index("key")
+            ranges += [(meta.row_group(i).column(col).statistics.min,
+                        meta.row_group(i).column(col).statistics.max)
+                       for i in range(meta.num_row_groups)
+                       if meta.row_group(i).num_rows]
+    return ranges
+
+
+class TestBaseReads:
+    """A memo miss reads the base's row groups on the driver."""
+
+    def test_memo_misses_after_sav_run_no_spark_job(self, spark, tmp_path):
+        root = str(tmp_path / "kv")
+        log = _compacted(spark, root)
+        want = _replayed(spark, root)
+        keys = ["k00004", "k00005", "k00010", "a", "z"]  # present, absent, deleted
+        assert not set(keys) & set(log.snapshot().memo)
+        got = []
+        assert spark_jobs(spark, lambda: got.extend(log.lookup(k) for k in keys)) == 0
+        assert [r and r["value"] for r in got] == [want.get(k) for k in keys]
+        assert got[0] == {"seq": 3, "op": "insert", "key": "k00004", "value": want["k00004"]}
+
+    def test_compacted_base_has_disjoint_ordered_key_ranges(self, spark, tmp_path,
+                                                            monkeypatch):
+        monkeypatch.setattr(changelog, "ROW_GROUP_BYTES", 32 << 10)
+        root = str(tmp_path / "kv")
+        _compacted(spark, root)
+        ranges = sorted(_footer_ranges(os.path.join(root, "base")))
+        assert len(ranges) > 1
+        assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+
+    def test_point_read_decodes_at_most_one_row_group(self, spark, tmp_path,
+                                                      monkeypatch):
+        monkeypatch.setattr(changelog, "ROW_GROUP_BYTES", 32 << 10)
+        root = str(tmp_path / "kv")
+        log = _compacted(spark, root)
+        assert len(log.snapshot().groups) > 1
+        want = _replayed(spark, root)
+        reads: list[tuple] = []
+        read_group = ChangeLog._read_group
+
+        def spy(self, path, meta, i, key):
+            reads.append((path, i))
+            return read_group(self, path, meta, i, key)
+
+        monkeypatch.setattr(ChangeLog, "_read_group", spy)
+        for key, most in [("k00000", 1), ("k00801", 1), ("k01598", 1),
+                          ("a", 0), ("z", 0)]:
+            reads.clear()
+            row = log.lookup(key)
+            assert (row and row["value"]) == want.get(key), key
+            assert len(reads) <= most, (key, reads)
+
+    def test_cold_lookup_after_a_fold_runs_no_spark_job(self, spark, tmp_path,
+                                                        monkeypatch):
+        monkeypatch.setattr(changelog, "FOLD_FILES", 1)
+        root = str(tmp_path / "kv")
+        log = _compacted(spark, root)
+        state = log.snapshot().state
+        for i in range(3):
+            log.append([{"seq": 5000 + i, "op": "update", "key": f"k{2 * i:05d}",
+                         "value": b"new"}])
+        snap = log.snapshot()
+        assert snap.state is not state and snap.tail == ()  # folded
+        want = _replayed(spark, root)
+        got = []
+        keys = ["k00006", "k00100", "k00101"]
+        assert not set(keys) & set(snap.memo)
+        assert spark_jobs(spark, lambda: got.extend(log.lookup(k) for k in keys)) == 0
+        assert [r and r["value"] for r in got] == [want.get(k) for k in keys]
+        assert log.lookup("k00002")["value"] == want["k00002"] == b"new"
+
+    def test_base_swapped_by_another_sav_mid_read(self, spark, tmp_path, monkeypatch):
+        """Another ChangeLog compacts between this one's footer index and
+        its row-group read: the read falls back and stays exact."""
+        root = str(tmp_path / "kv")
+        log = _compacted(spark, root)
+        other = ChangeLog(spark, root, KV_SCHEMA, key_col="key")
+        read_group = ChangeLog._read_group
+        swaps = []
+
+        def racing(self, path, meta, i, key):
+            if not swaps:
+                swaps.append(path)
+                other.append([{"seq": 9000, "op": "insert", "key": "new", "value": b"n"}])
+                other.compact()
+            return read_group(self, path, meta, i, key)
+
+        monkeypatch.setattr(ChangeLog, "_read_group", racing)
+        row = log.lookup("k00020")
+        assert swaps and not os.path.exists(swaps[0])
+        want = _replayed(spark, root)
+        assert row["value"] == want["k00020"]
+        assert log.lookup("new")["value"] == b"n"
+        assert {k: (log.lookup(k) or {}).get("value")
+                for k in ["k00020", "k00010", "k01598"]} == {
+            "k00020": want["k00020"], "k00010": None, "k01598": want["k01598"]}
+
+    def test_unsorted_base_answers_exactly(self, spark, tmp_path):
+        """A base written without the range sort (overlapping footer
+        ranges), under a log tail, answers as replay() does."""
+        root = tmp_path / "kv"
+        rng = random.Random(5)
+        rows = [(i + 1, "insert", f"k{i:04d}", rng.randbytes(64)) for i in range(300)]
+        (spark.createDataFrame(rows, KV_SCHEMA).repartition(4)
+         .write.parquet(str(root / "base")))
+        ranges = sorted(_footer_ranges(str(root / "base")))
+        assert any(lo <= prev_hi for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]))
+        log = ChangeLog(spark, str(root), KV_SCHEMA, key_col="key")
+        log.append([{"seq": 400, "op": "delete", "key": "k0003", "value": None},
+                    {"seq": 401, "op": "update", "key": "k0004", "value": b"u"},
+                    {"seq": 402, "op": "insert", "key": "k9999", "value": b"i"}])
+        want = _replayed(spark, str(root))
+        keys = [f"k{i:04d}" for i in range(0, 320, 7)] + ["k0003", "k0004", "k9999"]
+        assert log.snapshot().groups is not None
+        got = {k: (log.lookup(k) or {}).get("value") for k in keys}
+        assert got == {k: want.get(k) for k in keys}
