@@ -191,8 +191,14 @@ class ChangeLog:
         table = pa.table(cols, schema=self._arrow_schema)
         path = os.path.join(self.log_dir, f"batch-{rows[0][self.seq_col]:020d}-{uuid.uuid4().hex[:8]}.parquet")
         tmp = path + ".tmp"
-        pq.write_table(table, tmp)
-        with open(tmp, "rb") as f:
+        # encoded in memory, then written and fsync'd through one file
+        # descriptor: fewer system calls, each a point where a client
+        # thread waits to take the interpreter lock back
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        with open(tmp, "wb") as f:
+            f.write(buf.getvalue())
+            f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, path)
         self._announce()
@@ -524,8 +530,11 @@ class ChangeLog:
             # Distributed snapshot write: executors stream the state
             # straight to parquet part-files -- the driver never
             # materializes it (at 100 TB a .collect() would OOM the driver).
-            key = self.key_col
-            (snap.state.repartitionByRange(key).sortWithinPartitions(key)
+            # as many key ranges as the state has partitions: a single
+            # one needs no sampling job, and no exchange is left for AQE
+            # to coalesce
+            key, parts = self.key_col, max(1, snap.state.rdd.getNumPartitions())
+            (snap.state.repartitionByRange(parts, key).sortWithinPartitions(key)
              .write.option("parquet.block.size", ROW_GROUP_BYTES).parquet(tmp))
             old = self.base_dir
             swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
