@@ -33,8 +33,8 @@ replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
    since the base, read with pyarrow.  It follows the on-disk layout,
    listed again whenever the generation moved, so appends by another
    engine or by the stream sink show up too;
- - ``groups``: the base's footer index, ``(min key, max key, file, row
-   group)`` from the parquet footers, built once per base;
+ - ``groups``: the base's footer index, ``(min key, max key, file,
+   footer, row group)`` from the parquet footers, built once per base;
  - ``memo``: a bounded ``key -> row | None`` of point reads, exact for
    as long as that state serves.
 
