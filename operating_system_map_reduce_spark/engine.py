@@ -9,16 +9,19 @@ State:
  - auth + kv tables: changelog-parquet tables (sources/changelog.py) --
    replay view is the current state, SAV compacts, restart replays;
    durability parity with p3.  Point reads (KVG, GET, the KVI/KVU/KVD
-   existence probes) come from each log's driver-side snapshot: the
-   log overlay, then a memo, then a driver-side read of the one row
-   group of the key-sorted base that can hold the key, so a point read
-   runs no Spark job while the log since SAV fits the overlay.  Scans
-   (KVA, ALL, KMR, export) read the snapshot's state and tail files.
+   existence probes) come from each log's driver-side snapshot of its
+   files: the log overlay, then a memo, then a driver-side read of the
+   one row group of the key-sorted base that can hold the key, so a
+   point read runs no Spark job unless the log since SAV was spilled to
+   Spark (past the overlay's byte budget).  Scans (KVA, ALL, KMR,
+   export) read the base alone while the log is empty (right after
+   SAV), else dedup(base ∪ spill ∪ overlay).  Nothing folds and nothing
+   is checkpointed.
  - credentials: the login check reads a driver-side map
    username -> (salt, pass_hash), the reference's in-memory auth map
-   (p3/server/my_storage.cc:232-250): the auth state's credentials,
-   collected once per state, under the auth overlay.  A login after a
-   REG or SET runs no Spark job.
+   (p3/server/my_storage.cc:232-250): the credentials of the auth
+   log's base and spill, collected once per base and spill, under the
+   auth overlay.  A login after a REG, a SET or a SAV runs no Spark job.
  - seq: minted above every seq either log's snapshot has seen, so a
    write after another engine's writes on the same directory wins.
  - SAV runs alone: every command holds a shared gate, SAV holds it
@@ -142,11 +145,11 @@ class KVEngine:
         # 1,024 concurrent clients (p2/scripts/grading_p2_races.py).
         self._stripes = [threading.Lock() for _ in range(64)]
         self._gate = SavGate()
-        # (auth state, its credentials) and (auth snapshot, credentials
-        # under its overlay); replaced whole under _cred_lock, never
-        # mutated, so readers take no lock
+        # (auth base and spill, their credentials) and (auth snapshot,
+        # credentials under its overlay); replaced whole under
+        # _cred_lock, never mutated, so readers take no lock
         self._cred_lock = threading.Lock()
-        self._state_creds: tuple = (None, {})
+        self._settled_creds: tuple = (None, {})
         self._creds: tuple = (None, {})
         self.quota_table: dict[str, Quotas] = {}
         self.mru = MRUManager(top_size)
@@ -158,8 +161,8 @@ class KVEngine:
         """Writer lock for one hash stripe (per-bucket serialization,
         p2/server/concurrenthashmap.h:40-43): it makes a write's
         existence probe and its append atomic.  Readers take no stripe:
-        each read is served by one published snapshot of fsync'd
-        batches, which a fold replaces whole."""
+        each read is served by one published snapshot of fsync'd files,
+        which the next layout change replaces whole."""
         return self._stripes[hash(key) & 63]
 
     def _next_seq(self) -> int:
@@ -182,23 +185,22 @@ class KVEngine:
 
     def _credentials(self) -> dict[str, tuple[bytes, bytes]]:
         """username -> (salt, pass_hash) as of the auth log's current
-        snapshot: the state's credentials, collected by one Spark job
-        when a fold or a rebuild replaced the state, under the overlay's
+        snapshot: the credentials of its base and spill, collected once
+        per base and spill (a pyarrow read of the base's three columns
+        when the spill is empty, else one Spark job), under the overlay's
         records (appends by any engine on this directory).  A login after
-        a REG or SET runs no Spark job."""
+        a REG, a SET or a SAV by any engine runs no Spark job."""
         snap, creds = self.auth_log.snapshot(), self._creds
         if creds[0] is snap:
             return creds[1]
         with self._cred_lock:
             creds = self._creds
             if creds[0] is not snap:
-                state, known = self._state_creds
-                if state is not snap.state:
-                    rows = [] if snap.empty else (
-                        snap.state.select("username", "salt", "pass_hash").collect())
-                    known = {r["username"]: (bytes(r["salt"]), bytes(r["pass_hash"]))
-                             for r in rows}
-                    self._state_creds = (snap.state, known)
+                settled, known = self._settled_creds
+                if settled != snap.settled:
+                    snap, rows = self.auth_log.settled_rows(["username", "salt", "pass_hash"])
+                    known = {r["username"]: (r["salt"], r["pass_hash"]) for r in rows}
+                    self._settled_creds = (snap.settled, known)
                 merged = dict(known)
                 for user, row in snap.overlay.items():
                     if row["op"] == "delete":

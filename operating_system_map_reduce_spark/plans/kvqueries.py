@@ -160,8 +160,9 @@ ORDER BY key
 
 
 # --- changelog AS-OF: time travel over the append-only log -----------------
-# The snapshot face of ChangeLog.replay_asof (sources/changelog.py):
-# the state AS OF the mid-history sequence (S = head-seq div 2,
+# Time travel as SQL over the events log, the same latest-seq-per-key
+# replay rule as ChangeLog.replay (sources/changelog.py) applied to a
+# prefix: the state AS OF the mid-history sequence (S = head-seq div 2,
 # deterministic in both engines) compared against head state.  On an
 # append-only log every historical snapshot is a FILTER ahead of the
 # same one-shuffle dedup -- the reference gets the identical semantics

@@ -25,38 +25,41 @@ file count and needs no ordering assumption across files.
 
 Serving reads: the reference answers point ops from an in-memory Map and
 replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
-``ChangeLog`` keeps one ``Snapshot`` per log, replaced whole:
+``ChangeLog`` keeps one ``Snapshot`` per on-disk layout, replaced whole.
+A snapshot holds no Spark state: only the files it pinned and
+driver-side indexes over them.
 
- - ``state``: the replay of the base and the log files folded so far,
-   eagerly checkpointed; scans read it;
- - ``overlay``: driver-side ``key -> latest record`` of the whole log
-   since the base, read with pyarrow.  It follows the on-disk layout,
-   listed again whenever the generation moved, so appends by another
-   engine or by the stream sink show up too;
- - ``groups``: the base's footer index, ``(min key, max key, file,
-   footer, row group)`` from the parquet footers, built once per base;
- - ``memo``: a bounded ``key -> row | None`` of point reads, exact for
-   as long as that state serves.
+ - base: the files ``compact`` wrote, with their footer index
+   ``groups``, ``(min key, max key, file, footer, row group)`` from the
+   parquet footers, built once per base;
+ - spill: log files Spark serves.  Empty unless the log since the base
+   outgrew the overlay's byte budget, or a new file held a record that
+   does not sort after the base and spill;
+ - overlay: driver-side ``key -> latest record`` of the other log
+   files, read with pyarrow.  Every overlay record sorts after every
+   base and spill record: a new file that would break this joins the
+   spill, with the overlay's files.  The snapshot follows the on-disk
+   layout, listed again whenever the generation moved, so appends by
+   another engine or by the stream sink show up too;
+ - memo: a bounded ``key -> row | None`` of point reads, exact for base
+   ∪ spill, so appends keep it.
 
-``lookup`` answers from the overlay, then the memo, then a pyarrow read
-of the base row groups whose key range holds the key (one, on a base
-``compact`` wrote; none for a key outside every range), with no Spark
-job.  Only when the log since the base is past the byte budget, or holds
-a record that does not sort after the base, does the overlay shrink to
-the tail past the state and a memo miss run one Spark point read on the
-state.  Scans (``replay_cached``) read the state, or ``dedup(state ∪
-tail files)`` when there is a tail.  The tail is folded into a new state
-past a file-count budget, from the overlay's records when it holds them,
-which changes only what scans read; the state is rebuilt from the files
-only when the base changes under it or a tail record does not sort after
-it.  ``compact`` writes the base from the folded state, so the engine's
-own SAV keeps the state and its memo.
+``lookup`` answers from the overlay, then the memo, then the base row
+groups whose key range holds the key (one, on a base ``compact`` wrote;
+none for a key outside every range), read with pyarrow and no Spark job;
+only with a spill does a memo miss run one Spark point read of
+``dedup(base ∪ spill)``.  Scans (``replay_cached``) read the base alone
+when there is no log, else ``dedup(base ∪ spill ∪ overlay)``, and SAV
+(``compact``) writes that scan as the new base.  Nothing is folded and
+nothing is checkpointed.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
+import re
 import shutil
 import threading
 import uuid
@@ -68,15 +71,14 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.sql.window import Window
 
-# log files scans read past the state before they are folded into it
-FOLD_FILES = 64
-# the log the overlay holds; past it, point reads go to Spark until SAV
-FOLD_BYTES = 8 << 20
+# the log the overlay holds; past it, the log is spilled to Spark until SAV
+OVERLAY_BYTES = 8 << 20
 # parquet row-group target of the base: a point read decodes one group
 ROW_GROUP_BYTES = 256 << 10
-# point reads remembered per state; a larger row is read again each
-# time, so the memo stays within MEMO_KEYS * MEMO_ROW_BYTES
+# point reads remembered per base and spill; a larger row is read again
+# each time, so the memo stays within MEMO_KEYS * MEMO_ROW_BYTES
 MEMO_KEYS = 4096
 MEMO_ROW_BYTES = 16 << 10
 
@@ -97,36 +99,26 @@ def fsync_dir(path: str) -> None:
 
 @dataclass(eq=False)
 class Snapshot:
-    """One consistent view of a log as of ``layout``.  Published whole
-    and never changed, except that ``memo`` fills with point reads
-    (shared by every snapshot over that state) and ``scan`` is built on
-    first use.
+    """One consistent view of a log as of ``layout``: its base, spill
+    and overlay (see the module docstring).  Published whole and never
+    changed, except that ``memo`` fills with point reads (shared by
+    every snapshot over the same base and spill) and ``scan`` is built
+    on first use."""
 
-    With ``groups`` set, the overlay holds every log file since the base
-    and a memo miss reads the base's row groups; without, it holds the
-    tail and a memo miss reads the state with Spark."""
-
-    layout: tuple                     # (base files, log files) covered
-    state: DataFrame | None = None    # None: to be rebuilt from the files
-    empty: bool = False               # state read from no file: nothing in it
-    state_seq: int = 0                # highest seq folded into state
-    tail: tuple = ()                  # log files not in state, all above state_seq
-    overlay: dict | None = None       # key -> latest record; None: not loaded
-    overlay_bytes: int = 0            # size of the log files the overlay holds
-    groups: tuple | None = None       # base footer index: (lo, hi, file, footer, group)
-    seq: int = 0                      # highest seq in state and tail
+    layout: tuple                 # (base files, log files) covered
+    groups: tuple = ()            # base footer index: (lo, hi, file, footer, group)
+    spill: tuple = ()             # log files Spark serves
+    overlay: dict = field(default_factory=dict)  # key -> latest record of the rest
+    overlay_bytes: int = 0        # size of the log files the overlay holds
+    floor: int = 0                # highest seq in base and spill
+    seq: int = 0                  # highest seq covered
     memo: dict = field(default_factory=dict)
     scan: DataFrame | None = None
 
     @property
-    def answers(self) -> bool:
-        return self.state is not None and self.overlay is not None
-
-    @property
-    def due(self) -> bool:
-        """The tail should be folded before the next read, and must be
-        unless the snapshot still ``answers``."""
-        return not self.answers or len(self.tail) > FOLD_FILES
+    def settled(self) -> tuple:
+        """What the memo is exact for: the base and the spill."""
+        return self.layout[0], self.spill
 
 
 class ChangeLog:
@@ -147,7 +139,7 @@ class ChangeLog:
         self._seen: tuple[int, Snapshot | None] = (-1, None)
         os.close(os.open(self.generation_path, os.O_WRONLY | os.O_CREAT, 0o644))
         self._lock = threading.Lock()        # publishes snapshots
-        self._build_lock = threading.Lock()  # one fold, rebuild or compaction
+        self._build_lock = threading.Lock()  # one compaction at a time
         self._memo_lock = threading.Lock()
 
     @property
@@ -187,8 +179,7 @@ class ChangeLog:
         could otherwise lose the append despite the durable bytes."""
         if not rows:
             return
-        cols = {f.name: [r.get(f.name) for r in rows] for f in self.schema.fields}
-        table = pa.table(cols, schema=self._arrow_schema)
+        table = pa.Table.from_pylist(rows, schema=self._arrow_schema)
         path = os.path.join(self.log_dir, f"batch-{rows[0][self.seq_col]:020d}-{uuid.uuid4().hex[:8]}.parquet")
         tmp = path + ".tmp"
         # encoded in memory, then written and fsync'd through one file
@@ -206,30 +197,25 @@ class ChangeLog:
 
     # -- read path ---------------------------------------------------------
 
-    @staticmethod
-    def _list(d: str) -> list[str]:
-        return [os.path.join(d, f) for f in os.listdir(d)
-                if f.endswith(".parquet")]
-
     def _log_paths(self, names) -> list[str]:
         return [os.path.join(self.log_dir, f) for f in names]
 
-    def raw(self) -> DataFrame:
-        """base ∪ log, no dedup."""
-        parts = [self._read_files(files)
-                 for files in (self._list(self.base_dir), self._list(self.log_dir))
-                 if files]
+    def _base_paths(self, names) -> list[str]:
+        return [os.path.join(self.base_dir, f) for f in names if f.endswith(".parquet")]
+
+    def _union(self, parts: list[DataFrame]) -> DataFrame:
         if not parts:
             return self.spark.createDataFrame([], self.schema)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def raw(self) -> DataFrame:
+        """base ∪ log, no dedup."""
+        base, log = self.layout_key()
+        return self._union([self._read_files(files) for files in
+                            (self._base_paths(base), self._log_paths(log)) if files])
 
     def _dedup(self, df: DataFrame) -> DataFrame:
         """latest seq per key wins; delete-ops drop the key."""
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy(self.key_col).orderBy(F.desc(self.seq_col))
         return (
             df.withColumn("__rn", F.row_number().over(w))
@@ -244,24 +230,6 @@ class ChangeLog:
         (p3/server/my_storage.cc:573-702) but order-independent and
         distributed: one shuffle on the key column."""
         return self._dedup(self.raw())
-
-    def replay_asof(self, seq: int) -> DataFrame:
-        """Time travel: the state AS OF sequence ``seq`` (inclusive) --
-        what replay() would have returned the moment that record was
-        appended.  The append-only log makes every historical snapshot
-        a FILTER (seq <= S) ahead of the same one-shuffle dedup; the
-        reference gets the same semantics by stopping its sequential
-        load_file replay after S records (my_storage.cc:573-702 applies
-        strictly in file order).  Caveat: compaction (SAV) rewrites the
-        base as a snapshot (records keep their latest seq) and truncates
-        the log, so snapshots OLDER than the last compaction are no
-        longer addressable: asof(S) below the compacted records' seqs
-        sees only the survivors with seq <= S, possibly nothing --
-        exactly the reference's SAV contract, which persists current
-        state, not history.  Exact for every S since the last
-        compaction (pinned in tests/test_binlog.py)."""
-        return self._dedup(
-            self.raw().filter(F.col(self.seq_col) <= F.lit(seq)))
 
     def _read_files(self, files: list[str]) -> DataFrame:
         return self.spark.read.schema(self.schema).parquet(*files)
@@ -299,11 +267,10 @@ class ChangeLog:
             meta = pq.read_metadata(p)
             col = meta.schema.names.index(self.key_col)
             for i in range(meta.num_row_groups):
-                if meta.row_group(i).num_rows == 0:
-                    continue
-                s = meta.row_group(i).column(col).statistics
-                lo, hi = (s.min, s.max) if s is not None and s.has_min_max else (None, None)
-                groups.append((lo, hi, p, meta, i))
+                if meta.row_group(i).num_rows:
+                    s = meta.row_group(i).column(col).statistics
+                    lo, hi = (s.min, s.max) if s is not None and s.has_min_max else (None, None)
+                    groups.append((lo, hi, p, meta, i))
         return tuple(groups)
 
     def _read_group(self, path: str, meta, i: int, key: str) -> list[dict]:
@@ -315,142 +282,111 @@ class ChangeLog:
     def layout_key(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
         """Cheap (listdir-only, no Spark job) fingerprint of the
         on-disk layout: (base files, log files)."""
-        base = tuple(sorted(os.listdir(self.base_dir)))
-        log = tuple(sorted(f for f in os.listdir(self.log_dir)
-                           if f.endswith(".parquet")))
-        return base, log
+        return (tuple(sorted(os.listdir(self.base_dir))),
+                tuple(sorted(f for f in os.listdir(self.log_dir) if f.endswith(".parquet"))))
 
     def max_seq(self) -> int:
         """Highest seq on disk, from parquet footer statistics."""
-        return self._seq_range(self._list(self.base_dir) + self._list(self.log_dir))[1]
+        base, log = self.layout_key()
+        return self._seq_range(self._base_paths(base) + self._log_paths(log))[1]
 
     def seen_seq(self) -> int:
         """Highest seq of any record the current snapshot covers."""
-        snap = self._seen[1]
-        return snap.seq if snap is not None else 0
+        return self._seen[1].seq if self._seen[1] else 0
 
     # -- snapshot ----------------------------------------------------------
 
     def snapshot(self) -> Snapshot:
-        """The snapshot of the current on-disk layout.  A snapshot that is
-        due for a fold but still answers is returned at once while
-        another thread folds; otherwise this thread folds first."""
-        while True:
-            snap = self._refresh()
-            if not snap.due:
-                return snap
-            if not self._build_lock.acquire(blocking=not snap.answers):
-                return snap
-            try:
-                snap = self._refresh()
-                if snap.due:
-                    self._publish(self._fold(snap) if snap.state is not None
-                                  else self._rebuild(snap.layout))
-            finally:
-                self._build_lock.release()
-
-    def _refresh(self) -> Snapshot:
-        """The published snapshot, brought to the on-disk layout.  The
-        directories are listed again only when the generation moved
-        since the listing the snapshot was published for: a writer
-        announces a change once it is on disk."""
+        """The snapshot of the current on-disk layout.  The directories
+        are listed again only when the generation moved since the listing
+        the published snapshot was built for: a writer announces a change
+        once it is on disk."""
         gen, snap = self._seen
         if snap is not None and gen == self._generation():
             return snap
-        with self._lock:
-            self._advance_to_disk(self._seen[1])
-            return self._seen[1]
+        return self._publish()
 
-    def _publish(self, snap: Snapshot) -> None:
+    def _publish(self, snap: Snapshot | None = None) -> Snapshot:
+        """``snap`` (default: the published snapshot) brought to the
+        on-disk layout and published.  The generation is read before the
+        listing; a file that a compaction elsewhere removed meanwhile
+        makes it list again."""
         with self._lock:
-            self._advance_to_disk(snap)
+            while True:
+                gen = self._generation()
+                try:
+                    new = self._advance(self._seen[1] if snap is None else snap,
+                                        self.layout_key())
+                except FileNotFoundError:
+                    continue
+                self._seen = (gen, new)
+                return new
 
-    def _advance_to_disk(self, snap: Snapshot | None) -> None:
-        # under _lock: the generation is read before the listing, and
-        # listings never go back past the published layout
-        gen = self._generation()
-        self._seen = (gen, self._advance(snap, self.layout_key()))
+    def _base_snapshot(self, base: tuple, memo: dict | None = None) -> Snapshot:
+        """A snapshot of base files ``base`` and no log."""
+        paths = self._base_paths(base)
+        hi = self._seq_range(paths)[1]
+        return Snapshot((base, ()), self._footer_index(paths), floor=hi, seq=hi,
+                        memo={} if memo is None else memo)
 
     def _advance(self, snap: Snapshot | None, layout) -> Snapshot:
-        """``snap`` brought to ``layout`` without a Spark job: the log
-        files appended since are read into the overlay while the files
-        it holds stay within the byte budget (sized before anything is
-        read).  A new base, a removed file or a record that does not sort
-        after the state leaves the state to be rebuilt."""
+        """``snap`` brought to ``layout`` without a Spark job; a new base
+        or a removed log file starts again from the base.  The log files
+        appended since are read into the overlay while it stays within
+        the byte budget (sized before anything is read) and their records
+        sort after the base and spill.  Otherwise the overlay's files and
+        the new ones join the spill, and the memo starts empty."""
         if snap is not None and snap.layout == layout:
             return snap
-        seq = snap.seq if snap is not None else 0
-        if (snap is None or snap.state is None or snap.layout[0] != layout[0]
+        if (snap is None or snap.layout[0] != layout[0]
                 or not set(snap.layout[1]) <= set(layout[1])):
-            return Snapshot(layout, seq=seq)
-        known = set(snap.layout[1])
-        new = [f for f in layout[1] if f not in known]
-        paths = self._log_paths(new)
+            snap = self._base_snapshot(layout[0])
+        paths = self._log_paths(sorted(set(layout[1]) - set(snap.layout[1])))
+        lo, hi = self._seq_range(paths)
+        seq = max(snap.seq, hi)
+        size = snap.overlay_bytes + sum(os.path.getsize(p) for p in paths)
+        if lo <= snap.floor or size > OVERLAY_BYTES:
+            return Snapshot(layout, snap.groups, spill=layout[1], floor=seq, seq=seq)
+        overlay = dict(snap.overlay)
+        for row in self._read_tail(paths):
+            cur = overlay.get(row[self.key_col])
+            if cur is None or row[self.seq_col] > cur[self.seq_col]:
+                overlay[row[self.key_col]] = row
+        return Snapshot(layout, snap.groups, snap.spill, overlay, size,
+                        snap.floor, seq, snap.memo)
+
+    def _settled_paths(self, snap: Snapshot) -> list[str]:
+        """The files of the snapshot's base and spill."""
+        return self._base_paths(snap.layout[0]) + self._log_paths(snap.spill)
+
+    def _spark_rows(self, snap: Snapshot, query) -> list[dict]:
+        """``query`` over dedup(base ∪ spill), collected.  Raises
+        FileNotFoundError when a compaction elsewhere removed one of the
+        files."""
+        paths = self._settled_paths(snap)
         try:
-            lo, hi = self._seq_range(paths)
-            seq = max(seq, hi)
-            if lo <= snap.state_seq:
-                return Snapshot(layout, seq=seq)
-            size = snap.overlay_bytes + sum(os.path.getsize(p) for p in paths)
-            overlay = groups = None
-            if snap.overlay is not None and size <= FOLD_BYTES:
-                overlay, groups = dict(snap.overlay), snap.groups
-                for row in self._read_tail(paths):
-                    cur = overlay.get(row[self.key_col])
-                    if cur is None or row[self.seq_col] > cur[self.seq_col]:
-                        overlay[row[self.key_col]] = row
-        except FileNotFoundError:  # removed by a compaction elsewhere
-            return Snapshot(layout, seq=seq)
-        return Snapshot(layout, snap.state, snap.empty, snap.state_seq,
-                        snap.tail + tuple(new), overlay, size, groups, seq, snap.memo)
+            rows = query(self._dedup(self._read_files(paths))).collect()
+        except Exception:
+            if all(map(os.path.exists, paths)):
+                raise
+            raise FileNotFoundError("a snapshot file was removed") from None
+        return [{k: bytes(v) if isinstance(v, bytearray) else v
+                 for k, v in r.asDict().items()} for r in rows]
 
-    def _fold(self, snap: Snapshot) -> Snapshot:
-        """``snap`` with its tail folded into a new state.  When the
-        overlay holds the tail, its latest record per key is shipped from
-        the driver (as Arrow) instead of reading the tail's files, and
-        the memo moves over with those records, which the new state
-        holds.  An overlay over the base keeps serving point reads: the
-        fold only changes what scans read."""
-        if not snap.tail:
-            return snap
-        memo = {}
-        if snap.overlay is not None:
-            rows = [r for r in snap.overlay.values() if r[self.seq_col] > snap.state_seq]
-            memo = dict(snap.memo)
-            _remember(memo, ((r[self.key_col], self._live(r)) for r in rows))
-            tail = self.spark.createDataFrame(
-                pa.Table.from_pylist(rows, schema=self._arrow_schema))
-            hi = max((r[self.seq_col] for r in rows), default=0)
-        else:
-            paths = self._log_paths(snap.tail)
-            tail = self._read_files(paths)
-            hi = self._seq_range(paths)[1]
-        state = _checkpoint(self._dedup(snap.state.unionByName(tail)))
-        keep = snap.groups is not None
-        return Snapshot(snap.layout, state, False, max(snap.state_seq, hi),
-                        overlay=snap.overlay if keep else {},
-                        overlay_bytes=snap.overlay_bytes if keep else 0,
-                        groups=snap.groups, seq=max(snap.seq, hi), memo=memo)
-
-    def _rebuild(self, layout, fold_all: bool = False) -> Snapshot:
-        """A state replayed from the files of ``layout``: the base alone
-        when the log fits the overlay budget and sorts after the base
-        (the log is then served from the overlay and the base from its
-        footer index), else base and log."""
-        base = [os.path.join(self.base_dir, f) for f in layout[0]
-                if f.endswith(".parquet")]
-        log = self._log_paths(layout[1])
-        files, folded, groups = base, (), None
-        if (fold_all or sum(os.path.getsize(p) for p in log) > FOLD_BYTES
-                or self._seq_range(log)[0] <= self._seq_range(base)[1]):
-            files, folded = base + log, layout[1]
-        else:
-            groups = self._footer_index(base)
-        hi = self._seq_range(files)[1]
-        state = (_checkpoint(self._dedup(self._read_files(files))) if files
-                 else self.spark.createDataFrame([], self.schema))
-        return Snapshot((layout[0], folded), state, not files, hi,
-                        overlay={}, groups=groups, seq=hi)
+    def settled_rows(self, columns: list[str]) -> tuple[Snapshot, list[dict]]:
+        """The current snapshot and ``columns`` of the live rows of its
+        base ∪ spill: the base files read with pyarrow when the spill is
+        empty (``compact`` writes one live row per key), else one Spark
+        job."""
+        while True:
+            snap = self.snapshot()
+            try:
+                if snap.spill:
+                    return snap, self._spark_rows(snap, lambda df: df.select(*columns))
+                return snap, [row for p in self._settled_paths(snap) for row in
+                              pq.read_table(p, columns=columns).to_pylist()]
+            except FileNotFoundError:
+                self._publish()
 
     def _live(self, row: dict | None) -> dict | None:
         return None if row is None or row[self.op_col] == "delete" else row
@@ -458,64 +394,68 @@ class ChangeLog:
     def lookup(self, key: str) -> dict | None:
         """The live record of ``key``, or None when it is absent or
         deleted: from the overlay, else the memo, else a point read of
-        the base or the state, which the memo then keeps."""
-        snap = self.snapshot()
-        row = snap.overlay.get(key, _MISS)
-        if row is not _MISS:
-            return self._live(row)
-        row = snap.memo.get(key, _MISS)
-        if row is _MISS:
-            row = self._point_read(snap, key)
+        base ∪ spill, which the memo then keeps.  A file removed by a
+        compaction elsewhere makes it list the directories again."""
+        while True:
+            snap = self.snapshot()
+            row = snap.overlay.get(key, _MISS)
+            if row is not _MISS:
+                return self._live(row)
+            row = snap.memo.get(key, _MISS)
+            if row is not _MISS:
+                return row
+            try:
+                row = self._point_read(snap, key)
+            except FileNotFoundError:
+                self._publish()
+                continue
             with self._memo_lock:
                 _remember(snap.memo, [(key, row)])
-        return row
+            return row
 
     def _point_read(self, snap: Snapshot, key: str) -> dict | None:
-        """The live record of ``key`` in the snapshot's state, for a key
-        the overlay does not hold.  With a footer index: the base row
-        groups whose key range holds ``key``, read on the driver with no
-        Spark job.  Otherwise, or when a compaction elsewhere removed the
-        base files, one Spark point read on the (checkpointed) state."""
-        if snap.groups is not None:
-            try:
-                rows = [row for lo, hi, path, meta, i in snap.groups
-                        if lo is None or lo <= key <= hi
-                        for row in self._read_group(path, meta, i, key)]
-                return self._live(max(rows, key=lambda r: r[self.seq_col])
-                                  if rows else None)
-            except FileNotFoundError:
-                pass
-        rows = [] if snap.empty else (
-            snap.state.filter(F.col(self.key_col) == key).collect())
-        return ({k: bytes(v) if isinstance(v, bytearray) else v
-                 for k, v in rows[0].asDict().items()} if rows else None)
+        """The live record of ``key`` in base ∪ spill.  With an empty
+        spill: the base row groups whose key range holds ``key``, read on
+        the driver with no Spark job.  Otherwise one Spark point read."""
+        if snap.spill:
+            rows = self._spark_rows(snap, lambda df: df.filter(F.col(self.key_col) == key))
+            return rows[0] if rows else None
+        rows = [row for lo, hi, path, meta, i in snap.groups
+                if lo is None or lo <= key <= hi
+                for row in self._read_group(path, meta, i, key)]
+        return self._live(max(rows, key=lambda r: r[self.seq_col]) if rows else None)
 
     def replay_cached(self) -> DataFrame:
-        """replay() served from the snapshot, for scans: the state itself
-        when there is no tail, else dedup(state ∪ tail files) over the
-        tail files the snapshot pinned, uncached.  One snapshot returns
-        one DataFrame.  Semantically identical to replay()."""
+        """replay() served from the snapshot, for scans: the base alone
+        when there is no log (``compact`` writes one live row per key),
+        else dedup(base ∪ spill ∪ overlay), the overlay's records shipped
+        from the driver as Arrow.  One snapshot returns one DataFrame.
+        Semantically identical to replay()."""
         snap = self.snapshot()
         if snap.scan is None:
-            scan = snap.state
-            if snap.tail:
-                scan = self._dedup(snap.state.unionByName(
-                    self._read_files(self._log_paths(snap.tail))))
-            snap.scan = scan
+            snap.scan = self._scan(snap)
         return snap.scan
+
+    def _scan(self, snap: Snapshot) -> DataFrame:
+        files = self._settled_paths(snap)
+        parts = [self._read_files(files)] if files else []
+        if snap.overlay:
+            parts.append(self.spark.createDataFrame(pa.Table.from_pylist(
+                list(snap.overlay.values()), schema=self._arrow_schema)))
+        df = self._union(parts)
+        return self._dedup(df) if snap.layout[1] else df
 
     # -- compaction (SAV) --------------------------------------------------
 
     def compact(self) -> None:
-        """SAV parity (p3/server/my_storage.cc:505-565): fold the tail into
-        the state, write the state to a tmp dir range-partitioned and
-        sorted by key in row groups of ROW_GROUP_BYTES, atomically swap
-        it in as base, truncate the log, announce the new layout.  A
-        reader that lists between swap and truncate sees duplicates of
-        *identical latest records*, which replay dedups -- same safety
-        the reference gets from write-tmp-then-rename.  The folded state
-        and its memo keep serving over the new base, whose footer index
-        is built here.
+        """SAV parity (p3/server/my_storage.cc:505-565): write the
+        snapshot's scan to a tmp dir range-partitioned and sorted by key
+        in row groups of ROW_GROUP_BYTES, atomically swap it in as base,
+        truncate the log, announce the new layout.  A reader that lists
+        between swap and truncate sees duplicates of *identical latest
+        records*, which replay dedups -- same safety the reference gets
+        from write-tmp-then-rename.  The memo carries over to the new
+        base, updated with the overlay's live records, which it holds.
 
         Truncation removes exactly the log files the snapshot covers: a
         batch appended while the snapshot is written (or still in
@@ -523,33 +463,31 @@ class ChangeLog:
         the log before the swap could still open a file removed here;
         KVEngine excludes that by running SAV alone (its SavGate)."""
         with self._build_lock:
-            snap = self._refresh()
-            snap = (self._fold(snap) if snap.state is not None
-                    else self._rebuild(snap.layout, fold_all=True))
+            snap = self.snapshot()
             tmp = os.path.join(self.root, f"base.tmp-{uuid.uuid4().hex[:8]}")
-            # Distributed snapshot write: executors stream the state
+            # Distributed snapshot write: executors stream the scan
             # straight to parquet part-files -- the driver never
             # materializes it (at 100 TB a .collect() would OOM the driver).
-            # as many key ranges as the state has partitions: a single
-            # one needs no sampling job, and no exchange is left for AQE
-            # to coalesce
-            key, parts = self.key_col, max(1, snap.state.rdd.getNumPartitions())
-            (snap.state.repartitionByRange(parts, key).sortWithinPartitions(key)
+            # One key range per advisory partition size of the bytes
+            # read: a single one needs no sampling job.
+            size = snap.overlay_bytes + sum(map(os.path.getsize, self._settled_paths(snap)))
+            advisory = _byte_size(self.spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+            key = self.key_col
+            (self._scan(snap).repartitionByRange(max(1, -(-size // advisory)), key)
+             .sortWithinPartitions(key)
              .write.option("parquet.block.size", ROW_GROUP_BYTES).parquet(tmp))
-            old = self.base_dir
             swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
-            os.rename(old, swap_out)
-            os.rename(tmp, old)
+            os.rename(self.base_dir, swap_out)
+            os.rename(tmp, self.base_dir)
             shutil.rmtree(swap_out)
             for f in self._log_paths(snap.layout[1]):
                 os.remove(f)
             self._announce()
-            base = tuple(sorted(os.listdir(self.base_dir)))
-            groups = self._footer_index([os.path.join(self.base_dir, f) for f in base
-                                         if f.endswith(".parquet")])
-            self._publish(Snapshot((base, ()), snap.state, snap.empty, snap.state_seq,
-                                   overlay={}, groups=groups, seq=snap.seq,
-                                   memo=snap.memo))
+            with self._memo_lock:
+                memo = dict(snap.memo)
+            _remember(memo, ((k, self._live(r)) for k, r in snap.overlay.items()))
+            self._publish(self._base_snapshot(tuple(sorted(os.listdir(self.base_dir))), memo))
 
 
 class ChangelogStreamSink:
@@ -560,7 +498,7 @@ class ChangelogStreamSink:
     A mutation stream (any readStream source carrying the log schema:
     seq, op, key, payload columns) lands in ``<root>/log/`` as the same
     one-parquet-file-per-batch layout the driver writes, so every
-    reader -- ``replay()``, the snapshot's overlay and fold,
+    reader -- ``replay()``, the snapshot's overlay and spill,
     compaction -- works unchanged on streamed appends, and the two
     write paths can interleave in one log.
 
@@ -608,28 +546,18 @@ class ChangelogStreamSink:
             fsync_dir(self.log.log_dir)
         shutil.rmtree(tmp)
 
+    def _writer(self, stream: DataFrame):
+        return (stream.writeStream.foreachBatch(self._sink_batch)
+                .option("checkpointLocation", self.checkpoint_dir))
+
     def ingest_available(self, stream: DataFrame) -> None:
         """Drain everything currently available from the mutation stream
         into the log (Trigger.AvailableNow), blocking until done."""
-        q = (stream.writeStream.foreachBatch(self._sink_batch)
-             .option("checkpointLocation", self.checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        self._writer(stream).trigger(availableNow=True).start().awaitTermination()
 
     def start(self, stream: DataFrame):
         """Continuous ingestion; returns the StreamingQuery handle."""
-        return (stream.writeStream.foreachBatch(self._sink_batch)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .start())
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    # eager: the state is fully checkpointed before any other thread can
-    # query it.  A lazy one is checkpointed when its first job ends; if
-    # another thread's job is being planned over the same RDD at that
-    # moment, Spark's checkpoint lock and the RDD's lock are taken in
-    # opposite orders and the driver deadlocks (seen under concurrent KVI)
-    return df.localCheckpoint(eager=True)
+        return self._writer(stream).start()
 
 
 def _remember(memo: dict, rows) -> None:
@@ -643,6 +571,12 @@ def _remember(memo: dict, rows) -> None:
             memo.pop(key, None)
     for key in list(itertools.islice(memo, max(0, len(memo) - MEMO_KEYS))):
         del memo[key]
+
+
+def _byte_size(text: str) -> int:
+    """A Spark byte-size setting ("67108864b", "64m", "1g") in bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)i?b?", text.strip().lower())
+    return int(m[1]) << 10 * "bkmgtp".index(m[2] or "b")
 
 
 def _arrow_type(simple: str) -> pa.DataType:

@@ -4,7 +4,7 @@ Runs a Spark plan and its oracle SQL, normalizes both to
 column-name-sorted, row-sorted pandas frames, and compares:
 row count, column names, dtype KIND, and typed values.
 
-Strictness matches the driver's typed value-hash (round-1 lesson):
+Strictness matches the driver's typed value-hash:
 - An integer column on one side vs a float column on the other FAILS,
   even when the values are numerically equal.  This is exactly what
   DuckDB's HUGEINT (int128, from integer SUM / list_sum) does — pandas
@@ -12,12 +12,12 @@ Strictness matches the driver's typed value-hash (round-1 lesson):
   the same way it fails the driver.  Always CAST(SUM(...) AS BIGINT).
 - Floats compare with tight relative tolerance (1e-9).  Empirically the
   driver accepts sub-ulp summation-order noise (events_sessionize passed
-  round 1 with a 3e-16 relative diff), so exact-bit float compare would
+  with a 3e-16 relative diff), so exact-bit float compare would
   be STRICTER than the driver; the kind check above is what it actually
   enforces.  Leave float sums AND float-sum ratios RAW on both engines
   (the rel-tol compare absorbs summation noise); do NOT ROUND(...,6)
   them — rounding is what flips half-boundary values when the engines'
-  sub-ulp sums land on opposite sides (the round-9 q8/q14 lesson).
+  sub-ulp sums land on opposite sides (as q8 and q14 did).
 """
 
 from __future__ import annotations

@@ -255,65 +255,3 @@ class TestReferenceImport:
         # delete-then-insert reuses the key; pre-existing live key kept
         assert eng.kv_get("admin", "pw", "k2")[2] == b"reborn"
         assert eng.kv_get("admin", "pw", "live")[2] == b"pre-import"
-
-
-class TestReplayAsof:
-    def test_every_prefix_snapshot_matches_sequential_apply(self, spark, tmp_path):
-        """replay_asof(S) equals stopping the reference's sequential
-        load_file apply after S records, for EVERY prefix of an
-        insert/update/delete/reinsert history."""
-        from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-
-        muts = [
-            (1, "insert", "a", b"a1"),
-            (2, "insert", "b", b"b1"),
-            (3, "update", "a", b"a2"),
-            (4, "delete", "b", b""),
-            (5, "insert", "b", b"b2"),
-            (6, "delete", "a", b""),
-        ]
-        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
-        log.append([{"seq": s, "op": o, "key": k, "value": v}
-                    for s, o, k, v in muts])
-
-        def sequential(upto):
-            state = {}
-            for s, o, k, v in muts[:upto]:
-                if o == "delete":
-                    state.pop(k, None)
-                else:
-                    state[k] = v
-            return sorted(state.items())
-
-        for s in range(0, len(muts) + 1):
-            got = sorted((r["key"], bytes(r["value"])) for r in
-                         log.replay_asof(s).collect())
-            assert got == sequential(s), f"snapshot at seq {s}"
-        # asof(max) == replay()
-        head = sorted((r["key"], bytes(r["value"])) for r in
-                      log.replay().collect())
-        assert head == sequential(len(muts))
-
-    def test_compaction_collapses_history(self, spark, tmp_path):
-        """After SAV-compaction the base is a snapshot carrying each
-        survivor's LATEST seq; history older than the compaction is no
-        longer addressable (the reference's SAV persists state, not
-        history): asof(pre-compaction seq) sees only survivors at or
-        below it -- here nothing -- while every since-compaction
-        snapshot stays exact."""
-        from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-
-        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
-        log.append([{"seq": 1, "op": "insert", "key": "a", "value": b"old"}])
-        log.append([{"seq": 2, "op": "update", "key": "a", "value": b"new"}])
-        assert [bytes(r["value"]) for r in log.replay_asof(1).collect()] == [b"old"]
-        log.compact()
-        # the seq-1 state is gone with the truncated log
-        assert log.replay_asof(1).count() == 0
-        # snapshots at/after the compacted records' seqs stay exact
-        assert [bytes(r["value"]) for r in log.replay_asof(2).collect()] == [b"new"]
-        log.append([{"seq": 3, "op": "update", "key": "a", "value": b"v3"}])
-        assert [bytes(r["value"]) for r in log.replay_asof(2).collect()] == [b"new"]
-        assert [bytes(r["value"]) for r in log.replay_asof(3).collect()] == [b"v3"]

@@ -52,8 +52,7 @@ class TestBucketedJoin:
 
 
 class TestOneFilePerBucketLayout:
-    """Layout invariant for the round-14 one-file-per-bucket write (the
-    r14 verdict's item 7): until now only the A/B probes witnessed it,
+    """Layout invariant for the one-file-per-bucket write: until now only the A/B probes witnessed it,
     so a future Spark version silently eliding the pre-write
     repartition could quietly restore the 32x per-(task,bucket) file
     tax with every test still green.  Assert the FILE COUNT equals the
@@ -104,7 +103,7 @@ class TestEnsureBucketedStaleSweep:
         regeneration; _ensure_bucketed must sweep older same-prefix
         tags when writing the new one -- and must NOT touch other
         prefixes, digit-ambiguous cousins, catalog-registered tables,
-        live siblings, or (round-13 age bounds) young un-pid'd legacy
+        live siblings, or (within the age bounds) young un-pid'd legacy
         names (a mixed-version overlap's still-running writer) --
         while a 'live' pid whose directory PREDATES the process IS
         swept (recycled pid: the process cannot be the writer; the
@@ -190,7 +189,7 @@ class TestEnsureBucketedStaleSweep:
     def test_at_rest_table_degrades_when_warehouse_unwritable(
             self, spark, sf_dir, monkeypatch):
         """A read-only warehouse must not turn the at-rest faces into
-        write errors (round-14 advice): the first failed write flags
+        write errors: the first failed write flags
         the warehouse and returns the build() plan (identical rows);
         later calls skip the doomed write job entirely."""
         import pytest as _pytest

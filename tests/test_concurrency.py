@@ -189,7 +189,7 @@ class TestSnapshotRaces:
         """Six writer threads (more than the cores) append through one
         ChangeLog and read their own key back through another on the same
         directory, with a short switch interval: a read that starts after
-        an append returned must see it, whatever folds or rebuilds the
+        an append returned must see it, whatever listings or spills the
         reading side runs meanwhile."""
         import itertools
         import sys
@@ -228,21 +228,11 @@ class TestSnapshotRaces:
             sys.setswitchinterval(interval)
         assert stale == [[]] * 6, stale
 
-    def test_readers_see_written_values_while_folds_run(self, engine, monkeypatch):
-        """One writer cycles KVU/KVD on a key while three readers KVG it;
-        with a two-file fold budget the tail folds mid-race.  Every reply
-        is a value the writer wrote, or ERR_KEY, and never an error."""
-        from operating_system_map_reduce_spark.sources import changelog
-
-        monkeypatch.setattr(changelog, "FOLD_FILES", 2)
-        folds = []
-        fold = changelog.ChangeLog._fold
-
-        def counted(self, snap):
-            folds.append(len(snap.tail))
-            return fold(self, snap)
-
-        monkeypatch.setattr(changelog.ChangeLog, "_fold", counted)
+    def test_readers_see_written_values_while_folds_run(self, engine):
+        """One writer cycles KVU/KVD on a key while three readers KVG it
+        and a fourth client runs KVA and SAV, which fold the log into a
+        new base mid-race.  Every reply is a value the writer wrote, or
+        ERR_KEY, and never an error."""
         values = [f"v{i}".encode() for i in range(18)]
         done = threading.Event()
         writer_codes: list[str] = []
@@ -266,13 +256,26 @@ class TestSnapshotRaces:
                     out.append(("raised", repr(exc)))
             return out
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        def scans():
+            out = []
+            while True:
+                out.append(("kva", engine.kv_all(*ALICE)))
+                out.append(("sav", engine.save_file(*ALICE)))
+                if done.is_set():
+                    return out
+
+        with ThreadPoolExecutor(max_workers=5) as pool:
             readers = [pool.submit(reader, i) for i in range(3)]
+            background = pool.submit(scans)
             pool.submit(writer).result(timeout=600)
             for r in readers:
                 replies.extend(r.result(timeout=600))
+            ran = background.result(timeout=600)
         assert set(writer_codes) <= {codes.RES_OKINS, codes.RES_OKUPD, codes.RES_OK}
-        assert folds, "no fold ran during the race"
+        assert {name for name, _ in ran} == {"kva", "sav"}
+        assert all(r in [(True, codes.RES_OK, b"hot"), (False, codes.RES_ERR_NO_DATA, None)]
+                   for name, r in ran if name == "kva"), ran
+        assert all(r == (True, codes.RES_OK, None) for name, r in ran if name == "sav"), ran
         assert replies
         bad = [r for r in replies
                if r != (False, codes.RES_ERR_KEY, None)

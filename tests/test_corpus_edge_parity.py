@@ -114,7 +114,7 @@ def corpus_edge_dir(tmp_path_factory):
             pa.Table.from_pandas(df[schema.names], schema=schema,
                                  preserve_index=False),
             os.path.join(out, f"{name}.parquet"))
-    # Capture the warehouse path EAGERLY (round-13 advice fix): the
+    # Capture the warehouse path EAGERLY: the
     # teardown below must not silently no-op when getActiveSession()
     # returns None at teardown time (session fixture torn down first,
     # or a test stopped the session) -- that would reinstate the

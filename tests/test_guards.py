@@ -1,6 +1,5 @@
 """guards.bounded_broadcast: the PYSTAGE_BROADCAST_BOUNDED allowlist's
-"provably bounded" claim, enforced by the engine instead of a comment
-(round-12 verdict directive #4)."""
+"provably bounded" claim, enforced by the engine instead of a comment."""
 
 from __future__ import annotations
 
@@ -80,7 +79,7 @@ class TestBoundedBroadcast:
             guards._VERIFIED.clear()
 
     def test_memo_reverifies_on_changed_key(self, spark, sf_dir, tmp_path):
-        """The memo contract (round-13): the memo does not watch its
+        """The memo contract: the memo does not watch its
         input -- callers fold a change detector into the key.  The
         registered callers key on st_mtime_ns of the source parquet,
         so replacing the file IN PLACE changes the key and forces a

@@ -277,30 +277,6 @@ class TestReplayCache:
         eng.kv_insert("alice", "alice_is_awesome", "k", b"v2")
         assert eng.kv_get("alice", "alice_is_awesome", "k")[2] == b"v2"
 
-    def test_state_is_checkpointed_before_it_is_returned(self, spark, tmp_path,
-                                                         monkeypatch):
-        """No thread can query a replay state whose checkpoint is still
-        pending: a lazy checkpoint that completes while another job is
-        planned over the same RDD deadlocks the driver.  Both a rebuild
-        and a fold publish a checkpointed state."""
-        from operating_system_map_reduce_spark.sources import changelog
-
-        eng = self._eng(spark, tmp_path)
-        seed(eng)
-        eng.kv_insert("alice", "alice_is_awesome", "k1", b"v")
-        assert eng.save_file("alice", "alice_is_awesome")[1] == codes.RES_OK
-        fresh = self._eng(spark, tmp_path)  # rebuilds its state from the base
-        assert fresh.kv_get("alice", "alice_is_awesome", "k1")[2] == b"v"
-        states = [fresh.kv_log.snapshot().state]
-        monkeypatch.setattr(changelog, "FOLD_FILES", 0)
-        fresh.kv_insert("alice", "alice_is_awesome", "k2", b"v")
-        assert fresh.kv_get("alice", "alice_is_awesome", "k2")[2] == b"v"
-        states.append(fresh.kv_log.snapshot().state)  # the tail folded
-        assert states[0] is not states[1]
-        assert fresh.kv_log.snapshot().tail == ()
-        for state in states:
-            assert state._jdf.queryExecution().analyzed().rdd().isCheckpointed()
-
     def test_compaction_invalidates_and_rebuilds(self, spark, tmp_path):
         eng = self._eng(spark, tmp_path)
         seed(eng)
@@ -392,13 +368,34 @@ class TestCredentialMap:
             assert engine.add_user(u, pw)[1] == codes.RES_OK
         assert engine.set_user_data("u1", "pw1", b"profile")[1] == codes.RES_OK
         assert engine.save_file("u0", "pw0")[1] == codes.RES_OK
-        # the first login after SAV rebuilds the map; the next is free
-        assert spark_jobs(spark, lambda: engine._auth("u2", "pw2")) > 0
+        # the first login after SAV reads the new base's credentials
+        # with pyarrow; neither it nor the next runs a Spark job
+        assert spark_jobs(spark, lambda: engine._auth("u2", "pw2")) == 0
         assert spark_jobs(spark, lambda: engine._auth("u3", "pw3")) == 0
         for u, pw in users.items():
             assert engine.kv_top(u, pw)[1] == codes.RES_ERR_NO_DATA
             assert engine.kv_top(u, pw + "x")[1] == codes.RES_ERR_LOGIN
         assert engine.get_user_data("u0", "pw0", "u1")[2] == b"profile"
+
+    def test_kvg_and_login_after_another_engines_sav_run_no_job(self, spark, tmp_path):
+        """Another engine compacts the directory: the reader's snapshot
+        moves to the new base without a Spark job, and a cold KVG and a
+        login are served from its footer index and credential columns."""
+        d = str(tmp_path / "data")
+        writer, reader = (KVEngine(spark, d, req_quota=4096) for _ in range(2))
+        seed(writer)
+        for i in range(8):
+            assert writer.kv_insert("alice", "alice_is_awesome", f"k{i}",
+                                    f"v{i}".encode())[1] == codes.RES_OK
+        assert reader.kv_get("bob", "bob_is_the_best", "k0")[2] == b"v0"
+        assert writer.save_file("alice", "alice_is_awesome")[1] == codes.RES_OK
+        replies = []
+        assert spark_jobs(spark, lambda: replies.append(reader.kv_get(
+            "bob", "bob_is_the_best", "k5"))) == 0
+        assert spark_jobs(spark, lambda: replies.append(reader._auth(
+            "alice", "alice_is_awesome") is not None)) == 0
+        assert replies == [(True, codes.RES_OK, b"v5"), True]
+        assert reader.kv_get("bob", "bob_is_the_best", "k9")[1] == codes.RES_ERR_KEY
 
     def test_imported_ghost_with_empty_credentials_cannot_log_in(self, spark, engine,
                                                                  tmp_path):
@@ -447,8 +444,8 @@ class TestCredentialMap:
 
 
 class TestSnapshotJobs:
-    """Point reads come from the kv log's snapshot: the tail overlay,
-    then the per-state memo, then one Spark point read."""
+    """Point reads come from the kv log's snapshot: the log overlay,
+    then the memo, then the base's row groups."""
 
     def _saved(self, engine):
         seed(engine)

@@ -1,4 +1,4 @@
-"""Differential and property tests for the round-5 mining tier
+"""Differential and property tests for the mining tier
 (plans/mining.py, curation.sample_weighted, similarity.pq_codes).
 
 Oracle parity pins Spark == DuckDB; these tests pin both against a
@@ -198,7 +198,7 @@ class TestFuzzyBlockCensus:
             for i in range(len(rows)):
                 for j in range(i + 1, len(rows)):
                     # candidates = the length band (|dlen| <= 1, the
-                    # round-6 de-quadratic blocking); lossless for the
+                    # de-quadratic blocking); lossless for the
                     # d<=1 match counts
                     if abs(len(rows[i][1]) - len(rows[j][1])) > 1:
                         continue
@@ -638,9 +638,9 @@ class TestTrainedIvfPq:
 
 
 class TestRound6QueryDifferentials:
-    """Third-implementation checks for the round-6 queries: oracle
-    parity pins Spark == DuckDB; these pin both against independent
-    pure-Python computations."""
+    """Third-implementation checks for the BPE, order-average and chunk
+    window queries: oracle parity pins Spark == DuckDB; these pin both
+    against independent pure-Python computations."""
 
     def test_bpe_merge_pairs_matches_counter(self, spark, sf_dir):
         import re

@@ -33,8 +33,8 @@ def test_query_matches_oracle(spark, sf_dir, name):
 def test_all_queries_have_oracle_or_reason():
     missing = set(_QUERIES) - set(_ORACLES)
     # non-SQL-expressible ops are allowed to omit oracles; keep the list
-    # explicit so additions are deliberate.  Empty since round 8:
-    # similarity_ivfpq_trained (the round-7 omission) gained an
+    # explicit so additions are deliberate.  Empty:
+    # similarity_ivfpq_trained, the last omission, gained an
     # unrolled deterministic-Lloyd oracle -- fixed-count iteration is
     # SQL-expressible the same way pagerank_neardup's CTE is.
     allowed_missing: set[str] = set()

@@ -16,8 +16,8 @@ import pytest
 import __spark_entry__ as entrymod
 from operating_system_map_reduce_spark.plans import window as _win
 
-# Round 7: empty.  The exact-knn baseline (the one all-pairs-by-design
-# plan through round 6) was re-planned to blocked per-group top-k --
+# Empty.  The exact-knn baseline (once the one all-pairs-by-design
+# plan) was re-planned to blocked per-group top-k --
 # quadratic COMPUTE stays, but no CartesianProduct/BNLJ operator
 # remains anywhere in the lazy query surface.
 ALLPAIRS_BY_DESIGN: set = set()
@@ -61,20 +61,20 @@ PYSTAGE_BROADCAST_BOUNDED: dict[str, str] = {
         "the %20 testdata stand-in grows with SF but models that "
         "bounded set, and pinning it to a shuffle would pessimize the "
         "real workload (the corpus probe side would shuffle too).  "
-        "SELF-ENFORCED since round 12: guards.bounded_broadcast "
+        "SELF-ENFORCED: guards.bounded_broadcast "
         "raises past 5M postings rows",
-    # dedup_minhash_lsh left the allowlist in round 12: its signature
+    # dedup_minhash_lsh is not on the allowlist: its signature
     # now lives in an at-rest doc_id-bucketed table
     # (plans/pipeline.py bucketed_signature), so NO Python stage
     # remains anywhere in its query plan -- the sweep below applies to
     # it in full.
-    # registered round 12 (plan-shape pin in test_r12_faces.py):
+    # plan-shape pin in test_pipeline_ops.py::TestRrfFusion:
     "retrieval_rrf_fusion":
         "the lexical broadcast side is the |Q| = 3 query docs' "
         "postings (explicitly hinted, ID-filtered BELOW the shingling "
         "stage -- bounded by the query set, not the corpus); the "
         "corpus postings side streams shuffle-free against it.  "
-        "SELF-ENFORCED since round 12: guards.bounded_broadcast "
+        "SELF-ENFORCED: guards.bounded_broadcast "
         "raises past 1M postings rows",
 }
 
@@ -97,8 +97,7 @@ def _broadcast_subtrees(plan: str) -> list[str]:
     Both marker forms are recognized -- matching only '+-' made a
     BuildLeft broadcast (':- BroadcastExchange') read as depth -1 and
     swallow the whole rest of the plan, probe side included
-    (round-11 code-review finding, regression-pinned in
-    TestBroadcastSubtrees)."""
+    (regression-pinned in TestBroadcastSubtrees)."""
     lines = plan.splitlines()
     out = []
     for i, ln in enumerate(lines):
@@ -132,7 +131,7 @@ class TestAntiPatterns:
                 assert "BroadcastNestedLoopJoin" not in plan, f"{name}: BNLJ"
         assert "BatchEvalPython" not in plan, \
             f"{name}: row-at-a-time Python UDF in the plan"
-        # the lying-estimate sweep (round 11): no broadcast subtree may
+        # the lying-estimate sweep: no broadcast subtree may
         # contain a Python stage unless the side is provably bounded
         if name not in PYSTAGE_BROADCAST_BOUNDED:
             for sub in _broadcast_subtrees(plan):
@@ -241,12 +240,11 @@ class TestPlanShape:
 
 class TestRegistryWindow:
     """The driver's correctness gate reads only the first 50 queries()
-    entries.  Round 10 made the window MECHANICAL (plans/window.py):
-    it is computed from the committed CORRECTNESS_r*.json ledger, so
-    these pins assert (a) collect_registry obeys the mechanism, (b)
-    the staleness ceiling is enforced by the mechanism's output, and
-    (c) the round-10 recovery mandate (the 43-entry r6 cohort skipped
-    in round 9, plus the two rule-2 re-entries) holds concretely."""
+    entries.  The window is MECHANICAL (plans/window.py): it is
+    computed from the committed CORRECTNESS_r*.json ledger, so these
+    pins assert (a) collect_registry obeys the mechanism, (b) the
+    staleness ceiling is enforced by the mechanism's output, and (c)
+    the declared rule-2 re-entries hold their seats while due."""
 
     WINDOW = list(_QUERIES)[: _win.WINDOW_SIZE]
     LEDGER = _win.load_ledger()
@@ -258,15 +256,15 @@ class TestRegistryWindow:
 
     def test_rule2_reentries_are_declared_and_seated(self):
         """A plan/oracle change MUST land with a REDEFINED bump in the
-        same commit; changelog_asof and stream_novelty_filter are round
-        10's mandate (r9 verdict directives #2 and #4).  Membership is
+        same commit; changelog_asof and stream_novelty_filter are the
+        declared re-entries.  Membership is
         asserted only while an entry is still DUE under rule 2 -- once
         the driver greens it, the clock rotates it out on its own (the
         pin must not go red when CORRECTNESS_r10.json lands)."""
         assert _win.REDEFINED["changelog_asof"] == 9
         # stream_novelty_filter: re-keyed 10 -> 13 when the seed-index
-        # derivation changed in round 13, then 13 -> 15 when the wave
-        # internals re-planned in round 15 (REDEFINED is one key per
+        # derivation changed, then 13 -> 15 when the wave internals
+        # were re-planned (REDEFINED is one key per
         # entry; earlier re-entries are history recorded in the
         # comments)
         assert _win.REDEFINED["stream_novelty_filter"] == 15
@@ -288,7 +286,7 @@ class TestRegistryWindow:
         time.  An entry in the current window gets a fresh row this
         round, so only entries OUTSIDE the window can violate -- and a
         violation is tolerable only while the window is saturated with
-        due entries (paying down a skipped rotation, round-9 debt)."""
+        due entries (paying down a skipped rotation)."""
         head = max(self.LEDGER.values(), default=0)
         current = head + 1
         due = set(_win.due_entries(list(_QUERIES), self.LEDGER))
@@ -395,7 +393,7 @@ class TestRegistryWindow:
 
 class TestRound12PlanShapes:
     def test_minhash_query_plan_has_no_python_stage(self, spark, sf_dir):
-        """The round-12 at-rest re-plan: with the signature written as
+        """The at-rest re-plan: with the signature written as
         a doc_id-bucketed table, NO Python stage remains anywhere in
         dedup_minhash_lsh's query plan -- every size the planner sees
         is a real parquet statistic, so the lying-estimate class
@@ -410,7 +408,7 @@ class TestRound12PlanShapes:
     def test_minhash_bucketed_scan_feeds_the_verify_joins(self, spark, sf_dir):
         """The verify sides must read the bucketed table (Scan parquet
         of b_sig_*), not recompute signatures -- and the candidate-pair
-        list must NOT carry an explicit broadcast hint (the round-11
+        list must NOT carry an explicit broadcast hint (a
         corpus-growing broadcast); any remaining broadcast is AQE's
         runtime choice over real statistics."""
         df = _QUERIES["dedup_minhash_lsh"](spark, sf_dir)
@@ -422,7 +420,7 @@ class TestRound12PlanShapes:
         """corpus_novelty_filter (the re-plan's second consumer): the
         band index derives from the at-rest bucketed signature table,
         so no Python stage remains in the plan, the scan is the b_sig_
-        table, and the round-11 SHUFFLE_HASH pin is gone -- strategy
+        table, and no SHUFFLE_HASH hint pins the join -- strategy
         choice belongs to AQE's real runtime sizes, and the
         lying-estimate class (a corpus-grown index reading as < 64 MB
         through a mapInPandas barrier) cannot recur."""

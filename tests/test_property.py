@@ -170,42 +170,3 @@ class TestDeletionNeighborhoodCompleteness:
         rng = random.Random(seed)
         for other in self._lev1_neighbors(base, rng, "abc"):
             assert self._keys(base) & self._keys(other), (base, other)
-
-
-class TestReplayAsofProperty:
-    """replay_asof(S) == stopping a sequential apply after S records,
-    for EVERY prefix of a random insert/update/delete history.  One
-    seeded bulk Spark run (the file's Spark-operator convention)."""
-
-    def test_random_histories_all_prefixes(self, spark, tmp_path):
-        from operating_system_map_reduce_spark.engine import KV_SCHEMA
-        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
-
-        rng = random.Random(0xA50F)
-        keys = [f"k{i}" for i in range(6)]
-        muts = []
-        for seq in range(1, 41):
-            op = rng.choice(["insert", "update", "update", "delete"])
-            k = rng.choice(keys)
-            v = b"" if op == "delete" else f"v{seq}".encode()
-            muts.append({"seq": seq, "op": op, "key": k, "value": v})
-        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
-        # appended as three interleaved batches: replay must not depend
-        # on file boundaries
-        log.append(muts[:13])
-        log.append(muts[13:29])
-        log.append(muts[29:])
-
-        def sequential(upto):
-            state = {}
-            for m in muts[:upto]:
-                if m["op"] == "delete":
-                    state.pop(m["key"], None)
-                else:
-                    state[m["key"]] = m["value"]
-            return sorted(state.items())
-
-        for s in range(0, len(muts) + 1, 1):
-            got = sorted((r["key"], bytes(r["value"])) for r in
-                         log.replay_asof(s).collect())
-            assert got == sequential(s), f"prefix {s}"

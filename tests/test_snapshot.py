@@ -1,12 +1,15 @@
 """The changelog snapshot (sources/changelog.py) against replay().
 
-Point reads are served from a driver-side overlay of the log since the
-base, then a memo, then a pyarrow read of the one row group of the
-key-sorted base whose footer range holds the key; past the overlay's
-byte budget a memo miss falls back to a Spark point read on the
-checkpointed state.  Every answer must equal what a fresh
-``ChangeLog.replay()`` over the files says, whatever folds, rebuilds,
-compactions and other engines' appends came before.
+A snapshot is its pinned files plus driver-side indexes over them: the
+key-sorted base with its footer index, the spill (log files Spark
+serves, empty unless the log outgrew the overlay's byte budget or a
+record did not sort after the base), the overlay of the other log files
+and a memo exact for base ∪ spill.  Point reads go overlay, memo, then
+the one base row group whose footer range holds the key, or one Spark
+point read when there is a spill.  Nothing folds and nothing is
+checkpointed.  Every answer must equal what a fresh
+``ChangeLog.replay()`` over the files says, whatever spills, compactions
+and other engines' appends came before.
 """
 
 from __future__ import annotations
@@ -32,9 +35,7 @@ def _replayed(spark, root: str) -> dict[str, bytes]:
 
 
 class TestDifferential:
-    def test_two_engines_match_replay_after_every_op(self, spark, tmp_path,
-                                                     monkeypatch):
-        monkeypatch.setattr(changelog, "FOLD_FILES", 3)
+    def test_two_engines_match_replay_after_every_op(self, spark, tmp_path):
         d = str(tmp_path / "data")
         engines = [KVEngine(spark, d, req_quota=1 << 30, up_quota=1 << 30,
                             down_quota=1 << 30) for _ in range(2)]
@@ -85,17 +86,17 @@ class TestDifferential:
         assert log.lookup("a")["value"] == b"1"
         assert log.lookup("b")["value"] == b"x" * 64
         assert set(log.snapshot().memo) == {"a"}
-        # a remembered key whose tail record is large leaves the memo
-        # when the tail is folded
-        monkeypatch.setattr(changelog, "FOLD_FILES", 0)
+        # a remembered key whose log record is large leaves the memo
+        # that SAV carries over to the new base
         log.append([{"seq": 3, "op": "update", "key": "a", "value": b"y" * 64}])
         assert log.lookup("a")["value"] == b"y" * 64
-        assert log.snapshot().tail == () and "a" not in log.snapshot().memo
+        log.compact()
+        assert "a" not in log.snapshot().memo
         assert log.lookup("a")["value"] == b"y" * 64
 
-    def test_stream_sink_file_over_the_byte_budget_folds(self, spark, tmp_path,
-                                                         monkeypatch):
-        """A stream-sink batch too large for the overlay is folded by
+    def test_stream_sink_file_over_the_byte_budget_spills(self, spark, tmp_path,
+                                                          monkeypatch):
+        """A stream-sink batch too large for the overlay is spilled to
         Spark and never read onto the driver."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -111,7 +112,7 @@ class TestDifferential:
             return read_tail(self, paths)
 
         monkeypatch.setattr(ChangeLog, "_read_tail", spy)
-        monkeypatch.setattr(changelog, "FOLD_BYTES", 4096)
+        monkeypatch.setattr(changelog, "OVERLAY_BYTES", 4096)
         src = tmp_path / "mutations"
         src.mkdir()
         # incompressible values, so the file is larger than the budget
@@ -131,7 +132,7 @@ class TestDifferential:
         assert log.lookup("big2")["value"] == big[2]["value"]
         assert log.lookup("small")["value"] == b"s"
         assert not [p for p in loaded if "batch-stream" in p]
-        assert log.snapshot().tail == ()
+        assert any("batch-stream" in f for f in log.snapshot().spill)
         assert log.seen_seq() == 13
         # a sink batch within the budget is read into the overlay
         ingest("m2.parquet", [{"seq": 20, "op": "delete", "key": "big1", "value": None},
@@ -215,23 +216,20 @@ class TestBaseReads:
             assert (row and row["value"]) == want.get(key), key
             assert len(reads) <= most, (key, reads)
 
-    def test_cold_lookup_after_a_fold_runs_no_spark_job(self, spark, tmp_path,
-                                                        monkeypatch):
-        monkeypatch.setattr(changelog, "FOLD_FILES", 1)
+    def test_cold_lookups_after_appends_since_sav_run_no_spark_job(self, spark,
+                                                                   tmp_path):
         root = str(tmp_path / "kv")
         log = _compacted(spark, root)
-        state = log.snapshot().state
-        for i in range(3):
+        for i in range(100):
             log.append([{"seq": 5000 + i, "op": "update", "key": f"k{2 * i:05d}",
                          "value": b"new"}])
-        snap = log.snapshot()
-        assert snap.state is not state and snap.tail == ()  # folded
         want = _replayed(spark, root)
         got = []
-        keys = ["k00006", "k00100", "k00101"]
-        assert not set(keys) & set(snap.memo)
+        keys = ["k00202", "k00300", "k00301", "z"]  # present, present, absent
         assert spark_jobs(spark, lambda: got.extend(log.lookup(k) for k in keys)) == 0
         assert [r and r["value"] for r in got] == [want.get(k) for k in keys]
+        snap = log.snapshot()
+        assert len(snap.layout[1]) == 100 and not set(keys) & set(snap.overlay)
         assert log.lookup("k00002")["value"] == want["k00002"] == b"new"
 
     def test_base_swapped_by_another_sav_mid_read(self, spark, tmp_path, monkeypatch):
@@ -276,6 +274,6 @@ class TestBaseReads:
                     {"seq": 402, "op": "insert", "key": "k9999", "value": b"i"}])
         want = _replayed(spark, str(root))
         keys = [f"k{i:04d}" for i in range(0, 320, 7)] + ["k0003", "k0004", "k9999"]
-        assert log.snapshot().groups is not None
+        assert log.snapshot().groups and not log.snapshot().spill
         got = {k: (log.lookup(k) or {}).get("value") for k in keys}
         assert got == {k: want.get(k) for k in keys}

@@ -600,7 +600,7 @@ class TestNoveltyStream:
 
     def test_compaction_is_admission_equivalent(self, spark, novelty_dir):
         tmp_path = novelty_dir
-        """The standing index's SAV (round-10 verdict directive #4): a
+        """The standing index's SAV: a
         crawl appends one commit per wave, accruing one small file per
         wave per kind; compaction must shrink the file count WITHOUT
         changing the index row SET -- every admission verdict is a
