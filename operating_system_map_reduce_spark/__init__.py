@@ -4,6 +4,8 @@ capabilities of the reference KV/map-reduce system
 
 Layout:
     session     -- SparkSession factory tuned for scale (AQE, Arrow, partitions)
+    daemon      -- the sessions' Python worker daemon (pyspark's, minus a
+                   per-task re-read of pyspark.zip)
     codes       -- protocol response-code strings (reference p5/common/protocol.h)
     engine      -- KVEngine: Storage-API-compatible surface (auth/kv/quota/mru/mr)
     operators/  -- reusable distributed operators (kv, mapreduce, dedup, ...)

@@ -29,6 +29,14 @@ _DEFAULTS = {
     # nothing in steady state and turns that hang into a diagnosable
     # task failure.
     "spark.python.worker.faulthandler.enabled": "true",
+    # Python workers fork from the package's daemon (daemon.py):
+    # pyspark's, minus the re-read of pyspark.zip's directory on every
+    # task.  Executors start it by module name (python -m) before any
+    # task runs, so the package must be importable on the workers'
+    # PYTHONPATH; --py-files alone does not do that, it ships files to
+    # tasks.  In local mode the workers start in the driver's working
+    # directory, which python -m puts on their path.
+    "spark.python.daemon.module": "operating_system_map_reduce_spark.daemon",
     # Dimension tables (region/nation/supplier/part at these SFs) should
     # broadcast; 64 MB is safe with multi-GB executors.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

@@ -12,9 +12,11 @@ timestamp-precision drift.
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -150,6 +152,50 @@ def ts_us_expr(ts_type: T.DataType, source: str = "events.ts"):
         f"testdata drift: {source} has unsupported type "
         f"{ts_type.simpleString()!r}; expected bigint (nanos) or timestamp"
     )
+
+
+_FOOTER_TYPES = {
+    ("INT64", "NONE"): T.LongType(),
+    ("DOUBLE", "NONE"): T.DoubleType(),
+    ("BYTE_ARRAY", "STRING"): T.StringType(),
+}
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read from the
+    file's footer with pyarrow instead of Spark's one-job inference.
+
+    Knows the column types ``events.parquet`` has shipped with: bigint,
+    double, string and every ``ts`` encoding ``ts_us_expr`` accepts
+    (NANOS as bigint under the legacy conf, which must be set; a UTC-
+    adjusted MILLIS/MICROS as TIMESTAMP, an unadjusted one as
+    TIMESTAMP_NTZ).  For a directory, a nested column or any other type
+    it returns None and the caller asks Spark."""
+    if not os.path.isfile(path):
+        return None
+    schema = pq.ParquetFile(path).schema
+    columns = [schema.column(i) for i in range(len(schema))]
+    if [c.path for c in columns] != schema.to_arrow_schema().names:
+        return None  # nested
+    fields = []
+    for c in columns:
+        kind = (c.physical_type, c.logical_type.type)
+        if kind == ("INT64", "TIMESTAMP"):
+            ts = json.loads(c.logical_type.to_json())
+            if ts["timeUnit"] == "nanoseconds":
+                dtype = T.LongType()
+            elif ts["isAdjustedToUTC"] or spark.conf.get(
+                    "spark.sql.parquet.inferTimestampNTZ.enabled") != "true":
+                dtype = T.TimestampType()
+            else:
+                dtype = T.TimestampNTZType()
+        elif kind in _FOOTER_TYPES:
+            dtype = _FOOTER_TYPES[kind]
+        else:
+            return None
+        # a file source reads every column as nullable
+        fields.append(T.StructField(c.name, dtype, nullable=True))
+    return T.StructType(fields)
 
 
 def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

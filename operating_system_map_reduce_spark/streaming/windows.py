@@ -83,10 +83,11 @@ def _stream_dir(sf_dir: str) -> str:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over events with ts_us (BIGINT micros)."""
-    from ..sources.tables import ts_us_expr
+    from ..sources.tables import footer_schema, ts_us_expr
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    path = os.path.join(sf_dir, "events.parquet")
+    schema = footer_schema(spark, path) or spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir))
     ts_us = ts_us_expr(schema["ts"].dataType, source="events_stream:ts")
     return stream.withColumn("ts_us", ts_us).drop("ts")

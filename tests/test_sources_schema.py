@@ -19,6 +19,7 @@ import pytest
 
 from operating_system_map_reduce_spark.sources.tables import (
     TableSchemaError,
+    footer_schema,
     load_events,
 )
 
@@ -40,6 +41,19 @@ def _write_events(path: str, ts_array: pa.Array) -> None:
     pq.write_table(tbl, path)
 
 
+# name -> (arrow type, stored ts value, the type Spark loads it as)
+TS_ENCODINGS = {
+    "timestamp_us": (pa.timestamp("us"), US_SINCE_EPOCH, "timestamp_ntz"),
+    "timestamp_ns": (pa.timestamp("ns"), US_SINCE_EPOCH * 1000, "bigint"),
+    "timestamp_us_utc": (pa.timestamp("us", tz="UTC"), US_SINCE_EPOCH,
+                         "timestamp"),
+    "timestamp_ns_utc": (pa.timestamp("ns", tz="UTC"), US_SINCE_EPOCH * 1000,
+                         "bigint"),
+    "timestamp_ms_utc": (pa.timestamp("ms", tz="UTC"), US_SINCE_EPOCH // 1000,
+                         "timestamp"),
+}
+
+
 @pytest.mark.parametrize(
     "encoding",
     ["timestamp_us", "timestamp_ns", "timestamp_us_utc"],
@@ -47,18 +61,38 @@ def _write_events(path: str, ts_array: pa.Array) -> None:
 def test_events_loader_handles_both_ts_encodings(spark, tmp_path, encoding):
     d = tmp_path / encoding
     d.mkdir()
-    if encoding == "timestamp_us":
-        ts = pa.array([US_SINCE_EPOCH], pa.timestamp("us"))
-    elif encoding == "timestamp_us_utc":
-        ts = pa.array([US_SINCE_EPOCH], pa.timestamp("us", tz="UTC"))
-    else:
-        ts = pa.array([US_SINCE_EPOCH * 1000], pa.timestamp("ns"))
+    arrow_type, stored, _ = TS_ENCODINGS[encoding]
+    ts = pa.array([stored], arrow_type)
     _write_events(str(d / "events.parquet"), ts)
     df = load_events(spark, str(d))
     assert "ts_us" in df.columns and "ts" not in df.columns
     row = df.collect()[0]
     assert row["ts_us"] == US_SINCE_EPOCH
     assert df.schema["ts_us"].dataType.simpleString() == "bigint"
+
+
+@pytest.mark.parametrize("encoding", sorted(TS_ENCODINGS))
+def test_footer_schema_is_the_schema_spark_infers(spark, tmp_path, encoding):
+    """events_stream reads the schema from the footer instead of running
+    Spark's inference job; for every ts encoding ts_us_expr accepts it
+    is the StructType Spark infers, nullability included."""
+    arrow_type, stored, spark_type = TS_ENCODINGS[encoding]
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, pa.array([stored], arrow_type))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    want = spark.read.parquet(path).schema
+    assert want["ts"].dataType.simpleString() == spark_type
+    assert footer_schema(spark, path) == want
+
+
+def test_footer_schema_leaves_other_layouts_to_spark(tmp_path):
+    ints = str(tmp_path / "ints.parquet")
+    pq.write_table(pa.table({"a": pa.array([1], pa.int32())}), ints)
+    nested = str(tmp_path / "nested.parquet")
+    pq.write_table(pa.table({"a": pa.array([{"b": 1}])}), nested)
+    assert footer_schema(None, ints) is None
+    assert footer_schema(None, nested) is None
+    assert footer_schema(None, str(tmp_path)) is None
 
 
 def test_schema_drift_raises_named_error(spark, tmp_path):

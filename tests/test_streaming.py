@@ -208,6 +208,32 @@ class TestMruStream:
         assert (one_ts, one_et) == (two_ts, two_et)
 
 
+class TestStatefulFaceTypes:
+    """The stateful faces' output columns keep their Spark types and the
+    pandas dtype kinds a collected frame has (the oracle gate compares
+    frames): a pandas or pyspark upgrade that turns an int64 column into
+    float or object fails here first."""
+
+    @pytest.mark.parametrize("face, want", [
+        ("stream_mru_types", {"user_id": ("bigint", "i"),
+                              "mru_rank": ("bigint", "i"),
+                              "event_type": ("string", "O")}),
+        ("stream_quota_admission", {"user_id": ("bigint", "i"),
+                                    "n_admitted": ("bigint", "i"),
+                                    "n_rejected": ("bigint", "i"),
+                                    "admitted_amount": ("double", "f")}),
+    ])
+    def test_output_types_are_pinned(self, spark, face, want):
+        from operating_system_map_reduce_spark.plans import streamqueries
+
+        df = getattr(streamqueries, face)(spark, SF)
+        pdf = df.toPandas()
+        assert len(pdf), f"{face} emitted no rows; the kinds are unchecked"
+        got = {f.name: (f.dataType.simpleString(), pdf[f.name].dtype.kind)
+               for f in df.schema}
+        assert got == want
+
+
 class TestChangelogStreamSink:
     def test_streamed_appends_replay_identically(self, spark, tmp_path):
         """Round-6 sink: mutations streamed through the Structured
