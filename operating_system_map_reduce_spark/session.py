@@ -65,6 +65,23 @@ _DEFAULTS = {
     # when this factory launches the JVM -- getOrCreate on a live
     # session cannot resize the heap.
     "spark.driver.memory": "8g",
+    # Compiled generated classes, keyed on their code text: a fixed cost
+    # per distinct plan shape, no per-run data.  Spark's default of 100
+    # is below the working set, so entries evict and recompile on every
+    # pass: the 5 perfbench faces alone compile 104 distinct classes,
+    # and a warm pass over them recompiled 31-45 (local[4], sf0.01).
+    # One full-registry pass at sf0.01 compiles 1,634 distinct classes
+    # and the tests span several scale factors, hence 4096.  A static
+    # conf: like the heap, only effective when this factory launches
+    # the JVM.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # AQE numbers whole-stage codegen stages in the order it creates
+    # query stages, which follows which running stage finishes first;
+    # with the number in the class name, the same pipeline's code text
+    # differs between runs and is compiled again (26 classes in a warm
+    # registry pass, sf0.01).  Without it the text repeats.  Plans and
+    # explain output still show the stage number (*(N)).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

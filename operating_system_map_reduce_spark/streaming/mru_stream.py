@@ -15,26 +15,30 @@ oracle asserts declaratively (two ROW_NUMBER passes).
 
 Scale shape follows quota_stream: shuffle key is user_id, state never
 leaves its partition, K*|users| bounded state.
+
+The state's lists are JSON text, not ArrayType: Spark builds a fresh
+state encoder for every run, and an array field's element conversion
+gets new lambda-variable ids each time, so its generated code differed
+on every run and was compiled again.  JSON round-trips int64 and str
+lists exactly.
 """
 
 from __future__ import annotations
 
-import uuid
+import json
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 MRU_K = 5
 
 STATE_SCHEMA = StructType([
-    StructField("ts", ArrayType(LongType())),
-    StructField("et", ArrayType(StringType())),
+    StructField("ts", StringType()),   # JSON list of int
+    StructField("et", StringType()),   # JSON list of str
     StructField("n_seen", LongType()),
 ])
 
@@ -62,15 +66,15 @@ def mru_fold(ts_l: list, et_l: list, rows) -> None:
 def _mru_group(key: tuple, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
     if state.exists:
-        st = state.get
-        ts_l, et_l, n_seen = list(st[0]), list(st[1]), st[2]
+        ts_j, et_j, n_seen = state.get
+        ts_l, et_l = json.loads(ts_j), json.loads(et_j)
     else:
         ts_l, et_l, n_seen = [], [], 0
     rows = pd.concat(list(pdfs), ignore_index=True)
     rows = rows.sort_values(["ts_us", "event_id"], kind="mergesort")
     mru_fold(ts_l, et_l, zip(rows["ts_us"].tolist(), rows["event_type"].tolist()))
     n_seen += len(rows)
-    state.update((ts_l, et_l, n_seen))
+    state.update((json.dumps(ts_l), json.dumps(et_l), n_seen))
     k = len(et_l)
     yield pd.DataFrame({
         "user_id": [key[0]] * k,
@@ -102,18 +106,11 @@ def run_mru_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping each user's max-n_seen emission (earlier snapshots are
     stale state, not deltas)."""
     from operating_system_map_reduce_spark.streaming.windows import (
-        _stream_shuffle, events_stream)
+        _replay, events_stream)
     from pyspark.sql.window import Window
 
-    sink = "mru_types_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            mru_types(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink)
+    out = _replay(spark, mru_types(events_stream(spark, sf_dir)),
+                  "mru_types", "update")
     w = Window.partitionBy("user_id")
     return (
         out.withColumn("_mx", F.max("n_seen").over(w))

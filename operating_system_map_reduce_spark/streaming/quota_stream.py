@@ -11,13 +11,15 @@ what ``applyInPandasWithState`` exists for: state is a per-user deque
 of live (ts, amount) pairs -- bounded by window x rate, independent of
 history length -- and each trigger processes its group's new rows in
 event order.  The shuffle key is user_id, so state never leaves its
-partition; at 1000 executors each holds 1/1000th of the users.
+partition; at 1000 executors each holds 1/1000th of the users.  The
+deque's two lists are stored as JSON text, as in mru_stream: an
+ArrayType state field is compiled again on every run.  JSON round-trips
+int64 and float (repr) lists exactly.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
+import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -25,16 +27,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StructField, StructType,
+    DoubleType, LongType, StringType, StructField, StructType,
 )
 
 QUOTA_MAX = 50.0            # max units admitted per sliding window
 WINDOW_US = 3_600_000_000   # 1 h, microseconds
 
-# state: parallel arrays of the live (admitted, in-window) events
+# state: parallel lists of the live (admitted, in-window) events
 STATE_SCHEMA = StructType([
-    StructField("ts", ArrayType(LongType())),
-    StructField("amt", ArrayType(DoubleType())),
+    StructField("ts", StringType()),    # JSON list of int
+    StructField("amt", StringType()),   # JSON list of float
 ])
 
 OUTPUT_SCHEMA = StructType([
@@ -48,7 +50,7 @@ OUTPUT_SCHEMA = StructType([
 def _admit_group(key: tuple, pdfs: Iterator[pd.DataFrame],
                  state: GroupState) -> Iterator[pd.DataFrame]:
     if state.exists:
-        ts_live, amt_live = (list(v) for v in state.get)
+        ts_live, amt_live = (json.loads(v) for v in state.get)
     else:
         ts_live, amt_live = [], []
     admitted = rejected = 0
@@ -66,7 +68,7 @@ def _admit_group(key: tuple, pdfs: Iterator[pd.DataFrame],
         amt_live.append(amt)
         admitted += 1
         admitted_amount += amt
-    state.update((ts_live, amt_live))
+    state.update((json.dumps(ts_live), json.dumps(amt_live)))
     yield pd.DataFrame({
         "user_id": [key[0]],
         "n_admitted": [admitted],
@@ -93,19 +95,12 @@ def quota_admission(stream: DataFrame) -> DataFrame:
 def run_quota_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events through the stateful operator; one row per user."""
     from operating_system_map_reduce_spark.streaming.windows import (
-        _stream_shuffle, events_stream)
+        _replay, events_stream)
 
-    sink = "quota_admission_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            quota_admission(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+    out = _replay(spark, quota_admission(events_stream(spark, sf_dir)),
+                  "quota_admission", "update")
     # several triggers may emit the same user; later rows supersede --
     # but tallies are per-trigger deltas, so aggregate them.
-    out = spark.table(sink)
     return (
         out.groupBy("user_id")
         .agg(

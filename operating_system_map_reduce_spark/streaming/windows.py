@@ -49,6 +49,22 @@ def _stream_shuffle(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _replay(spark: SparkSession, stream: DataFrame, name: str,
+            mode: str) -> DataFrame:
+    """Run a bounded replay of ``stream`` into a memory sink and return
+    the sink's rows.  The sink's temp view is dropped once the frame is
+    resolved: the frame still reads the sink, and the session keeps no
+    view (nor its rows) after the frame is gone."""
+    sink = f"{name}_{uuid.uuid4().hex[:8]}"
+    with _stream_shuffle(spark):
+        q = (stream.writeStream.format("memory").queryName(sink)
+             .outputMode(mode).trigger(availableNow=True).start())
+        q.awaitTermination()
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
+
+
 def _stream_dir(sf_dir: str) -> str:
     """The file stream source wants a DIRECTORY of files; the testdata
     keeps one parquet per table.  Stage a per-sf directory under the
@@ -164,28 +180,16 @@ def session_counts(stream: DataFrame) -> DataFrame:
 
 def run_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the stream through session windows; return the sink."""
-    sink = "events_sessions_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            session_counts(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("user_id", "session_start_us")
+    out = _replay(spark, session_counts(events_stream(spark, sf_dir)),
+                  "events_sessions", "complete")
+    return out.orderBy("user_id", "session_start_us")
 
 
 def run_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the stream through the dedup; return the sink."""
-    sink = "events_dedup_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            dedup_first_seen(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("window_start_us", "user_id", "event_type")
+    out = _replay(spark, dedup_first_seen(events_stream(spark, sf_dir)),
+                  "events_dedup", "append")
+    return out.orderBy("window_start_us", "user_id", "event_type")
 
 
 def enriched_windowed_revenue(spark: SparkSession, stream: DataFrame,
@@ -221,15 +225,9 @@ def enriched_windowed_revenue(spark: SparkSession, stream: DataFrame,
 
 def run_enriched_windowed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the stream through the enrichment join; return the sink."""
-    sink = "events_enriched_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            enriched_windowed_revenue(spark, events_stream(spark, sf_dir), sf_dir)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("window_start_us", "c_mktsegment")
+    stream = enriched_windowed_revenue(spark, events_stream(spark, sf_dir), sf_dir)
+    out = _replay(spark, stream, "events_enriched", "complete")
+    return out.orderBy("window_start_us", "c_mktsegment")
 
 
 def run_topk_trending(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -246,18 +244,11 @@ def run_topk_trending(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame
     cut is deterministic on both engines."""
     from pyspark.sql.window import Window
 
-    sink = "events_trending_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            windowed_counts(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+    out = _replay(spark, windowed_counts(events_stream(spark, sf_dir)),
+                  "events_trending", "complete")
     w = Window.partitionBy("window_start_us").orderBy(F.desc("n"), "event_type")
     return (
-        spark.table(sink)
-        .withColumn("trend_rank", F.row_number().over(w).cast("long"))
+        out.withColumn("trend_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("trend_rank") <= k)
         .select("window_start_us", "trend_rank", "event_type", "n")
         .orderBy("window_start_us", "trend_rank")
@@ -266,15 +257,9 @@ def run_topk_trending(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame
 
 def run_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the stream to completion; return the sink as a DataFrame."""
-    sink = "events_windowed_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        q = (
-            windowed_counts(events_stream(spark, sf_dir))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("window_start_us", "event_type")
+    out = _replay(spark, windowed_counts(events_stream(spark, sf_dir)),
+                  "events_windowed", "complete")
+    return out.orderBy("window_start_us", "event_type")
 
 
 ATTRIBUTION_WINDOW_US = 3_600_000_000  # 1 hour
@@ -321,15 +306,8 @@ def run_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events through the stream-stream join; return the sink.
     Both sides filter the SAME source stream (a streaming self-join),
     the production shape for intra-topic attribution."""
-    sink = "events_ssjoin_" + uuid.uuid4().hex[:8]
-    with _stream_shuffle(spark):
-        ev = events_stream(spark, sf_dir)
-        q = (
-            click_purchase_join(
-                ev.filter(F.col("event_type") == "click"),
-                ev.filter(F.col("event_type") == "purchase"))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("purchase_id", "click_id")
+    ev = events_stream(spark, sf_dir)
+    joined = click_purchase_join(ev.filter(F.col("event_type") == "click"),
+                                 ev.filter(F.col("event_type") == "purchase"))
+    out = _replay(spark, joined, "events_ssjoin", "append")
+    return out.orderBy("purchase_id", "click_id")

@@ -12,6 +12,8 @@
 * The benchmark's tracer (perfbench/tracing.py) wraps engine, changelog,
   mapreduce and quota calls by name; they keep those names and the
   arguments the tracer and the workload pass.
+* No ``applyInPandasWithState`` state schema has an array or map field,
+  whose generated code Spark compiles again on every run.
 * Every top-level def and class of the package, and every method of
   its top-level classes, is reached from the package, bench.py,
   __spark_entry__.py or perfbench/ (docstrings do not count), or is
@@ -118,6 +120,49 @@ def test_package_reads_only_the_documented_env_vars():
             names.add(key.value if isinstance(key, ast.Constant)
                       else f"{path.relative_to(REPO)}:{node.lineno}: {ast.unparse(key)}")
     assert names == ENV_READS
+
+
+def _types(dt):
+    """``dt`` and every type nested in it."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    yield dt
+    if isinstance(dt, StructType):
+        for field in dt.fields:
+            yield from _types(field.dataType)
+    elif isinstance(dt, ArrayType):
+        yield from _types(dt.elementType)
+    elif isinstance(dt, MapType):
+        yield from _types(dt.keyType)
+        yield from _types(dt.valueType)
+
+
+def test_stream_state_has_no_array_or_map_field():
+    """applyInPandasWithState builds a fresh state encoder on every run,
+    and an array or map field's element conversion takes new
+    lambda-variable ids each time: its generated code differs, so Spark
+    compiles it again on every run."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    schemas = {}
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        rel = path.relative_to(REPO)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "applyInPandasWithState"):
+                continue
+            arg = {k.arg: k.value for k in node.keywords}.get(
+                "stateStructType", node.args[2] if len(node.args) > 2 else None)
+            module = importlib.import_module(".".join(rel.with_suffix("").parts))
+            schemas[f"{rel}:{node.lineno}"] = eval(
+                compile(ast.Expression(arg), str(rel), "eval"), vars(module))
+    assert len(schemas) >= 2, schemas   # mru_stream and quota_stream
+    # a DDL string is refused too: it cannot be parsed without a session
+    nested = {where: schema for where, schema in schemas.items()
+              if isinstance(schema, str)
+              or any(isinstance(t, (ArrayType, MapType)) for t in _types(schema))}
+    assert not nested, nested
 
 
 def _required(fn) -> list[str]:

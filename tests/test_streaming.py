@@ -208,6 +208,87 @@ class TestMruStream:
         assert (one_ts, one_et) == (two_ts, two_et)
 
 
+def _trigger(fn, schema, value, rows: list[tuple], columns: list[str]):
+    """One trigger of a stateful face's group function, with its state
+    crossing to the JVM and back as the pandas-with-state serializer
+    sends it: the pickled internal row.  Returns (state, output)."""
+    import pandas as pd
+    from pyspark.serializers import CPickleSerializer
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    state = GroupState(
+        optionalValue=value, batchProcessingTimeMs=0, eventTimeWatermarkMs=-1,
+        timeoutConf=GroupStateTimeout.NoTimeout, hasTimedOut=False,
+        watermarkPresent=False, defined=value is not None, updated=False,
+        removed=False, timeoutTimestamp=-1, keyAsUnsafe=b"", valueSchema=schema)
+    pdf = pd.DataFrame(rows, columns=columns).astype(
+        {"event_id": "int64", "ts_us": "int64"})
+    out = pd.concat(fn((7,), iter([pdf]), state), ignore_index=True)
+    ser = CPickleSerializer()
+    return ser.loads(ser.dumps(schema.toInternal(state._value))), out
+
+
+class TestStateEncoding:
+    """The stateful faces keep their per-user lists as JSON text; the
+    lists survive a trigger boundary exactly: empty state, int64 ts at
+    both ends of the range, float amounts, non-ASCII event types."""
+
+    TS = [-(2 ** 63), -5, 0, 2 ** 53 + 1, 2 ** 63 - 1]
+
+    def test_mru_state_round_trips_exactly(self):
+        import json
+
+        from operating_system_map_reduce_spark.streaming import mru_stream as m
+
+        types = ["café", "日本語", "🎉", "a\"b\\c", ""]
+        rows = [(i, ts, et) for i, (ts, et) in enumerate(zip(self.TS, types))]
+        rows += [(9, 2 ** 62, "日本語")]
+        cols = ["event_id", "ts_us", "event_type"]
+        value, out = _trigger(m._mru_group, m.STATE_SCHEMA, None, [], cols)
+        assert value == ("[]", "[]", 0) and out.empty
+        for cut in (0, 3, len(rows)):
+            value, _ = _trigger(m._mru_group, m.STATE_SCHEMA, None, [], cols)
+            value, _ = _trigger(m._mru_group, m.STATE_SCHEMA, value,
+                                rows[:cut], cols)
+            value, out = _trigger(m._mru_group, m.STATE_SCHEMA, value,
+                                  rows[cut:], cols)
+            ts_l, et_l = [], []
+            m.mru_fold(ts_l, et_l, sorted((ts, et) for _, ts, et in rows))
+            assert (json.loads(value[0]), json.loads(value[1]), value[2]) == (
+                ts_l, et_l, len(rows))
+            assert all(type(t) is int for t in json.loads(value[0]))
+            assert out["event_type"].tolist() == et_l[::-1]
+
+    def test_quota_state_round_trips_exactly(self):
+        import json
+
+        from operating_system_map_reduce_spark.streaming import quota_stream as q
+
+        cols = ["event_id", "ts_us", "value"]
+        value, out = _trigger(q._admit_group, q.STATE_SCHEMA, None, [], cols)
+        assert value == ("[]", "[]") and out["n_admitted"].tolist() == [0]
+        floats = [0.1, 1 / 3, 1e-300, 2.5]
+        cases = [
+            # more than a window apart: only the last event stays live
+            (self.TS, floats + [7.0], ([2 ** 63 - 1], [7.0])),
+            # inside one window: every admitted event stays live
+            ([-3, -2, -1, 0], floats, ([-3, -2, -1, 0], floats)),
+        ]
+        for ts, amts, want in cases:
+            rows = [(i, t, a) for i, (t, a) in enumerate(zip(ts, amts))]
+            for cut in (0, 2, len(rows)):
+                value, _ = _trigger(q._admit_group, q.STATE_SCHEMA, None, [],
+                                    cols)
+                value, a = _trigger(q._admit_group, q.STATE_SCHEMA, value,
+                                    rows[:cut], cols)
+                value, b = _trigger(q._admit_group, q.STATE_SCHEMA, value,
+                                    rows[cut:], cols)
+                assert (json.loads(value[0]), json.loads(value[1])) == want
+                assert a["n_admitted"][0] + b["n_admitted"][0] == len(rows)
+                assert (a["admitted_amount"][0], b["admitted_amount"][0]) == (
+                    sum(amts[:cut]), sum(amts[cut:]))
+
+
 class TestStatefulFaceTypes:
     """The stateful faces' output columns keep their Spark types and the
     pandas dtype kinds a collected frame has (the oracle gate compares
@@ -232,6 +313,31 @@ class TestStatefulFaceTypes:
         got = {f.name: (f.dataType.simpleString(), pdf[f.name].dtype.kind)
                for f in df.schema}
         assert got == want
+
+
+class TestMemorySinkViews:
+    """A replay into a memory sink leaves no temp view behind (the view
+    would hold the sink's rows for the life of the session), and the
+    frame it returns still reads the sink's rows."""
+
+    @pytest.mark.parametrize("face", [
+        "stream_windowed_counts", "stream_dedup_first_seen",
+        "stream_session_counts", "stream_quota_admission",
+        "stream_enrich_revenue", "stream_topk_trending", "stream_mru_types",
+        "stream_click_purchase_join",
+    ])
+    def test_replay_drops_its_view_and_keeps_its_rows(self, spark, face):
+        import __spark_entry__ as entrymod
+        from tests.oracle_utils import compare, run_oracle
+
+        def views():
+            return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+        before = views()
+        df = entrymod.queries()[face](spark, SF)
+        assert views() == before
+        problems = compare(df, run_oracle(entrymod.oracle_sql()[face], SF))
+        assert not problems, problems
 
 
 class TestChangelogStreamSink:
