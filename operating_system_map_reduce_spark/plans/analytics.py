@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 
 from operating_system_map_reduce_spark.sources.tables import load_table
+from operating_system_map_reduce_spark.streaming import scratch_root
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1287,77 +1288,24 @@ ORDER BY status, priority
 # query writes the bucketed copies once per (session, sf) and then runs
 # a shuffle-free SortMergeJoin; tests/test_plans.py asserts the only
 # exchanges left are the post-join aggregate's.
+#
+# Every at-rest table lives in the database AT_REST_DB, located in this
+# process's scratch root (streaming.scratch_root(): one mkdtemp per
+# process, removed at exit).  No other process can reach its files, and
+# they go with the process.
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-    return True
+AT_REST_DB = "kvmr_at_rest"
 
 
-# Sweep disambiguation (age bounds, re-derived after a 24 h idle rule
-# was found deleting a LIVE long-lived writer's table: reads never bump
-# dir mtime, so "idle a day" does not imply "writer dead").  PID liveness alone misjudges two cases:
-# (a) A pre-PID-scheme writer's un-pid'd directory might belong to a
-#     STILL-RUNNING old-version sibling during a mixed-version overlap
-#     -- grant it a grace window instead of sweeping on sight (age is
-#     the only signal an un-pid'd name carries).
-# (b) A dead writer's RECYCLED pid that now belongs to an unrelated
-#     live process would make its orphan unsweepable forever.  The
-#     EXACT discriminator is process start time vs directory mtime: a
-#     writer necessarily predates its own write, so a pid whose
-#     process STARTED AFTER the directory was last written cannot be
-#     the writer -- recycled, sweep it -- while any process older than
-#     the write is presumed the (possibly multi-day) live writer and
-#     its directory is never touched.  No idle-time assumption at all;
-#     when the start time is unreadable (no /proc) the sweep stays
-#     conservative and leaves the directory alone.
-_SWEEP_UNPIDD_GRACE_SEC = 6 * 3600.0
+def _at_rest_dir() -> str:
+    return os.path.join(scratch_root(), "at_rest")
 
 
-def _dir_mtime(path: str) -> float | None:
-    try:
-        return os.stat(path).st_mtime
-    except OSError:
-        return None  # vanished mid-sweep: nothing left to sweep
-
-
-def _pid_started_after(pid: int, ts: float) -> bool | None:
-    """True if ``pid``'s process started AFTER epoch ``ts`` (so it
-    cannot have written a directory last modified at ``ts``); None
-    when the start time cannot be determined (non-Linux / procfs
-    denied) -- callers must treat None as "could be the writer"."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            stat = fh.read().decode("ascii", "replace")
-        # field 22 (1-based) is starttime in clock ticks since boot;
-        # the comm field may contain spaces/parens, so split after the
-        # LAST ')' where the fixed-width tail begins at field 3.
-        tail = stat.rsplit(")", 1)[1].split()
-        ticks = int(tail[19])  # field 22 = tail index 19 (fields 3..)
-        with open("/proc/stat", "rb") as fh:
-            for line in fh:
-                if line.startswith(b"btime "):
-                    btime = int(line.split()[1])
-                    break
-            else:
-                return None
-        hz = os.sysconf("SC_CLK_TCK")
-        return (btime + ticks / hz) > ts
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-# Intra-process write serialization: two
-# threads or two same-process sessions sharing the catalog could both
-# pass tableExists, both rmtree the leftover, and run overwrite
-# saveAsTable on the same directory concurrently -- the PID in the
-# table name only protects against cross-process siblings.  One lock
-# PER TABLE NAME so concurrent builds of different tables still
-# parallelize.
+# Intra-process write serialization: two threads or two same-process
+# sessions sharing the catalog could both pass tableExists, both rmtree
+# the leftover, and run overwrite saveAsTable on the same directory
+# concurrently.  One lock PER TABLE NAME so concurrent builds of
+# different tables still parallelize.
 import threading as _threading
 
 _TABLE_LOCKS: dict = {}
@@ -1370,87 +1318,38 @@ def _table_lock(table: str) -> "_threading.Lock":
 
 
 def bucketed_table_name(prefix: str, sf_dir: str, mtime: int) -> str:
-    """Warehouse table name for a write-once bucketed copy:
-    ``{prefix}_{sf tag}_{source mtime}_p{pid}``.
+    """Catalog name of a write-once bucketed copy:
+    ``kvmr_at_rest.{prefix}_{sf tag}_{source mtime}``.
 
     The mtime tag invalidates the table when testdata is regenerated
-    in place (a live session must not serve stale buckets while the
-    DuckDB oracle reads fresh parquet).  The PID scope exists because
-    the in-memory catalog forgets managed tables between sessions, so
-    every fresh SESSION rewrites its table anyway -- there is no
-    cross-process reuse to lose -- while a SHARED name lets one
-    process's rewrite rmtree a directory a concurrently-running
-    sibling (a second notebook, a test suite beside a bench run) is
-    mid-read, killing its stage with FAILED_READ_FILE.  Per-process
-    names make concurrent sessions collision-free; dead processes'
-    leftovers are swept by _ensure_bucketed."""
+    in place: a live session must not serve stale buckets while the
+    DuckDB oracle reads fresh parquet."""
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-    return f"{prefix}_{tag}_{mtime}_p{os.getpid()}"
+    return f"{AT_REST_DB}.{prefix}_{tag}_{mtime}"
 
 
 def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
                      n_buckets: int = 16) -> None:
-    """Write-once guard that survives session restarts: the in-memory
-    catalog forgets managed tables between sessions while their
-    warehouse directories persist, so an orphaned location is cleared
-    before the (re)write.  Table names carry the source's mtime tag
-    and the writer's PID (bucketed_table_name above); stale same-prefix
-    directories -- older mtimes, dead writers, legacy un-pid'd names --
-    are swept here or the warehouse grows one multi-GB orphan per
-    testdata regeneration / process exit (the sf10 signature table is
-    ~4 GB).  A LIVE sibling process's directory is never touched (its
-    session may be streaming those files right now) -- with the
-    age bounds: un-pid'd legacy names get a grace window (a
-    mixed-version overlap's still-running writer), and an apparently
-    live pid whose directory is > 24 h idle is treated as recycled
-    (the dead writer's orphan would otherwise be unsweepable
-    forever)."""
-    import glob
-    import re
+    """Write ``df`` as the bucketed table ``table`` (a
+    bucketed_table_name) unless the catalog already has it.
+
+    The catalog is in memory: a session restarted in this process
+    forgets the database and its tables, while their directories stay
+    in the scratch root.  So the database is created with IF NOT
+    EXISTS, and this table's leftover directory is removed before the
+    write (saveAsTable refuses an existing location)."""
     import shutil
-    from urllib.parse import urlparse
 
     from operating_system_map_reduce_spark.sources.bucketing import write_bucketed
 
     with _table_lock(table):
         if spark.catalog.tableExists(table):
             return
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        leftover = os.path.join(wh, table.lower())
+        root = _at_rest_dir()
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {AT_REST_DB} LOCATION '{root}'")
+        leftover = os.path.join(root, table.split(".", 1)[1].lower())
         if os.path.isdir(leftover):
             shutil.rmtree(leftover)
-        stale_prefix = re.sub(r"_\d+(_p\d+)?$", "_", table.lower())
-        if stale_prefix != table.lower():
-            for d in glob.glob(os.path.join(wh, stale_prefix + "*")):
-                base = os.path.basename(d)
-                if base == table.lower() or spark.catalog.tableExists(base):
-                    continue
-                m = re.fullmatch(
-                    re.escape(stale_prefix) + r"\d+(?:_p(\d+))?", base)
-                if m is None:
-                    continue
-                writer = int(m.group(1)) if m.group(1) else None
-                mtime = _dir_mtime(d)
-                if mtime is None:
-                    continue  # vanished mid-sweep
-                if writer is None:
-                    # legacy un-pid'd name: maybe a still-running
-                    # pre-PID-scheme sibling -- sweep only past grace
-                    import time
-                    if time.time() - mtime <= _SWEEP_UNPIDD_GRACE_SEC:
-                        continue
-                elif writer != os.getpid() and _pid_alive(writer):
-                    # live pid: sweep ONLY when the process provably
-                    # started after the directory was written (recycled
-                    # pid -- it cannot be the writer).  A process older
-                    # than the write, or one whose start time is
-                    # unreadable, is presumed the live writer (maybe
-                    # multi-day) and never touched -- a 24 h idle
-                    # heuristic here once deleted a long-lived
-                    # sibling's in-use table.
-                    if _pid_started_after(writer, mtime) is not True:
-                        continue
-                shutil.rmtree(d, ignore_errors=True)
         # one_file_per_bucket: measured a strict win for
         # the at-rest builds — ~2x faster write (one file commit per
         # bucket) and ~9% faster downstream reads; the query plans are
@@ -1461,47 +1360,44 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
                        one_file_per_bucket=True)
 
 
-# Warehouse dirs where a bucketed write has FAILED this process (e.g.
-# read-only filesystem): at_rest_table degrades to serving the build()
-# plan per query instead of failing every registered face that assumed
-# a writable spark.sql.warehouse.dir.  Keyed on
-# the warehouse URI so one failed probe stops re-paying a doomed write
-# job per query.
-_RO_WAREHOUSES: set = set()
+# Set once a bucketed write has FAILED in this process (e.g. the scratch
+# root's filesystem is read-only or full): at_rest_table then serves the
+# build() plan per query instead of failing every registered face, and
+# stops re-paying a doomed write job per query.  Keyed on the at-rest
+# directory.
+_UNWRITABLE_ROOTS: set = set()
 
 
 def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
                   build, n_buckets: int = 16,
                   source: str = "documents.parquet") -> DataFrame:
     """Write-once bucketed table with the invalidation policy in ONE
-    place (a copy-pasted mtime/tableExists/_ensure block per table had
-    already begun to diverge): the name carries (sf tag, source mtime, writer pid),
-    so in-place testdata regeneration AND concurrent sibling processes
-    each get their own table, and ``build()`` -- called only when the
-    table is absent -- streams straight into the write job with
-    nothing persisted.  The tag is st_mtime_ns:
-    whole-second truncation let an in-place regeneration WITHIN one
-    second reuse the stale table against a fresh-parquet oracle --
-    the exact hazard the tag exists to prevent.
+    place: the name carries (sf tag, source st_mtime_ns), so in-place
+    testdata regeneration gets a new table, and ``build()`` -- called
+    only when the table is absent -- streams straight into the write
+    job with nothing persisted.  The tag is st_mtime_ns: whole-second
+    truncation let an in-place regeneration WITHIN one second reuse
+    the stale table against a fresh-parquet oracle.  The table lives in
+    this process's scratch root (_ensure_bucketed).
 
-    Degrade path: a warehouse the process cannot
-    write (read-only volume, quota) must not turn every at-rest face
-    into a write error -- on a failed table write the build() plan is
-    returned directly (identical rows; the bucketed layout is a pure
-    optimization) and the warehouse is remembered as read-only so
-    later calls skip the doomed write job.  If the BUILD itself is
-    broken the error still surfaces: the degraded return re-runs the
-    same plan and fails the same way at execution."""
+    Degrade path: a scratch root the process cannot write (read-only
+    volume, quota) must not turn every at-rest face into a write
+    error -- on a failed table write the build() plan is returned
+    directly (identical rows; the bucketed layout is a pure
+    optimization) and the root is remembered as unwritable so later
+    calls skip the doomed write job.  If the BUILD itself is broken
+    the error still surfaces: the degraded return re-runs the same
+    plan and fails the same way at execution."""
     mt = os.stat(os.path.join(sf_dir, source)).st_mtime_ns
     table = bucketed_table_name(prefix, sf_dir, mt)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    if wh in _RO_WAREHOUSES:
+    root = _at_rest_dir()
+    if root in _UNWRITABLE_ROOTS:
         return build()
     if not spark.catalog.tableExists(table):
         try:
             _ensure_bucketed(spark, table, build(), key, n_buckets)
         except Exception as exc:
-            _RO_WAREHOUSES.add(wh)
+            _UNWRITABLE_ROOTS.add(root)
             try:  # a half-written table must not shadow the degrade
                 spark.sql(f"DROP TABLE IF EXISTS {table}")
             except Exception:
@@ -1510,7 +1406,7 @@ def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
             warnings.warn(
                 f"at_rest_table: bucketed write of {table!r} failed "
                 f"({exc.__class__.__name__}); degrading to the "
-                "un-bucketed per-query plan for this warehouse",
+                "un-bucketed per-query plan for this process",
                 RuntimeWarning, stacklevel=2)
             return build()
     return spark.table(table)

@@ -310,12 +310,12 @@ def bucketed_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream estimates come from real parquet statistics, so the
     planner's runtime choices are trustworthy again.
 
-    Write-once per (sf_dir, documents mtime, pid) -- the mtime tag
-    invalidates the table when testdata is regenerated in place, the
-    pid scope keeps concurrent sibling processes from rmtree'ing each
-    other's live files (analytics.at_rest_table).  The signature
-    frame streams straight into the write job with nothing persisted:
-    the old session-slot persist (cached_signature) existed to share
+    Write-once per (session, sf_dir, documents mtime) -- the mtime tag
+    invalidates the table when testdata is regenerated in place, and
+    the table lives in this process's scratch root
+    (analytics.at_rest_table).  The signature frame streams straight
+    into the write job with nothing persisted: the old session-slot
+    persist (cached_signature) existed to share
     the Python stage between query consumers, but since this table
     replaced the through-Python frame in every query plan, the write
     job IS the only consumer; keeping the slot would leave a dead
@@ -647,9 +647,9 @@ def postings_append(spark: SparkSession, delta_docs: DataFrame, table: str,
 
 # Session-local completion ledger for the staged incremental table:
 # tableExists alone cannot distinguish a finished lifecycle from one
-# that died between seed and compact in THIS session (cross-session
-# half-builds are already handled -- a new pid gets a new name and the
-# stale sweep collects the orphan).
+# that died between seed and compact in THIS session (a restarted
+# session's catalog has no such table, and _ensure_bucketed clears its
+# leftover directory before the seed write).
 _INCR_COMPLETE: set = set()
 
 
@@ -658,10 +658,10 @@ def incremental_postings_demo_table(spark: SparkSession, sf_dir: str) -> str:
     artifact: seed the postings table from the corpus MINUS a 1% tail
     (pmod(doc_id, 100) = 0 -- the simulated ingest delta), APPEND the
     tail's postings (the maintenance tick), then COMPACT back to one
-    file per bucket.  Keyed like every at-rest table (sf tag, source
-    st_mtime_ns, writer pid; swept by the same _ensure_bucketed pass
-    that writes the seed), so the lifecycle runs once per session and
-    every later reference is a bucketed table scan.  By the
+    file per bucket.  Keyed and placed like every at-rest table (sf
+    tag, source st_mtime_ns; in this process's scratch root, written
+    by the same _ensure_bucketed), so the lifecycle runs once per
+    session and every later reference is a bucketed table scan.  By the
     equivalence tests/test_pipeline_ops.py pins, the result is
     row-identical to a from-scratch build over ALL documents -- which
     is exactly what lets dedup_ngram_incremental below share the
@@ -1353,17 +1353,15 @@ def fn_registry_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operating_system_map_reduce_spark.functions.registry import ensure_builtins
 
     ensure_builtins(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents_v")
-    _t(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings_v")
     return spark.sql("""
         SELECT d.doc_id,
                osmr_ws_tokens(d.text) AS ws_tokens,
                osmr_bpe_tokens(d.text) AS bpe_est_tokens,
                osmr_fingerprint(d.text) AS fingerprint,
                ROUND(osmr_cosine(e.embedding, reverse(e.embedding)), 6) AS rev_cosine
-        FROM documents_v d JOIN embeddings_v e ON d.doc_id = e.vec_id
+        FROM {d} d JOIN {e} e ON d.doc_id = e.vec_id
         ORDER BY d.doc_id
-    """)
+    """, d=_t(spark, sf_dir, "documents"), e=_t(spark, sf_dir, "embeddings"))
 
 
 FN_REGISTRY_SQL = f"""

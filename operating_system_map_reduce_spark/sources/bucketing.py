@@ -20,12 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 16,
-                   sort: bool = True,
                    one_file_per_bucket: bool = False) -> None:
-    """Persist ``df`` as a managed parquet table bucketed (and
-    optionally sorted) on ``key``.  At 100 TB, n_buckets is sized so a
-    bucket's largest co-grouped key set fits an executor (~shuffle
-    partition sizing, but decided once at write time).
+    """Persist ``df`` as a parquet catalog table bucketed and sorted on
+    ``key``.  ``table`` may be qualified (``db.name``); its files go to
+    ``<db location>/<name>`` -- for the at-rest tables, a directory in
+    the process's scratch root (plans/analytics.py).  At 100 TB,
+    n_buckets is sized so a bucket's largest co-grouped key set fits an
+    executor (~shuffle partition sizing, but decided once at write
+    time).
 
     ``one_file_per_bucket`` repartitions on the bucket key first
     (murmur3 HashPartitioning — the same hash the bucket id uses, so
@@ -42,19 +44,11 @@ def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 16,
     repartition (harmless: the write falls back to per-task files —
     compact_bucketed exists for that case and uses a forced bucketed
     scan instead)."""
-    if one_file_per_bucket:
-        from pyspark.sql import functions as F
-
-        df = df.repartition(n_buckets, F.col(key))
-    w = df.write.format("parquet").mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    _save(df, table, key, n_buckets, "overwrite", one_file_per_bucket)
 
 
-def append_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 16,
-                    sort: bool = True,
-                    one_file_per_bucket: bool = True) -> None:
+def append_bucketed(df: DataFrame, table: str, key: str,
+                    n_buckets: int = 16) -> None:
     """Append delta rows into an existing bucketed table (same spec --
     Spark enforces the bucket count/key match).
 
@@ -72,22 +66,15 @@ def append_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 16,
     the delta (minutes) and paying the corpus (hours) on every
     ingest tick.
 
-    ``one_file_per_bucket`` (default True — the delta is small, the
-    shuffle is cheap) bounds fragmentation at ONE new file per bucket
-    per tick instead of one per (task, bucket), stretching the
-    compaction interval correspondingly."""
-    if one_file_per_bucket:
-        from pyspark.sql import functions as F
-
-        df = df.repartition(n_buckets, F.col(key))
-    w = df.write.format("parquet").mode("append").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    The delta is repartitioned on the bucket key first (the delta is
+    small, the shuffle is cheap): that bounds fragmentation at ONE new
+    file per bucket per tick instead of one per (task, bucket),
+    stretching the compaction interval correspondingly."""
+    _save(df, table, key, n_buckets, "append", one_file_per_bucket=True)
 
 
 def compact_bucketed(spark: SparkSession, table: str, key: str,
-                     n_buckets: int = 16, sort: bool = True) -> None:
+                     n_buckets: int = 16) -> None:
     """Rewrite an append-fragmented bucketed table to one file per
     bucket, restoring the at-rest sort guarantee appends suspend (see
     append_bucketed).  The rewrite is a full pass over the table --
@@ -115,7 +102,7 @@ def compact_bucketed(spark: SparkSession, table: str, key: str,
     prev = spark.conf.get(auto, None)
     spark.conf.set(auto, "false")
     try:
-        write_bucketed(spark.table(table), tmp, key, n_buckets, sort)
+        write_bucketed(spark.table(table), tmp, key, n_buckets)
     finally:
         if prev is None:
             spark.conf.unset(auto)
@@ -123,3 +110,13 @@ def compact_bucketed(spark: SparkSession, table: str, key: str,
             spark.conf.set(auto, prev)
     spark.sql(f"DROP TABLE {table}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+
+
+def _save(df: DataFrame, table: str, key: str, n_buckets: int, mode: str,
+          one_file_per_bucket: bool) -> None:
+    if one_file_per_bucket:
+        from pyspark.sql import functions as F
+
+        df = df.repartition(n_buckets, F.col(key))
+    (df.write.format("parquet").mode(mode)
+     .bucketBy(n_buckets, key).sortBy(key).saveAsTable(table))

@@ -96,102 +96,61 @@ class TestOneFilePerBucketLayout:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-class TestEnsureBucketedStaleSweep:
-    def test_older_mtime_tagged_dirs_are_swept(self, spark, sf_dir, tmp_path):
-        """Mtime-tagged bucketed tables (b_<name>_<tag>_<mtime>) retire
-        a multi-GB warehouse directory on every in-place testdata
-        regeneration; _ensure_bucketed must sweep older same-prefix
-        tags when writing the new one -- and must NOT touch other
-        prefixes, digit-ambiguous cousins, catalog-registered tables,
-        live siblings, or (within the age bounds) young un-pid'd legacy
-        names (a mixed-version overlap's still-running writer) --
-        while a 'live' pid whose directory PREDATES the process IS
-        swept (recycled pid: the process cannot be the writer; the
-        dead writer's orphan would otherwise be unsweepable forever).
-        Round-14 advice fix: the discriminator is process start time
-        vs dir mtime, NOT idleness -- a long-lived writer's old-but-
-        post-start directory is kept (the 24 h idle rule used to
-        delete it mid-read)."""
+class TestAtRestTables:
+    def test_tables_live_in_the_process_scratch_root(self, spark, sf_dir,
+                                                     tmp_path):
+        """The at-rest tables are written into a database located in
+        the process's scratch root: the shared warehouse is neither
+        read nor written, so a directory there that looks like another
+        process's stale table (here: a reaped writer's, with an older
+        source mtime) is left alone."""
         import os
+        import shutil
         import subprocess
-        import time
         from urllib.parse import urlparse
 
         from operating_system_map_reduce_spark.plans.analytics import (
-            _SWEEP_UNPIDD_GRACE_SEC, _ensure_bucketed,
-            _pid_started_after)
-        from operating_system_map_reduce_spark.sources.tables import load_table
+            bucketed_table_name)
+        from operating_system_map_reduce_spark.plans.pipeline import (
+            bucketed_signature)
+        from operating_system_map_reduce_spark.streaming import scratch_root
 
+        corpus = tmp_path / "corpus"
+        corpus.mkdir()
+        shutil.copy(os.path.join(sf_dir, "documents.parquet"), corpus)
+        mt = os.stat(corpus / "documents.parquet").st_mtime_ns
+        table = bucketed_table_name("b_sig", str(corpus), mt)
+        tag = "".join(c if c.isalnum() else "_" for c in str(corpus).strip("/"))
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        me = os.getpid()
-        # a PID that is certainly not a live process: a subprocess that
-        # already exited and was reaped (no os.fork() under a live
-        # JVM/py4j connection -- r12 advice)
+        os.makedirs(wh, exist_ok=True)
+
+        def b_dirs():
+            return {d for d in os.listdir(wh) if d.startswith("b_")}
+
         proc = subprocess.Popen(["true"])
         proc.wait()
-        dead = proc.pid
-        # the live sibling is this pytest process's PARENT -- guaranteed
-        # alive for the test's duration without hard-coding PID 1
-        # (absent in rootless / PID-namespaced CI)
-        live = os.getppid()
-        old = time.time() - _SWEEP_UNPIDD_GRACE_SEC - 60
-        # recycled-pid probe: a dir whose mtime PREDATES the live
-        # process's start -- find a pre-start instant by bisecting with
-        # the discriminator itself is overkill; one hour before this
-        # test process launched is necessarily before its (recent)
-        # parent too when the suite runs under a fresh shell, but to
-        # stay exact we probe: skip the recycled subcase if the parent
-        # somehow predates it (e.g. pytest under a week-old daemon).
-        pre_start = time.time() - 3600.0
-        parent_is_newer = _pid_started_after(live, pre_start)
-        stale = os.path.join(wh, "b_sweepprobe_x_1000")  # legacy, OLD
-        fresh_unpidd = os.path.join(wh, "b_sweepprobe_x_1001")  # legacy, young
-        stale_dead = os.path.join(wh, f"b_sweepprobe_x_1000_p{dead}")
-        stale_mine = os.path.join(wh, f"b_sweepprobe_x_1000_p{me}")
-        live_sibling = os.path.join(wh, f"b_sweepprobe_x_1000_p{live}")
-        recycled = os.path.join(wh, f"b_sweepprobe_x_1002_p{live}")  # pre-start
-        cousin = os.path.join(wh, "b_sweepprobe_x_1000_extra")
-        other = os.path.join(wh, "b_sweepother_x_1000")
-        for d in (stale, fresh_unpidd, stale_dead, stale_mine, live_sibling,
-                  recycled, cousin, other):
-            os.makedirs(d, exist_ok=True)
-        os.utime(stale, (old, old))
-        os.utime(recycled, (pre_start, pre_start))
-        table = f"b_sweepprobe_x_2000_p{me}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        df = load_table(spark, sf_dir, "region").select("r_regionkey")
+        planted = os.path.join(wh, f"b_sig_{tag}_{mt - 1}_p{proc.pid}".lower())
+        os.makedirs(planted)
+        before = b_dirs()
         try:
-            _ensure_bucketed(spark, table, df, "r_regionkey")
-            assert not os.path.isdir(stale), "aged legacy un-pid'd tag swept"
-            assert os.path.isdir(fresh_unpidd), \
-                "young un-pid'd tag kept (grace for a pre-PID-scheme writer)"
-            assert not os.path.isdir(stale_dead), "dead writer's tag swept"
-            assert not os.path.isdir(stale_mine), "own older tag swept"
-            assert os.path.isdir(live_sibling), \
-                "a LIVE sibling's post-start directory must never be touched"
-            if parent_is_newer is True:
-                assert not os.path.isdir(recycled), \
-                    "a live pid whose process started AFTER the dir was " \
-                    "written cannot be its writer (recycled pid) -- swept"
-            else:
-                # parent predates the probe mtime (or /proc unreadable):
-                # the sweep must stay conservative and keep it
-                assert os.path.isdir(recycled)
-            assert os.path.isdir(cousin), "non-pure-digit suffix kept"
-            assert os.path.isdir(other), "other prefixes kept"
-            assert spark.catalog.tableExists(table)
+            assert bucketed_signature(spark, str(corpus)).count() > 0
+            assert os.path.isdir(planted), "nothing sweeps the warehouse"
+            location = next(
+                r.data_type for r in spark.sql(
+                    f"DESCRIBE TABLE EXTENDED {table}").collect()
+                if r.col_name == "Location")
+            assert urlparse(location).path.startswith(scratch_root() + "/")
+            assert b_dirs() == before, "no at-rest table in the warehouse"
         finally:
-            import shutil
             spark.sql(f"DROP TABLE IF EXISTS {table}")
-            for d in (fresh_unpidd, live_sibling, recycled, cousin, other):
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(planted, ignore_errors=True)
 
     def test_at_rest_table_degrades_when_warehouse_unwritable(
             self, spark, sf_dir, monkeypatch):
-        """A read-only warehouse must not turn the at-rest faces into
-        write errors: the first failed write flags
-        the warehouse and returns the build() plan (identical rows);
-        later calls skip the doomed write job entirely."""
+        """An unwritable at-rest root must not turn the at-rest faces
+        into write errors: the first failed write flags the root and
+        returns the build() plan (identical rows); later calls skip the
+        doomed write job entirely."""
         import pytest as _pytest
 
         from operating_system_map_reduce_spark.plans import analytics
@@ -204,7 +163,7 @@ class TestEnsureBucketedStaleSweep:
             raise OSError(30, "Read-only file system")
 
         monkeypatch.setattr(analytics, "_ensure_bucketed", boom)
-        monkeypatch.setattr(analytics, "_RO_WAREHOUSES", set())
+        monkeypatch.setattr(analytics, "_UNWRITABLE_ROOTS", set())
 
         def build():
             return load_table(spark, sf_dir, "region").select("r_regionkey")
@@ -218,30 +177,7 @@ class TestEnsureBucketedStaleSweep:
             spark, sf_dir, "b_degradeprobe", "r_regionkey", build,
             source="region.parquet")
         assert df2.count() == build().count()
-        assert calls["n"] == 1, "flagged warehouse must skip the write"
-
-    def test_pid_started_after_discriminator(self):
-        """The recycled-pid discriminator itself: this very process
-        started after any sufficiently-old instant and before any
-        future instant; an unreadable pid yields None (conservative:
-        presumed writer, never swept)."""
-        import os
-        import time
-
-        from operating_system_map_reduce_spark.plans.analytics import (
-            _pid_started_after)
-
-        me = os.getpid()
-        # 10 years ago: certainly before this process started
-        assert _pid_started_after(me, time.time() - 315e6) is True
-        # the future: no process starts after it
-        assert _pid_started_after(me, time.time() + 3600) is False
-        # a reaped pid has no /proc entry -> None, not an exception
-        import subprocess
-        proc = subprocess.Popen(["true"])
-        proc.wait()
-        assert _pid_started_after(proc.pid, time.time()) in (None, False)
-
+        assert calls["n"] == 1, "a flagged root must skip the write"
 
 # --- corpus-scaled bucket count for the at-rest postings table -------------
 # A bucketed join's parallelism IS the bucket count, so b_post sizes its

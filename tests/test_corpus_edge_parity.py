@@ -114,36 +114,7 @@ def corpus_edge_dir(tmp_path_factory):
             pa.Table.from_pandas(df[schema.names], schema=schema,
                                  preserve_index=False),
             os.path.join(out, f"{name}.parquet"))
-    # Capture the warehouse path EAGERLY: the
-    # teardown below must not silently no-op when getActiveSession()
-    # returns None at teardown time (session fixture torn down first,
-    # or a test stopped the session) -- that would reinstate the
-    # forever-leak this cleanup exists to fix.  Fall back to Spark's
-    # default warehouse location (cwd/spark-warehouse) if no session
-    # is live yet either.
-    from urllib.parse import urlparse
-
-    from pyspark.sql import SparkSession
-
-    _spark = SparkSession.getActiveSession()
-    wh = (urlparse(_spark.conf.get("spark.sql.warehouse.dir")).path
-          if _spark is not None
-          else os.path.join(os.getcwd(), "spark-warehouse"))
-    yield out
-    # The bucketed-signature/postings/edges faces write b_*_<tag>_...
-    # warehouse tables keyed on this fixture's tmp path.  The path is
-    # unique per pytest run, so _ensure_bucketed's same-prefix sweep
-    # can never reclaim it -- without this teardown every test run
-    # leaks table directories into the shared warehouse forever.
-    import glob as _glob
-    import shutil
-
-    spark = SparkSession.getActiveSession()
-    tag = "".join(c if c.isalnum() else "_" for c in out.strip("/"))
-    for d in _glob.glob(os.path.join(wh, f"b_*_{tag.lower()}_*")):
-        if spark is not None:
-            spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
-        shutil.rmtree(d, ignore_errors=True)
+    return out
 
 
 _QUERIES = entrymod.queries()

@@ -14,6 +14,10 @@
   arguments the tracer and the workload pass.
 * No ``applyInPandasWithState`` state schema has an array or map field,
   whose generated code Spark compiles again on every run.
+* The package keeps to its own process: it reads no
+  ``spark.sql.warehouse.dir`` (its tables live in the process's scratch
+  root), opens no ``/proc/`` path and signals no process with
+  ``os.kill``.
 * Every top-level def and class of the package, and every method of
   its top-level classes, is reached from the package, bench.py,
   __spark_entry__.py or perfbench/ (docstrings do not count), or is
@@ -163,6 +167,26 @@ def test_stream_state_has_no_array_or_map_field():
               if isinstance(schema, str)
               or any(isinstance(t, (ArrayType, MapType)) for t in _types(schema))}
     assert not nested, nested
+
+
+def test_package_keeps_to_its_own_process():
+    found = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        rel = path.relative_to(REPO)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                bad = (node.value == "spark.sql.warehouse.dir"
+                       or node.value.startswith("/proc/"))
+            elif isinstance(node, ast.Call):
+                bad = ast.unparse(node.func) in ("os.kill", "os.killpg")
+            elif isinstance(node, ast.ImportFrom):
+                bad = node.module == "os" and any(
+                    a.name in ("kill", "killpg") for a in node.names)
+            else:
+                continue
+            if bad:
+                found.append(f"{rel}:{node.lineno}: {ast.unparse(node)[:60]}")
+    assert not found, found
 
 
 def _required(fn) -> list[str]:

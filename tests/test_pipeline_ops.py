@@ -953,3 +953,24 @@ class TestIncrementalPostings:
         n_files = len([f for f in os.listdir(loc) if f.endswith(".parquet")])
         assert n_files <= N_BUCKETS, \
             f"compaction left {n_files} files for {N_BUCKETS} buckets"
+
+
+class TestFnRegistryViews:
+    def test_doc_stats_leaves_no_temp_view(self, spark, sf_dir):
+        """fn_registry_doc_stats passes its frames to spark.sql as
+        arguments, whose views pyspark drops after analysis: a run
+        leaves no temp view in the session, and its rows still match
+        the oracle."""
+        from tests.oracle_utils import compare, run_oracle
+
+        session = spark.newSession()
+
+        def views():
+            return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+        before = views()
+        df = _QUERIES["fn_registry_doc_stats"](session, sf_dir)
+        assert views() == before
+        problems = compare(
+            df, run_oracle(entrymod.oracle_sql()["fn_registry_doc_stats"], sf_dir))
+        assert not problems, problems

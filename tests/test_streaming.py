@@ -523,25 +523,6 @@ class TestSinkCrashRecovery:
         assert snap(log.replay()) == snap(ref.replay())
 
 
-@pytest.fixture
-def novelty_dir(spark, tmp_path):
-    """tmp_path that sweeps the b_*_<tag> warehouse tables the seed
-    index's bucketed_signature writes for it (the path is unique per
-    pytest run, so _ensure_bucketed's same-prefix sweep could never
-    reclaim them -- same discipline as the corpus-edge fixture)."""
-    import glob as _glob
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    yield tmp_path
-    tag = "".join(c if c.isalnum() else "_" for c in str(tmp_path).strip("/"))
-    for d in _glob.glob(os.path.join(wh, f"b_*_{tag.lower()}_*")):
-        spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
-        shutil.rmtree(d, ignore_errors=True)
-
-
 class TestNoveltyStream:
     def test_seed_bands_match_direct_signature(self, spark, sf_dir):
         """The r13 seed-index re-plan (the r12 queue's zero-seat item
@@ -680,8 +661,7 @@ class TestNoveltyStream:
             ns.run_novelty_stream(spark, sf_dir)
 
     def test_cascade_rejects_dup_of_earlier_admission(self, spark,
-                                                      novelty_dir):
-        tmp_path = novelty_dir
+                                                      tmp_path):
         """The property the one-shot batch probe cannot express: a
         wave-1 document duplicating a document ADMITTED in wave 0 (and
         absent from the corpus) must be rejected, because admission
@@ -730,8 +710,7 @@ class TestNoveltyStream:
         assert got[47]["n_band_hits"] > 0 and got[47]["admitted"] == 0
         assert got[27]["admitted"] == 1 and got[27]["wave"] == 2
 
-    def test_compaction_is_admission_equivalent(self, spark, novelty_dir):
-        tmp_path = novelty_dir
+    def test_compaction_is_admission_equivalent(self, spark, tmp_path):
         """The standing index's SAV: a
         crawl appends one commit per wave, accruing one small file per
         wave per kind; compaction must shrink the file count WITHOUT
