@@ -11,21 +11,21 @@ State:
    durability parity with p3.  Point reads (KVG, GET, the KVI/KVU/KVD
    existence probes) come from each log's driver-side snapshot of its
    files: the log overlay, then a memo, then a driver-side read of the
-   one row group of the key-sorted base that can hold the key, so a
-   point read runs no Spark job unless the log since SAV was spilled to
-   Spark (past the overlay's byte budget).  Scans (KVA, ALL, KMR,
-   export) read the base alone while the log is empty (right after
-   SAV), else dedup(base ∪ spill ∪ overlay).  Nothing folds and nothing
-   is checkpointed.
+   row groups of the key-sorted base and of the spill (the log past the
+   overlay's byte budget) that can hold the key, so no point read runs
+   a Spark job.  Scans (KVA, ALL, KMR, export) read the base alone while
+   the log is empty (right after SAV), else dedup(base ∪ spill ∪
+   overlay).  Nothing is checkpointed.
  - credentials: the login check reads a driver-side map
    username -> (salt, pass_hash), the reference's in-memory auth map
    (p3/server/my_storage.cc:232-250): the credentials of the auth
-   log's base and spill, collected once per base and spill, under the
-   auth overlay.  A login after a REG, a SET or a SAV runs no Spark job.
+   log's base and spill, read with pyarrow once per base and spill,
+   under the auth overlay.  No login runs a Spark job.
  - seq: minted above every seq either log's snapshot has seen, so a
    write after another engine's writes on the same directory wins.
  - SAV runs alone: every command holds a shared gate, SAV holds it
-   exclusive, so no reader opens a log file that compaction removes.
+   exclusive, so no scan's Spark read opens a log file that compaction
+   removes (a point read that finds a file gone lists again).
  - quotas + MRU: bounded in-memory per-user metadata, exactly like the
    reference's deques (they are not persisted there either).
  - map/reduce: FuncTable registry + Spark-executed map with global or
@@ -185,11 +185,10 @@ class KVEngine:
 
     def _credentials(self) -> dict[str, tuple[bytes, bytes]]:
         """username -> (salt, pass_hash) as of the auth log's current
-        snapshot: the credentials of its base and spill, collected once
-        per base and spill (a pyarrow read of the base's three columns
-        when the spill is empty, else one Spark job), under the overlay's
-        records (appends by any engine on this directory).  A login after
-        a REG, a SET or a SAV by any engine runs no Spark job."""
+        snapshot: the credentials of its base and spill, read with
+        pyarrow once per base and spill, under the overlay's records
+        (appends by any engine on this directory).  No login runs a
+        Spark job."""
         snap, creds = self.auth_log.snapshot(), self._creds
         if creds[0] is snap:
             return creds[1]

@@ -29,12 +29,15 @@ replays its log only at load (p3/server/my_storage.cc:573-702).  Here a
 A snapshot holds no Spark state: only the files it pinned and
 driver-side indexes over them.
 
- - base: the files ``compact`` wrote, with their footer index
-   ``groups``, ``(min key, max key, file, footer, row group)`` from the
-   parquet footers, built once per base;
- - spill: log files Spark serves.  Empty unless the log since the base
-   outgrew the overlay's byte budget, or a new file held a record that
-   does not sort after the base and spill;
+ - base: the files ``compact`` wrote, range-partitioned and sorted by
+   key in row groups of ROW_GROUP_BYTES;
+ - spill: log files indexed by their footers and never read whole onto
+   the driver.  Empty unless the log since the base outgrew the
+   overlay's byte budget, or a new file held a record that does not
+   sort after the base and spill.  The stream sink writes its part
+   files with the same sorted layout as the base;
+ - groups: the footer index of base ∪ spill, ``(min key, max key, file,
+   footer, row group)`` for each row group, built when a file joins;
  - overlay: driver-side ``key -> latest record`` of the other log
    files, read with pyarrow.  Every overlay record sorts after every
    base and spill record: a new file that would break this joins the
@@ -44,14 +47,13 @@ driver-side indexes over them.
  - memo: a bounded ``key -> row | None`` of point reads, exact for base
    ∪ spill, so appends keep it.
 
-``lookup`` answers from the overlay, then the memo, then the base row
-groups whose key range holds the key (one, on a base ``compact`` wrote;
-none for a key outside every range), read with pyarrow and no Spark job;
-only with a spill does a memo miss run one Spark point read of
-``dedup(base ∪ spill)``.  Scans (``replay_cached``) read the base alone
-when there is no log, else ``dedup(base ∪ spill ∪ overlay)``, and SAV
-(``compact``) writes that scan as the new base.  Nothing is folded and
-nothing is checkpointed.
+``lookup`` answers from the overlay, then the memo, then the row groups
+of base ∪ spill whose key range holds the key (on a base ``compact``
+wrote, one base group and at most one per spilled sorted file), read
+with pyarrow: the highest seq wins.  No point read starts a Spark job.
+Scans (``replay_cached``) read the base alone when there is no log,
+else ``dedup(base ∪ spill ∪ overlay)``, and SAV (``compact``) writes
+that scan as the new base.  Nothing is checkpointed.
 """
 
 from __future__ import annotations
@@ -73,9 +75,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-# the log the overlay holds; past it, the log is spilled to Spark until SAV
+# the log the overlay holds; past it, the log is spilled until SAV
 OVERLAY_BYTES = 8 << 20
-# parquet row-group target of the base: a point read decodes one group
+# parquet row-group target of the base and the sink's part files: a
+# point read decodes one group of each
 ROW_GROUP_BYTES = 256 << 10
 # point reads remembered per base and spill; a larger row is read again
 # each time, so the memo stays within MEMO_KEYS * MEMO_ROW_BYTES
@@ -106,8 +109,8 @@ class Snapshot:
     on first use."""
 
     layout: tuple                 # (base files, log files) covered
-    groups: tuple = ()            # base footer index: (lo, hi, file, footer, group)
-    spill: tuple = ()             # log files Spark serves
+    groups: tuple = ()            # base ∪ spill footer index: (lo, hi, file, footer, group)
+    spill: tuple = ()             # log files served from their footer index
     overlay: dict = field(default_factory=dict)  # key -> latest record of the rest
     overlay_bytes: int = 0        # size of the log files the overlay holds
     floor: int = 0                # highest seq in base and spill
@@ -274,7 +277,7 @@ class ChangeLog:
         return tuple(groups)
 
     def _read_group(self, path: str, meta, i: int, key: str) -> list[dict]:
-        """The records of ``key`` in row group ``i`` of base file ``path``."""
+        """The records of ``key`` in row group ``i`` of parquet file ``path``."""
         with pq.ParquetFile(path, metadata=meta) as f:
             group = f.read_row_group(i, use_threads=False)
         return group.filter(pc.equal(group[self.key_col], key)).to_pylist()
@@ -335,7 +338,8 @@ class ChangeLog:
         appended since are read into the overlay while it stays within
         the byte budget (sized before anything is read) and their records
         sort after the base and spill.  Otherwise the overlay's files and
-        the new ones join the spill, and the memo starts empty."""
+        the new ones join the spill and its footer index, and the memo
+        starts empty."""
         if snap is not None and snap.layout == layout:
             return snap
         if (snap is None or snap.layout[0] != layout[0]
@@ -346,47 +350,40 @@ class ChangeLog:
         seq = max(snap.seq, hi)
         size = snap.overlay_bytes + sum(os.path.getsize(p) for p in paths)
         if lo <= snap.floor or size > OVERLAY_BYTES:
-            return Snapshot(layout, snap.groups, spill=layout[1], floor=seq, seq=seq)
-        overlay = dict(snap.overlay)
-        for row in self._read_tail(paths):
-            cur = overlay.get(row[self.key_col])
-            if cur is None or row[self.seq_col] > cur[self.seq_col]:
-                overlay[row[self.key_col]] = row
+            joined = self._log_paths(sorted(set(layout[1]) - set(snap.spill)))
+            return Snapshot(layout, snap.groups + self._footer_index(joined),
+                            spill=layout[1], floor=seq, seq=seq)
+        overlay = self._latest(dict(snap.overlay), self._read_tail(paths))
         return Snapshot(layout, snap.groups, snap.spill, overlay, size,
                         snap.floor, seq, snap.memo)
+
+    def _latest(self, latest: dict, rows) -> dict:
+        """``latest`` (key -> record) updated with ``rows``: the highest
+        seq per key wins."""
+        for row in rows:
+            cur = latest.get(row[self.key_col])
+            if cur is None or row[self.seq_col] > cur[self.seq_col]:
+                latest[row[self.key_col]] = row
+        return latest
 
     def _settled_paths(self, snap: Snapshot) -> list[str]:
         """The files of the snapshot's base and spill."""
         return self._base_paths(snap.layout[0]) + self._log_paths(snap.spill)
 
-    def _spark_rows(self, snap: Snapshot, query) -> list[dict]:
-        """``query`` over dedup(base ∪ spill), collected.  Raises
-        FileNotFoundError when a compaction elsewhere removed one of the
-        files."""
-        paths = self._settled_paths(snap)
-        try:
-            rows = query(self._dedup(self._read_files(paths))).collect()
-        except Exception:
-            if all(map(os.path.exists, paths)):
-                raise
-            raise FileNotFoundError("a snapshot file was removed") from None
-        return [{k: bytes(v) if isinstance(v, bytearray) else v
-                 for k, v in r.asDict().items()} for r in rows]
-
     def settled_rows(self, columns: list[str]) -> tuple[Snapshot, list[dict]]:
         """The current snapshot and ``columns`` of the live rows of its
-        base ∪ spill: the base files read with pyarrow when the spill is
-        empty (``compact`` writes one live row per key), else one Spark
-        job."""
+        base ∪ spill, read with pyarrow: the latest record per key."""
+        read = list(dict.fromkeys([*columns, self.key_col, self.seq_col, self.op_col]))
         while True:
             snap = self.snapshot()
             try:
-                if snap.spill:
-                    return snap, self._spark_rows(snap, lambda df: df.select(*columns))
-                return snap, [row for p in self._settled_paths(snap) for row in
-                              pq.read_table(p, columns=columns).to_pylist()]
+                rows = self._latest({}, (row for p in self._settled_paths(snap) for row in
+                                         pq.read_table(p, columns=read).to_pylist()))
             except FileNotFoundError:
                 self._publish()
+                continue
+            return snap, [{c: row[c] for c in columns}
+                          for row in rows.values() if self._live(row)]
 
     def _live(self, row: dict | None) -> dict | None:
         return None if row is None or row[self.op_col] == "delete" else row
@@ -414,12 +411,8 @@ class ChangeLog:
             return row
 
     def _point_read(self, snap: Snapshot, key: str) -> dict | None:
-        """The live record of ``key`` in base ∪ spill.  With an empty
-        spill: the base row groups whose key range holds ``key``, read on
-        the driver with no Spark job.  Otherwise one Spark point read."""
-        if snap.spill:
-            rows = self._spark_rows(snap, lambda df: df.filter(F.col(self.key_col) == key))
-            return rows[0] if rows else None
+        """The live record of ``key`` in base ∪ spill: the latest of the
+        row groups whose key range holds ``key``, read on the driver."""
         rows = [row for lo, hi, path, meta, i in snap.groups
                 if lo is None or lo <= key <= hi
                 for row in self._read_group(path, meta, i, key)]
@@ -447,6 +440,12 @@ class ChangeLog:
 
     # -- compaction (SAV) --------------------------------------------------
 
+    def _write_sorted(self, df: DataFrame, path: str) -> None:
+        """``df`` written to ``path``, each part file sorted by key in row
+        groups of ROW_GROUP_BYTES: the layout the footer index prunes."""
+        (df.sortWithinPartitions(self.key_col)
+         .write.option("parquet.block.size", ROW_GROUP_BYTES).parquet(path))
+
     def compact(self) -> None:
         """SAV parity (p3/server/my_storage.cc:505-565): write the
         snapshot's scan to a tmp dir range-partitioned and sorted by key
@@ -473,10 +472,8 @@ class ChangeLog:
             size = snap.overlay_bytes + sum(map(os.path.getsize, self._settled_paths(snap)))
             advisory = _byte_size(self.spark.conf.get(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-            key = self.key_col
-            (self._scan(snap).repartitionByRange(max(1, -(-size // advisory)), key)
-             .sortWithinPartitions(key)
-             .write.option("parquet.block.size", ROW_GROUP_BYTES).parquet(tmp))
+            self._write_sorted(self._scan(snap).repartitionByRange(
+                max(1, -(-size // advisory)), self.key_col), tmp)
             swap_out = os.path.join(self.root, f"base.old-{uuid.uuid4().hex[:8]}")
             os.rename(self.base_dir, swap_out)
             os.rename(tmp, self.base_dir)
@@ -520,7 +517,7 @@ class ChangelogStreamSink:
     def _sink_batch(self, batch: DataFrame, batch_id: int) -> None:
         cols = [f.name for f in self.log.schema.fields]
         tmp = os.path.join(self.log.root, f"ingest.tmp-{uuid.uuid4().hex[:8]}")
-        batch.select(*cols).write.mode("overwrite").parquet(tmp)
+        self.log._write_sorted(batch.select(*cols), tmp)
         renamed = False
         for i, name in enumerate(sorted(os.listdir(tmp))):
             if not name.endswith(".parquet"):

@@ -14,6 +14,8 @@
   arguments the tracer and the workload pass.
 * No ``applyInPandasWithState`` state schema has an array or map field,
   whose generated code Spark compiles again on every run.
+* The changelog's point-read path (lookup, snapshot, settled rows)
+  reaches no Spark: point reads and logins are served on the driver.
 * The package keeps to its own process: it reads no
   ``spark.sql.warehouse.dir`` (its tables live in the process's scratch
   root), opens no ``/proc/`` path and signals no process with
@@ -167,6 +169,32 @@ def test_stream_state_has_no_array_or_map_field():
               if isinstance(schema, str)
               or any(isinstance(t, (ArrayType, MapType)) for t in _types(schema))}
     assert not nested, nested
+
+
+def test_changelog_point_reads_touch_no_spark():
+    """The methods that serve a point read or a credential rebuild, and
+    the ``self`` methods they reach, name no Spark session, Spark read
+    or dedup, and collect nothing."""
+    banned = {"spark", "_read_files", "_dedup", "collect", "toLocalIterator"}
+    path = REPO / PKG / "sources" / "changelog.py"
+    cls = next(node for node in ast.parse(path.read_text()).body
+               if isinstance(node, ast.ClassDef) and node.name == "ChangeLog")
+    methods = {m.name: m for m in cls.body if isinstance(m, ast.FunctionDef)}
+    todo = ["lookup", "_point_read", "settled_rows", "snapshot", "_publish", "_advance"]
+    served, found = set(), []
+    while todo:
+        name = todo.pop()
+        if name in served:
+            continue
+        served.add(name)
+        for node in ast.walk(methods[name]):
+            if not isinstance(node, ast.Attribute):
+                continue
+            if node.attr in banned:
+                found.append(f"ChangeLog.{name}:{node.lineno}: {ast.unparse(node)[:60]}")
+            elif ast.unparse(node.value) == "self" and node.attr in methods:
+                todo.append(node.attr)
+    assert not found, found
 
 
 def test_package_keeps_to_its_own_process():

@@ -1,15 +1,15 @@
 """The changelog snapshot (sources/changelog.py) against replay().
 
 A snapshot is its pinned files plus driver-side indexes over them: the
-key-sorted base with its footer index, the spill (log files Spark
-serves, empty unless the log outgrew the overlay's byte budget or a
-record did not sort after the base), the overlay of the other log files
-and a memo exact for base ∪ spill.  Point reads go overlay, memo, then
-the one base row group whose footer range holds the key, or one Spark
-point read when there is a spill.  Nothing folds and nothing is
-checkpointed.  Every answer must equal what a fresh
-``ChangeLog.replay()`` over the files says, whatever spills, compactions
-and other engines' appends came before.
+key-sorted base, the spill (log files indexed by their footers, empty
+unless the log outgrew the overlay's byte budget or a record did not
+sort after the base), the footer index of base ∪ spill, the overlay of
+the other log files and a memo exact for base ∪ spill.  Point reads go
+overlay, memo, then the row groups of base ∪ spill whose footer range
+holds the key, and never start a Spark job.  Nothing is checkpointed.
+Every answer must equal what a fresh ``ChangeLog.replay()`` over the
+files says, whatever spills, compactions and other engines' appends
+came before.
 """
 
 from __future__ import annotations
@@ -96,8 +96,8 @@ class TestDifferential:
 
     def test_stream_sink_file_over_the_byte_budget_spills(self, spark, tmp_path,
                                                           monkeypatch):
-        """A stream-sink batch too large for the overlay is spilled to
-        Spark and never read onto the driver."""
+        """A stream-sink batch too large for the overlay is indexed by
+        its footers, never read whole onto the driver."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -277,3 +277,108 @@ class TestBaseReads:
         assert log.snapshot().groups and not log.snapshot().spill
         got = {k: (log.lookup(k) or {}).get("value") for k in keys}
         assert got == {k: want.get(k) for k in keys}
+
+
+def _sink(spark, log: ChangeLog, src, files: list[list[dict]]) -> None:
+    """``files`` written as parquet mutation files under ``src`` and
+    drained into ``log`` by a ChangelogStreamSink."""
+    import pyarrow as pa
+
+    schema = pa.schema([pa.field("seq", pa.int64()), pa.field("op", pa.string()),
+                        pa.field("key", pa.string()), pa.field("value", pa.binary())])
+    src.mkdir()
+    for n, rows in enumerate(files):
+        pq.write_table(pa.table({c: [r[c] for r in rows] for c in schema.names},
+                                schema=schema), str(src / f"m{n}.parquet"))
+    ChangelogStreamSink(log).ingest_available(
+        spark.readStream.schema(KV_SCHEMA).parquet(str(src)))
+
+
+class TestSpilledReads:
+    """A spill is served from its footer index on the driver, like the
+    base: no point read and no credential rebuild starts a Spark job."""
+
+    def test_cold_lookups_after_a_spilling_sink_ingest_run_no_spark_job(
+            self, spark, tmp_path, monkeypatch):
+        monkeypatch.setattr(changelog, "ROW_GROUP_BYTES", 32 << 10)
+        root = str(tmp_path / "kv")
+        log = _compacted(spark, root)
+        log.append([{"seq": 5000, "op": "update", "key": "k00500", "value": b"driver"}])
+        assert log.lookup("k00500")["value"] == b"driver"
+        monkeypatch.setattr(changelog, "OVERLAY_BYTES", 4096)
+        rng = random.Random(11)
+        # three source files, so the sink batch lands as several part
+        # files: updates and deletes of k00000..k00398, inserts of
+        # k00401..k00599
+        files = [[{"seq": 6000 + i, "op": op, "key": f"k{2 * i + (f == 2):05d}",
+                   "value": None if op == "delete" else rng.randbytes(256)}
+                  for i in range(f * 100, f * 100 + 100)
+                  for op in [("delete" if i % 7 == 3 else "update") if f < 2 else "insert"]]
+                 for f in range(3)]
+        _sink(spark, log, tmp_path / "mutations", files)
+        snap = log.snapshot()
+        spilled = [f for f in snap.spill if "batch-stream" in f]
+        assert len(spilled) > 1 and not snap.overlay and not snap.memo
+        assert snap.layout[1] == snap.spill
+        want = _replayed(spark, root)
+        keys = ["k01000", "k00002", "k00006", "k00010", "k00500", "k00401",
+                "k00402", "k00601", "k01599", "a", "z"]
+        # base only, updated, deleted, deleted before SAV then updated,
+        # updated by the driver, inserted, base only, absent, absent,
+        # outside every range
+        assert want["k00500"] == b"driver" and "k00006" not in want
+        assert "k00401" in want and not {"k00601", "k01599"} & set(want)
+        reads: list[list[str]] = []
+        read_group = ChangeLog._read_group
+
+        def spy(self, path, meta, i, key):
+            reads[-1].append(path)
+            return read_group(self, path, meta, i, key)
+
+        monkeypatch.setattr(ChangeLog, "_read_group", spy)
+        got = []
+
+        def lookups():
+            for k in keys:
+                reads.append([])
+                got.append(log.lookup(k))
+
+        assert spark_jobs(spark, lookups) == 0
+        assert [r and r["value"] for r in got] == [want.get(k) for k in keys]
+        # at most one base group, and one group of each spilled file
+        base_dir = os.path.join(root, "base")
+        for key, paths in zip(keys, reads):
+            spill = [p for p in paths if os.path.dirname(p) != base_dir]
+            assert len(paths) - len(spill) <= 1, (key, paths)
+            assert len(spill) == len(set(spill)), (key, paths)
+        settled = {r["key"]: r["value"] for r in log.settled_rows(["key", "value"])[1]}
+        assert settled == want
+
+    def test_logins_over_a_spilled_auth_log_run_no_spark_job(self, spark, tmp_path,
+                                                             monkeypatch):
+        monkeypatch.setattr(changelog, "OVERLAY_BYTES", 1)
+        d = str(tmp_path / "data")
+        eng = KVEngine(spark, d, req_quota=1 << 30, up_quota=1 << 30,
+                       down_quota=1 << 30)
+        assert eng.add_user(*PW)[1] == codes.RES_OK
+        assert eng.add_user("bob", "pb")[1] == codes.RES_OK
+        assert eng.set_user_data(*PW, b"profile")[1] == codes.RES_OK
+        assert eng.set_user_data("bob", "pw", b"x")[1] == codes.RES_ERR_LOGIN
+        snap = eng.auth_log.snapshot()
+        assert len(snap.spill) == 3 and not snap.overlay
+        fresh = KVEngine(spark, d, req_quota=1 << 30, up_quota=1 << 30,
+                         down_quota=1 << 30)
+        replies = []
+
+        def logins():
+            for e in (eng, fresh):
+                replies.extend([e.get_user_data(*PW, "alice")[1:],
+                                e.get_user_data("bob", "pb", "alice")[1:],
+                                e.get_user_data("alice", "pb", "alice")[1],
+                                e.get_user_data("bob", "pw", "alice")[1],
+                                e.get_user_data("carol", "pw", "alice")[1]])
+
+        assert spark_jobs(spark, logins) == 0
+        assert replies == 2 * [(codes.RES_OK, b"profile"), (codes.RES_OK, b"profile"),
+                               codes.RES_ERR_LOGIN, codes.RES_ERR_LOGIN,
+                               codes.RES_ERR_LOGIN]
