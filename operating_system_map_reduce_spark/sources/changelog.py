@@ -307,14 +307,22 @@ class ChangeLog:
         gen, snap = self._seen
         if snap is not None and gen == self._generation():
             return snap
-        return self._publish()
+        return self._publish(reuse=True)
 
-    def _publish(self, snap: Snapshot | None = None) -> Snapshot:
+    def _publish(self, snap: Snapshot | None = None, reuse: bool = False) -> Snapshot:
         """``snap`` (default: the published snapshot) brought to the
         on-disk layout and published.  The generation is read before the
         listing; a file that a compaction elsewhere removed meanwhile
-        makes it list again."""
+        makes it list again.  With ``reuse``, a snapshot that another
+        reader published for the current generation while this one
+        waited for the lock is returned as it is: one listing per layout
+        change, not one per reader.  A reader that met a removed file
+        lists whatever the generation says, because a compaction removes
+        files before it announces."""
         with self._lock:
+            gen, seen = self._seen
+            if reuse and seen is not None and gen == self._generation():
+                return seen
             while True:
                 gen = self._generation()
                 try:

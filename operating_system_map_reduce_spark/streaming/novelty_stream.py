@@ -401,12 +401,12 @@ def run_novelty_stream(spark: SparkSession, sf_dir: str,
             hashes.unpersist()
 
         from operating_system_map_reduce_spark.streaming.windows import (
-            _stream_shuffle,
+            _bounded_replay,
         )
 
         stream = (spark.readStream.schema(_DOC_SCHEMA)
                   .option("maxFilesPerTrigger", 1).parquet(src_dir))
-        with _stream_shuffle(spark):
+        with _bounded_replay(spark):
             q = (stream.writeStream.foreachBatch(probe_wave)
                  .option("checkpointLocation", ckpt_dir)
                  .trigger(availableNow=True).start())

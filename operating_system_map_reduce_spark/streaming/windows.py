@@ -37,16 +37,44 @@ STREAM_STATE_PARTITIONS = 4
 
 
 @contextlib.contextmanager
-def _stream_shuffle(spark: SparkSession):
-    """Scope shuffle.partitions down for a bounded replay, restoring
-    the session value after (driver runs queries sequentially)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    target = min(int(prev), STREAM_STATE_PARTITIONS)
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
+def _bounded_replay(spark: SparkSession):
+    """Scope the session conf of a bounded replay, restoring each key
+    after (unset stays unset; the driver runs queries sequentially):
+
+    - ``spark.sql.shuffle.partitions`` down to STREAM_STATE_PARTITIONS;
+    - the checkpoint file manager to Hadoop's FileSystem one.  The
+      default FileContext manager renames each checkpoint file (offset,
+      commit, state-store delta) through ``FileContext.rename``, and
+      without libhadoop the local file system answers its link check
+      by starting a ``readlink`` process: 112 of the 153 processes a
+      stateful face's replay started (sf0.01), and most of its
+      state-commit time.  ``FileSystem.rename`` on a local path is one
+      rename(2), still atomic, and the state store still wraps the
+      manager in the one that writes and verifies checksums.  It only
+      checks that the target is absent before renaming, where
+      FileContext's rename refuses an existing target, so it is set
+      only here: each replay writes a fresh checkpoint that it alone
+      writes and drops.  The long-lived ``ChangelogStreamSink``
+      checkpoint keeps the default, whose rename guards its offset log
+      against a second writer."""
+    partitions = "spark.sql.shuffle.partitions"
+    scoped = {
+        partitions: str(min(int(spark.conf.get(partitions)), STREAM_STATE_PARTITIONS)),
+        "spark.sql.streaming.checkpointFileManagerClass":
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+    }
+    prev = {key: spark.conf.get(key, None) for key in scoped}
+    for key, value in scoped.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _replay(spark: SparkSession, stream: DataFrame, name: str,
@@ -56,7 +84,7 @@ def _replay(spark: SparkSession, stream: DataFrame, name: str,
     resolved: the frame still reads the sink, and the session keeps no
     view (nor its rows) after the frame is gone."""
     sink = f"{name}_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
+    with _bounded_replay(spark):
         q = (stream.writeStream.format("memory").queryName(sink)
              .outputMode(mode).trigger(availableNow=True).start())
         q.awaitTermination()

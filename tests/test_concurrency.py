@@ -228,6 +228,49 @@ class TestSnapshotRaces:
             sys.setswitchinterval(interval)
         assert stale == [[]] * 6, stale
 
+    def test_readers_queued_on_one_append_list_the_directories_once(
+            self, spark, tmp_path, monkeypatch):
+        """Three readers find the generation moved by one append and queue
+        on the publish lock.  The first lists the directories; the others
+        take the snapshot it published for that generation."""
+        import time
+
+        from operating_system_map_reduce_spark.engine import KV_SCHEMA
+        from operating_system_map_reduce_spark.sources.changelog import ChangeLog
+
+        log = ChangeLog(spark, str(tmp_path / "kv"), KV_SCHEMA, key_col="key")
+        log.append([{"seq": 1, "op": "insert", "key": "a", "value": b"1"}])
+        log.snapshot()
+        log.append([{"seq": 2, "op": "insert", "key": "b", "value": b"2"}])
+        listings, queued, lock = [], [], log._lock
+        layout_key = log.layout_key
+        monkeypatch.setattr(log, "layout_key",
+                            lambda: listings.append(1) or layout_key())
+
+        class Queued:
+            def __enter__(self):
+                queued.append(1)
+                return lock.__enter__()
+
+            def __exit__(self, *exc):
+                return lock.__exit__(*exc)
+
+        log._lock = Queued()
+        lock.acquire()
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            try:
+                futures = [pool.submit(log.snapshot) for _ in range(3)]
+                deadline = time.monotonic() + 60
+                while len(queued) < 3 and time.monotonic() < deadline:
+                    time.sleep(0.01)
+            finally:
+                lock.release()
+            snaps = [f.result(timeout=60) for f in futures]
+        assert len(queued) == 3, queued
+        assert len(listings) == 1, listings
+        assert all(s is snaps[0] for s in snaps)
+        assert snaps[0].seq == 2 and snaps[0].overlay.keys() == {"a", "b"}
+
     def test_readers_see_written_values_while_folds_run(self, engine):
         """One writer cycles KVU/KVD on a key while three readers KVG it
         and a fourth client runs KVA and SAV, which fold the log into a

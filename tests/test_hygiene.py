@@ -16,6 +16,9 @@
   whose generated code Spark compiles again on every run.
 * The changelog's point-read path (lookup, snapshot, settled rows)
   reaches no Spark: point reads and logins are served on the driver.
+* Only the bounded replay's conf scope names the checkpoint file
+  manager, so the stream sink's long-lived checkpoint keeps Spark's
+  default manager.
 * The package keeps to its own process: it reads no
   ``spark.sql.warehouse.dir`` (its tables live in the process's scratch
   root), opens no ``/proc/`` path and signals no process with
@@ -195,6 +198,35 @@ def test_changelog_point_reads_touch_no_spark():
             elif ast.unparse(node.value) == "self" and node.attr in methods:
                 todo.append(node.attr)
     assert not found, found
+
+
+def _scopes_naming(node, needle: str, scope: str = "") -> set[str]:
+    """The innermost def or class around each string constant in
+    ``node`` that holds ``needle`` (case-insensitive)."""
+    found = set()
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            found |= _scopes_naming(child, needle, f"{scope}.{child.name}" if scope else child.name)
+            continue
+        if (isinstance(child, ast.Constant) and isinstance(child.value, str)
+                and needle in child.value.lower()):
+            found.add(scope)
+        found |= _scopes_naming(child, needle, scope)
+    return found
+
+
+def test_only_the_bounded_replay_picks_the_checkpoint_manager():
+    """The checkpoint file manager key and the manager classes are named
+    only in the bounded replay's conf scope.  The FileSystem manager
+    only checks that a rename target is absent, so the long-lived
+    ``ChangelogStreamSink`` checkpoint keeps the default manager, whose
+    rename refuses an existing target."""
+    found = set()
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        rel = str(path.relative_to(REPO / PKG))
+        found |= {f"{rel}:{scope}" for scope in
+                  _scopes_naming(ast.parse(path.read_text()), "checkpointfilemanager")}
+    assert found == {"streaming/windows.py:_bounded_replay"}, found
 
 
 def test_package_keeps_to_its_own_process():

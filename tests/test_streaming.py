@@ -91,6 +91,60 @@ class TestEventsStreamStaging:
         assert set(checkout.rglob("*")) == before
 
 
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+PARTITIONS_KEY = "spark.sql.shuffle.partitions"
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """The class of the checkpoint file manager Spark builds for
+    ``path`` from the session's Hadoop conf, as a streaming query does."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(path)),
+            spark._jsparkSession.sessionState().newHadoopConf())
+    return manager.getClass().getSimpleName()
+
+
+class TestBoundedReplayScope:
+    """A bounded replay scopes two session keys: the state partitions and
+    the FileSystem checkpoint file manager, whose local rename starts no
+    process.  Each key comes back as it was after the replay, unset
+    included, also when the replay raises."""
+
+    def test_keys_are_scoped_and_restored_when_the_body_raises(self, spark, tmp_path):
+        assert spark.conf.get(MANAGER_KEY, None) is None
+        partitions = spark.conf.get(PARTITIONS_KEY)
+        assert _checkpoint_manager(spark, tmp_path) == "FileContextBasedCheckpointFileManager"
+        with pytest.raises(ZeroDivisionError):
+            with windows._bounded_replay(spark):
+                assert spark.conf.get(PARTITIONS_KEY) == str(
+                    min(int(partitions), windows.STREAM_STATE_PARTITIONS))
+                assert (_checkpoint_manager(spark, tmp_path)
+                        == "FileSystemBasedCheckpointFileManager")
+                1 / 0
+        assert spark.conf.get(PARTITIONS_KEY) == partitions
+        assert spark.conf.get(MANAGER_KEY, None) is None
+        assert _checkpoint_manager(spark, tmp_path) == "FileContextBasedCheckpointFileManager"
+
+    def test_a_set_manager_and_an_unset_partition_count_come_back(self, spark):
+        partitions = spark.conf.get(PARTITIONS_KEY)
+        own = ("org.apache.spark.sql.execution.streaming.checkpointing."
+               "FileContextBasedCheckpointFileManager")
+        spark.conf.set(MANAGER_KEY, own)
+        spark.conf.unset(PARTITIONS_KEY)
+        try:
+            with windows._bounded_replay(spark):
+                assert spark.conf.get(MANAGER_KEY).endswith(
+                    ".FileSystemBasedCheckpointFileManager")
+                assert spark.conf.get(PARTITIONS_KEY) == str(windows.STREAM_STATE_PARTITIONS)
+            assert spark.conf.get(MANAGER_KEY) == own
+            assert spark.conf.get(PARTITIONS_KEY, None) is None
+        finally:
+            spark.conf.unset(MANAGER_KEY)
+            spark.conf.set(PARTITIONS_KEY, partitions)
+
+
 class TestSessionWindows:
     def test_gap_boundary_semantics(self, spark):
         """An event at exactly prev + gap still MERGES (the merge test
