@@ -164,7 +164,7 @@ def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             F.min("doc_id").alias("first_doc"),
         )
-        .orderBy("split")
+        .coalesce(1).orderBy("split")
     )
 
 
@@ -672,7 +672,7 @@ def shuffle_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("epoch", "shard", "n_docs",
                 F.col("total_chars").cast("long").alias("total_chars"),
                 "first_doc", "last_doc")
-        .orderBy("epoch", "shard")
+        .coalesce(1).orderBy("epoch", "shard")
     )
 
 
@@ -732,7 +732,7 @@ def split_group_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
         .crossJoin(F.broadcast(leak))
-        .orderBy("split")
+        .coalesce(1).orderBy("split")
     )
 
 

@@ -109,7 +109,7 @@ def kv_upsert_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("code")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("code")
+        .coalesce(1).orderBy("code")
     )
 
 
@@ -546,7 +546,7 @@ def kv_mix_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(outcome.alias("outcome"), "op_id")
         .groupBy("outcome")
         .agg(F.count(F.lit(1)).alias("n_ops"), F.min("op_id").alias("first_op"))
-        .orderBy("outcome")
+        .coalesce(1).orderBy("outcome")
     )
 
 

@@ -912,7 +912,7 @@ def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("min_vec"))
-        .orderBy("bucket")
+        .coalesce(1).orderBy("bucket")
     )
 
 
@@ -1994,7 +1994,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_assigned"),
             F.round(F.sum("sq_err"), 6).alias("total_sq_err"),
         )
-        .orderBy("subspace", "code")
+        .coalesce(1).orderBy("subspace", "code")
     )
 
 

@@ -459,9 +459,10 @@ ORDER BY vec_id
 # greedy: bin = floor(exclusive-cumsum(tokens) / budget)).  A naive
 # cumsum is a global single-task window; this uses the same
 # distributed-rank pattern as order_value_deciles: doc_id ranges form
-# value-derived buckets, per-bucket token sums (driver scalars, a
-# broadcast analog) give each bucket its running offset, and the
-# within-bucket window cumsum adds it -- no SinglePartition exchange.
+# value-derived buckets, per-bucket token sums (collected to the
+# driver: one scalar per 1024 docs) give each bucket its running
+# offset, read from one map literal, and the within-bucket window
+# cumsum adds it -- no SinglePartition exchange.
 
 PACK_BUDGET = 2048
 PACK_BUCKET_ROWS = 1024
@@ -480,15 +481,15 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.groupBy("bkt").agg(F.sum("n_tokens").alias("s")).collect()}
     offsets, acc = [], 0
     for b in sorted(cnts):
-        offsets.append((b, acc))
+        offsets.append(f"{b}L, {acc}L")
         acc += cnts[b]
-    offset_df = spark.createDataFrame(offsets, "bkt long, tok_offset long")
+    tok_offset = F.element_at(
+        F.expr(f"map({', '.join(offsets) or '0L, 0L'})"), F.col("bkt"))
     w = (Window.partitionBy("bkt").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
-    cum_excl = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + F.col("tok_offset")
+    cum_excl = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + tok_offset
     return (
-        d.join(F.broadcast(offset_df), "bkt")
-        .withColumn("bin", F.floor(cum_excl / PACK_BUDGET))
+        d.withColumn("bin", F.floor(cum_excl / PACK_BUDGET))
         .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -80,15 +80,20 @@ def _bounded_replay(spark: SparkSession):
 def _replay(spark: SparkSession, stream: DataFrame, name: str,
             mode: str) -> DataFrame:
     """Run a bounded replay of ``stream`` into a memory sink and return
-    the sink's rows.  The sink's temp view is dropped once the frame is
-    resolved: the frame still reads the sink, and the session keeps no
-    view (nor its rows) after the frame is gone."""
+    the sink's rows as one partition.  The memory sink already holds
+    every row on the driver, so one partition sets no limit the sink
+    does not already set, and ``SinglePartition`` satisfies the
+    clustered and ordered distributions of the post-sink window,
+    aggregate and sort: each face's post-sink query runs as one job
+    with no exchange.  The sink's temp view is dropped once the frame
+    is resolved: the frame still reads the sink, and the session keeps
+    no view (nor its rows) after the frame is gone."""
     sink = f"{name}_{uuid.uuid4().hex[:8]}"
     with _bounded_replay(spark):
         q = (stream.writeStream.format("memory").queryName(sink)
              .outputMode(mode).trigger(availableNow=True).start())
         q.awaitTermination()
-    out = spark.table(sink)
+    out = spark.table(sink).coalesce(1)
     spark.catalog.dropTempView(sink)
     return out
 

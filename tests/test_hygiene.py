@@ -19,6 +19,9 @@
 * Only the bounded replay's conf scope names the checkpoint file
   manager, so the stream sink's long-lived checkpoint keeps Spark's
   default manager.
+* No query plan builds a table from driver rows with
+  ``createDataFrame``: the parallelized rows cost a job of their own
+  and a broadcast, where a parsed literal costs neither.
 * The package keeps to its own process: it reads no
   ``spark.sql.warehouse.dir`` (its tables live in the process's scratch
   root), opens no ``/proc/`` path and signals no process with
@@ -227,6 +230,22 @@ def test_only_the_bounded_replay_picks_the_checkpoint_manager():
         found |= {f"{rel}:{scope}" for scope in
                   _scopes_naming(ast.parse(path.read_text()), "checkpointfilemanager")}
     assert found == {"streaming/windows.py:_bounded_replay"}, found
+
+
+def test_plans_build_no_table_from_driver_rows():
+    """A small driver-side lookup (the bin offsets of
+    ``order_value_deciles`` and ``pack_sequences``) goes into the plan
+    as one parsed literal, e.g. ``element_at(map(...), key)``.
+    ``operators/graph.py`` is outside this rule: its table grows with
+    the node count."""
+    found = []
+    for path in sorted((REPO / PKG / "plans").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not found, found
 
 
 def test_package_keeps_to_its_own_process():

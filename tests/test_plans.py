@@ -818,6 +818,63 @@ class TestSinglePartitionCensus:
             f"{name}: unjustified SinglePartition exchange")
 
 
+# Faces whose result is small by construction -- a group-by on a
+# domain the schema fixes -- end in .coalesce(1).orderBy(...): the
+# final sort runs in the aggregate's last task, with no range-sampling
+# job and no range exchange (plans/analytics.py, scale notes).
+ONE_TASK_FINAL_SORT = [
+    "q1_pricing_summary", "order_value_deciles", "kv_mix_ops",
+    "q5_region_revenue", "orders_rollup", "customer_order_coverage",
+    "orders_customer_reconcile", "q4_order_priority",
+    "inactive_customers_by_nation", "skew_salted_distinct",
+    "skew_salted_join", "repeat_buyer_setops", "supplier_brand_division",
+    "orders_above_customer_avg", "bucketed_segment_revenue",
+    "zorder_cluster_stats", "q7_nation_volume", "q8_market_share",
+    "q22_dormant_value", "q9_product_profit", "q12_priority_shipping",
+    "split_assign", "shuffle_epoch_shards", "split_group_holdout",
+    "kv_upsert_classify", "similarity_lsh_buckets", "embedding_pq_codes",
+]
+
+# Faces that replay the events stream into a memory sink
+# (streaming/windows.py _replay); the rest of each query runs on the
+# sink's rows.
+MEMORY_SINK_FACES = [
+    "stream_click_purchase_join", "stream_dedup_first_seen",
+    "stream_enrich_revenue", "stream_mru_types", "stream_quota_admission",
+    "stream_session_counts", "stream_topk_trending", "stream_windowed_counts",
+]
+
+
+class TestOneTaskFinish:
+    @staticmethod
+    def _final_plan(df) -> str:
+        df.collect()
+        plan = _plan(df)
+        assert "isFinalPlan=true" in plan, plan
+        return plan
+
+    @pytest.mark.parametrize("name", ONE_TASK_FINAL_SORT)
+    def test_bounded_final_sort_samples_no_range(self, spark, sf_dir, name):
+        plan = self._final_plan(_QUERIES[name](spark, sf_dir))
+        assert "rangepartitioning" not in plan, plan
+
+    @pytest.mark.parametrize("name", MEMORY_SINK_FACES)
+    def test_post_sink_query_plans_no_exchange(self, spark, sf_dir, name):
+        """The sink's rows come back as one partition, which satisfies
+        the clustered and ordered distributions of the window,
+        aggregate and sort that follow it."""
+        plan = self._final_plan(_QUERIES[name](spark, sf_dir))
+        assert "Exchange" not in plan, plan
+
+    def test_mru_post_sink_query_is_one_job(self, spark, sf_dir):
+        from tests.test_kv_engine import spark_jobs
+
+        df = _QUERIES["stream_mru_types"](spark, sf_dir)
+        n = spark_jobs(spark, lambda: df.write.format("noop")
+                       .mode("overwrite").save())
+        assert n == 1, n
+
+
 class TestTrainedFaces:
     """The trained-tokenizer and multimodal-curation faces at the
     oracle scale factor (test_oracle_parity runs the small one)."""
