@@ -296,11 +296,11 @@ class KVEngine:
 
     @_command
     def get_all_users(self, user: str, password: str):
-        """ALL (protocol.h:190-206): newline-joined usernames."""
+        """ALL (protocol.h:190-206): newline-joined usernames, from the
+        credential map, which holds every live user: no Spark job."""
         if self._auth(user, password) is None:
             return False, codes.RES_ERR_LOGIN, None
-        names = [r["username"] for r in self.auth_df().select("username").collect()]
-        return True, codes.RES_OK, "\n".join(names).encode()
+        return True, codes.RES_OK, "\n".join(self._credentials()).encode()
 
     # ------------------------------------------------------------ kv store
 

@@ -24,21 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from operating_system_map_reduce_spark.sources.tables import derived
+
 
 class BroadcastBoundExceeded(RuntimeError):
     """An allowlisted broadcast side outgrew its declared bound."""
 
 
-# (session id, what, sf key) -> verified row count.  Within one
-# session the side derives from the same immutable parquet inputs, so
-# one verification per (session, side) suffices -- without the memo
-# the count job re-ran the side's Python shingling stage on EVERY
-# invocation (bench steady state: contamination_check 1.24 -> 4.49 s).
-_VERIFIED: dict = {}
-
-
 def bounded_broadcast(df: DataFrame, max_rows: int, what: str,
-                      memo_key: object | None = None) -> DataFrame:
+                      sf_dir: str, source: str) -> DataFrame:
     """``F.broadcast(df)`` with the boundedness claim enforced.
 
     ``max_rows`` is the declared bound on the side's row count --
@@ -48,31 +42,20 @@ def bounded_broadcast(df: DataFrame, max_rows: int, what: str,
     it broadcasts safely (rows x row width well under executor
     memory).
 
-    ``memo_key``: pass a key identifying the side's IMMUTABLE input
-    (e.g. (session id, sf_dir)) to verify once per session instead of
-    per invocation; omit it for sides whose input can change between
-    calls.
+    The side derives from ``source`` in ``sf_dir``, so the count is
+    memoized under ``what`` (``tables.derived``): it runs once per
+    session and source stamp.  Without the memo the count job re-ran
+    the side's Python shingling stage on every invocation (bench
+    steady state: contamination_check 1.24 -> 4.49 s)."""
+    def count() -> int:
+        n = df.count()
+        if n > max_rows:
+            raise BroadcastBoundExceeded(
+                f"{what}: broadcast side has {n:,} rows, over the declared "
+                f"bound of {max_rows:,} -- the workload has outgrown the "
+                "broadcast plan; use a shuffle join (or re-derive the bound "
+                "if the workload is still genuinely bounded)")
+        return n
 
-    MEMO CONTRACT:
-    the memo skips re-verification for as long as the key matches --
-    it does NOT watch the input.  A caller whose "immutable" input can
-    be replaced IN PLACE mid-session (e.g. regenerated parquet at the
-    same path) must fold a change detector into the key itself; the
-    registered callers key on ``os.stat(...).st_mtime_ns`` of the
-    source file plus the applicationId, so an in-place replacement
-    changes the key and forces a fresh count (pinned in
-    tests/test_guards.py::test_memo_reverifies_on_changed_key).  A
-    standing service that cannot cheaply fingerprint its input should
-    omit ``memo_key`` and pay the count per invocation."""
-    if memo_key is not None and _VERIFIED.get((what, memo_key)) is not None:
-        return F.broadcast(df)
-    n = df.count()
-    if n > max_rows:
-        raise BroadcastBoundExceeded(
-            f"{what}: broadcast side has {n:,} rows, over the declared "
-            f"bound of {max_rows:,} -- the workload has outgrown the "
-            "broadcast plan; use a shuffle join (or re-derive the bound "
-            "if the workload is still genuinely bounded)")
-    if memo_key is not None:
-        _VERIFIED[(what, memo_key)] = n
+    derived(df.sparkSession, sf_dir, source, what, count)
     return F.broadcast(df)

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from operating_system_map_reduce_spark.sources.tables import load_table
+from operating_system_map_reduce_spark.sources.tables import load_table, source_stamp
 from operating_system_map_reduce_spark.streaming import scratch_root
 
 
@@ -1333,15 +1333,15 @@ def _table_lock(table: str) -> "_threading.Lock":
         return _TABLE_LOCKS.setdefault(table, _threading.Lock())
 
 
-def bucketed_table_name(prefix: str, sf_dir: str, mtime: int) -> str:
-    """Catalog name of a write-once bucketed copy:
-    ``kvmr_at_rest.{prefix}_{sf tag}_{source mtime}``.
+def bucketed_table_name(prefix: str, sf_dir: str, *sources: str) -> str:
+    """Catalog name of a write-once bucketed copy of ``sources``:
+    ``kvmr_at_rest.{prefix}_{sf tag}_{source stamp}``.
 
-    The mtime tag invalidates the table when testdata is regenerated
+    The stamp tag invalidates the table when testdata is regenerated
     in place: a live session must not serve stale buckets while the
     DuckDB oracle reads fresh parquet."""
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-    return f"{AT_REST_DB}.{prefix}_{tag}_{mtime}"
+    return f"{AT_REST_DB}.{prefix}_{tag}_{source_stamp(sf_dir, *sources)}"
 
 
 def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
@@ -1376,67 +1376,26 @@ def _ensure_bucketed(spark: SparkSession, table: str, df, key: str,
                        one_file_per_bucket=True)
 
 
-# Set once a bucketed write has FAILED in this process (e.g. the scratch
-# root's filesystem is read-only or full): at_rest_table then serves the
-# build() plan per query instead of failing every registered face, and
-# stops re-paying a doomed write job per query.  Keyed on the at-rest
-# directory.
-_UNWRITABLE_ROOTS: set = set()
-
-
 def at_rest_table(spark: SparkSession, sf_dir: str, prefix: str, key: str,
                   build, n_buckets: int = 16,
                   source: str = "documents.parquet") -> DataFrame:
-    """Write-once bucketed table with the invalidation policy in ONE
-    place: the name carries (sf tag, source st_mtime_ns), so in-place
-    testdata regeneration gets a new table, and ``build()`` -- called
-    only when the table is absent -- streams straight into the write
-    job with nothing persisted.  The tag is st_mtime_ns: whole-second
-    truncation let an in-place regeneration WITHIN one second reuse
-    the stale table against a fresh-parquet oracle.  The table lives in
-    this process's scratch root (_ensure_bucketed).
-
-    Degrade path: a scratch root the process cannot write (read-only
-    volume, quota) must not turn every at-rest face into a write
-    error -- on a failed table write the build() plan is returned
-    directly (identical rows; the bucketed layout is a pure
-    optimization) and the root is remembered as unwritable so later
-    calls skip the doomed write job.  If the BUILD itself is broken
-    the error still surfaces: the degraded return re-runs the same
-    plan and fails the same way at execution."""
-    mt = os.stat(os.path.join(sf_dir, source)).st_mtime_ns
-    table = bucketed_table_name(prefix, sf_dir, mt)
-    root = _at_rest_dir()
-    if root in _UNWRITABLE_ROOTS:
-        return build()
+    """Write-once bucketed table of ``source``: the name carries its
+    stamp (bucketed_table_name), so in-place testdata regeneration gets
+    a new table, and ``build()`` -- called only when the table is
+    absent -- streams straight into the write job with nothing
+    persisted.  The table lives in this process's scratch root
+    (_ensure_bucketed)."""
+    table = bucketed_table_name(prefix, sf_dir, source)
     if not spark.catalog.tableExists(table):
-        try:
-            _ensure_bucketed(spark, table, build(), key, n_buckets)
-        except Exception as exc:
-            _UNWRITABLE_ROOTS.add(root)
-            try:  # a half-written table must not shadow the degrade
-                spark.sql(f"DROP TABLE IF EXISTS {table}")
-            except Exception:
-                pass
-            import warnings
-            warnings.warn(
-                f"at_rest_table: bucketed write of {table!r} failed "
-                f"({exc.__class__.__name__}); degrading to the "
-                "un-bucketed per-query plan for this process",
-                RuntimeWarning, stacklevel=2)
-            return build()
+        _ensure_bucketed(spark, table, build(), key, n_buckets)
     return spark.table(table)
 
 
 def bucketed_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # source mtimes in the table tag (mirroring _DECILE_STATS' cache
-    # key): in-place testdata regeneration must invalidate the bucketed
-    # copies, or a live session serves stale buckets while the DuckDB
-    # oracle reads the fresh parquet -- silent parity divergence.
-    mt = max(os.stat(os.path.join(sf_dir, "orders.parquet")).st_mtime_ns,
-             os.stat(os.path.join(sf_dir, "customer.parquet")).st_mtime_ns)
-    t_orders = bucketed_table_name("b_orders", sf_dir, mt)
-    t_cust = bucketed_table_name("b_customer", sf_dir, mt)
+    t_orders = bucketed_table_name("b_orders", sf_dir, "orders.parquet",
+                                   "customer.parquet")
+    t_cust = bucketed_table_name("b_customer", sf_dir, "orders.parquet",
+                                 "customer.parquet")
     _ensure_bucketed(spark, t_orders,
                      _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
                      "o_custkey")

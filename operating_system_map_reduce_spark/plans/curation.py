@@ -16,7 +16,6 @@ whose accumulation order could differ.
 from __future__ import annotations
 
 import hashlib
-import os as _os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +26,7 @@ from operating_system_map_reduce_spark.operators import graph as _graph
 from operating_system_map_reduce_spark.plans.pipeline import (
     DEDUP_MINHASH_SQL, dedup_minhash_lsh,
 )
-from operating_system_map_reduce_spark.sources.tables import load_table as _t
+from operating_system_map_reduce_spark.sources.tables import derived, load_table as _t
 
 
 # --- dedup clusters: pairs -> connected components -> canonical docs ------
@@ -216,13 +215,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operating_system_map_reduce_spark.operators.guards import (
         bounded_broadcast)
     shared = (
-        # memo key carries st_mtime_ns: an in-place testdata
-        # regeneration must force a fresh bound count (the guard's
-        # memo contract -- see operators/guards.bounded_broadcast)
         corpus.join(bounded_broadcast(bench, 5_000_000,
                                       "contamination_check eval postings",
-                                      memo_key=(spark.sparkContext.applicationId, sf_dir,
-                                                _os.stat(_os.path.join(sf_dir, "documents.parquet")).st_mtime_ns)),
+                                      sf_dir, "documents.parquet"),
                     corpus["s"] == bench["s_b"])
         .filter(F.col("doc_id") != F.col("bench_id"))
         .groupBy("doc_id", "bench_id", "n_bench")
@@ -453,42 +448,28 @@ def cms_heavy_hitters(tc: DataFrame) -> DataFrame:
         .orderBy(F.desc("exact_count"), "tok"))
 
 
-_CMS_TC_CACHE: dict = {}  # single slot: (app id, sf_dir, mtime) -> persisted tc
+def _unpersist(tc: DataFrame) -> None:
+    try:
+        tc.unpersist(blocking=False)
+    except Exception:
+        pass  # its session may be gone
 
 
 def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-slot persist: the (tok, cnt) frame feeds the sketch build
-    # AND the top-K probe within one invocation, and interactive
-    # repeat invocations reuse it (bench evicts it between timed runs
-    # -- a per-query derived aggregate is not a standing table); the
-    # slot evicts deterministically on a key change, so per-SF sweeps
-    # don't accumulate vocabulary-sized copies.  Key discipline: the
-    # source MTIME is in the key -- an
-    # in-place testdata regeneration mid-session must invalidate the
-    # slot or this registered face serves stale counts against a
-    # fresh-parquet oracle -- and the session component is the
-    # applicationId string, not id(spark), which CPython recycles
-    # after a session is garbage-collected (a recycled id would hand
-    # back a DataFrame bound to a stopped SparkContext).
-    # st_mtime_ns, not int(getmtime): a
-    # regeneration within the same wall-clock second must still
-    # invalidate
-    key = (spark.sparkContext.applicationId, sf_dir,
-           _os.stat(_os.path.join(sf_dir, "documents.parquet")).st_mtime_ns)
-    slot = _CMS_TC_CACHE.get("tc")
-    if slot is None or slot[0] != key:
-        if slot is not None:
-            try:
-                slot[1].unpersist(blocking=False)
-            except Exception:
-                pass  # previous session may be gone
+    # the (tok, cnt) frame feeds the sketch build AND the top-K probe
+    # within one invocation, and interactive repeat invocations reuse
+    # it (bench forgets it between timed runs -- a per-query derived
+    # aggregate is not a standing table); a new key unpersists the old
+    # frame, so per-SF sweeps don't accumulate vocabulary-sized copies
+    def count_tokens() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
-        tc = (docs.select(F.explode(_dd.tokens_expr()).alias("tok"))
-              .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-              .persist())
-        _CMS_TC_CACHE["tc"] = (key, tc)
-        slot = (key, tc)
-    return cms_heavy_hitters(slot[1])
+        return (docs.select(F.explode(_dd.tokens_expr()).alias("tok"))
+                .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
+                .persist())
+
+    return cms_heavy_hitters(derived(spark, sf_dir, "documents.parquet",
+                                     "sketch_heavy_hitters", count_tokens,
+                                     release=_unpersist))
 
 
 def _cms_sql() -> str:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from operating_system_map_reduce_spark.sources.tables import load_table as _t
+from operating_system_map_reduce_spark.sources.tables import derived, load_table as _t
 
 
 # --- exact dedup: hash-groupBy -------------------------------------------
@@ -310,17 +310,12 @@ def bucketed_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream estimates come from real parquet statistics, so the
     planner's runtime choices are trustworthy again.
 
-    Write-once per (session, sf_dir, documents mtime) -- the mtime tag
+    Write-once per (session, sf_dir, documents stamp) -- the stamp
     invalidates the table when testdata is regenerated in place, and
     the table lives in this process's scratch root
     (analytics.at_rest_table).  The signature frame streams straight
-    into the write job with nothing persisted: the old session-slot
-    persist (cached_signature) existed to share
-    the Python stage between query consumers, but since this table
-    replaced the through-Python frame in every query plan, the write
-    job IS the only consumer; keeping the slot would leave a dead
-    multi-GB persist and the stale-data hazard of building a
-    fresh-mtime table from a mtime-less slot."""
+    into the write job with nothing persisted: the write job is its
+    only consumer."""
     from operating_system_map_reduce_spark.plans.analytics import at_rest_table
 
     return at_rest_table(
@@ -659,22 +654,19 @@ def incremental_postings_demo_table(spark: SparkSession, sf_dir: str) -> str:
     (pmod(doc_id, 100) = 0 -- the simulated ingest delta), APPEND the
     tail's postings (the maintenance tick), then COMPACT back to one
     file per bucket.  Keyed and placed like every at-rest table (sf
-    tag, source st_mtime_ns; in this process's scratch root, written
-    by the same _ensure_bucketed), so the lifecycle runs once per
+    tag, source stamp; in this process's scratch root, written by the
+    same _ensure_bucketed), so the lifecycle runs once per
     session and every later reference is a bucketed table scan.  By the
     equivalence tests/test_pipeline_ops.py pins, the result is
     row-identical to a from-scratch build over ALL documents -- which
     is exactly what lets dedup_ngram_incremental below share the
     from-scratch DuckDB oracle."""
-    import os as _os
-
     from operating_system_map_reduce_spark.plans.analytics import (
         _ensure_bucketed, _table_lock, bucketed_table_name)
     from operating_system_map_reduce_spark.sources.bucketing import (
         compact_bucketed)
 
-    mt = _os.stat(_os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    table = bucketed_table_name("b_posti", sf_dir, mt)
+    table = bucketed_table_name("b_posti", sf_dir, "documents.parquet")
     with _table_lock(table + "#lifecycle"):
         if table in _INCR_COMPLETE and spark.catalog.tableExists(table):
             return table
@@ -972,16 +964,11 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas barrier cannot be pushed through it, so the original
     # shape shingled the whole corpus to keep 3 docs), which makes the
     # self-enforcing bound's count job |Q|-doc-sized too.
-    # memo key carries st_mtime_ns: an in-place testdata regeneration
-    # must force a fresh bound count (the guard's memo contract)
-    import os as _os
     q = bounded_broadcast(
         _dd.shingle_postings(docs.filter(F.col("doc_id").isin(*RRF_QUERY_IDS)))
         .select(F.col("doc_id").alias("qid"), F.col("n").alias("n_q"), "s"),
         1_000_000, "retrieval_rrf_fusion query postings",
-        memo_key=(spark.sparkContext.applicationId, sf_dir,
-                  _os.stat(_os.path.join(
-                      sf_dir, "documents.parquet")).st_mtime_ns))
+        sf_dir, "documents.parquet")
     d = ex.select(F.col("doc_id").alias("did"), F.col("n").alias("n_d"), "s")
     shared = (q.join(d, "s").filter(F.col("did") != F.col("qid"))
               .groupBy("qid", "did", "n_q", "n_d")
@@ -2152,10 +2139,9 @@ ORACLES["similarity_ivfpq_search"] = SIMILARITY_IVFPQ_SQL
 # both quantizers are k-means-TRAINED (operators/similarity.
 # trained_codebooks) instead of lowest-id -- the configuration a real
 # deployment serves, now registered and benched so its cost is measured
-# per round.  Training is cached per corpus snapshot (absolute sf_dir
-# and the embeddings.parquet st_mtime_ns, so an in-place regeneration
-# retrains): a production job trains once per snapshot and persists the two
-# small matrices, so serving cost -- not training cost -- is the steady
+# per round.  Training is memoized per corpus snapshot (tables.derived,
+# so an in-place regeneration retrains): a production job trains once
+# per snapshot and persists the two small matrices, so serving cost -- not training cost -- is the steady
 # state this query times.  SQL-oracled by UNROLLING the
 # fixed-count Lloyd iterations as a chained CTE (the same
 # finite-deterministic-iteration precedent as pagerank_neardup's
@@ -2170,19 +2156,14 @@ ORACLES["similarity_ivfpq_search"] = SIMILARITY_IVFPQ_SQL
 # additionally pinned by the recall-vs-brute-force and
 # distortion-reduction tests in tests/test_mining_ops.py.
 
-_TRAINED_CB_CACHE: dict = {}
-
-
 def similarity_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(~(F.col("vec_id") % 10 == 7))
     queries = emb.filter(F.col("vec_id") % 10 == 7)
-    key = (os.path.abspath(sf_dir),
-           os.stat(os.path.join(sf_dir, "embeddings.parquet")).st_mtime_ns)
-    if key not in _TRAINED_CB_CACHE:
-        _TRAINED_CB_CACHE[key] = _sim.trained_codebooks(corpus, iters=5)
-    return (_sim.ivfpq_search(corpus, queries, k=5,
-                              codebooks=_TRAINED_CB_CACHE[key])
+    codebooks = derived(spark, sf_dir, "embeddings.parquet",
+                        "similarity_ivfpq_trained",
+                        lambda: _sim.trained_codebooks(corpus, iters=5))
+    return (_sim.ivfpq_search(corpus, queries, k=5, codebooks=codebooks)
             .orderBy("vec_id", "rank"))
 
 

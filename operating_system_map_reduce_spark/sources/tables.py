@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import weakref
 
 import pyarrow.parquet as pq
@@ -115,6 +116,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _check_schema(name, path, df)
         per_session[key] = df
     return df
+
+
+def source_stamp(sf_dir: str, *sources: str) -> int:
+    """The highest ``st_mtime_ns`` of the named files in ``sf_dir``:
+    nanoseconds, so a regeneration within one wall-clock second still
+    changes it."""
+    return max(os.stat(os.path.join(sf_dir, s)).st_mtime_ns for s in sources)
+
+
+# name -> (key, value, release): one slot per name.  The lock makes
+# check-build-store one step, so two threads never build one key twice
+# or replace a slot without releasing it.
+_DERIVED: dict[str, tuple] = {}
+_DERIVED_LOCK = threading.RLock()
+
+
+def derived(spark: SparkSession, sf_dir: str, source: str, name: str,
+            build, release=None):
+    """``build()``, memoized in the slot ``name`` while the key holds:
+    the session's applicationId (not ``id(spark)``, which CPython
+    recycles), the absolute ``sf_dir`` and ``source_stamp(sf_dir,
+    source)``.  An in-place regeneration of the source changes the key.
+    A new key builds first, then calls the old slot's ``release`` on
+    the old value, so per-SF sweeps keep one value per name."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
+           source_stamp(sf_dir, source))
+    with _DERIVED_LOCK:
+        slot = _DERIVED.get(name)
+        if slot is not None and slot[0] == key:
+            return slot[1]
+        value = build()
+        forget(name)
+        _DERIVED[name] = (key, value, release)
+        return value
+
+
+def forget(name: str) -> None:
+    """Empty the slot ``name``, releasing its value."""
+    with _DERIVED_LOCK:
+        slot = _DERIVED.pop(name, None)
+    if slot is not None and slot[2] is not None:
+        slot[2](slot[1])
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

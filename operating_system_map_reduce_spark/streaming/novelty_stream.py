@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField, StructType)
 
 from operating_system_map_reduce_spark.operators import dedup as _dd
-from operating_system_map_reduce_spark.sources.tables import load_table
+from operating_system_map_reduce_spark.sources.tables import derived, load_table
 from operating_system_map_reduce_spark.streaming import scratch_root
 
 NOVELTY_WAVES = 3
@@ -50,28 +50,6 @@ _DOC_SCHEMA = StructType([
     StructField("wave", LongType()),
 ])
 
-# The corpus seed index is the STANDING index -- a production crawler
-# builds it once per corpus snapshot and serves every arriving wave
-# from it.  Cache the seed parquet per (session, sf_dir) so repeat
-# invocations (bench steady state) pay wave-probe cost, not
-# index-build cost; each run COPIES the seed files into its private
-# workdir because the run mutates its index with admissions.
-_SEED_CACHE: dict = {}
-
-# The staged wave FILES are likewise cached per (session, sf_dir,
-# source mtime).  Staging is fixture manufacturing of the synthetic
-# stream source (a production crawler's waves arrive as directories and
-# need no staging at all; see the staging comment in
-# run_novelty_stream), the same class as windows._stream_dir's
-# symlinks for the events stream, which are staged once per process
-# and re-read across runs.  The staged files are
-# INPUT (a pure deterministic re-partitioning of documents.parquet),
-# never mutated by a run -- each run replays them against its own
-# fresh checkpoint -- so sharing them caches no verdict, admission or
-# any other computed result.  Value: (src_dir, wave_order) where
-# wave_order lists the non-empty wave ids ascending == replay order
-# (ascending mtimes; FileStreamSource picks oldest-first).
-_STAGE_CACHE: dict = {}
 
 def _as_index_rows(bands: DataFrame | None = None,
                    hashes: DataFrame | None = None) -> DataFrame:
@@ -100,18 +78,20 @@ def _as_index_rows(bands: DataFrame | None = None,
 
 
 def _seed_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
-    # applicationId, not id(spark): CPython reuses object ids after GC,
-    # so a new session could silently hit a dead session's cache slot.
-    # documents.parquet st_mtime_ns rides the key too (matching
-    # curation._CMS_TC_CACHE and the at_rest_table tags):
-    # an in-place testdata regeneration mid-session must invalidate the
-    # seed index or the stream admits against stale bands while the
-    # oracle reads fresh parquet.
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-           os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns)
-    slot = _SEED_CACHE.get("seed")
-    if slot is not None and slot[0] == key:
-        return slot[1]
+    """The corpus seed index: the STANDING index a production crawler
+    builds once per corpus snapshot and serves every arriving wave
+    from.  Memoized (tables.derived), so repeat invocations pay
+    wave-probe cost, not index-build cost; a new key removes the old
+    seed root.  Each run copies the seed files into its private workdir
+    because the run mutates its index with admissions."""
+    return derived(spark, sf_dir, "documents.parquet", "novelty seed",
+                   lambda: _build_seed_index(spark, sf_dir, corpus),
+                   release=lambda index_dir: shutil.rmtree(
+                       os.path.dirname(index_dir), ignore_errors=True))
+
+
+def _build_seed_index(spark: SparkSession, sf_dir: str,
+                      corpus: DataFrame) -> str:
     seed_root = tempfile.mkdtemp(prefix="seed-", dir=scratch_root())
     index_dir = os.path.join(seed_root, "index")
     # Seed bands derive from the at-rest bucketed signature table:
@@ -132,9 +112,6 @@ def _seed_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
     seed_hashes = corpus.select(F.md5("text").alias("h")).distinct()
     (_as_index_rows(seed_bands, seed_hashes)
      .write.partitionBy("kind").parquet(index_dir))
-    if slot is not None:
-        shutil.rmtree(os.path.dirname(slot[1]), ignore_errors=True)
-    _SEED_CACHE["seed"] = (key, index_dir)
     return index_dir
 
 
@@ -163,8 +140,15 @@ def _batch_files(ckpt_dir: str, batch_id: int) -> list[str]:
 def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
                   is_batch) -> tuple:
     """Stage the arriving stream's wave files (one parquet per
-    non-empty wave, mtimes ascending = arrival order) -- session-cached
-    per (application, sf_dir, source mtime), see _STAGE_CACHE.
+    non-empty wave, mtimes ascending = arrival order), memoized
+    (tables.derived).  Staging is fixture manufacturing of the
+    synthetic stream source (a production crawler's waves arrive as
+    directories), like windows._stream_dir's symlinks for the events
+    stream.  The staged files are INPUT, a pure re-partitioning of
+    documents.parquet that no run mutates, so sharing them caches no
+    verdict or admission.  A new key does not delete the old files: a
+    stream may still be replaying them; they go with scratch_root() at
+    exit.
 
     ONE Spark write job:
     repartition(WAVES, "__wp") puts every wave's rows in exactly one
@@ -181,11 +165,11 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
     IS ascending wave order over the non-empty waves.  probe_wave
     reads its wave id from this list instead of collecting a row per
     batch (one fewer driver round-trip per wave)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-           os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns)
-    slot = _STAGE_CACHE.get("waves")
-    if slot is not None and slot[0] == key:
-        return slot[1], slot[2]
+    return derived(spark, sf_dir, "documents.parquet", "novelty waves",
+                   lambda: _stage_waves(docs, is_batch))
+
+
+def _stage_waves(docs: DataFrame, is_batch) -> tuple:
     root = tempfile.mkdtemp(prefix="waves-", dir=scratch_root())
     src_dir = os.path.join(root, "src")
     os.makedirs(src_dir)
@@ -206,9 +190,6 @@ def _staged_waves(spark: SparkSession, sf_dir: str, docs: DataFrame,
         os.utime(dst, (1_000_000 + w, 1_000_000 + w))
         wave_order.append(w)
     shutil.rmtree(stage)
-    # a replaced staging root is not deleted here: a stream may still
-    # be replaying it; it goes with scratch_root() at exit
-    _STAGE_CACHE["waves"] = (key, src_dir, tuple(wave_order))
     return src_dir, tuple(wave_order)
 
 
@@ -317,12 +298,12 @@ def run_novelty_stream(spark: SparkSession, sf_dir: str,
     all_bands = None
     try:
         # seed the standing index with the corpus (bands + exact
-        # hashes, one kind-partitioned table) -- session-cached; this
+        # hashes, one kind-partitioned table) -- memoized; this
         # run gets a private mutable copy because admissions append
         shutil.copytree(_seed_index(spark, sf_dir, corpus), index_dir)
 
-        # the staged wave files -- session-cached fixture input, one
-        # write job on first use (see _staged_waves/_STAGE_CACHE)
+        # the staged wave files -- memoized fixture input, one
+        # write job on first use (see _staged_waves)
         src_dir, wave_order = _staged_waves(spark, sf_dir, docs, is_batch)
 
         from operating_system_map_reduce_spark.plans.pipeline import (

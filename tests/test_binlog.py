@@ -252,6 +252,8 @@ class TestReferenceImport:
         assert len(ghost) == 1
         assert bytes(ghost[0]["salt"]) == b"" and bytes(ghost[0]["pass_hash"]) == b""
         assert eng.get_user_data("admin", "pw", "ghost")[2] == b"spooky profile"
+        assert sorted(eng.get_all_users("admin", "pw")[2].split(b"\n")) == [
+            b"admin", b"carol", b"ghost"]
         # delete-then-insert reuses the key; pre-existing live key kept
         assert eng.kv_get("admin", "pw", "k2")[2] == b"reborn"
         assert eng.kv_get("admin", "pw", "live")[2] == b"pre-import"

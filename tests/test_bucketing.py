@@ -119,7 +119,7 @@ class TestAtRestTables:
         corpus.mkdir()
         shutil.copy(os.path.join(sf_dir, "documents.parquet"), corpus)
         mt = os.stat(corpus / "documents.parquet").st_mtime_ns
-        table = bucketed_table_name("b_sig", str(corpus), mt)
+        table = bucketed_table_name("b_sig", str(corpus), "documents.parquet")
         tag = "".join(c if c.isalnum() else "_" for c in str(corpus).strip("/"))
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         os.makedirs(wh, exist_ok=True)
@@ -145,39 +145,6 @@ class TestAtRestTables:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
             shutil.rmtree(planted, ignore_errors=True)
 
-    def test_at_rest_table_degrades_when_warehouse_unwritable(
-            self, spark, sf_dir, monkeypatch):
-        """An unwritable at-rest root must not turn the at-rest faces
-        into write errors: the first failed write flags the root and
-        returns the build() plan (identical rows); later calls skip the
-        doomed write job entirely."""
-        import pytest as _pytest
-
-        from operating_system_map_reduce_spark.plans import analytics
-        from operating_system_map_reduce_spark.sources.tables import load_table
-
-        calls = {"n": 0}
-
-        def boom(*a, **k):
-            calls["n"] += 1
-            raise OSError(30, "Read-only file system")
-
-        monkeypatch.setattr(analytics, "_ensure_bucketed", boom)
-        monkeypatch.setattr(analytics, "_UNWRITABLE_ROOTS", set())
-
-        def build():
-            return load_table(spark, sf_dir, "region").select("r_regionkey")
-
-        with _pytest.warns(RuntimeWarning, match="degrading"):
-            df = analytics.at_rest_table(
-                spark, sf_dir, "b_degradeprobe", "r_regionkey", build,
-                source="region.parquet")
-        assert df.count() == build().count()
-        df2 = analytics.at_rest_table(
-            spark, sf_dir, "b_degradeprobe", "r_regionkey", build,
-            source="region.parquet")
-        assert df2.count() == build().count()
-        assert calls["n"] == 1, "a flagged root must skip the write"
 
 # --- corpus-scaled bucket count for the at-rest postings table -------------
 # A bucketed join's parallelism IS the bucket count, so b_post sizes its

@@ -26,6 +26,9 @@
   ``spark.sql.warehouse.dir`` (its tables live in the process's scratch
   root), opens no ``/proc/`` path and signals no process with
   ``os.kill``.
+* Only ``sources/tables.py`` names ``st_mtime_ns`` or ``applicationId``:
+  work derived from a testdata file is keyed by its ``source_stamp``
+  and memoized by its ``derived``, never by a hand-built key.
 * Every top-level def and class of the package, and every method of
   its top-level classes, is reached from the package, bench.py,
   __spark_entry__.py or perfbench/ (docstrings do not count), or is
@@ -265,6 +268,21 @@ def test_package_keeps_to_its_own_process():
                 continue
             if bad:
                 found.append(f"{rel}:{node.lineno}: {ast.unparse(node)[:60]}")
+    assert not found, found
+
+
+# daemon.py stamps pyspark.zip for zipimport, which is not testdata
+STAMP_OWNERS = {"sources/tables.py", "daemon.py"}
+
+
+def test_only_the_tables_module_keys_derived_work():
+    found = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        if path.relative_to(REPO / PKG).as_posix() in STAMP_OWNERS:
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if "st_mtime_ns" in line or "applicationId" in line:
+                found.append(f"{path.relative_to(REPO)}:{n}: {line.strip()[:60]}")
     assert not found, found
 
 

@@ -362,6 +362,21 @@ class TestCredentialMap:
         assert engine.set_user_data("bob", "wrong", b"x")[1] == codes.RES_ERR_LOGIN
         assert engine.get_user_data("bob", "wrong", "bob")[1] == codes.RES_ERR_LOGIN
 
+    def test_all_after_reg_and_after_sav_runs_no_job(self, spark, engine):
+        seed(engine)
+        assert engine.add_user("carol", "pw")[1] == codes.RES_OK
+        replies = []
+
+        def all_users():
+            replies.append(engine.get_all_users("carol", "pw"))
+
+        assert spark_jobs(spark, all_users) == 0  # carol is in the overlay
+        assert engine.save_file("carol", "pw")[1] == codes.RES_OK
+        assert spark_jobs(spark, all_users) == 0
+        for ok, code, data in replies:
+            assert (ok, code) == (True, codes.RES_OK)
+            assert sorted(data.decode().split("\n")) == ["alice", "bob", "carol"]
+
     def test_sav_rebuilds_the_map_and_every_login_holds(self, spark, engine):
         users = {f"u{i}": f"pw{i}" for i in range(4)}
         for u, pw in users.items():

@@ -616,6 +616,7 @@ class TestTrainedIvfPq:
 
         from operating_system_map_reduce_spark.operators import similarity as sim
         from operating_system_map_reduce_spark.plans import pipeline
+        from operating_system_map_reduce_spark.sources import tables
 
         path = str(tmp_path / "embeddings.parquet")
         shutil.copyfile(os.path.join(sf_dir, "embeddings.parquet"), path)
@@ -627,7 +628,7 @@ class TestTrainedIvfPq:
             return train(*a, **k)
 
         monkeypatch.setattr(sim, "trained_codebooks", counting)
-        monkeypatch.setattr(pipeline, "_TRAINED_CB_CACHE", {})
+        monkeypatch.setattr(tables, "_DERIVED", {})
         pipeline.similarity_ivfpq_trained(spark, str(tmp_path))
         pipeline.similarity_ivfpq_trained(spark, str(tmp_path))
         assert len(calls) == 1  # same snapshot: served from the cache

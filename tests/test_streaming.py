@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from operating_system_map_reduce_spark.operators.quota import QuotaTracker
+from operating_system_map_reduce_spark.sources import tables
 from operating_system_map_reduce_spark.sources.tables import load_events
 from operating_system_map_reduce_spark.streaming import quota_stream, windows
 
@@ -656,8 +657,7 @@ class TestNoveltyStream:
         monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
         monkeypatch.setattr(atexit, "register", recording_register)
         # cold caches and no root yet: the run creates every directory
-        monkeypatch.setattr(ns, "_SEED_CACHE", {})
-        monkeypatch.setattr(ns, "_STAGE_CACHE", {})
+        monkeypatch.setattr(tables, "_DERIVED", {})
         monkeypatch.setattr(streaming, "_SCRATCH_ROOT", [])
         assert ns.run_novelty_stream(spark, sf_dir).count() > 0
         assert made
@@ -680,7 +680,7 @@ class TestNoveltyStream:
 
         copy = str(tmp_path / "sf")
         shutil.copytree(sf_dir, copy)
-        monkeypatch.setattr(ns, "_STAGE_CACHE", {})
+        monkeypatch.setattr(tables, "_DERIVED", {})
 
         def stage():
             docs = load_table(spark, copy, "documents").select("doc_id", "text")
